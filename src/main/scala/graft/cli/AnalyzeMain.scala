@@ -3,7 +3,7 @@ package graft.cli
 import graft.analyzer.Analyzer
 import graft.loader.MigrationLoader
 import graft.model.Severity
-import org.apache.spark.sql.SparkSession
+import java.nio.file.Paths
 
 /** `analyze` command — the reference CLI's primary entry point
   * (`internal/cli/analyze.go:14-68`): load a migrations directory, sort
@@ -82,18 +82,16 @@ object AnalyzeMain {
         println(s"config: databaseUrl=${
           graft.model.EngineConfig.redactUrl(cfg.databaseUrl)}")
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-analyze")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val migrations = MigrationLoader.loadSorted(spark, dir)
-      val analyzer = new Analyzer(targetPgVersion = pgVersion)
-      val results = analyzer.analyzeDs(migrations).collect().sortBy(_.version)
-      var anyHigh = false
+    // no session: the migration set is tens of rows, loaded and
+    // analyzed on the driver
+    CliSpark.run("graft-analyze") { _ =>
+      val migrations = MigrationLoader.loadLocal(dir)
+      val results =
+        new Analyzer(targetPgVersion = pgVersion).analyzeAll(migrations)
+      // file locations as `file:///…` URIs (SARIF's artifactLocation
+      // is a URI; the github-actions annotations carry the same form)
+      val pathOf = migrations.map(m =>
+        m.version -> Paths.get(m.filePath).toUri.toString).toMap
       format match {
         case "json" =>
           def q(s: String) = jsonEscape(s)
@@ -111,8 +109,6 @@ object AnalyzeMain {
           // makes CI annotate the offending migration file. Severity map:
           // HIGH/CRITICAL → error, MEDIUM → warning, LOW → notice; SAFE
           // migrations emit nothing.
-          val pathOf = migrations.collect()
-            .map(m => m.version -> m.filePath).toMap
           // workflow-command escaping: % CR LF always; property values
           // additionally escape : and ,
           def escData(s: String) = s.replace("%", "%25")
@@ -140,8 +136,6 @@ object AnalyzeMain {
           // directly — the modern sibling of the reference's
           // github-actions format value.
           def q(s: String) = jsonEscape(s)
-          val pathOf = migrations.collect()
-            .map(m => m.version -> m.filePath).toMap
           val ruleIds = graft.rules.Registry.defaultRules.map(_.id) ++
             graft.rules.Registry.defaultFileRules.map(_.id)
           val rules = ruleIds.map(id =>
@@ -186,8 +180,7 @@ object AnalyzeMain {
           val nFindings = results.map(_.findings.length).sum
           println(s"\n${results.count(_.maxSeverity >= Severity.High)} dangerous migration(s), $nFindings finding(s) total")
       }
-      anyHigh = results.exists(_.hasHighOrCritical)
-      if (failOnHigh && anyHigh) sys.exit(1)
-    } finally spark.stop()
+      if (failOnHigh && results.exists(_.hasHighOrCritical)) sys.exit(1)
+    }
   }
 }

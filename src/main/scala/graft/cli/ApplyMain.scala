@@ -53,8 +53,7 @@ object ApplyMain {
         case other => System.err.println(s"unknown flag: $other"); sys.exit(2)
       }
     }
-    val spark = CliSpark.session("graft-apply")
-    try {
+    CliSpark.run("graft-apply") { session =>
       val migrations = MigrationLoader.loadLocal(dir)
       // Resolve target PG version via config-file/env/flag precedence so the
       // danger gate severitizes for the version actually targeted
@@ -79,7 +78,7 @@ object ApplyMain {
         if (jdbcUrl.nonEmpty)
           new JdbcRunner(jdbcUrl, loaded.lockTimeoutMs,
             loaded.statementTimeoutMs)
-        else new SparkSqlRunner(spark)
+        else new SparkSqlRunner(session.get)
       // JDBC mode: single-writer exclusion must hold ACROSS hosts, so
       // the lock lives in the target database (pg_try_advisory_lock /
       // lock-table fallback), not on a local filesystem.
@@ -87,21 +86,12 @@ object ApplyMain {
         if (jdbcUrl.nonEmpty) new JdbcLock(jdbcUrl, loaded.lockTimeoutMs)
         else new FileLock(s"$trackerDir/_LOCK")
       val ex = new Executor(
-        new ParquetTracker(spark, trackerDir), runner, lock,
+        new ParquetTracker(session.get, trackerDir), runner, lock,
         analyzer = new graft.analyzer.Analyzer(targetPgVersion = loaded.targetPgVersion),
         dryRun = dryRun, force = force, onProgress = printProgress)
       val r = ex.apply(migrations)
       println(s"applied ${r.applied.length}, skipped ${r.skipped.length}")
-    } catch {
-      case e: EngineError =>
-        System.err.println(s"error: ${e.getMessage}"); sys.exit(1)
-      case scala.util.control.NonFatal(e) =>
-        // runner/SQL failures (already reported via Failed progress)
-        // exit cleanly like the reference CLI, not with a stack trace
-        System.err.println(s"error: ${e.getMessage.linesIterator
-          .find(_.nonEmpty).getOrElse(e.getClass.getSimpleName)}")
-        sys.exit(1)
-    } finally spark.stop()
+    }
   }
 
   def usage(): Unit = System.err.println(
@@ -139,8 +129,7 @@ object RollbackMain {
     }
     // --steps and --target are mutually exclusive (rollback.go:28)
     if ((steps >= 0) == target.nonEmpty) { usage(); sys.exit(2) }
-    val spark = CliSpark.session("graft-rollback")
-    try {
+    CliSpark.run("graft-rollback") { session =>
       val migrations = MigrationLoader.loadLocal(dir)
       val cfg = EngineConfig()
       if (verbose) {
@@ -152,25 +141,18 @@ object RollbackMain {
       val runner: SqlRunner =
         if (jdbcUrl.nonEmpty)
           new JdbcRunner(jdbcUrl, cfg.lockTimeoutMs, cfg.statementTimeoutMs)
-        else new SparkSqlRunner(spark)
+        else new SparkSqlRunner(session.get)
       val lock: MigrationLock =
         if (jdbcUrl.nonEmpty) new JdbcLock(jdbcUrl, cfg.lockTimeoutMs)
         else new FileLock(s"$trackerDir/_LOCK")
       val ex = new Executor(
-        new ParquetTracker(spark, trackerDir), runner, lock,
+        new ParquetTracker(session.get, trackerDir), runner, lock,
         onProgress = ApplyMain.printProgress)
       val r =
         if (steps >= 0) ex.rollback(migrations, steps)
         else ex.rollbackToVersion(migrations, target)
       println(s"rolled back ${r.rolledBack.length}")
-    } catch {
-      case e: EngineError =>
-        System.err.println(s"error: ${e.getMessage}"); sys.exit(1)
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"error: ${e.getMessage.linesIterator
-          .find(_.nonEmpty).getOrElse(e.getClass.getSimpleName)}")
-        sys.exit(1)
-    } finally spark.stop()
+    }
   }
 
   def usage(): Unit = System.err.println(
@@ -213,5 +195,39 @@ object CliSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The CLI session, built on the first `get` only: most commands
+    * touch nothing but migration files and the tracker's delta files,
+    * and a session start costs seconds of a command that otherwise
+    * takes milliseconds.
+    */
+  final class LazySession(app: String) {
+    private var started: Option[SparkSession] = None
+    def get: SparkSession = started.getOrElse {
+      val s = session(app)
+      started = Some(s)
+      s
+    }
+    def stopIfStarted(): Unit = started.foreach(_.stop())
+  }
+
+  /** Runs one command's body with a [[LazySession]], stopped at the end
+    * if the body started it. A failure exits 1 with one `error:` line on
+    * stderr, like the reference CLI, not with a stack trace (runner/SQL
+    * failures are already reported through the Failed progress event).
+    */
+  def run(app: String)(body: LazySession => Unit): Unit = {
+    val session = new LazySession(app)
+    try body(session)
+    catch {
+      case e: EngineError =>
+        System.err.println(s"error: ${e.getMessage}"); sys.exit(1)
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"error: ${Option(e.getMessage)
+          .flatMap(_.linesIterator.find(_.nonEmpty))
+          .getOrElse(e.getClass.getSimpleName)}")
+        sys.exit(1)
+    } finally session.stopIfStarted()
   }
 }

@@ -88,7 +88,7 @@ object PlanMain {
     * of `col < X` are rows with cents >= 100X; `<=` shifts the cut by
     * one cent; `>` / `>=` count from the other side via the total.
     */
-  private def estimateCheckViolations(spark: SparkSession,
+  private def estimateCheckViolations(spark: => SparkSession,
       statsDir: String, table: String, colName: String, op: String,
       num: String): Option[Long] = {
     val p = java.nio.file.Paths.get(statsDir, s"$table.parquet")
@@ -135,7 +135,7 @@ object PlanMain {
   /** NULL count of `col` in `statsDir/<table>.parquet` (the stat that
     * decides whether SET NOT NULL's validation scan would fail).
     */
-  private def nullCount(spark: SparkSession, statsDir: String,
+  private def nullCount(spark: => SparkSession, statsDir: String,
       table: String, colName: String): Option[Long] = {
     val p = java.nio.file.Paths.get(statsDir, s"$table.parquet")
     if (!java.nio.file.Files.exists(p)) return None
@@ -165,8 +165,9 @@ object PlanMain {
         case other => System.err.println(s"unknown flag: $other"); sys.exit(2)
       }
     }
-    val spark = CliSpark.session("graft-plan")
-    try {
+    // the session starts only to read stored or --stats-dir statistics
+    CliSpark.run("graft-plan") { session =>
+      def spark = session.get
       val migrations = MigrationLoader.loadLocal(dir)
       val tracker = new ParquetTracker(spark, trackerDir)
       tracker.ensureTable()
@@ -291,6 +292,6 @@ object PlanMain {
       if (pending.isEmpty) println("(nothing to do — up to date)")
       else if (anyBlocked)
         println("\nApply would be blocked: HIGH/CRITICAL findings present.")
-    } finally spark.stop()
+    }
   }
 }

@@ -37,10 +37,9 @@ object StatusMain {
       System.err.println(s"unknown format: $format (text|json)")
       sys.exit(2)
     }
-    val spark = CliSpark.session("graft-status")
-    try {
+    CliSpark.run("graft-status") { session =>
       val migrations = MigrationLoader.loadLocal(dir)
-      val tracker = new ParquetTracker(spark, trackerDir)
+      val tracker = new ParquetTracker(session.get, trackerDir)
       tracker.ensureTable()
       val applied = tracker.getApplied()
       val appliedVersions = applied.map(_.version).toSet
@@ -53,8 +52,7 @@ object StatusMain {
         }
       val pending = migrations.filterNot(m => appliedVersions(m.version))
       if (format == "json") {
-        def q(s: String) = "\"" + s.replace("\\", "\\\\")
-          .replace("\"", "\\\"").replace("\n", "\\n") + "\""
+        def q(s: String) = AnalyzeMain.jsonEscape(s)
         val aRows = applied.map { a =>
           s"""{"version":${q(a.version)},"filename":${q(a.filename)},"applied_at":${q(a.appliedAt.toString)},"duration_ms":${a.durationMs},"drift":${q(driftOf(a))}}"""
         }.mkString("[", ",", "]")
@@ -78,6 +76,6 @@ object StatusMain {
         pending.foreach(m => println(f"  ${m.version}%-16s ${m.name}"))
         if (pending.isEmpty) println("  (none — up to date)")
       }
-    } finally spark.stop()
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.loader
 
-import graft.model.Migration
+import graft.model.{Migration, MigrationsDirNotFound}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,13 +71,16 @@ object MigrationLoader {
   def loadSorted(spark: SparkSession, dir: String): Dataset[Migration] =
     load(spark, dir).orderBy("version")
 
-  /** Driver-side load for the executor path (migration sets are tens of
-    * rows; no cluster needed). Same semantics as [[load]].
+  /** Driver-side load for the CLI (migration sets are tens of rows; no
+    * cluster needed). Same semantics as [[load]], except that a path
+    * that is missing or not a readable directory throws
+    * [[MigrationsDirNotFound]] instead of reading as no migrations; an
+    * empty directory is zero migrations (the reference's `os.ReadDir`).
     */
   def loadLocal(dir: String): Seq[Migration] = {
     val d = new java.io.File(dir)
     val re = fileRegex.r
-    val files = Option(d.listFiles()).getOrElse(Array.empty)
+    val files = Option(d.listFiles()).getOrElse(throw MigrationsDirNotFound(dir))
       .filter(_.isFile)
       .flatMap { f =>
         f.getName match {

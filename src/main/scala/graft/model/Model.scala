@@ -132,6 +132,8 @@ case object LockNotAcquired extends EngineError(
   "migration lock is held by another process")
 final case class MigrationNotFound(version: String) extends EngineError(
   s"migration $version not found")
+final case class MigrationsDirNotFound(dir: String) extends EngineError(
+  s"cannot read migrations directory $dir: missing or not a directory")
 final case class MigrationFileMissing(version: String) extends EngineError(
   s"no migration file found for applied version $version")
 final case class DangerousMigrations(versions: Seq[String]) extends EngineError(

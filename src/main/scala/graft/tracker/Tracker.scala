@@ -1,17 +1,15 @@
 package graft.tracker
 
 import graft.model.{AppliedMigration, MigrationNotFound, MigrationStatus}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Encoders, SaveMode, SparkSession}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** The `schema_migrations` state store (reference:
   * `internal/tracker/tracker.go`, DDL `internal/tracker/schema.go:4-11`).
   *
-  * Q1-Q5 (SURVEY.md §2.2) as DataFrame operations over the tracker
-  * table: point existence = filter+limit, applied list = filter+orderBy,
-  * upsert = anti-join+union (MERGE semantics), keyed update, point
+  * Q1-Q5 (SURVEY.md §2.2): point existence, applied list ordered by
+  * version, upsert (MERGE semantics), keyed status update, point
   * lookup.
   */
 trait Tracker {
@@ -49,43 +47,57 @@ trait Tracker {
   * the snapshot swap and the delta sweep is safe: re-folding an
   * already-absorbed delta is idempotent (last-writer-wins by delta
   * sequence, and the absorbed snapshot row is identical).
+  *
+  * Reads answer from `fold` on the driver: the table is one row per
+  * migration, and a snapshot and a delta are never rewritten once
+  * named, so the rows of the current snapshot are kept under its name
+  * and every call still sees the on-disk state. Spark runs only to read
+  * a snapshot (once per snapshot per instance) and to write one at
+  * compaction, so `spark` is taken by name and a command whose tracker
+  * has no snapshot never starts a session.
   */
-final class ParquetTracker(spark: SparkSession, basePath: String)
+final class ParquetTracker(spark: => SparkSession, basePath: String)
     extends Tracker {
-  import spark.implicits._
 
   private def base: Path = Paths.get(basePath)
   private def pointer: Path = base.resolve("_CURRENT")
   private val compactThreshold = 64
 
-  def ensureTable(): Unit = {
-    Files.createDirectories(base)
-    if (!Files.exists(pointer)) writeSnapshot(Seq.empty)
-  }
+  /** A missing `_CURRENT` reads as the empty table. */
+  def ensureTable(): Unit = Files.createDirectories(base)
 
   private def currentSnapshot: Option[String] =
     if (Files.exists(pointer))
       Some(new String(Files.readAllBytes(pointer), "UTF-8").trim)
     else None
 
-  def table(): Dataset[AppliedMigration] =
-    if (deltaFiles.isEmpty) currentSnapshot match {
-      case Some(snap) =>
-        spark.read.parquet(base.resolve(snap).toString)
-          .as[AppliedMigration]
-      case None => spark.emptyDataset[AppliedMigration]
-    }
-    else fold().toDS()
+  private var cached: Option[(String, Seq[AppliedMigration])] = None
+
+  /** Rows of the current snapshot. The schema is given, so the read is
+    * one Spark job with no footer-inference job before it.
+    */
+  private def snapshotRows: Seq[AppliedMigration] = currentSnapshot match {
+    case None => Nil
+    case Some(snap) => cached.collect { case (`snap`, rows) => rows }
+      .getOrElse {
+        val enc = Encoders.product[AppliedMigration]
+        val rows = spark.read.schema(enc.schema)
+          .parquet(base.resolve(snap).toString).as(enc).collect().toSeq
+        cached = Some(snap -> rows)
+        rows
+      }
+  }
 
   private def writeSnapshot(rows: Seq[AppliedMigration]): Unit = {
     val snapName = s"snap_${System.currentTimeMillis()}_${rows.length}"
     val snapDir = base.resolve(snapName)
-    rows.toDS().coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(snapDir.toString)
+    spark.createDataset(rows)(Encoders.product[AppliedMigration]).coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(snapDir.toString)
     val tmp = base.resolve(s"_CURRENT.tmp.${System.nanoTime()}")
     Files.write(tmp, snapName.getBytes("UTF-8"))
     Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    cached = Some(snapName -> rows)
   }
 
   // --- delta WAL ---------------------------------------------------------
@@ -175,20 +187,16 @@ final class ParquetTracker(spark: SparkSession, basePath: String)
     if (deltaFiles.length >= compactThreshold) compact()
   }
 
-  /** Snapshot rows + deltas folded last-writer-wins per version. */
-  private def fold(): Seq[AppliedMigration] = {
-    val snap: Seq[AppliedMigration] = currentSnapshot match {
-      case Some(s) => spark.read.parquet(base.resolve(s).toString)
-        .as[AppliedMigration].collect().toSeq
-      case None => Nil
-    }
-    deltaFiles.foldLeft(snap) { (acc, d) =>
+  /** Snapshot rows + deltas folded last-writer-wins per version,
+    * ordered by version.
+    */
+  private def fold(): Seq[AppliedMigration] =
+    deltaFiles.foldLeft(snapshotRows) { (acc, d) =>
       val rows = new String(Files.readAllBytes(d), "UTF-8")
         .split("\n").filter(_.nonEmpty).map(parseRow).toSeq
       val versions = rows.map(_.version).toSet
       acc.filterNot(r => versions.contains(r.version)) ++ rows
     }.sortBy(_.version)
-  }
 
   /** Fold everything into a fresh snapshot, then sweep the absorbed
     * deltas. Crash after the swap and before the sweep is safe:
@@ -203,19 +211,15 @@ final class ParquetTracker(spark: SparkSession, basePath: String)
   }
 
   def isApplied(version: String): Boolean =
-    table().filter(col("version") === version &&
-      col("status") === MigrationStatus.Applied).limit(1).count() > 0
+    fold().exists(r => r.version == version &&
+      r.status == MigrationStatus.Applied)
 
   def getApplied(): Seq[AppliedMigration] =
-    table().filter(col("status") === MigrationStatus.Applied)
-      .orderBy("version").collect().toSeq
+    fold().filter(_.status == MigrationStatus.Applied)
 
-  def getChecksum(version: String): String = {
-    val rows = table().filter(col("version") === version)
-      .select("checksum").collect()
-    if (rows.isEmpty) throw MigrationNotFound(version)
-    rows.head.getString(0)
-  }
+  def getChecksum(version: String): String =
+    fold().find(_.version == version).map(_.checksum)
+      .getOrElse(throw MigrationNotFound(version))
 
   def recordApplied(row: AppliedMigration): Unit =
     appendDelta(Seq(row.copy(status = MigrationStatus.Applied)))

@@ -14,6 +14,13 @@ class CliRootSpec extends AnyFunSuite {
     */
   private def graftStart(env: Map[String, String],
       args: String*): Process = {
+    val pb = graftProcess(env, args: _*)
+    pb.redirectErrorStream(true)
+    pb.start()
+  }
+
+  private def graftProcess(env: Map[String, String],
+      args: String*): ProcessBuilder = {
     val java = s"${System.getProperty("java.home")}/bin/java"
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
@@ -30,8 +37,7 @@ class CliRootSpec extends AnyFunSuite {
       "graft.cli.GraftMain") ++ args
     val pb = new ProcessBuilder(cmd: _*)
     env.foreach { case (k, v) => pb.environment().put(k, v) }
-    pb.redirectErrorStream(true)
-    pb.start()
+    pb
   }
 
   private def drain(p: Process): (Int, String) = {
@@ -46,6 +52,17 @@ class CliRootSpec extends AnyFunSuite {
 
   private def graftEnv(env: Map[String, String],
       args: String*): (Int, String) = drain(graftStart(env, args: _*))
+
+  /** Run GraftMain in a fresh JVM with the streams kept apart; returns
+    * (exitCode, stdout, stderr).
+    */
+  private def graftSplit(args: String*): (Int, String, String) = {
+    val err = java.nio.file.Files.createTempFile("graft-stderr", ".txt")
+    val pb = graftProcess(Map.empty, args: _*)
+    pb.redirectError(err.toFile)
+    val (code, out) = drain(pb.start())
+    (code, out, java.nio.file.Files.readString(err))
+  }
 
   /** Two tiny engine-portable migrations (plain CREATE TABLE parses in
     * both Spark SQL and Derby) for the concurrency tests. No trailing
@@ -91,6 +108,44 @@ class CliRootSpec extends AnyFunSuite {
     // drop_table is CRITICAL, safe_concurrent_index is SAFE
     assert(out.contains("drop_table"))
     assert(out.contains("CRITICAL"))
+  }
+
+  test("a missing or non-directory migrations path makes analyze, apply " +
+      "and status exit 1 with one error line; an empty directory is " +
+      "zero migrations") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-baddir")
+    val tracker = tmp.resolve("tracker").toString
+    val file = java.nio.file.Files.writeString(tmp.resolve("plain.sql"), "")
+    for (bad <- Seq(tmp.resolve("missing").toString, file.toString);
+         cmd <- Seq(Seq("analyze", bad), Seq("apply", bad, tracker),
+           Seq("status", bad, tracker))) {
+      val (code, out) = graft(cmd: _*)
+      assert(code == 1, s"${cmd.mkString(" ")} exited $code:\n$out")
+      assert(out.linesIterator.toSeq == Seq(s"error: cannot read " +
+        s"migrations directory $bad: missing or not a directory"), out)
+    }
+    val empty = tmp.resolve("empty")
+    java.nio.file.Files.createDirectory(empty)
+    val (code, out) = graft("analyze", empty.toString, "--format", "json")
+    assert(code == 0 && out.trim == "[]", out)
+  }
+
+  test("graft analyze, and JDBC-mode apply run twice, leave stderr " +
+      "empty on success and start no SparkContext") {
+    val (c1, o1, e1) = graftSplit("analyze", "fixtures/migrations")
+    assert(c1 == 0 && o1.contains("Analyzed 27 migration(s)"), o1 + e1)
+    assert(e1.isEmpty && !o1.contains("SparkContext"), e1)
+    val mig = raceMigrations()
+    val tracker = java.nio.file.Files
+      .createTempDirectory("graft-quiet-tracker").toString
+    val db = java.nio.file.Files
+      .createTempDirectory("graft-quiet-db").resolve("db")
+    val url = s"jdbc:derby:$db;create=true"
+    for (expect <- Seq("applied 2, skipped 0", "applied 0, skipped 2")) {
+      val (c, o, e) = graftSplit("apply", mig, tracker, "--jdbc-url", url)
+      assert(c == 0 && o.contains(expect), o + e)
+      assert(e.isEmpty && !o.contains("SparkContext"), e)
+    }
   }
 
   test("graft apply: --lock-timeout flag beats config while the config " +
@@ -293,8 +348,9 @@ class CliRootSpec extends AnyFunSuite {
 
   test("graft status --format json emits machine-readable state " +
       "(status.go:18's registered value, implemented)") {
+    // a tab in the tracker path must come out escaped
     val tracker = java.nio.file.Files
-      .createTempDirectory("graft-cli-status-json").toString
+      .createTempDirectory("graft-cli-status\tjson").toString
     val (code, out) = graft("status", "/root/repo/fixtures/migrations",
       tracker, "--format", "json")
     assert(code == 0, s"status --format json failed:\n$out")
@@ -302,9 +358,11 @@ class CliRootSpec extends AnyFunSuite {
       fail(s"no JSON line in:\n$out"))
     assert(json.contains("\"applied\":[]"))
     assert(json.contains("\"pending\":[{\"version\":\"001\""))
-    // parseable by a strict parser (scala.util.parsing not available;
-    // spot-check balanced braces/quotes via a JSON-ish sanity count)
-    assert(json.count(_ == '{') == json.count(_ == '}'))
+    // strict parse: a raw control char in a string is an error
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(json)
+    assert(root.get("tracker").asText() == tracker)
+    assert(root.get("pending").size() == 27)
   }
 
   test("graft status runs against --migrations-dir from the persistent " +
