@@ -9,94 +9,56 @@ import org.apache.spark.sql.SparkSession
 /** `apply` / `rollback` commands (reference:
   * `internal/cli/apply.go:30-176`, `internal/cli/rollback.go:17-120`).
   *
-  * Usage:
-  *   runMain graft.cli.ApplyMain <migrationsDir> <trackerDir>
-  *     [--dry-run] [--force] [--pg-version N] [--jdbc-url URL]
-  *   runMain graft.cli.RollbackMain <migrationsDir> <trackerDir>
-  *     (--steps N | --target V) [--jdbc-url URL]
-  *
-  * Without --jdbc-url, SQL executes against Spark-managed tables
-  * (SparkSqlRunner); with it, passthrough over JDBC with the
-  * reference's transaction/timeout envelope.
+  * Without a database URL (`--jdbc-url`, `--database-url` or the
+  * config's `database_url`), SQL executes against Spark-managed tables
+  * (SparkSqlRunner); with one, passthrough over JDBC with the
+  * reference's transaction/timeout envelope, using the config's lock
+  * and statement timeouts.
   */
 object ApplyMain {
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) { usage(); sys.exit(2) }
-    val (dir, trackerDir) = (args(0), args(1))
-    var dryRun = false; var force = false; var jdbcUrl = ""
-    var verbose = false
-    var pgVersionFlag: Option[Int] = None
-    // per-invocation timeout overrides (reference apply.go:41-42
-    // registers both as Duration flags; 56-60 makes a CHANGED flag beat
-    // the configured value)
-    var lockTimeoutFlag: Option[Long] = None
-    var statementTimeoutFlag: Option[Long] = None
-    var i = 2
-    while (i < args.length) {
-      args(i) match {
-        case "--dry-run" => dryRun = true; i += 1
-        case "--force" => force = true; i += 1
-        case "--verbose" => verbose = true; i += 1
-        case "--jdbc-url" =>
-          jdbcUrl = CliArgs.value(args, i, "--jdbc-url"); i += 2
-        case "--pg-version" =>
-          pgVersionFlag = Some(CliArgs.value(args, i, "--pg-version").toInt)
-          i += 2
-        case "--lock-timeout" =>
-          lockTimeoutFlag = Some(
-            graft.config.ConfigLoader.parseDurationMs(
-              CliArgs.value(args, i, "--lock-timeout"))); i += 2
-        case "--statement-timeout" =>
-          statementTimeoutFlag = Some(
-            graft.config.ConfigLoader.parseDurationMs(
-              CliArgs.value(args, i, "--statement-timeout"))); i += 2
-        case other => System.err.println(s"unknown flag: $other"); sys.exit(2)
-      }
+  def run(c: GraftMain.Apply, cfg: EngineConfig, verbose: Boolean,
+      session: CliSpark.LazySession): Unit = {
+    val GraftMain.Apply(dir, trackerDir, dryRun, force) = c
+    val migrations = MigrationLoader.loadLocal(dir)
+    if (verbose) {
+      println(s"config: migrationsDir=$dir trackerDir=$trackerDir " +
+        s"targetPgVersion=${cfg.targetPgVersion} dryRun=$dryRun force=$force")
+      printConnection(cfg)
     }
-    CliSpark.run("graft-apply") { session =>
-      val migrations = MigrationLoader.loadLocal(dir)
-      // Resolve target PG version via config-file/env/flag precedence so the
-      // danger gate severitizes for the version actually targeted
-      // (reference: internal/cli/apply.go wires the configured version
-      // through to the analyzer; flags win over env over file).
-      val loaded = graft.config.ConfigLoader.load(
-        "migrate.yml", allowMissing = true,
-        flags = graft.config.ConfigLoader.Overrides(
-          targetPgVersion = pgVersionFlag,
-          lockTimeoutMs = lockTimeoutFlag,
-          statementTimeoutMs = statementTimeoutFlag))
-      if (verbose) {
-        println(s"config: migrationsDir=$dir trackerDir=$trackerDir " +
-          s"targetPgVersion=${loaded.targetPgVersion} dryRun=$dryRun force=$force")
-        println(s"config: lockTimeoutMs=${loaded.lockTimeoutMs} " +
-          s"statementTimeoutMs=${loaded.statementTimeoutMs}")
-        if (jdbcUrl.nonEmpty)
-          // never print credentials (reference redact.go:10-52)
-          println(s"config: jdbcUrl=${EngineConfig.redactUrl(jdbcUrl)}")
-      }
-      val runner: SqlRunner =
-        if (jdbcUrl.nonEmpty)
-          new JdbcRunner(jdbcUrl, loaded.lockTimeoutMs,
-            loaded.statementTimeoutMs)
-        else new SparkSqlRunner(session.get)
-      // JDBC mode: single-writer exclusion must hold ACROSS hosts, so
-      // the lock lives in the target database (pg_try_advisory_lock /
-      // lock-table fallback), not on a local filesystem.
-      val lock: MigrationLock =
-        if (jdbcUrl.nonEmpty) new JdbcLock(jdbcUrl, loaded.lockTimeoutMs)
-        else new FileLock(s"$trackerDir/_LOCK")
-      val ex = new Executor(
-        new ParquetTracker(session.get, trackerDir), runner, lock,
-        analyzer = new graft.analyzer.Analyzer(targetPgVersion = loaded.targetPgVersion),
-        dryRun = dryRun, force = force, onProgress = printProgress)
-      val r = ex.apply(migrations)
-      println(s"applied ${r.applied.length}, skipped ${r.skipped.length}")
-    }
+    val r = executor(cfg, trackerDir, session, dryRun, force).apply(migrations)
+    println(s"applied ${r.applied.length}, skipped ${r.skipped.length}")
   }
 
-  def usage(): Unit = System.err.println(
-    "usage: ApplyMain <migrationsDir> <trackerDir> [--dry-run] [--force] " +
-      "[--verbose] [--jdbc-url URL] [--lock-timeout D] [--statement-timeout D]")
+  /** The `config:` lines apply and rollback share under `--verbose`. */
+  private[cli] def printConnection(cfg: EngineConfig): Unit = {
+    println(s"config: lockTimeoutMs=${cfg.lockTimeoutMs} " +
+      s"statementTimeoutMs=${cfg.statementTimeoutMs}")
+    if (cfg.databaseUrl.nonEmpty)
+      // never print credentials (reference redact.go:10-52)
+      println(s"config: jdbcUrl=${EngineConfig.redactUrl(cfg.databaseUrl)}")
+  }
+
+  /** The executor apply and rollback run, printing progress. */
+  private[cli] def executor(cfg: EngineConfig, trackerDir: String,
+      session: CliSpark.LazySession, dryRun: Boolean = false,
+      force: Boolean = false): Executor = {
+    val jdbcUrl = cfg.databaseUrl
+    val runner: SqlRunner =
+      if (jdbcUrl.nonEmpty)
+        new JdbcRunner(jdbcUrl, cfg.lockTimeoutMs, cfg.statementTimeoutMs)
+      else new SparkSqlRunner(session.get)
+    // JDBC mode: single-writer exclusion must hold ACROSS hosts, so
+    // the lock lives in the target database (pg_try_advisory_lock /
+    // lock-table fallback), not on a local filesystem.
+    val lock: MigrationLock =
+      if (jdbcUrl.nonEmpty) new JdbcLock(jdbcUrl, cfg.lockTimeoutMs)
+      else new FileLock(s"$trackerDir/_LOCK")
+    // the danger gate severitizes for the version actually targeted
+    new Executor(
+      new ParquetTracker(session.get, trackerDir), runner, lock,
+      analyzer = new graft.analyzer.Analyzer(targetPgVersion = cfg.targetPgVersion),
+      dryRun = dryRun, force = force, onProgress = printProgress)
+  }
 
   def printProgress(p: Progress): Unit = p match {
     case Starting(m) => println(s"  applying ${m.version} ${m.name} ...")
@@ -109,68 +71,21 @@ object ApplyMain {
 }
 
 object RollbackMain {
-  def main(args: Array[String]): Unit = {
-    if (args.length < 3) { usage(); sys.exit(2) }
-    val (dir, trackerDir) = (args(0), args(1))
-    var steps = -1; var target = ""; var jdbcUrl = ""
-    var verbose = false
-    var i = 2
-    while (i < args.length) {
-      args(i) match {
-        case "--steps" =>
-          steps = CliArgs.value(args, i, "--steps").toInt; i += 2
-        case "--target" =>
-          target = CliArgs.value(args, i, "--target"); i += 2
-        case "--verbose" => verbose = true; i += 1
-        case "--jdbc-url" =>
-          jdbcUrl = CliArgs.value(args, i, "--jdbc-url"); i += 2
-        case other => System.err.println(s"unknown flag: $other"); sys.exit(2)
-      }
+  def run(c: GraftMain.Rollback, cfg: EngineConfig, verbose: Boolean,
+      session: CliSpark.LazySession): Unit = {
+    val GraftMain.Rollback(dir, trackerDir, steps, target) = c
+    val migrations = MigrationLoader.loadLocal(dir)
+    if (verbose) {
+      println(s"config: migrationsDir=$dir trackerDir=$trackerDir " +
+        s"steps=${steps.getOrElse(-1)} target=${target.getOrElse("")}")
+      ApplyMain.printConnection(cfg)
     }
-    // --steps and --target are mutually exclusive (rollback.go:28)
-    if ((steps >= 0) == target.nonEmpty) { usage(); sys.exit(2) }
-    CliSpark.run("graft-rollback") { session =>
-      val migrations = MigrationLoader.loadLocal(dir)
-      val cfg = EngineConfig()
-      if (verbose) {
-        println(s"config: migrationsDir=$dir trackerDir=$trackerDir " +
-          s"steps=$steps target=$target")
-        if (jdbcUrl.nonEmpty)
-          println(s"config: jdbcUrl=${EngineConfig.redactUrl(jdbcUrl)}")
-      }
-      val runner: SqlRunner =
-        if (jdbcUrl.nonEmpty)
-          new JdbcRunner(jdbcUrl, cfg.lockTimeoutMs, cfg.statementTimeoutMs)
-        else new SparkSqlRunner(session.get)
-      val lock: MigrationLock =
-        if (jdbcUrl.nonEmpty) new JdbcLock(jdbcUrl, cfg.lockTimeoutMs)
-        else new FileLock(s"$trackerDir/_LOCK")
-      val ex = new Executor(
-        new ParquetTracker(session.get, trackerDir), runner, lock,
-        onProgress = ApplyMain.printProgress)
-      val r =
-        if (steps >= 0) ex.rollback(migrations, steps)
-        else ex.rollbackToVersion(migrations, target)
-      println(s"rolled back ${r.rolledBack.length}")
+    val ex = ApplyMain.executor(cfg, trackerDir, session)
+    val r = steps match {
+      case Some(n) => ex.rollback(migrations, n)
+      case None => ex.rollbackToVersion(migrations, target.get)
     }
-  }
-
-  def usage(): Unit = System.err.println(
-    "usage: RollbackMain <migrationsDir> <trackerDir> (--steps N | --target V) [--verbose] [--jdbc-url URL]")
-}
-
-object CliArgs {
-  /** `args(i + 1)` with the usage-error exit the reference CLIs use: a
-    * flag given without its value must land on the exit-2 path, not an
-    * ArrayIndexOutOfBoundsException (Cobra prints "flag needs an
-    * argument" and exits non-zero).
-    */
-  def value(args: Array[String], i: Int, flag: String): String = {
-    if (i + 1 >= args.length) {
-      System.err.println(s"$flag requires a value")
-      sys.exit(2)
-    }
-    args(i + 1)
+    println(s"rolled back ${r.rolledBack.length}")
   }
 }
 
@@ -209,7 +124,12 @@ object CliSpark {
       started = Some(s)
       s
     }
-    def stopIfStarted(): Unit = started.foreach(_.stop())
+    // a match, not `foreach(_.stop())`: linking that lambda loads
+    // SparkSession's class, and so opens Spark's jars, in every command
+    def stopIfStarted(): Unit = started match {
+      case Some(s) => s.stop()
+      case None =>
+    }
   }
 
   /** Runs one command's body with a [[LazySession]], stopped at the end

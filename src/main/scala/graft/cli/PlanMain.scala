@@ -3,7 +3,7 @@ package graft.cli
 import graft.analyzer.Analyzer
 import graft.classify.SqlClassifier
 import graft.loader.MigrationLoader
-import graft.model.Severity
+import graft.model.{EngineConfig, Severity}
 import graft.tracker.ParquetTracker
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -16,9 +16,6 @@ import org.apache.spark.sql.types.NumericType
   * they take, whether execution is transactional (CONCURRENTLY ops are
   * not), danger findings, and the would-block verdict the apply gate
   * will reach.
-  *
-  * Usage: runMain graft.cli.PlanMain <migrationsDir> <trackerDir>
-  *        [--pg-version N] [--pending-only] [--stats-dir DIR]
   *
   * `--pending-only` implements the flag the reference registers on the
   * stub (`plan.go:19`): by default the plan lists EVERY migration (the
@@ -143,155 +140,135 @@ object PlanMain {
     if (!df0.columns.contains(colName)) return None
     Some(df0.filter(col(colName).isNull).count())
   }
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println(
-        "usage: PlanMain <migrationsDir> <trackerDir> [--pg-version N] " +
-          "[--pending-only] [--stats-dir DIR]")
-      sys.exit(2)
-    }
-    val (dir, trackerDir) = (args(0), args(1))
-    var pgVersion = 14
-    var pendingOnly = false
-    var statsDir = ""
-    var i = 2
-    while (i < args.length) {
-      args(i) match {
-        case "--pg-version" =>
-          pgVersion = CliArgs.value(args, i, "--pg-version").toInt; i += 2
-        case "--pending-only" => pendingOnly = true; i += 1
-        case "--stats-dir" =>
-          statsDir = CliArgs.value(args, i, "--stats-dir"); i += 2
-        case other => System.err.println(s"unknown flag: $other"); sys.exit(2)
-      }
-    }
+  def run(c: GraftMain.Plan, cfg: EngineConfig,
+      session: CliSpark.LazySession): Unit = {
+    val GraftMain.Plan(dir, trackerDir, pendingOnly, statsDir) = c
+    val pgVersion = cfg.targetPgVersion
     // the session starts only to read stored or --stats-dir statistics
-    CliSpark.run("graft-plan") { session =>
-      def spark = session.get
-      val migrations = MigrationLoader.loadLocal(dir)
-      val tracker = new ParquetTracker(spark, trackerDir)
-      tracker.ensureTable()
-      val appliedSet = tracker.getApplied().map(_.version).toSet
-      val pending = migrations.filterNot(m => appliedSet(m.version))
-      val analyzer = new Analyzer(targetPgVersion = pgVersion)
-      println(s"Plan: ${pending.length} pending migration(s) " +
-        s"(${appliedSet.size} already applied; target PostgreSQL $pgVersion)\n")
-      var anyBlocked = false
-      // STORED stats first (graft stats → trackerDir/table_stats
-      // .parquet — plan stays a pure metadata operation, the pg_stats
-      // posture); --stats-dir live scans are the fallback.
-      val stored: Map[(String, String), StoredStat] = {
-        val p = java.nio.file.Paths.get(trackerDir, "table_stats.parquet")
-        if (!java.nio.file.Files.exists(p)) Map.empty
-        else spark.read.parquet(p.toString).collect().map { r =>
-          (r.getAs[String]("table_name"), r.getAs[String]("col_name")) ->
-            StoredStat(r.getAs[Long]("n_rows"),
-              r.getAs[Long]("null_count"),
-              r.getAs[Long]("vmin_cents"), r.getAs[Long]("vmax_cents"),
-              Option(r.getAs[scala.collection.Seq[Long]]("octiles_cents"))
-                .map(_.toSeq).getOrElse(Seq.empty))
-        }.toMap
+    def spark = session.get
+    val migrations = MigrationLoader.loadLocal(dir)
+    val tracker = new ParquetTracker(spark, trackerDir)
+    tracker.ensureTable()
+    val appliedSet = tracker.getApplied().map(_.version).toSet
+    val pending = migrations.filterNot(m => appliedSet(m.version))
+    val analyzer = new Analyzer(targetPgVersion = pgVersion)
+    println(s"Plan: ${pending.length} pending migration(s) " +
+      s"(${appliedSet.size} already applied; target PostgreSQL $pgVersion)\n")
+    var anyBlocked = false
+    // STORED stats first (graft stats → trackerDir/table_stats
+    // .parquet — plan stays a pure metadata operation, the pg_stats
+    // posture); --stats-dir live scans are the fallback.
+    val stored: Map[(String, String), StoredStat] = {
+      val p = java.nio.file.Paths.get(trackerDir, "table_stats.parquet")
+      if (!java.nio.file.Files.exists(p)) Map.empty
+      else spark.read.parquet(p.toString).collect().map { r =>
+        (r.getAs[String]("table_name"), r.getAs[String]("col_name")) ->
+          StoredStat(r.getAs[Long]("n_rows"),
+            r.getAs[Long]("null_count"),
+            r.getAs[Long]("vmin_cents"), r.getAs[Long]("vmax_cents"),
+            Option(r.getAs[scala.collection.Seq[Long]]("octiles_cents"))
+              .map(_.toSeq).getOrElse(Seq.empty))
+      }.toMap
+    }
+    val storedRows: Map[String, Long] =
+      stored.groupBy(_._1._1).map { case (t, m) => t -> m.head._2.nRows }
+    if (stored.nonEmpty)
+      println(s"(using stored table stats: ${storedRows.size} " +
+        "table(s) from tracker)\n")
+    // per-table row-count stat: stored, else one parquet footer
+    // count per table from --stats-dir (metadata-scale)
+    val rowCount = scala.collection.mutable.Map.empty[String, Option[Long]]
+    def tableRows(table: String): Option[Long] = rowCount.getOrElseUpdate(
+      table, storedRows.get(table).orElse {
+        val p = java.nio.file.Paths.get(statsDir, s"$table.parquet")
+        if (statsDir.nonEmpty && java.nio.file.Files.exists(p))
+          Some(spark.read.parquet(p.toString).count())
+        else None
+      })
+    val checkRe =
+      ("(?i)CHECK\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*" +
+        "(<=|<|>=|>)\\s*(\\d+(?:\\.\\d+)?)\\s*\\)").r.unanchored
+    if (!pendingOnly) migrations.filter(m => appliedSet(m.version))
+      .foreach { m =>
+        println(s"${m.version} ${m.name} — already applied")
       }
-      val storedRows: Map[String, Long] =
-        stored.groupBy(_._1._1).map { case (t, m) => t -> m.head._2.nRows }
-      if (stored.nonEmpty)
-        println(s"(using stored table stats: ${storedRows.size} " +
-          "table(s) from tracker)\n")
-      // per-table row-count stat: stored, else one parquet footer
-      // count per table from --stats-dir (metadata-scale)
-      val rowCount = scala.collection.mutable.Map.empty[String, Option[Long]]
-      def tableRows(table: String): Option[Long] = rowCount.getOrElseUpdate(
-        table, storedRows.get(table).orElse {
-          val p = java.nio.file.Paths.get(statsDir, s"$table.parquet")
-          if (statsDir.nonEmpty && java.nio.file.Files.exists(p))
-            Some(spark.read.parquet(p.toString).count())
-          else None
-        })
-      val checkRe =
-        ("(?i)CHECK\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*" +
-          "(<=|<|>=|>)\\s*(\\d+(?:\\.\\d+)?)\\s*\\)").r.unanchored
-      if (!pendingOnly) migrations.filter(m => appliedSet(m.version))
-        .foreach { m =>
-          println(s"${m.version} ${m.name} — already applied")
-        }
-      pending.foreach { m =>
-        val result = analyzer.analyze(m)
-        val stmts = SqlClassifier.parseOrThrow(m.upSql)
-        val concurrent = SqlClassifier.containsConcurrentOp(m.upSql)
-        val mode = if (concurrent) "NON-TRANSACTIONAL (CONCURRENTLY)"
-          else "transactional"
-        val verdict =
-          if (result.hasHighOrCritical) { anyBlocked = true; "BLOCKED by apply gate (use --force)" }
-          else "will apply"
-        println(s"${m.version} ${m.name} — ${stmts.length} statement(s), $mode → $verdict")
-        stmts.zipWithIndex.foreach { case (st, idx) =>
-          val kind = st.getClass.getSimpleName.stripSuffix("$")
-          println(s"    [$idx] $kind: ${SqlClassifier.truncateSql(st.sql, 70)}")
-        }
-        result.findings.foreach { f =>
-          println(s"    ! ${Severity.label(f.severity)} [${f.rule}] " +
-            s"table=${f.table} lock=${f.lockType}")
-          if ((statsDir.nonEmpty || stored.nonEmpty) &&
-              f.table != null && f.table.nonEmpty)
-            for (mech <- mechanisms.get(f.rule); n <- tableRows(f.table)) {
-              println(s"      ~ impact: $mech ≈ $n row(s) of ${f.table}")
-              val stmtSql =
-                if (f.stmtIndex >= 0 && f.stmtIndex < stmts.length)
-                  stmts(f.stmtIndex).sql
-                else ""
-              if (f.rule == "add-constraint-without-not-valid")
-                stmtSql match {
-                  case checkRe(colName, op, num) =>
-                    stored.get((f.table, colName))
-                      .filter(_.octilesCents.size == 7) match {
-                      case Some(st) =>
-                        val nn = st.nRows - st.nullCount
-                        val est = op match {
-                          case "<"  => estimateGeStored(st, centsCeil(num))
-                          case "<=" =>
-                            estimateGeStored(st, centsFloor(num) + 1)
-                          case ">"  =>
-                            nn - estimateGeStored(st, centsFloor(num) + 1)
-                          case _    => nn - estimateGeStored(st, centsCeil(num))
-                        }
-                        println(s"      ~ impact: ≈ $est row(s) violate " +
-                          s"CHECK ($colName $op $num) — stored-stats " +
-                          "octile estimate (no scan)")
-                      case None =>
-                        estimateCheckViolations(
-                          spark, statsDir, f.table, colName, op, num)
-                          .foreach { est =>
-                            println(s"      ~ impact: ≈ $est row(s) " +
-                              s"violate CHECK ($colName $op $num) — " +
-                              "8-bucket equi-depth histogram estimate " +
-                              "(live scan)")
-                          }
-                    }
-                  case _ => ()
-                }
-              if (f.rule == "set-not-null") {
-                val colRe = ("(?i)ALTER\\s+COLUMN\\s+" +
-                  "([A-Za-z_][A-Za-z0-9_]*)\\s+SET\\s+NOT\\s+NULL")
-                  .r.unanchored
-                stmtSql match {
-                  case colRe(colName) =>
-                    stored.get((f.table, colName)).map(_.nullCount)
-                      .orElse(nullCount(spark, statsDir, f.table, colName))
-                      .foreach { nv =>
-                        println(s"      ~ impact: $nv NULL row(s) in " +
-                          s"$colName would block SET NOT NULL")
+    pending.foreach { m =>
+      val result = analyzer.analyze(m)
+      val stmts = SqlClassifier.parseOrThrow(m.upSql)
+      val concurrent = SqlClassifier.containsConcurrentOp(m.upSql)
+      val mode = if (concurrent) "NON-TRANSACTIONAL (CONCURRENTLY)"
+        else "transactional"
+      val verdict =
+        if (result.hasHighOrCritical) { anyBlocked = true; "BLOCKED by apply gate (use --force)" }
+        else "will apply"
+      println(s"${m.version} ${m.name} — ${stmts.length} statement(s), $mode → $verdict")
+      stmts.zipWithIndex.foreach { case (st, idx) =>
+        val kind = st.getClass.getSimpleName.stripSuffix("$")
+        println(s"    [$idx] $kind: ${SqlClassifier.truncateSql(st.sql, 70)}")
+      }
+      result.findings.foreach { f =>
+        println(s"    ! ${Severity.label(f.severity)} [${f.rule}] " +
+          s"table=${f.table} lock=${f.lockType}")
+        if ((statsDir.nonEmpty || stored.nonEmpty) &&
+            f.table != null && f.table.nonEmpty)
+          for (mech <- mechanisms.get(f.rule); n <- tableRows(f.table)) {
+            println(s"      ~ impact: $mech ≈ $n row(s) of ${f.table}")
+            val stmtSql =
+              if (f.stmtIndex >= 0 && f.stmtIndex < stmts.length)
+                stmts(f.stmtIndex).sql
+              else ""
+            if (f.rule == "add-constraint-without-not-valid")
+              stmtSql match {
+                case checkRe(colName, op, num) =>
+                  stored.get((f.table, colName))
+                    .filter(_.octilesCents.size == 7) match {
+                    case Some(st) =>
+                      val nn = st.nRows - st.nullCount
+                      val est = op match {
+                        case "<"  => estimateGeStored(st, centsCeil(num))
+                        case "<=" =>
+                          estimateGeStored(st, centsFloor(num) + 1)
+                        case ">"  =>
+                          nn - estimateGeStored(st, centsFloor(num) + 1)
+                        case _    => nn - estimateGeStored(st, centsCeil(num))
                       }
-                  case _ => ()
-                }
+                      println(s"      ~ impact: ≈ $est row(s) violate " +
+                        s"CHECK ($colName $op $num) — stored-stats " +
+                        "octile estimate (no scan)")
+                    case None =>
+                      estimateCheckViolations(
+                        spark, statsDir, f.table, colName, op, num)
+                        .foreach { est =>
+                          println(s"      ~ impact: ≈ $est row(s) " +
+                            s"violate CHECK ($colName $op $num) — " +
+                            "8-bucket equi-depth histogram estimate " +
+                            "(live scan)")
+                        }
+                  }
+                case _ => ()
+              }
+            if (f.rule == "set-not-null") {
+              val colRe = ("(?i)ALTER\\s+COLUMN\\s+" +
+                "([A-Za-z_][A-Za-z0-9_]*)\\s+SET\\s+NOT\\s+NULL")
+                .r.unanchored
+              stmtSql match {
+                case colRe(colName) =>
+                  stored.get((f.table, colName)).map(_.nullCount)
+                    .orElse(nullCount(spark, statsDir, f.table, colName))
+                    .foreach { nv =>
+                      println(s"      ~ impact: $nv NULL row(s) in " +
+                        s"$colName would block SET NOT NULL")
+                    }
+                case _ => ()
               }
             }
-        }
-        if (m.downSql.isEmpty)
-          println("    ~ no down migration — rollback will not be possible")
+          }
       }
-      if (pending.isEmpty) println("(nothing to do — up to date)")
-      else if (anyBlocked)
-        println("\nApply would be blocked: HIGH/CRITICAL findings present.")
+      if (m.downSql.isEmpty)
+        println("    ~ no down migration — rollback will not be possible")
     }
+    if (pending.isEmpty) println("(nothing to do — up to date)")
+    else if (anyBlocked)
+      println("\nApply would be blocked: HIGH/CRITICAL findings present.")
   }
 }

@@ -18,70 +18,51 @@ import org.apache.spark.sql.types.{DoubleType, NumericType}
   * engine-exact where double quantiles are not). Written as one row
   * per (table, column) to `<trackerDir>/table_stats.parquet`,
   * overwriting the previous collection (stats are a snapshot, not a
-  * log — `collected_ms` records when).
-  *
-  * Usage: runMain graft.cli.StatsMain <dataDir> <trackerDir>
-  *        [--tables t1,t2,...]
+  * log — `collected_ms` records when). A missing data directory fails
+  * before any session starts.
   */
 object StatsMain {
 
   /** Octile fractions shared with q83 / PlanMain's estimator. */
   val octiles: Seq[Double] = Seq(0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875)
 
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println(
-        "usage: StatsMain <dataDir> <trackerDir> [--tables t1,t2,...]")
-      sys.exit(2)
+  def run(c: GraftMain.Stats, session: CliSpark.LazySession): Unit = {
+    val GraftMain.Stats(dataDir, trackerDir, tables) = c
+    val dir = java.nio.file.Paths.get(dataDir)
+    if (!java.nio.file.Files.isDirectory(dir))
+      throw new IllegalArgumentException(
+        s"cannot read data directory $dataDir: missing or not a directory")
+    val found = java.nio.file.Files.list(dir).iterator()
+    val all = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (found.hasNext) {
+      val p = found.next().getFileName.toString
+      if (p.endsWith(".parquet")) all += p.stripSuffix(".parquet")
     }
-    val (dataDir, trackerDir) = (args(0), args(1))
-    var tables: Option[Seq[String]] = None
-    var i = 2
-    while (i < args.length) {
-      args(i) match {
-        case "--tables" =>
-          tables = Some(CliArgs.value(args, i, "--tables")
-            .split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-          i += 2
-        case other => System.err.println(s"unknown flag: $other"); sys.exit(2)
-      }
+    val spark = session.get
+    val selected = tables.getOrElse(all.toSeq.sorted)
+    val rows = selected.flatMap { tn =>
+      val path = s"$dataDir/$tn.parquet"
+      if (!java.nio.file.Files.exists(
+          java.nio.file.Paths.get(path))) {
+        System.err.println(s"stats: no such table $path — skipped")
+        Seq.empty
+      } else collectTable(spark, tn, path)
     }
-    val spark = CliSpark.session("graft-stats")
-    try {
-      val dir = java.nio.file.Paths.get(dataDir)
-      val found = java.nio.file.Files.list(dir).iterator()
-      val all = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (found.hasNext) {
-        val p = found.next().getFileName.toString
-        if (p.endsWith(".parquet")) all += p.stripSuffix(".parquet")
-      }
-      val selected = tables.getOrElse(all.toSeq.sorted)
-      val rows = selected.flatMap { tn =>
-        val path = s"$dataDir/$tn.parquet"
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(path))) {
-          System.err.println(s"stats: no such table $path — skipped")
-          Seq.empty
-        } else collectTable(spark, tn, path)
-      }
-      if (rows.isEmpty) {
-        System.err.println("stats: nothing collected"); sys.exit(1)
-      }
-      import spark.implicits._
-      val now = System.currentTimeMillis()
-      rows.toDF("table_name", "col_name", "n_rows", "null_count",
-          "ndv", "vmin_cents", "vmax_cents", "octiles_cents")
-        .withColumn("collected_ms", lit(now))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"$trackerDir/table_stats.parquet")
-      val nTables = rows.map(_._1).distinct.size
-      println(s"Collected stats for $nTables table(s), " +
-        s"${rows.size} column row(s) -> $trackerDir/table_stats.parquet")
-      rows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (t, rs) =>
-        println(s"  $t: ${rs.head._3} rows, ${rs.size} column(s)")
-      }
-    } finally spark.stop()
+    if (rows.isEmpty) throw new IllegalStateException("stats: nothing collected")
+    import spark.implicits._
+    val now = System.currentTimeMillis()
+    rows.toDF("table_name", "col_name", "n_rows", "null_count",
+        "ndv", "vmin_cents", "vmax_cents", "octiles_cents")
+      .withColumn("collected_ms", lit(now))
+      .coalesce(1)
+      .write.mode("overwrite")
+      .parquet(s"$trackerDir/table_stats.parquet")
+    val nTables = rows.map(_._1).distinct.size
+    println(s"Collected stats for $nTables table(s), " +
+      s"${rows.size} column row(s) -> $trackerDir/table_stats.parquet")
+    rows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (t, rs) =>
+      println(s"  $t: ${rs.head._3} rows, ${rs.size} column(s)")
+    }
   }
 
   /** One scan-once aggregate for a table: EVERY column gets a row

@@ -9,73 +9,50 @@ import graft.tracker.ParquetTracker
   * applied list with timestamps + durations, pending list, checksum
   * drift warnings.
   *
-  * Usage: runMain graft.cli.StatusMain <migrationsDir> <trackerDir>
-  *        [--format text|json]
-  *
   * `--format json` implements the value the reference registers on the
   * stub (`status.go:18`): machine-readable applied/pending lists with
   * the same drift detection, for tooling that polls migration state.
   */
 object StatusMain {
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println(
-        "usage: StatusMain <migrationsDir> <trackerDir> [--format text|json]")
-      sys.exit(2)
-    }
-    val (dir, trackerDir) = (args(0), args(1))
-    var format = "text"
-    var i = 2
-    while (i < args.length) {
-      args(i) match {
-        case "--format" =>
-          format = CliArgs.value(args, i, "--format"); i += 2
-        case other => System.err.println(s"unknown flag: $other"); sys.exit(2)
+  def run(c: GraftMain.Status, session: CliSpark.LazySession): Unit = {
+    val GraftMain.Status(dir, trackerDir, format) = c
+    val migrations = MigrationLoader.loadLocal(dir)
+    val tracker = new ParquetTracker(session.get, trackerDir)
+    tracker.ensureTable()
+    val applied = tracker.getApplied()
+    val appliedVersions = applied.map(_.version).toSet
+    val byVersion = migrations.map(m => m.version -> m).toMap
+    def driftOf(a: graft.model.AppliedMigration): String =
+      byVersion.get(a.version) match {
+        case Some(m) if m.checksum != a.checksum => "checksum_drift"
+        case None => "file_missing"
+        case _ => ""
       }
-    }
-    if (format != "text" && format != "json") {
-      System.err.println(s"unknown format: $format (text|json)")
-      sys.exit(2)
-    }
-    CliSpark.run("graft-status") { session =>
-      val migrations = MigrationLoader.loadLocal(dir)
-      val tracker = new ParquetTracker(session.get, trackerDir)
-      tracker.ensureTable()
-      val applied = tracker.getApplied()
-      val appliedVersions = applied.map(_.version).toSet
-      val byVersion = migrations.map(m => m.version -> m).toMap
-      def driftOf(a: graft.model.AppliedMigration): String =
-        byVersion.get(a.version) match {
-          case Some(m) if m.checksum != a.checksum => "checksum_drift"
-          case None => "file_missing"
+    val pending = migrations.filterNot(m => appliedVersions(m.version))
+    if (format == "json") {
+      def q(s: String) = AnalyzeMain.jsonEscape(s)
+      val aRows = applied.map { a =>
+        s"""{"version":${q(a.version)},"filename":${q(a.filename)},"applied_at":${q(a.appliedAt.toString)},"duration_ms":${a.durationMs},"drift":${q(driftOf(a))}}"""
+      }.mkString("[", ",", "]")
+      val pRows = pending.map { m =>
+        s"""{"version":${q(m.version)},"name":${q(m.name)}}"""
+      }.mkString("[", ",", "]")
+      println(s"""{"migrations_dir":${q(dir)},"tracker":${q(trackerDir)},"applied":$aRows,"pending":$pRows}""")
+    } else {
+      println(s"Migrations dir: $dir")
+      println(s"Tracker:        $trackerDir")
+      println(s"\nApplied (${applied.length}):")
+      applied.foreach { a =>
+        val drift = driftOf(a) match {
+          case "checksum_drift" => "  [CHECKSUM DRIFT]"
+          case "file_missing" => "  [FILE MISSING]"
           case _ => ""
         }
-      val pending = migrations.filterNot(m => appliedVersions(m.version))
-      if (format == "json") {
-        def q(s: String) = AnalyzeMain.jsonEscape(s)
-        val aRows = applied.map { a =>
-          s"""{"version":${q(a.version)},"filename":${q(a.filename)},"applied_at":${q(a.appliedAt.toString)},"duration_ms":${a.durationMs},"drift":${q(driftOf(a))}}"""
-        }.mkString("[", ",", "]")
-        val pRows = pending.map { m =>
-          s"""{"version":${q(m.version)},"name":${q(m.name)}}"""
-        }.mkString("[", ",", "]")
-        println(s"""{"migrations_dir":${q(dir)},"tracker":${q(trackerDir)},"applied":$aRows,"pending":$pRows}""")
-      } else {
-        println(s"Migrations dir: $dir")
-        println(s"Tracker:        $trackerDir")
-        println(s"\nApplied (${applied.length}):")
-        applied.foreach { a =>
-          val drift = driftOf(a) match {
-            case "checksum_drift" => "  [CHECKSUM DRIFT]"
-            case "file_missing" => "  [FILE MISSING]"
-            case _ => ""
-          }
-          println(f"  ${a.version}%-16s ${a.filename}%-40s ${a.appliedAt} ${a.durationMs}%5dms$drift")
-        }
-        println(s"\nPending (${pending.length}):")
-        pending.foreach(m => println(f"  ${m.version}%-16s ${m.name}"))
-        if (pending.isEmpty) println("  (none — up to date)")
+        println(f"  ${a.version}%-16s ${a.filename}%-40s ${a.appliedAt} ${a.durationMs}%5dms$drift")
       }
+      println(s"\nPending (${pending.length}):")
+      pending.foreach(m => println(f"  ${m.version}%-16s ${m.name}"))
+      if (pending.isEmpty) println("  (none — up to date)")
     }
   }
 }

@@ -49,11 +49,14 @@ object ConfigLoader {
     EngineConfig(
       databaseUrl = kv.getOrElse("database_url", ""),
       migrationsDir = kv.getOrElse("migrations_dir", ""),
-      lockTimeoutMs = kv.get("lock_timeout").map(parseDurationMs)
+      lockTimeoutMs = kv.get("lock_timeout")
+        .map(parsed(s"lock_timeout in $path", _)(parseDurationMs))
         .getOrElse(EngineConfig().lockTimeoutMs),
-      statementTimeoutMs = kv.get("statement_timeout").map(parseDurationMs)
+      statementTimeoutMs = kv.get("statement_timeout")
+        .map(parsed(s"statement_timeout in $path", _)(parseDurationMs))
         .getOrElse(EngineConfig().statementTimeoutMs),
-      targetPgVersion = kv.get("target_pg_version").map(_.toInt)
+      targetPgVersion = kv.get("target_pg_version")
+        .map(parsed(s"target_pg_version in $path", _)(_.toInt))
         .getOrElse(EngineConfig().targetPgVersion),
       format = kv.getOrElse("format", "text"))
   }
@@ -66,11 +69,14 @@ object ConfigLoader {
     cfg.copy(
       databaseUrl = env.getOrElse("MIGRATE_DATABASE_URL", cfg.databaseUrl),
       migrationsDir = env.getOrElse("MIGRATE_MIGRATIONS_DIR", cfg.migrationsDir),
-      lockTimeoutMs = env.get("MIGRATE_LOCK_TIMEOUT").map(parseDurationMs)
+      lockTimeoutMs = env.get("MIGRATE_LOCK_TIMEOUT")
+        .map(parsed("MIGRATE_LOCK_TIMEOUT", _)(parseDurationMs))
         .getOrElse(cfg.lockTimeoutMs),
       statementTimeoutMs = env.get("MIGRATE_STATEMENT_TIMEOUT")
-        .map(parseDurationMs).getOrElse(cfg.statementTimeoutMs),
-      targetPgVersion = env.get("MIGRATE_TARGET_PG_VERSION").map(_.toInt)
+        .map(parsed("MIGRATE_STATEMENT_TIMEOUT", _)(parseDurationMs))
+        .getOrElse(cfg.statementTimeoutMs),
+      targetPgVersion = env.get("MIGRATE_TARGET_PG_VERSION")
+        .map(parsed("MIGRATE_TARGET_PG_VERSION", _)(_.toInt))
         .getOrElse(cfg.targetPgVersion),
       format = env.getOrElse("MIGRATE_FORMAT", cfg.format))
 
@@ -93,6 +99,14 @@ object ConfigLoader {
     else if (t.endsWith("m")) t.dropRight(1).trim.toLong * 60000
     else t.toLong
   }
+
+  /** `f(v)`, or an error naming the setting a malformed `v` came from. */
+  private def parsed[T](setting: String, v: String)(f: String => T): T =
+    try f(v)
+    catch {
+      case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"invalid value for $setting: $v")
+    }
 
   private def stripQuotes(s: String): String =
     if (s.length >= 2 &&

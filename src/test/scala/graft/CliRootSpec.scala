@@ -130,6 +130,17 @@ class CliRootSpec extends AnyFunSuite {
     assert(code == 0 && out.trim == "[]", out)
   }
 
+  test("graft stats with a missing data directory exits 1 with one error " +
+      "line, before any SparkContext starts") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stats-baddir")
+    val missing = tmp.resolve("missing").toString
+    val (code, out) = graft("stats", missing, tmp.resolve("tracker").toString)
+    assert(code == 1, s"stats exited $code:\n$out")
+    // stdout and stderr merged: Spark's start-up log would show here
+    assert(out.linesIterator.toSeq == Seq(s"error: cannot read data " +
+      s"directory $missing: missing or not a directory"), out)
+  }
+
   test("graft analyze, and JDBC-mode apply run twice, leave stderr " +
       "empty on success and start no SparkContext") {
     val (c1, o1, e1) = graftSplit("analyze", "fixtures/migrations")
@@ -164,6 +175,15 @@ class CliRootSpec extends AnyFunSuite {
     // flows through the root untouched
     assert(out.contains("lockTimeoutMs=7000"), out)
     assert(out.contains("statementTimeoutMs=45000"), out)
+    // rollback reads the same config: both timeouts come from the file
+    val (rc, rout) = graft("--config", cfg.toString, "--verbose", "rollback",
+      "fixtures/migrations", tracker, "--steps", "1")
+    assert(rc == 1, s"rollback of nothing exited $rc:\n$rout")
+    val lines = rout.linesIterator.toSeq
+    val timeouts = lines.indexWhere(
+      _.contains("lockTimeoutMs=30000 statementTimeoutMs=45000"))
+    assert(timeouts >= 0 &&
+      timeouts < lines.indexOf("error: nothing to roll back"), rout)
   }
 
   test("graft analyze --format github-actions emits workflow-command " +
