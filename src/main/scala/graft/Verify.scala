@@ -1,4 +1,5 @@
 package graft
+import graft.cli.AnalyzeMain.jsonEscape
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -43,67 +44,14 @@ object Verify {
       // not leak cache across the 100+ queries this session runs
       finally spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // {SF} token → this run's sf dir: lets an oracle read a parquet
     // FILE with DuckDB options no registered view can carry
     // (filename/file_row_number for q94's metadata-column census)
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("{SF}", sfDir))}" }
+      .map { case (k, v) =>
+        s"${jsonEscape(k)}: ${jsonEscape(v.replace("{SF}", sfDir))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Self-diagnosis for the driver-red/judge-green class (g01 r5+r6,
-    // x22 r6): re-run the iterative/window suspects TWICE in this same
-    // session and record canonical result hashes. stable=false pins
-    // in-session Spark nondeterminism; stable=true shifts the blame to
-    // the compare side (DuckDB type promotion — see check_oracle.py's
-    // native-type gate, which reproduced the r6 reds as HUGEINT).
-    val suspects = Seq("g01_pagerank_parts", "g02_triangle_count",
-      "g03_kcore_peel", "d07_dup_clusters", "x22_vocab_growth",
-      "x21_bigram_lm_score", "x23_sequence_pack",
-      "d14_incremental_dedup", "x25_dsir_select", "g04_label_prop",
-      "e14_zonemap_prune", "s07_mmr_rerank", "x27_perceptron_classifier")
-      .filter(selected)
-    if (suspects.nonEmpty) {
-      def canonHash(df: org.apache.spark.sql.DataFrame): String = {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        df.collect().map(_.mkString("")).sorted
-          .foreach(r => md.update(r.getBytes("UTF-8")))
-        md.digest().map("%02x".format(_)).mkString
-      }
-      val entries = suspects.flatMap(name =>
-        SparkEntry.queries.get(name).map { fn =>
-          val (h1, h2) =
-            try {
-              val a = canonHash(fn(spark, sfDir))
-              spark.catalog.clearCache()
-              val b = canonHash(fn(spark, sfDir))
-              spark.catalog.clearCache()
-              (a, b)
-            } catch { case e: Throwable =>
-              ("ERR:" + String.valueOf(e.getMessage).take(120), "")
-            }
-          s"${q(name)}: {${q("run1")}: ${q(h1)}, ${q("run2")}: ${q(h2)}," +
-            s" ${q("stable")}: ${h1 == h2}}"
-        })
-      val confs = Seq("spark.sql.shuffle.partitions",
-        "spark.sql.session.timeZone")
-        .map(k => s"${q(k)}: ${q(spark.conf.get(k))}").mkString(", ")
-      Files.writeString(Paths.get(s"$outDir/_selfcheck.json"),
-        s"{${q("sparkVersion")}: ${q(spark.version)}, " +
-          s"${q("confs")}: {$confs}, " +
-          s"${q("queries")}: {${entries.mkString(", ")}}}")
-    }
     spark.stop()
   }
 }

@@ -9,9 +9,11 @@ import graft.model.SqlParseError
   * `internal/parser/parser.go:18-33`); Spark's Catalyst parser cannot
   * parse PG DDL (`VACUUM FULL`, `CREATE INDEX CONCURRENTLY`,
   * `LOCK TABLE`, `NOT VALID`, ...). Per SURVEY.md §7.3 we build a
-  * *classifier*, not a grammar: a quote/comment/dollar-aware statement
-  * splitter plus a head-token matcher extracting exactly the attributes
-  * the nine rules need. Anything unrecognized classifies as
+  * *classifier*, not a grammar: one lexer that splits statements and
+  * tokenizes them in a single pass under PostgreSQL's own lexical rules
+  * (`standard_conforming_strings` on, so a backslash in `'…'` is
+  * literal — see [[lex]]), plus a head-token matcher extracting exactly
+  * the attributes the nine rules need. Anything unrecognized classifies as
   * [[OtherStmt]] — which every rule treats as safe, mirroring the
   * reference rules ignoring other AST node types
   * (e.g. `internal/analyzer/rules/rename.go:54`).
@@ -199,122 +201,12 @@ object SqlClassifier {
   final case class OtherStmt(head: String, sql: String) extends Stmt
 
   // ---------------------------------------------------------------------
-  // Statement splitting
-  // ---------------------------------------------------------------------
-
-  /** Split a multi-statement SQL string on top-level semicolons, honoring
-    * single-quoted strings (with '' escapes and E'\' escapes), double-
-    * quoted identifiers, line comments, nested block comments,
-    * dollar-quoted bodies ($tag$ ... $tag$), and PG 14+ SQL-standard
-    * routine bodies (`BEGIN ATOMIC stmt; stmt; END` — the semicolons
-    * inside are NOT statement separators and the body is not
-    * dollar-quoted; `CASE ... END` expressions inside the body are
-    * depth-tracked so their END does not close it).
-    * Empty/whitespace-only input yields zero statements
-    * (parser.go:24-26 behavior).
-    */
-  def splitStatements(sql: String): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    val n = sql.length
-    // BEGIN ATOMIC body tracking: prevWord is the last bare word seen
-    // (uppercased) — quotes/dollar-quotes reset it, comments and
-    // whitespace are transparent (`BEGIN /*c*/ ATOMIC` is valid).
-    var prevWord = ""
-    var atomicDepth = 0
-    var caseDepth = 0
-    def flush(): Unit = {
-      val s = cur.toString.trim
-      if (s.nonEmpty) out += s
-      cur.clear()
-      prevWord = ""; atomicDepth = 0; caseDepth = 0
-    }
-    while (i < n) {
-      val c = sql.charAt(i)
-      c match {
-        case ';' if atomicDepth > 0 => cur += c; i += 1; prevWord = ""
-        case ';' => flush(); i += 1
-        case w if w.isLetter || w == '_' =>
-          val j0 = i
-          while (i < n && (sql.charAt(i).isLetterOrDigit ||
-              sql.charAt(i) == '_' || sql.charAt(i) == '$')) i += 1
-          val word = sql.substring(j0, i)
-          cur ++= word
-          val up = word.toUpperCase
-          if (up == "ATOMIC" && prevWord == "BEGIN") atomicDepth += 1
-          else if (atomicDepth > 0) {
-            if (up == "CASE") caseDepth += 1
-            else if (up == "END") {
-              if (caseDepth > 0) caseDepth -= 1 else atomicDepth -= 1
-            }
-          }
-          prevWord = up
-        case '\'' =>
-          // single-quoted literal; handle '' escape. (E'' backslash
-          // escapes: a backslash before ' also escapes inside E-strings;
-          // we conservatively honor backslash-escape always — harmless
-          // for standard strings where \ is literal but ' ends anyway.)
-          cur += c; i += 1
-          var done = false
-          while (i < n && !done) {
-            val d = sql.charAt(i)
-            cur += d
-            if (d == '\\' && i + 1 < n) { cur += sql.charAt(i + 1); i += 2 }
-            else if (d == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') { cur += '\''; i += 2 }
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-          prevWord = ""
-        case '"' =>
-          cur += c; i += 1
-          var done = false
-          while (i < n && !done) {
-            val d = sql.charAt(i); cur += d; i += 1
-            if (d == '"') {
-              if (i < n && sql.charAt(i) == '"') { cur += '"'; i += 1 }
-              else done = true
-            }
-          }
-          prevWord = ""
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          var depth = 1; i += 2
-          while (i < n && depth > 0) {
-            if (i + 1 < n && sql.charAt(i) == '/' && sql.charAt(i + 1) == '*') {
-              depth += 1; i += 2
-            } else if (i + 1 < n && sql.charAt(i) == '*' && sql.charAt(i + 1) == '/') {
-              depth -= 1; i += 2
-            } else i += 1
-          }
-          cur += ' '
-        case '$' =>
-          // possible dollar-quote open: $tag$ where tag is [A-Za-z0-9_]*
-          var j = i + 1
-          while (j < n && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-          if (j < n && sql.charAt(j) == '$') {
-            val tag = sql.substring(i, j + 1) // includes both $
-            val end = sql.indexOf(tag, j + 1)
-            val stop = if (end < 0) n else end + tag.length
-            cur ++= sql.substring(i, stop)
-            i = stop
-            prevWord = ""
-          } else { cur += c; i += 1 }
-        case _ => cur += c; i += 1
-      }
-    }
-    flush()
-    out.result()
-  }
-
-  // ---------------------------------------------------------------------
-  // Tokenizer
+  // Lexer
   // ---------------------------------------------------------------------
 
   /** Token: WORD (identifier/keyword; quoted identifiers keep case, bare
-    * ones are matched case-insensitively), STR (literal), NUM, or PUNCT.
+    * ones are matched case-insensitively), STR (string constant in any
+    * spelling: `'…'`, `E'…'` or `$tag$…$tag$`), NUM, or PUNCT.
     */
   final case class Tok(text: String, kind: Int) {
     def isKw(kw: String): Boolean = kind == Tok.Word && text.equalsIgnoreCase(kw)
@@ -323,134 +215,164 @@ object SqlClassifier {
     val Word = 0; val Str = 1; val Num = 2; val Punct = 3
   }
 
-  def tokenize(s: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
+  /** One statement: trimmed, comment-stripped text (no trailing
+    * semicolon) and its tokens.
+    */
+  private final case class Lexed(sql: String, toks: Vector[Tok])
+
+  /** The one lexer: a single left-to-right pass over `sql` under
+    * PostgreSQL's lexical rules, with `standard_conforming_strings` on
+    * (the default since PG 9.1):
+    *   - `'…'`: `''` is the only escape, a backslash is literal;
+    *   - `E'…'` (the `E` its own word): backslash escapes as well;
+    *   - `"…"` identifiers, `""` the escape;
+    *   - `$tag$…$tag$` opens only where an identifier cannot continue
+    *     (`t$a$` is one identifier) and the tag does not start with a
+    *     digit (`$1` is a parameter);
+    *   - `--` comments are dropped, nested block comments become a space;
+    *   - a top-level `;` ends a statement, except inside a PG 14+
+    *     SQL-standard routine body (`BEGIN ATOMIC stmt; stmt; END`, not
+    *     dollar-quoted), where `CASE … END` is depth-tracked so its END
+    *     does not close the body.
+    * Empty/whitespace-only statements are dropped (parser.go:24-26). A
+    * construct still open at the end of the input is an error naming it.
+    */
+  private def lex(sql: String): Either[SqlParseError, Vector[Lexed]] = {
+    val out = Vector.newBuilder[Lexed]
+    val text = new StringBuilder
+    val toks = Vector.newBuilder[Tok]
+    val n = sql.length
     var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '\'') {
-        val sb = new StringBuilder
-        i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = s.charAt(i)
-          if (d == '\'') {
-            if (i + 1 < n && s.charAt(i + 1) == '\'') { sb += '\''; i += 2 }
-            else { done = true; i += 1 }
-          } else { sb += d; i += 1 }
+    var tok: Tok = null // the token the current step produced, if any
+    var open = "" // the construct left unterminated, if any
+    // BEGIN ATOMIC tracking: prevWord is the last bare word (uppercased),
+    // reset by strings, quoted identifiers and `;`; numbers and other
+    // punctuation are transparent
+    var prevWord = ""
+    var atomicDepth = 0
+    var caseDepth = 0
+    def at(k: Int, c: Char): Boolean = k < n && sql.charAt(k) == c
+    def flush(): Unit = {
+      val s = text.toString.trim
+      if (s.nonEmpty) out += Lexed(s, toks.result())
+      text.clear(); toks.clear()
+      prevWord = ""; atomicDepth = 0; caseDepth = 0
+    }
+    /** From just past an opening `q` through its close: a doubled `q`
+      * is an escape, and with `backslash` so is `\` + any char.
+      */
+    def quoted(q: Char, backslash: Boolean, kind: Int, what: String): Unit = {
+      val sb = new StringBuilder
+      while (i < n) {
+        val d = sql.charAt(i)
+        if (backslash && d == '\\' && i + 1 < n) { sb ++= sql.substring(i, i + 2); i += 2 }
+        else if (d != q) { sb += d; i += 1 }
+        else if (at(i + 1, q)) { sb += q; i += 2 }
+        else { i += 1; tok = Tok(sb.toString, kind); return }
+      }
+      open = what
+    }
+    while (i < n && open.isEmpty) {
+      val start = i
+      val c = sql.charAt(i)
+      tok = null
+      var word = ""
+      if (c == ';' && atomicDepth == 0) { flush(); i += 1 }
+      else if (c == '-' && at(i + 1, '-')) {
+        while (i < n && sql.charAt(i) != '\n') i += 1
+      } else if (c == '/' && at(i + 1, '*')) {
+        var depth = 1; i += 2
+        while (i < n && depth > 0) {
+          if (at(i, '/') && at(i + 1, '*')) { depth += 1; i += 2 }
+          else if (at(i, '*') && at(i + 1, '/')) { depth -= 1; i += 2 }
+          else i += 1
         }
-        out += Tok(sb.toString, Tok.Str)
-      } else if (c == '"') {
-        val sb = new StringBuilder
-        i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = s.charAt(i)
-          if (d == '"') {
-            if (i + 1 < n && s.charAt(i + 1) == '"') { sb += '"'; i += 2 }
-            else { done = true; i += 1 }
-          } else { sb += d; i += 1 }
-        }
-        out += Tok(sb.toString, Tok.Word) // quoted identifier
-      } else if (c.isLetter || c == '_') {
-        val j0 = i
-        while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_' || s.charAt(i) == '$')) i += 1
-        out += Tok(s.substring(j0, i), Tok.Word)
-      } else if (c.isDigit || (c == '.' && i + 1 < n && s.charAt(i + 1).isDigit)) {
-        val j0 = i
-        while (i < n && (s.charAt(i).isDigit || s.charAt(i) == '.' ||
-            s.charAt(i) == 'e' || s.charAt(i) == 'E' ||
-            ((s.charAt(i) == '+' || s.charAt(i) == '-') && i > j0 &&
-              (s.charAt(i - 1) == 'e' || s.charAt(i - 1) == 'E')))) i += 1
-        out += Tok(s.substring(j0, i), Tok.Num)
-      } else if (c == ':' && i + 1 < n && s.charAt(i + 1) == ':') {
-        out += Tok("::", Tok.Punct); i += 2
+        if (depth > 0) open = "block comment" else text += ' '
       } else {
-        out += Tok(c.toString, Tok.Punct); i += 1
+        if (c.isWhitespace) i += 1
+        else if (c.isLetter || c == '_') {
+          while (i < n && (sql.charAt(i).isLetterOrDigit ||
+              sql.charAt(i) == '_' || sql.charAt(i) == '$')) i += 1
+          if (i == start + 1 && (c == 'E' || c == 'e') && at(i, '\'')) {
+            i += 1; quoted('\'', backslash = true, Tok.Str, "string literal")
+          } else {
+            tok = Tok(sql.substring(start, i), Tok.Word)
+            word = tok.text.toUpperCase
+          }
+        } else if (c == '\'') {
+          i += 1; quoted(c, backslash = false, Tok.Str, "string literal")
+        } else if (c == '"') {
+          i += 1; quoted(c, backslash = false, Tok.Word, "quoted identifier")
+        } else if (c == '$') {
+          var j = i + 1
+          if (j < n && (sql.charAt(j).isLetter || sql.charAt(j) == '_'))
+            while (j < n && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
+          if (at(j, '$')) {
+            val tag = sql.substring(i, j + 1)
+            val end = sql.indexOf(tag, j + 1)
+            if (end < 0) open = "dollar-quoted string"
+            else { tok = Tok(sql.substring(j + 1, end), Tok.Str); i = end + tag.length }
+          } else { tok = Tok("$", Tok.Punct); i += 1 }
+        } else if (c.isDigit || (c == '.' && i + 1 < n && sql.charAt(i + 1).isDigit)) {
+          while (i < n && (sql.charAt(i).isDigit || sql.charAt(i) == '.' ||
+              sql.charAt(i) == 'e' || sql.charAt(i) == 'E' ||
+              ((sql.charAt(i) == '+' || sql.charAt(i) == '-') && i > start &&
+                (sql.charAt(i - 1) == 'e' || sql.charAt(i - 1) == 'E')))) i += 1
+          tok = Tok(sql.substring(start, i), Tok.Num)
+        } else if (c == ':' && at(i + 1, ':')) { tok = Tok("::", Tok.Punct); i += 2 }
+        else { tok = Tok(c.toString, Tok.Punct); i += 1 }
+        if (tok != null) {
+          toks += tok
+          if (word == "ATOMIC" && prevWord == "BEGIN") atomicDepth += 1
+          else if (atomicDepth > 0) {
+            if (word == "CASE") caseDepth += 1
+            else if (word == "END") {
+              if (caseDepth > 0) caseDepth -= 1 else atomicDepth -= 1
+            }
+          }
+          if (tok.kind == Tok.Word || tok.kind == Tok.Str || tok.text == ";")
+            prevWord = word
+        }
+        text ++= sql.substring(start, i)
       }
     }
-    out.result()
+    if (open.nonEmpty) Left(SqlParseError(s"unterminated $open"))
+    else { flush(); Right(out.result()) }
   }
+
+  private def lexOrThrow(sql: String): Vector[Lexed] =
+    lex(sql).fold(e => throw e, identity)
+
+  /** Split a multi-statement SQL string into its statements' text
+    * (trimmed, comments stripped, no trailing semicolon) by [[lex]]'s
+    * rules; throws [[SqlParseError]] on an unterminated construct.
+    */
+  def splitStatements(sql: String): Seq[String] = lexOrThrow(sql).map(_.sql)
+
+  /** All tokens of `s` by [[lex]]'s rules, statement separators dropped. */
+  def tokenize(s: String): Vector[Tok] = lexOrThrow(s).flatMap(_.toks)
 
   // ---------------------------------------------------------------------
   // Classification
   // ---------------------------------------------------------------------
 
-  /** Parse + classify a (possibly multi-statement) SQL string.
-    * Empty / whitespace-only → Right(Nil). Structurally broken input
-    * (unterminated quote) → Left(SqlParseError).
+  /** Parse + classify a (possibly multi-statement) SQL string: one
+    * [[lex]] pass, each statement classified from its own tokens.
+    * Empty / whitespace-only → Right(Nil). An unterminated string,
+    * quoted identifier, dollar quote or block comment →
+    * Left(SqlParseError) naming it.
     */
-  def parse(sql: String): Either[SqlParseError, Seq[Stmt]] = {
-    // unterminated single-quote detection: count quote chars outside
-    // comments via a simplified scan — splitStatements already consumes
-    // them; detect by re-scanning: if a statement's tokenization consumed
-    // past end inside a string we can't tell, so do a direct scan here.
-    if (hasUnterminatedQuote(sql))
-      Left(SqlParseError("unterminated quoted string"))
-    else Right(splitStatements(sql).map(classify))
-  }
+  def parse(sql: String): Either[SqlParseError, Seq[Stmt]] =
+    lex(sql).map(_.map(l => classify(l.toks, l.sql)))
 
   /** Classify, throwing on structural errors (Dataset-friendly). */
   def parseOrThrow(sql: String): Seq[Stmt] =
     parse(sql).fold(e => throw e, identity)
 
-  private def hasUnterminatedQuote(sql: String): Boolean = {
-    var i = 0; val n = sql.length
-    while (i < n) {
-      sql.charAt(i) match {
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          while (i < n && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          var depth = 1; i += 2
-          while (i < n && depth > 0) {
-            if (i + 1 < n && sql.charAt(i) == '/' && sql.charAt(i + 1) == '*') { depth += 1; i += 2 }
-            else if (i + 1 < n && sql.charAt(i) == '*' && sql.charAt(i + 1) == '/') { depth -= 1; i += 2 }
-            else i += 1
-          }
-          if (depth > 0) return true
-        case '\'' =>
-          // same conservative backslash-escape policy as
-          // splitStatements — the two scanners must agree or a valid
-          // E'\'' string is rejected as unterminated
-          i += 1
-          var closed = false
-          while (i < n && !closed) {
-            if (sql.charAt(i) == '\\' && i + 1 < n) i += 2
-            else if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else { closed = true; i += 1 }
-            } else i += 1
-          }
-          if (!closed) return true
-        case '"' =>
-          i += 1
-          var closed = false
-          while (i < n && !closed) {
-            if (sql.charAt(i) == '"') { closed = true }
-            i += 1
-          }
-          if (!closed) return true
-        case '$' =>
-          // skip dollar-quoted bodies whole: an apostrophe inside
-          // $$ it's fine $$ is not a quote open
-          var j = i + 1
-          while (j < n && (sql.charAt(j).isLetterOrDigit ||
-              sql.charAt(j) == '_')) j += 1
-          if (j < n && sql.charAt(j) == '$') {
-            val tag = sql.substring(i, j + 1)
-            val end = sql.indexOf(tag, j + 1)
-            i = if (end < 0) n else end + tag.length
-          } else i += 1
-        case _ => i += 1
-      }
-    }
-    false
-  }
+  /** Classify one statement's text. */
+  def classify(stmtSql: String): Stmt = classify(tokenize(stmtSql), stmtSql)
 
-  def classify(stmtSql: String): Stmt = {
-    val toks = tokenize(stmtSql)
+  private def classify(toks: Vector[Tok], stmtSql: String): Stmt = {
     if (toks.isEmpty) return OtherStmt("", stmtSql)
     val t = new Cursor(toks)
     val head = toks.head.text.toUpperCase

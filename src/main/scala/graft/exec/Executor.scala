@@ -26,7 +26,9 @@ trait SqlRunner {
 /** Runs DDL/DML against Spark-managed tables. Spark has no
   * multi-statement transactions — each statement is its own commit
   * (table formats supply per-commit atomicity), so `transactional` is
-  * advisory here.
+  * advisory here. Statements are split by PostgreSQL's lexical rules,
+  * the same ones the danger gate analyzed, so Spark runs exactly the
+  * statements the gate saw.
   */
 final class SparkSqlRunner(spark: org.apache.spark.sql.SparkSession)
     extends SqlRunner {
@@ -49,17 +51,14 @@ final class SparkSqlRunner(spark: org.apache.spark.sql.SparkSession)
   */
 final class JdbcRunner(url: String, lockTimeoutMs: Long,
     statementTimeoutMs: Long) extends SqlRunner {
-  /** ms → whole seconds, rounded up, min 1 (setQueryTimeout(0)=∞). */
-  private def ceilSeconds(ms: Long): Int =
-    math.max(1L, (ms + 999) / 1000).toInt
+  import JdbcRunner.{ceilSeconds, isPostgres}
   def run(sql: String, transactional: Boolean): Unit = {
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       // The SET envelope is PostgreSQL dialect (the reference's only
       // target); on other databases fall back to the portable JDBC
       // query timeout so the statement bound still holds.
-      val isPg = conn.getMetaData.getDatabaseProductName
-        .toLowerCase(java.util.Locale.ROOT).contains("postgres")
+      val isPg = isPostgres(conn)
       // PG's simple-query protocol takes the migration file verbatim
       // (semicolons and all — the reference's posture); stricter JDBC
       // dialects (Derby) reject a bare trailing `;` on a single
@@ -92,6 +91,16 @@ final class JdbcRunner(url: String, lockTimeoutMs: Long,
       }
     } finally conn.close()
   }
+}
+
+/** The JDBC primitives [[JdbcRunner]] and [[JdbcLock]] share. */
+private[exec] object JdbcRunner {
+  def isPostgres(c: java.sql.Connection): Boolean =
+    c.getMetaData.getDatabaseProductName
+      .toLowerCase(java.util.Locale.ROOT).contains("postgres")
+
+  /** ms → whole seconds, rounded up, min 1 (setQueryTimeout(0)=∞). */
+  def ceilSeconds(ms: Long): Int = math.max(1L, (ms + 999) / 1000).toInt
 }
 
 /** Single-writer mutual exclusion. The reference uses a PG advisory
@@ -150,9 +159,7 @@ final class JdbcLock(url: String,
     if (conn != null) return // re-entrant no-op while held
     val c = java.sql.DriverManager.getConnection(url)
     try {
-      val isPg = c.getMetaData.getDatabaseProductName
-        .toLowerCase(java.util.Locale.ROOT).contains("postgres")
-      if (isPg) {
+      if (JdbcRunner.isPostgres(c)) {
         val st = c.createStatement()
         try {
           val rs = st.executeQuery(s"SELECT pg_try_advisory_lock($lockId)")
@@ -168,7 +175,7 @@ final class JdbcLock(url: String,
           // a competing holder's uncommitted row blocks this insert;
           // bound the wait so the loser errors instead of queueing
           // (ceil to whole seconds — JDBC's portable granularity)
-          ps.setQueryTimeout(math.max(1L, (lockTimeoutMs + 999) / 1000).toInt)
+          ps.setQueryTimeout(JdbcRunner.ceilSeconds(lockTimeoutMs))
           ps.setLong(1, lockId)
           ps.executeUpdate() // NOT committed — the row lock IS the lock
         } catch {

@@ -123,6 +123,12 @@ class ClassifierFuzzSpec extends AnyFunSuite {
       "users(id) ON DELETE CASCADE"),
     c("ALTER TABLE users ADD COLUMN vec double precision"),
     c("ALTER TABLE users ADD COLUMN iv interval DEFAULT '1 day'"),
+    // every spelling of a string constant is a constant (pg_query:
+    // A_Const); a backslash in '…' is literal
+    c("ALTER TABLE t ADD COLUMN c text DEFAULT E'abc'"),
+    c("ALTER TABLE t ADD COLUMN c text DEFAULT $$abc$$"),
+    c("ALTER TABLE t ADD COLUMN c text DEFAULT $q$it's$q$ NOT NULL"),
+    c("ALTER TABLE t ADD COLUMN c text DEFAULT 'C:\\' NOT NULL"),
     // generated columns
     c("ALTER TABLE users ADD COLUMN disp text GENERATED ALWAYS AS " +
       "(first || ' ' || last) STORED", GEN),

@@ -114,6 +114,8 @@ class ClassifierPropSpec extends AnyFunSuite {
       Gen.const("CREATE TABLE \"we;ird\" (id INT)"),
       Gen.const("CREATE FUNCTION f() RETURNS void AS $fn$ BEGIN ; 'x'; \" END $fn$ LANGUAGE plpgsql"),
       Gen.const("SELECT E'back\\\\slash;''still'"),
+      Gen.const("CREATE TABLE t (x TEXT DEFAULT 'C:\\')"),
+      Gen.const("CREATE TABLE t (x TEXT DEFAULT $$a;b$$)"),
       genBare.map(n => s"CREATE TABLE $n (id INT)"),
       genBare.map(n => s"DROP TABLE IF EXISTS $n"))
     checkProp(Prop.forAll(

@@ -35,12 +35,24 @@ class ClassifierSpec extends AnyFunSuite {
     assert(stmts(0).isInstanceOf[CreateTableStmt])
     assert(stmts(1).isInstanceOf[OtherStmt])
     assert(stmts(2).isInstanceOf[DropTableStmt])
+    // standard_conforming_strings: a backslash is literal in '…', so the
+    // quote after it closes the string and the index is a statement
+    val hidden = "INSERT INTO t VALUES ('a\\'); CREATE INDEX i ON big (x); -- ')"
+    assert(SqlClassifier.parseOrThrow(hidden).map(_.getClass) ==
+      Seq(classOf[OtherStmt], classOf[CreateIndexStmt]))
   }
 
   test("unterminated quote is a parse error") {
-    assert(SqlClassifier.parse("SELECT 'oops").isLeft)
-    assert(SqlClassifier.parse("SELECT \"oops").isLeft)
-    assert(SqlClassifier.parse("/* never closed").isLeft)
+    def err(sql: String) = SqlClassifier.parse(sql).left.map(_.detail)
+    assert(err("SELECT 'oops") == Left("unterminated string literal"))
+    assert(err("SELECT E'it\\'s") == Left("unterminated string literal"))
+    assert(err("SELECT \"oops") == Left("unterminated quoted identifier"))
+    assert(err("/* never closed") == Left("unterminated block comment"))
+    assert(err("SELECT $$ open") == Left("unterminated dollar-quoted string"))
+    // `t$a$` is one identifier (`$` continues it), so no dollar quote
+    // opens there and the later quote is left open
+    assert(err("CREATE TABLE t$a$ (id bigint); SELECT 'x") ==
+      Left("unterminated string literal"))
   }
 
   test("CREATE INDEX variants") {
@@ -64,6 +76,9 @@ class ClassifierSpec extends AnyFunSuite {
     // unnamed index
     val s6 = one("CREATE INDEX ON users (email)").asInstanceOf[CreateIndexStmt]
     assert(s6.indexName.isEmpty && s6.table.name == "users")
+    // a comment between the keywords is skipped
+    assert(SqlClassifier.classify("CREATE /* c */ INDEX i ON t (x)")
+      .isInstanceOf[CreateIndexStmt])
   }
 
   test("ALTER TABLE ADD COLUMN with defaults") {

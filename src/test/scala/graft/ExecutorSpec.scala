@@ -93,6 +93,14 @@ class ExecutorSpec extends AnyFunSuite {
     assert(r.applied == Seq("001"))
     // dry-run also skips the gate (reference apply.go:71-77)
     newExec(dryRun = true).apply(Seq(dangerous))
+    // a backslash is literal in '…' (standard_conforming_strings), so
+    // the gate sees the CREATE INDEX the database would run
+    val rn = new RecordingRunner
+    intercept[DangerousMigrations] {
+      newExec(runner = rn).apply(Seq(mig("002", up =
+        "INSERT INTO t VALUES ('a\\'); CREATE INDEX i ON big (x); -- ')")))
+    }
+    assert(rn.ran.isEmpty)
   }
 
   test("danger gate respects the configured target PG version") {
