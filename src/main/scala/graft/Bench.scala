@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * prints ONE JSON line {"metric":…,"value":N,"unit":"sec","queries":…}.
   *
   * local[32] with shuffle.partitions=32 (match cores, not 200) and AQE
-  * on — the same settings a real cluster run would scale up.
+  * on — the same settings a real cluster run would scale up. A timed
+  * run that throws posts no time; its query is listed in `failed` (and
+  * its error class in the telemetry file), never as a fast min.
   */
 object Bench {
   /** Control-query drift: the median of min/reference-min ratios over
@@ -245,8 +247,12 @@ object Bench {
       }
     }
     val jobTelemetry = scala.collection.mutable.Map[String, (Long, Long)]()
+    // A run that throws posts NO time (a failed query must not read as a
+    // fast one): its query lands in `failed` with the first error class
+    // seen, and its min is over the runs that completed, if any.
+    val failures = scala.collection.mutable.Map[String, String]()
     def timeQuery(name: String, n: Int): Seq[Double] =
-      (1 to n).map { _ =>
+      (1 to n).flatMap { _ =>
         // queries may persist intermediates (d08): every iteration
         // starts cold so the min measures the plan, not a cache hit
         spark.catalog.clearCache()
@@ -271,25 +277,27 @@ object Bench {
         // recorded under count() are unchanged for agg/join-shaped
         // queries (their work was already forced; the delta is the
         // few-row final projection) — d22's reference is drain-based.
-        var qeDone: Option[org.apache.spark.sql.execution.QueryExecution] =
-          None
-        try {
+        val run = try {
           val qe = qmap(name)(spark, sfDir).queryExecution
           qe.executedPlan
             .execute().foreachPartition(it => while (it.hasNext) it.next())
-          qeDone = Some(qe)
-        } catch { case _: Throwable => () }
+          Right(qe)
+        } catch { case scala.util.control.NonFatal(e) => Left(e) }
         val dt = (System.nanoTime() - t0) / 1e9
         // fingerprint/metrics read AFTER the clock stops (driver-side
         // string work must not ride in the measurement)
-        qeDone.foreach { qe =>
-          try telemetry(name) = PlanTelemetry.stats(qe)
-          catch { case _: Throwable => () }
-          settleListener()
-          jobTelemetry(name) = (jobShuffleBytes.get - preBytes,
-            jobShuffleRecords.get - preRecords)
+        run match {
+          case Right(qe) =>
+            try telemetry(name) = PlanTelemetry.stats(qe)
+            catch { case _: Throwable => () }
+            settleListener()
+            jobTelemetry(name) = (jobShuffleBytes.get - preBytes,
+              jobShuffleRecords.get - preRecords)
+            Some(dt)
+          case Left(e) =>
+            failures.getOrElseUpdate(name, e.getClass.getName)
+            None
         }
-        dt
       }
     // One full measurement SESSION: pre-calibration (with the bounded
     // cooldown retry on a sick pre-leg), 3 timed runs per query,
@@ -326,7 +334,8 @@ object Bench {
       val flagged: Seq[String] =
         if (!sfComparable) Seq.empty
         else firstPass.collect {
-          case (name, ts) if ref.get.mins.get(name).exists(ts.min > 2 * _) =>
+          case (name, ts)
+              if ts.nonEmpty && ref.get.mins.get(name).exists(ts.min > 2 * _) =>
             name
         }
       val results = firstPass.map { case (name, ts) =>
@@ -371,14 +380,16 @@ object Bench {
         System.gc()
         Some(runSession())
       }
-    val results: Seq[(String, Seq[Double])] = s2 match {
+    // queries with no completed run have no min: they appear only in
+    // `failed`
+    val results: Seq[(String, Seq[Double])] = (s2 match {
       case None => s1.results
       case Some(b) =>
         val m2 = b.results.toMap
         s1.results.map { case (name, ts) =>
           name -> (ts ++ m2.getOrElse(name, Seq.empty)).sorted
         }
-    }
+    }).filter(_._2.nonEmpty)
     val (cpuLeg, shufLeg) = s2 match {
       case None => s1.legs
       case Some(b) => (math.min(s1.legs._1, b.legs._1),
@@ -440,8 +451,12 @@ object Bench {
         val (jb, jr) = jobTelemetry.getOrElse(name, (0L, 0L))
         s""""$name":{"plan_fp":"${t.fingerprint}","shuffle_bytes":$jb,"shuffle_records":$jr,"plan_shuffle_bytes":${t.shuffleBytes},"plan_shuffle_records":${t.shuffleRecords},"exchanges":${t.exchanges},"min_sec":${f3(results.toMap.apply(name).min)}}"""
       }.mkString("{\n", ",\n", "\n}")
+      val failedBody = failures.keys.toSeq.sorted
+        .map(name => s""""$name":"${failures(name)}"""")
+        .mkString("{", ",", "}")
       java.nio.file.Files.write(java.nio.file.Paths.get(teleFile),
-        s"""{"sf":"$sfDir","runs":$runs,"queries":$body}""".getBytes("UTF-8"))
+        s"""{"sf":"$sfDir","runs":$runs,"queries":$body,"failed":$failedBody}"""
+          .getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     val qs = results.map { case (k, ts) => "\"" + k + "\":" + f3(ts.min) }
       .mkString("{", ",", "}")
@@ -473,6 +488,8 @@ object Bench {
     // always fit the tail whole.
     val planChangedJson =
       planChanged.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson =
+      failures.keys.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val shuffleChangedJson =
       shuffleChanged.map("\"" + _ + "\"").mkString("[", ",", "]")
     // fp map rides in the middle (diagnostic) line — it may be cut by
@@ -489,7 +506,7 @@ object Bench {
       case None => "null"
     }
     println(
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"runs":$runs,"calibration_sec":{"pre":${f3(s1.calPre)},"post":${f3(s1.calPost)}},"calibration_shuffle_sec":{"pre":${f3(s1.calShufPre)},"post":${f3(s1.calShufPost)}},"calibration_status":"$calStatus","control_drift":$driftJson,"session_repeated":$sessionRepeated,"flagged_reruns":$flaggedJson,"plan_changed":$planChangedJson,"shuffle_changed":$shuffleChangedJson,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"runs":$runs,"calibration_sec":{"pre":${f3(s1.calPre)},"post":${f3(s1.calPost)}},"calibration_shuffle_sec":{"pre":${f3(s1.calShufPre)},"post":${f3(s1.calShufPost)}},"calibration_status":"$calStatus","control_drift":$driftJson,"session_repeated":$sessionRepeated,"flagged_reruns":$flaggedJson,"plan_changed":$planChangedJson,"shuffle_changed":$shuffleChangedJson,"failed":$failedJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -359,17 +359,22 @@ object SqlClassifier {
   /** Parse + classify a (possibly multi-statement) SQL string: one
     * [[lex]] pass, each statement classified from its own tokens.
     * Empty / whitespace-only → Right(Nil). An unterminated string,
-    * quoted identifier, dollar quote or block comment →
-    * Left(SqlParseError) naming it.
+    * quoted identifier, dollar quote or block comment, or a statement
+    * that ends where a name is expected → Left(SqlParseError) naming it.
     */
   def parse(sql: String): Either[SqlParseError, Seq[Stmt]] =
-    lex(sql).map(_.map(l => classify(l.toks, l.sql)))
+    lex(sql).flatMap { stmts =>
+      try Right(stmts.map(l => classify(l.toks, l.sql)))
+      catch { case e: SqlParseError => Left(e) }
+    }
 
   /** Classify, throwing on structural errors (Dataset-friendly). */
   def parseOrThrow(sql: String): Seq[Stmt] =
     parse(sql).fold(e => throw e, identity)
 
-  /** Classify one statement's text. */
+  /** Classify one statement's text; throws [[SqlParseError]] where
+    * [[parse]] returns Left.
+    */
   def classify(stmtSql: String): Stmt = classify(tokenize(stmtSql), stmtSql)
 
   private def classify(toks: Vector[Tok], stmtSql: String): Stmt = {
@@ -402,7 +407,15 @@ object SqlClassifier {
     def peekKw(off: Int, kw: String): Boolean =
       pos + off < toks.length && toks(pos + off).isKw(kw)
     def curIsKw(kw: String): Boolean = peekKw(0, kw)
-    def next(): Tok = { val t = toks(pos); pos += 1; t }
+    /** The current token; a statement that ends where the grammar
+      * still needs one (`LOCK`, `DROP TABLE`, `CREATE INDEX i ON`) is a
+      * [[SqlParseError]] naming the last token read.
+      */
+    def next(): Tok = {
+      if (eof) throw SqlParseError(
+        s"unexpected end of statement after '${toks(pos - 1).text}'")
+      val t = toks(pos); pos += 1; t
+    }
     def skipKw(kw: String): Boolean =
       if (curIsKw(kw)) { pos += 1; true } else false
     def skipPunct(p: String): Boolean =

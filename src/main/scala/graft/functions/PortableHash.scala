@@ -2,8 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 
 /** The engine's single portable randomness primitive: every
   * pseudo-random quantity in the dedup/similarity operators (MinHash
@@ -63,12 +62,16 @@ object PortableHash {
   def permA(i: Int): Long = h60("perm_a_" + i) % (P - 1) + 1
   def permB(i: Int): Long = h60("perm_b_" + i) % P
 
-  /** Composable Spark twin of the SQL fragment (conv parses the hex
-    * prefix; the value is < 2^60 so the long cast is exact). Used by
-    * the parity specs and the higher-order composable forms.
+  /** Spark twin of [[h60Sql]]: one [[H60]] expression over
+    * `c.cast(binary)` (a string's UTF-8 bytes, the coercion `md5`
+    * applies). Bit-identical to the string chain
+    * `conv(substring(md5(c), 1, 15), 16, 10).cast("long")` — md5's first
+    * 15 hex characters ARE the digest's top 60 bits, which [[h60]]
+    * reads straight from the bytes — without formatting, cutting and
+    * re-parsing 32 hex characters per row (FunctionsSpec pins parity).
     */
   def h60col(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+    GraftColumnBridge.column(H60(GraftColumnBridge.expression(c.cast("binary"))))
 
   /** DuckDB SQL fragment computing h60 of expression `x`. */
   def h60Sql(x: String): String =

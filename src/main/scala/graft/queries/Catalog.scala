@@ -1,8 +1,8 @@
 package graft.queries
 
+import graft.functions.ExactSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** One declared query: the Spark implementation plus (when the operator
   * is SQL-expressible) the equivalent ANSI SQL the driver runs in DuckDB
@@ -56,9 +56,19 @@ object Catalog {
   // the final cast back to double is then deterministic. Per-row double
   // arithmetic (price * (1-discount)) IS deterministic (same IEEE ops on
   // the same values) and needs no special handling.
+  //
+  // The Spark side is `ExactSum` (graft.functions), not `sum` over the
+  // cast: it takes each row's unscaled integer of the same
+  // `cast(x as decimal(p,s))` (a double rounding where that provably
+  // equals Spark's BigDecimal-and-HALF_UP cast, Spark's cast itself
+  // otherwise), adds the integers in a two-long 128-bit buffer, and
+  // finishes at the same decimal(p+10,s) type with the same overflow
+  // rule. Integer sums are exact, so the value — and the double it casts
+  // to — is bit-identical to `sum(cast(x as decimal(p,s)))`; the SQL
+  // twins below keep that spelling for DuckDB.
 
   /** Order-independent sum of a money-like column: decimal(18,2). */
-  def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+  def dsum(c: Column): Column = ExactSum(c, 18, 2).cast("double")
 
   /** Same for per-row double products. Scale 6 exactly: a product of
     * three 2-decimal factors has at most 6 true decimal digits, so the
@@ -70,7 +80,15 @@ object Catalog {
     * (at scale 10 the int exceeds 2^53 and DuckDB's two-step conversion
     * drifts 1 ULP from Spark's correctly-rounded BigDecimal cast).
     */
-  def dsum4(c: Column): Column = sum(c.cast(DecimalType(24, 6))).cast("double")
+  def dsum4(c: Column): Column = ExactSum(c, 24, 6).cast("double")
+
+  /** Exact sum for per-row products of two 2-decimal factors: scale 4
+    * covers the product's full 4 decimal digits (no rounding, so no
+    * rounding-mode ties), and at the tested scale factors the unscaled
+    * sum stays far below 2^53 for the small-magnitude columns this is
+    * used on (quantity <= 50, discount <= 0.1).
+    */
+  def dsumP4(c: Column): Column = ExactSum(c, 24, 4).cast("double")
 
   /** Order-independent average: exact decimal sum, then double division. */
   def davg(c: Column): Column = (dsum(c) / count(c)).cast("double")
@@ -80,6 +98,8 @@ object Catalog {
     s"cast(sum(cast($e as decimal(18,2))) as double)"
   def sqlDsum4(e: String): String =
     s"cast(sum(cast($e as decimal(24,6))) as double)"
+  def sqlDsumP4(e: String): String =
+    s"cast(sum(cast($e as decimal(24,4))) as double)"
   def sqlDavg(e: String): String =
     "cast(" + sqlDsum(e) + " / count(" + e + ") as double)"
 

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 import Catalog._
 
 /** The relational operator inventory (SURVEY.md §2.3): scans,
@@ -308,7 +307,7 @@ object Relational {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         t(s, d, "orders")
           .select(col("o_custkey"), col("o_orderkey"),
-            sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w)
+            graft.functions.ExactSum(col("o_totalprice"), 18, 2).over(w)
               .cast("double").as("running_spent"))
           .orderBy(col("o_custkey"), col("o_orderkey"))
       },

@@ -21,17 +21,6 @@ import Catalog._
   */
 object Relational2 {
 
-  /** Exact sum for per-row products of two 2-decimal factors: scale 4
-    * covers the product's full 4 decimal digits (no rounding, so no
-    * rounding-mode ties), and at the tested scale factors the unscaled
-    * sum stays far below 2^53 for the small-magnitude columns this is
-    * used on (quantity <= 50, discount <= 0.1).
-    */
-  private def dsumP4(c: org.apache.spark.sql.Column) =
-    sum(c.cast(DecimalType(24, 4))).cast("double")
-  private def sqlDsumP4(e: String): String =
-    s"cast(sum(cast($e as decimal(24,4))) as double)"
-
   /** q69 scratch roots that already have a JVM-exit cleanup hook —
     * computeIfAbsent keys the hook registration (once per root even if
     * q69 runs many times in one session, e.g. Bench's warm+timed runs).

@@ -47,8 +47,7 @@ object EventStreams {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
+        graft.queries.Catalog.dsum(col("value")).as("total_value"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"),
         col("total_value"))
 

@@ -26,16 +26,6 @@ class CboSpec extends SparkFunSuite {
     finally spark.sql("DROP DATABASE IF EXISTS graft_cbo CASCADE")
   }
 
-  private def withConfs(kvs: (String, String)*)(f: => Unit): Unit = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("CBO filter estimation: ANALYZE column stats shrink a filtered " +
       "dim below the broadcast threshold — BroadcastHashJoin with CBO " +
       "on, SortMergeJoin with stats off, identical rows") {
@@ -64,7 +54,7 @@ class CboSpec extends SparkFunSuite {
       def joinNodes(df: org.apache.spark.sql.DataFrame): String =
         df.queryExecution.executedPlan.toString
 
-      withConfs(
+      withConf(
         "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024).toString,
         "spark.sql.cbo.enabled" -> "false",
         "spark.sql.adaptive.enabled" -> "false") {
@@ -72,9 +62,9 @@ class CboSpec extends SparkFunSuite {
         assert(plan.contains("SortMergeJoin"),
           s"expected SMJ without CBO (file-size estimate only):\n$plan")
       }
-      val expected = withConfsResult(
+      val expected = withConf(
         "spark.sql.cbo.enabled" -> "false") { q.collect().toSeq }
-      withConfs(
+      withConf(
         "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024).toString,
         "spark.sql.cbo.enabled" -> "true",
         "spark.sql.adaptive.enabled" -> "false") {
@@ -86,12 +76,6 @@ class CboSpec extends SparkFunSuite {
           "CBO changed the answer")
       }
     }
-  }
-
-  private def withConfsResult[T](kvs: (String, String)*)(f: => T): T = {
-    var out: Option[T] = None
-    withConfs(kvs: _*) { out = Some(f) }
-    out.get
   }
 
   test("CBO join reorder: a badly-ordered 3-way join (big ⋈ big ⋈ " +
@@ -127,12 +111,12 @@ class CboSpec extends SparkFunSuite {
             Seq("big1", "big2", "tiny").find(s.contains).getOrElse("?")
           }
 
-      val (offOrder, expected) = withConfsResult(
+      val (offOrder, expected) = withConf(
         "spark.sql.cbo.enabled" -> "false") {
         val df = spark.sql(sql)
         (leafOrder(df), df.collect().toSeq)
       }
-      withConfs(
+      withConf(
         "spark.sql.cbo.enabled" -> "true",
         "spark.sql.cbo.joinReorder.enabled" -> "true") {
         val df = spark.sql(sql)

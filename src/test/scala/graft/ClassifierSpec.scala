@@ -282,6 +282,23 @@ class ClassifierSpec extends AnyFunSuite {
     assert(s2.tables.map(_.render) == Seq("users", "orders"))
   }
 
+  test("a statement that ends where a name is expected is a named parse error") {
+    def err(sql: String) = SqlClassifier.parse(sql).left.map(_.detail)
+    def after(tok: String) = Left(s"unexpected end of statement after '$tok'")
+    assert(err("LOCK") == after("LOCK"))
+    assert(err("LOCK TABLE") == after("TABLE"))
+    assert(err("DROP TABLE") == after("TABLE"))
+    assert(err("DROP TABLE IF EXISTS") == after("EXISTS"))
+    assert(err("DROP TABLE a,") == after(","))
+    assert(err("ALTER TABLE") == after("TABLE"))
+    assert(err("CREATE INDEX i ON") == after("ON"))
+    assert(err("TRUNCATE") == after("TRUNCATE"))
+    // one bad statement fails the whole migration, not just itself
+    assert(err("CREATE TABLE t (id int); LOCK;") == after("LOCK"))
+    val e = intercept[graft.model.SqlParseError](SqlClassifier.classify("LOCK"))
+    assert(e.detail == "unexpected end of statement after 'LOCK'")
+  }
+
   test("non-DDL statements classify as Other (safe)") {
     assert(one("SELECT * FROM users").isInstanceOf[OtherStmt])
     assert(one("INSERT INTO t VALUES (1)").isInstanceOf[OtherStmt])

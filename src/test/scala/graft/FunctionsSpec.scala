@@ -325,4 +325,244 @@ class FunctionsSpec extends SparkFunSuite {
     assert(got(4L) == "ssn <ssn> on file")
     assert(got(5L) == "no pii here, just words and 42")
   }
+
+  // --- long kernels of the two exactness primitives -----------------------
+
+  /** Whole-stage codegen, and the interpreted path with codegen off. */
+  private val evalModes = Seq(
+    Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+    Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  /** Error condition of the first SparkThrowable in `t`'s cause chain. */
+  private def condition(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+      case e: org.apache.spark.SparkThrowable => e.getCondition
+    }.getOrElse(t.getClass.getName)
+
+  test("h60col matches the conv(substring(md5(c), 1, 15), 16, 10) chain " +
+      "on strings, binaries and null") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(60)
+    val strs: Seq[String] = Seq("", "a", "ünïcödé", "🚀 astral 𝕊",
+      "日本語のテキスト", "perm_a_0", null) ++
+      Seq.fill(500)(rnd.nextString(rnd.nextInt(40))) ++
+      Seq.fill(500)(rnd.alphanumeric.take(rnd.nextInt(64)).mkString)
+    val bins: Seq[Array[Byte]] = Seq(Array.emptyByteArray, null,
+      Array[Byte](0, -1, 127, -128)) ++
+      Seq.fill(200)(Array.fill(rnd.nextInt(50))(rnd.nextInt(256).toByte))
+    def reference(c: org.apache.spark.sql.Column) =
+      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+    val sdf = spark.sparkContext.parallelize(strs, 3).toDF("s")
+    val bdf = spark.sparkContext.parallelize(bins, 3).toDF("b")
+    for (mode <- evalModes) withConf(mode: _*) {
+      for ((df, c) <- Seq(sdf -> col("s"), bdf -> col("b"))) {
+        val rows = df.select(graft.functions.PortableHash.h60col(c),
+          reference(c)).collect()
+        assert(rows.length == df.count())
+        rows.foreach { r =>
+          assert(r.isNullAt(0) == r.isNullAt(1))
+          if (!r.isNullAt(0)) assert(r.getLong(0) == r.getLong(1))
+        }
+        assert(rows.count(_.isNullAt(0)) == 1)
+      }
+    }
+    // and the driver-side h60 agrees with the column form
+    assert(sdf.filter(col("s").isNotNull)
+      .select(col("s"), graft.functions.PortableHash.h60col(col("s")))
+      .collect().forall(r =>
+        graft.functions.PortableHash.h60(r.getString(0)) == r.getLong(1)))
+  }
+
+  /** Adversarial doubles for the per-row decimal kernel: HALF_UP ties,
+    * signs, zeros, subnormals, the ends of the fast path (2^50 and 2^53
+    * over 10^s), precision overflow and non-finite values.
+    */
+  private def kernelSpecials(scale: Int): Seq[Double] = {
+    val p = math.pow(10, scale)
+    def around(v: Double): Seq[Double] = {
+      var up = v; var dn = v
+      (0 until 4).flatMap { _ =>
+        up = math.nextUp(up); dn = math.nextDown(dn); Seq(up, dn)
+      } :+ v
+    }
+    Seq(1.005, 2.675, 0.125, 0.5, 1.5, 2.5, 0.005, 0.015, 0.00005,
+      0.0000005, 123456.785, 1.0000005, 9.9999995, 0.1, 0.7, 1e-7)
+      .flatMap(v => Seq(v, -v)) ++
+      Seq(0.0, -0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
+        java.lang.Double.MIN_NORMAL, 1e-320, 1e16, -1e16, 9.99999999999999e15,
+        1e18, 9.2e12, -9.3e12, 1e15, 4.2e17, -4.2e17, 1e22,
+        Double.MaxValue, Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity) ++
+      around(9007199254740992.0 / p) ++ around(-9007199254740992.0 / p) ++
+      around(1125899906842624.0 / p) ++ around(-1125899906842624.0 / p)
+  }
+
+  /** Seeded doubles shaped like the data the sums see (2-decimal money,
+    * its products, ties at the next digit) plus wide random ones.
+    */
+  private def kernelRandoms(n: Int): Seq[Double] = {
+    val rnd = new scala.util.Random(6)
+    def money() = (rnd.nextInt(20000000) - 10000000) / 100.0
+    def rate() = rnd.nextInt(11) / 100.0
+    Seq.fill(n)(money()) ++
+      Seq.fill(n)(money() * (1 - rate())) ++
+      Seq.fill(n)(money() * (1 - rate()) * (1 + rate())) ++
+      Seq.fill(n)((rnd.nextInt(2000000) * 10 + 5) / 1000.0) ++
+      Seq.fill(n)((rnd.nextInt(2000000) * 10 + 5) / 100000.0) ++
+      Seq.fill(n)((rnd.nextInt(2000000) * 10 + 5) / 1e7) ++
+      Seq.fill(n)((rnd.nextDouble() - 0.5) * 2e7) ++
+      Seq.fill(n)(math.scalb(rnd.nextDouble() - 0.5, rnd.nextInt(120) - 70))
+  }
+
+  test("DecimalWord equals Spark's cast(x as decimal(p,s)) at scales 2/4/6, " +
+      "codegen and interpreted, ANSI on and off") {
+    import spark.implicits._
+    import graft.functions.DecimalWord
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    import org.apache.spark.sql.types.DecimalType
+    val mask = (BigInt(1) << 64) - 1
+    def unscaled(r: org.apache.spark.sql.Row, i: Int): Option[BigInt] =
+      if (r.isNullAt(i)) None
+      else Some((BigInt(r.getLong(i)) << 64) + (BigInt(r.getLong(i + 1)) & mask))
+    val randoms = kernelRandoms(2000)
+    for ((p, s) <- Seq(18 -> 2, 24 -> 4, 24 -> 6, 24 -> 2)) {
+      val values = kernelSpecials(s) ++ randoms
+      val df = spark.sparkContext.parallelize(values, 4).toDF("x")
+      def compare(ansi: Boolean, d: org.apache.spark.sql.DataFrame)
+          : Seq[(Double, Option[BigInt])] = {
+        val words = Seq(true, false).map(h =>
+          column(DecimalWord(expression(col("x")), p, s, h, ansi)))
+        val rows = d.select(col("x") +: col("x").cast(DecimalType(p, s)) +:
+          words: _*).collect()
+        rows.map { r =>
+          val spark0 = if (r.isNullAt(1)) None
+            else Some(BigInt(r.getDecimal(1).unscaledValue))
+          assert(unscaled(r, 2) == spark0,
+            s"x=${r.getDouble(0)} decimal($p,$s) ansi=$ansi")
+          r.getDouble(0) -> spark0
+        }.toSeq
+      }
+      for (mode <- evalModes) {
+        // legacy: overflow and non-finite values cast to null
+        val legacy = withConf(mode :+ ("spark.sql.ansi.enabled" -> "false"): _*) {
+          compare(ansi = false, df)
+        }
+        assert(legacy.length == values.length)
+        val nulls = legacy.collect { case (x, None) => x }
+        assert(nulls.exists(_.isNaN) && nulls.contains(1e22))
+        // ANSI: the same values where Spark's cast succeeds; where it
+        // fails, the kernel fails (or yields null) the same way
+        withConf(mode :+ ("spark.sql.ansi.enabled" -> "true"): _*) {
+          compare(ansi = true, df.filter(
+            !col("x").isin(nulls: _*) && !isnan(col("x"))))
+          for (x <- nulls.distinct) {
+            val one = spark.sparkContext.parallelize(Seq(x), 1).toDF("x")
+            def outcome(c: org.apache.spark.sql.Column): String =
+              try one.select(c).collect().head.toString
+              catch { case e: Exception => condition(e) }
+            val ours = outcome(column(
+              DecimalWord(expression(col("x")), p, s, high = false, ansi = true)))
+            val theirs = outcome(col("x").cast(DecimalType(p, s)))
+            assert(ours == theirs || (ours == "[null]" && theirs == "[null]"),
+              s"x=$x decimal($p,$s): kernel $ours vs cast $theirs")
+          }
+        }
+      }
+    }
+    // the fast path carries the common case; ties go to Spark's cast
+    val pow = 100.0
+    assert(graft.functions.ExactSum.fastUnscaled(12345.67, pow, 1000000000000000000L) == 1234567L)
+    assert(graft.functions.ExactSum.fastUnscaled(1.005, pow, 1000000000000000000L) ==
+      graft.functions.ExactSum.NoFastPath)
+  }
+
+  test("ExactSum equals sum(cast(x as decimal(p,s))): nulls, all-null and " +
+      "empty groups, mixed signs, partitioning, a window frame") {
+    import spark.implicits._
+    import graft.functions.ExactSum
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.DecimalType
+    val rnd = new scala.util.Random(18)
+    val vals = kernelRandoms(300).filter(v => math.abs(v) < 1e9) ++
+      kernelSpecials(2).filter(v => !v.isNaN && !v.isInfinite && math.abs(v) < 1e12)
+    val rows: Seq[(Int, Int, Option[Double])] =
+      vals.zipWithIndex.map { case (v, i) =>
+        (rnd.nextInt(5), i, if (i % 11 == 0) None else Some(v))
+      } ++ Seq((7, -1, None), (7, -2, None)) // an all-null group
+    val df = spark.sparkContext.parallelize(rows, 4).toDF("g", "i", "x")
+    val specs = Seq(18 -> 2, 24 -> 6, 24 -> 4)
+    def ours = specs.map { case (p, s) => ExactSum(col("x"), p, s) }
+    def theirs = specs.map { case (p, s) => sum(col("x").cast(DecimalType(p, s))) }
+    def grouped(d: org.apache.spark.sql.DataFrame,
+        cs: Seq[org.apache.spark.sql.Column]) =
+      d.groupBy("g").agg(cs.head, cs.tail: _*).collect()
+        .map(r => r.getInt(0) -> r.toSeq.tail).toMap
+    for (mode <- evalModes) withConf(mode: _*) {
+      val ref = grouped(df, theirs)
+      assert(ref(7).forall(_ == null))
+      assert(grouped(df, ours) == ref)
+      assert(grouped(df.repartition(7), ours) == ref)
+      // global aggregate, and over empty input (null, like sum)
+      assert(df.agg(ours.head, ours.tail: _*).collect().toSeq ==
+        df.agg(theirs.head, theirs.tail: _*).collect().toSeq)
+      val empty = df.filter(lit(false))
+      assert(empty.agg(ours.head, ours.tail: _*).head().toSeq.forall(_ == null))
+      // the Catalog form: the same double, bit for bit
+      val dbl = df.groupBy("g").agg(graft.queries.Catalog.dsum4(col("x") * 1.07),
+        sum((col("x") * 1.07).cast(DecimalType(24, 6))).cast("double"))
+        .collect()
+      dbl.foreach { r =>
+        assert(r.isNullAt(1) == r.isNullAt(2))
+        if (!r.isNullAt(1)) assert(java.lang.Double.doubleToRawLongBits(
+          r.getDouble(1)) == java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
+      }
+      // sliding and running window frames
+      for (w <- Seq(
+          Window.partitionBy("g").orderBy("i").rowsBetween(-3, 1),
+          Window.partitionBy("g").orderBy("i")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow))) {
+        val got = df.select(col("i"), ExactSum(col("x"), 18, 2).over(w),
+          sum(col("x").cast(DecimalType(18, 2))).over(w)).collect()
+        assert(got.length == rows.length)
+        got.foreach(r => assert(r.get(1) == r.get(2), s"window row ${r.getInt(0)}"))
+      }
+    }
+  }
+
+  test("ExactSum keeps sum's decimal(p+10) overflow rule at the 38-digit edge") {
+    import graft.functions.ExactSum
+    import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
+    val t = DecimalType(38, 0)
+    val big = new java.math.BigDecimal("5e37").setScale(0)
+    def frame(vs: Seq[java.math.BigDecimal]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(vs.map(v => org.apache.spark.sql.Row(1, v)), 2),
+      StructType(Seq(StructField("g", org.apache.spark.sql.types.IntegerType),
+        StructField("x", t))))
+    val fits = frame(Seq(big, big.subtract(java.math.BigDecimal.ONE)))
+    val over = frame(Seq(big, big))
+    val wrap = frame(Seq.fill(4)(new java.math.BigDecimal("9e37").setScale(0)))
+    def both(d: org.apache.spark.sql.DataFrame): (String, String) = {
+      def run(c: org.apache.spark.sql.Column) =
+        try d.groupBy("g").agg(c).collect().head.get(1) match {
+          case null => "null"
+          case v => v.toString
+        } catch { case e: Exception => "error:" + condition(e) }
+      (run(ExactSum(col("x"), 38, 0)), run(sum(col("x"))))
+    }
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      assert(both(fits) == (("99999999999999999999999999999999999999",
+        "99999999999999999999999999999999999999")))
+      assert(both(over) == (("null", "null")))
+      assert(both(wrap) == (("null", "null"))) // past 2^127 in the pair too
+    }
+    withConf("spark.sql.ansi.enabled" -> "true") {
+      assert(both(fits)._1 == both(fits)._2)
+      for (d <- Seq(over, wrap)) {
+        val (o, s) = both(d)
+        assert(o.startsWith("error:") && o == s, s"$o vs $s")
+      }
+    }
+  }
 }

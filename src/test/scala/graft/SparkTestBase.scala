@@ -43,4 +43,17 @@ object SparkTestBase {
 abstract class SparkFunSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Run `f` with the given session confs set, restoring (or unsetting)
+    * each one afterwards.
+    */
+  def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
