@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   * prints ONE JSON line {"metric":…,"value":N,"unit":"sec","queries":…}.
   *
   * local[32] with shuffle.partitions=32 (match cores, not 200) and AQE
-  * on — the same settings a real cluster run would scale up. A timed
-  * run that throws posts no time; its query is listed in `failed` (and
-  * its error class in the telemetry file), never as a fast min.
+  * on — the same settings a real cluster run would scale up. A warm-up
+  * or timed run that throws posts no time; its query is listed in
+  * `failed` (and its error class in the telemetry file), never as a
+  * fast min.
   */
 object Bench {
   /** Control-query drift: the median of min/reference-min ratios over
@@ -37,6 +38,29 @@ object Bench {
         mins(name) / refMins(name)
     }.sorted
     if (ratios.isEmpty) None else Some((ratios(ratios.size / 2), ratios.size))
+  }
+
+  /** The calibration verdict on a session's best (cpu, shuffle) legs
+    * against the committed reference `(cpu, shuffle, cores)`. sick =
+    * EITHER leg's min(pre, post) >1.5× its committed healthy value (CPU
+    * leg catches a loaded machine, shuffle leg catches sick disk/TRIM —
+    * r6's failure mode passed the CPU leg alone). min of the two ends,
+    * not ANY single reading: on a short BENCH_ONLY run the pre-leg
+    * still carries residual JIT cold-start (measured 0.131 vs 0.055
+    * healthy even after a discarded warm-up execution), while a
+    * genuinely sick session — the thing this flag exists for — reads
+    * high at BOTH ends. Both legs run `cpus` partitions, so a session
+    * on another core count than the reference's is not_comparable (a
+    * 4-core host reads "sick" against the 32-core reference on every
+    * run); a reference without a core count is judged as before.
+    */
+  private[graft] def calibrationStatus(
+      ref: Option[(Double, Double, Option[Int])], cpus: Int,
+      cpu: Double, shuf: Double): String = ref match {
+    case None => "no_reference"
+    case Some((_, _, Some(refCpus))) if refCpus != cpus => "not_comparable"
+    case Some((cal, calShuf, _)) =>
+      if (cpu > 1.5 * cal || shuf > 1.5 * calShuf) "sick" else "ok"
   }
 
   def main(args: Array[String]): Unit = {
@@ -90,9 +114,17 @@ object Bench {
     // measure execution at the target sf, not compiler cold-start.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
+    // A run that throws posts NO time (a failed query must not read as a
+    // fast one): its query lands in `failed` with the first error class
+    // seen — warm-up or timed run — and its min is over the timed runs
+    // that completed, if any.
+    val failures = scala.collection.mutable.Map[String, String]()
     names.foreach { name =>
       try qmap(name)(spark, warmDir).count()
-      catch { case _: Throwable => () }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          failures.getOrElseUpdate(name, e.getClass.getName)
+      }
     }
     // Calibration microbenchmark: a fixed-size in-memory aggregation —
     // no I/O, no dependence on sfDir or the query set — timed at session
@@ -145,9 +177,9 @@ object Bench {
     // session noise, not plan regressions. Query-level reference mins
     // (recorded at sf0.1, the driver's bench sf) additionally select
     // which queries get a confirmation re-run below.
-    case class BenchRef(cal: Double, calShuf: Double, sfSuffix: String,
-        mins: Map[String, Double], fps: Map[String, String],
-        shufBytes: Map[String, Long])
+    case class BenchRef(cal: Double, calShuf: Double, calCpus: Option[Int],
+        sfSuffix: String, mins: Map[String, Double],
+        fps: Map[String, String], shufBytes: Map[String, Long])
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
       "bench_reference.json")
     val ref: Option[BenchRef] = try {
@@ -179,10 +211,17 @@ object Bench {
         }
         Some(BenchRef(node.get("calibration_sec").asDouble(),
           node.get("calibration_shuffle_sec").asDouble(),
+          Option(node.get("calibration_cpus")).map(_.asInt()),
           node.get("sf_suffix").asText(), mins.toMap, fps.toMap,
           sbm.toMap))
       }
     } catch { case _: Throwable => None }
+    def statusOf(cpu: Double, shuf: Double): String = calibrationStatus(
+      ref.map(r => (r.cal, r.calShuf, r.calCpus)), cpus.toInt, cpu, shuf)
+    // the reference mins were timed on the reference's cores too: the
+    // flagged re-runs judge only a session at its sf and core count
+    val minsComparable = ref.exists(r =>
+      sfDir.endsWith(r.sfSuffix) && r.calCpus.forall(_ == cpus.toInt))
     // Sick-session auto-recovery: rounds 9 and 10 BOTH shipped
     // calibration_status=sick artifacts — the driver VM was uniformly
     // 1.4-1.6× slow at session start and every round-over-round query
@@ -247,10 +286,6 @@ object Bench {
       }
     }
     val jobTelemetry = scala.collection.mutable.Map[String, (Long, Long)]()
-    // A run that throws posts NO time (a failed query must not read as a
-    // fast one): its query lands in `failed` with the first error class
-    // seen, and its min is over the runs that completed, if any.
-    val failures = scala.collection.mutable.Map[String, String]()
     def timeQuery(name: String, n: Int): Seq[Double] =
       (1 to n).flatMap { _ =>
         // queries may persist intermediates (d08): every iteration
@@ -313,8 +348,7 @@ object Bench {
     def runSession(): Session = {
       val calPre0 = calibrate()
       val calShufPre0 = calibrateShuffle()
-      val preSick = ref.exists(r =>
-        calPre0 > 1.5 * r.cal || calShufPre0 > 1.5 * r.calShuf)
+      val preSick = statusOf(calPre0, calShufPre0) == "sick"
       val (calPre, calShufPre) =
         if (!preSick) (calPre0, calShufPre0)
         else {
@@ -328,11 +362,10 @@ object Bench {
       // healthy min is either a plan regression or a transient stall —
       // one more batch of runs disambiguates inside the artifact (a
       // regression reproduces; a stall posts a normal min the second
-      // time). Only meaningful when this run's sf matches the one the
-      // reference was recorded at.
-      val sfComparable = ref.exists(r => sfDir.endsWith(r.sfSuffix))
+      // time). Only meaningful when this run's sf and core count match
+      // the ones the reference was recorded at.
       val flagged: Seq[String] =
-        if (!sfComparable) Seq.empty
+        if (!minsComparable) Seq.empty
         else firstPass.collect {
           case (name, ts)
               if ts.nonEmpty && ref.get.mins.get(name).exists(ts.min > 2 * _) =>
@@ -346,19 +379,6 @@ object Bench {
       Session(results, calPre, calShufPre, calibrate(),
         calibrateShuffle(), preSick, calPre0, calShufPre0)
     }
-    // sick = EITHER calibration leg's min(pre, post) >1.5× its
-    // committed healthy value (CPU leg catches a loaded machine,
-    // shuffle leg catches sick disk/TRIM — r6's failure mode passed
-    // the CPU leg alone). min of the two ends, not ANY single reading:
-    // on a short BENCH_ONLY run the pre-leg still carries residual JIT
-    // cold-start (measured 0.131 vs 0.055 healthy even after a
-    // discarded warm-up execution), while a genuinely sick session —
-    // the thing this flag exists for — reads high at BOTH ends.
-    def statusOf(cpu: Double, shuf: Double): String = ref match {
-      case None => "no_reference"
-      case Some(r) =>
-        if (cpu > 1.5 * r.cal || shuf > 1.5 * r.calShuf) "sick" else "ok"
-    }
     // Whole-session repeat (r12 lesson): the cooldown retry recovered
     // the PRE leg but the session stayed sick through the query runs,
     // shipping a round with 4 flagged re-runs and no usable perf
@@ -371,8 +391,7 @@ object Bench {
     // attempts: "sick" now means the machine never offered a healthy
     // window, which is the honest residual case.
     val s1 = runSession()
-    val sessionRepeated =
-      statusOf(s1.legs._1, s1.legs._2) == "sick" && ref.nonEmpty
+    val sessionRepeated = statusOf(s1.legs._1, s1.legs._2) == "sick"
     val s2: Option[Session] =
       if (!sessionRepeated) None
       else {
@@ -400,7 +419,7 @@ object Bench {
     // attempt — with a healthy repeat these are genuine regressions,
     // not session noise.
     val flaggedFinal: Seq[String] =
-      if (!ref.exists(r => sfDir.endsWith(r.sfSuffix))) Seq.empty
+      if (!minsComparable) Seq.empty
       else results.collect {
         case (name, ts) if ref.get.mins.get(name).exists(ts.min > 2 * _) =>
           name

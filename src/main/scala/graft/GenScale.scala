@@ -41,7 +41,7 @@ object GenScale {
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String): DataFrame =
-      spark.read.parquet(s"$src/$t.parquet")
+      graft.queries.Catalog.parquet(spark, s"$src/$t.parquet")
 
     /** max(key)+1 as Long regardless of the column's integral width
       * (INT32 parquet keys would make getLong throw), erroring clearly

@@ -4,6 +4,7 @@ import graft.analyzer.Analyzer
 import graft.classify.SqlClassifier
 import graft.loader.MigrationLoader
 import graft.model.{EngineConfig, Severity}
+import graft.queries.Catalog
 import graft.tracker.ParquetTracker
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -90,7 +91,7 @@ object PlanMain {
       num: String): Option[Long] = {
     val p = java.nio.file.Paths.get(statsDir, s"$table.parquet")
     if (!java.nio.file.Files.exists(p)) return None
-    val df0 = spark.read.parquet(p.toString)
+    val df0 = Catalog.parquet(spark, p.toString)
     if (!df0.columns.contains(colName) ||
       !df0.schema(colName).dataType.isInstanceOf[NumericType]) return None
     val c = df0.select(round(col(colName) * 100).cast("long").as("cents"))
@@ -136,7 +137,7 @@ object PlanMain {
       table: String, colName: String): Option[Long] = {
     val p = java.nio.file.Paths.get(statsDir, s"$table.parquet")
     if (!java.nio.file.Files.exists(p)) return None
-    val df0 = spark.read.parquet(p.toString)
+    val df0 = Catalog.parquet(spark, p.toString)
     if (!df0.columns.contains(colName)) return None
     Some(df0.filter(col(colName).isNull).count())
   }
@@ -182,7 +183,7 @@ object PlanMain {
       table, storedRows.get(table).orElse {
         val p = java.nio.file.Paths.get(statsDir, s"$table.parquet")
         if (statsDir.nonEmpty && java.nio.file.Files.exists(p))
-          Some(spark.read.parquet(p.toString).count())
+          Some(Catalog.parquet(spark, p.toString).count())
         else None
       })
     val checkRe =

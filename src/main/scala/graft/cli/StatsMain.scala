@@ -74,7 +74,7 @@ object StatsMain {
   private def collectTable(spark: SparkSession, tn: String,
       path: String): Seq[(String, String, Long, Long, Long, Long, Long,
         Seq[Long])] = {
-    val df = spark.read.parquet(path)
+    val df = graft.queries.Catalog.parquet(spark, path)
     val allCols = df.schema.fields.map(_.name).toSeq
     val numCols = df.schema.fields
       .filter(_.dataType.isInstanceOf[NumericType]).map(_.name).toSet

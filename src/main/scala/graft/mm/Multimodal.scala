@@ -257,7 +257,7 @@ object Multimodal {
     */
   def synthesizeMedia(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.queries.Catalog.t(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"), col("n_chars"))
       .as[(Long, String, Long)]
       .map { case (id, text, nChars) =>
@@ -292,7 +292,7 @@ object Multimodal {
     */
   def synthesizeBmp(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.queries.Catalog.t(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -325,7 +325,7 @@ object Multimodal {
     */
   def synthesizeWav(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.queries.Catalog.t(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -656,7 +656,7 @@ object Multimodal {
     */
   def synthesizeVideo(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.queries.Catalog.t(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>

@@ -1,7 +1,13 @@
 package graft.queries
 
 import graft.functions.ExactSum
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** One declared query: the Spark implementation plus (when the operator
@@ -33,7 +39,7 @@ object Catalog {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = parquet(spark, s"$dir/$name.parquet")
       raw.schema.find(_.name == "ts") match {
         case Some(f) if f.dataType == org.apache.spark.sql.types.LongType =>
           // integer `div`, not `/`: double division loses sub-µs precision
@@ -45,7 +51,36 @@ object Catalog {
             col("ts").cast(org.apache.spark.sql.types.TimestampType))
         case _ => raw
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else parquet(spark, s"$dir/$name.parquet")
+  }
+
+  /** Read one parquet path without starting a Spark job. For a single
+    * file, Spark's schema inference runs a job just to read the footer;
+    * here the footer is read on the driver and converted by Spark's own
+    * `readSchemaFromFooter` under the session's parquet confs
+    * (nanosAsLong, int96/binary/NTZ inference), so the pinned schema is
+    * the one inference would give. A directory (or a missing path) keeps
+    * Spark's own resolution: partition discovery and schema merging are
+    * Spark's job, and so is the missing-path error. The footer is read
+    * again on every call — no cross-call cache.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val file =
+      try Some(p.getFileSystem(conf).getFileStatus(p)).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => None }
+    file match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+    }
   }
 
   // --- determinism helpers ------------------------------------------------

@@ -490,8 +490,10 @@ object MigrationOps {
             expr("bit_xor(rh)").as(s"fp_$side"))
         val src = t(s, d, "orders")
         // metadata-scale scalar (one min over the key column) picking
-        // a deterministic row to corrupt in the simulated target
-        val minKey = src.agg(min(col("o_orderkey"))).head().getLong(0)
+        // a deterministic row to corrupt in the simulated target — a
+        // scalar subquery inside the plan, not an eager job at
+        // construction
+        val minKey = src.agg(min(col("o_orderkey"))).scalar()
         val tgt = src.withColumn("o_orderpriority",
           when(col("o_orderkey") === minKey, lit("9-CORRUPTED"))
             .otherwise(col("o_orderpriority")))
@@ -783,7 +785,10 @@ object MigrationOps {
               .otherwise(col("o_orderpriority")))
         val extra = src.filter(h("ins_") % 97 === 0)
           .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L))
-        val tgt = base.unionAll(extra).localCheckpoint()
+        // not checkpointed: its two consumers (oAgg, the FK join) each
+        // scan orders, in query stages that run side by side, instead
+        // of waiting on an eager materialization job
+        val tgt = base.unionAll(extra)
         val domain = Seq("1-URGENT", "2-HIGH", "3-MEDIUM",
           "4-NOT SPECIFIED", "5-LOW")
         val oAgg = tgt.agg(
@@ -1043,45 +1048,41 @@ object MigrationOps {
     // Because post ⊇ pre, every delta is non-negative by construction
     // — no signed integer-division semantics cross the engine boundary
     // (Spark div truncates, DuckDB // floors; they agree only on
-    // non-negatives). Scale shape: BOTH snapshots come out of ONE scan
-    // — every pre-side aggregate is the post-side aggregate under a
-    // filter clause (count/ndv/min/max with when(...)), so the drift
-    // report costs one aggregation pass however large the table.
+    // non-negatives). Scale shape: BOTH snapshots come out of ONE scan,
+    // and the exact NDVs need no distinct aggregates (six of those
+    // expand every row 7× through RewriteDistinctAggregates): the three
+    // columns explode to (col_name, v) rows, one aggregate counts each
+    // value's rows and pre-side rows, and a per-column aggregate over
+    // those takes rows, NDV, min and max, the pre side under npre > 0.
     // ------------------------------------------------------------------
     "m12_stats_drift" -> Q(
       (s, d) => {
         import org.apache.spark.sql.types.DecimalType
-        val pre = col("o_orderkey") % 10 =!= 0
+        val cols = Seq("o_orderkey", "o_custkey", "tp_cents")
         val base = t(s, d, "orders").select(
+          (col("o_orderkey") % 10 =!= 0).as("is_pre"),
           col("o_orderkey"),
           col("o_custkey"),
           (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
             .cast("long").as("tp_cents"))
-        val cols = Seq("o_orderkey", "o_custkey", "tp_cents")
-        val aggs: Seq[Column] = Seq(
-          count(lit(1)).as("post_rows"),
-          sum(when(col("is_pre"), 1L).otherwise(0L)).as("pre_rows")) ++
-          cols.flatMap(c => Seq(
-            countDistinct(col(c)).as("nd_post_" + c),
-            countDistinct(when(col("is_pre"), col(c)))
-              .as("nd_pre_" + c),
-            min(col(c)).as("mn_post_" + c),
-            min(when(col("is_pre"), col(c))).as("mn_pre_" + c),
-            max(col(c)).as("mx_post_" + c),
-            max(when(col("is_pre"), col(c))).as("mx_pre_" + c)))
-        val wide = base.select((col("o_orderkey") % 10 =!= 0).as("is_pre")
-          +: cols.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-        wide.select(explode(array(cols.map(c =>
-            struct(lit(c).as("col_name"),
-              col("pre_rows"), col("post_rows"),
-              col("nd_pre_" + c).as("pre_ndv"),
-              col("nd_post_" + c).as("post_ndv"),
-              col("mn_pre_" + c).as("pre_min"),
-              col("mn_post_" + c).as("post_min"),
-              col("mx_pre_" + c).as("pre_max"),
-              col("mx_post_" + c).as("post_max"))): _*)).as("e"))
-          .select(col("e.*"))
+        // one row per (column, value): its row count and pre-side count;
+        // a value is in the pre snapshot iff npre > 0
+        val perValue = base
+          .select(col("is_pre"), explode(array(cols.map(c =>
+            struct(lit(c).as("col_name"), col(c).as("v"))): _*)).as("e"))
+          .groupBy(col("e.col_name").as("col_name"), col("e.v").as("v"))
+          .agg(count(lit(1)).as("n"),
+            count(when(col("is_pre"), 1)).as("npre"))
+        val inPre = col("npre") > 0
+        perValue.groupBy(col("col_name"))
+          .agg(sum(col("npre")).as("pre_rows"),
+            sum(col("n")).as("post_rows"),
+            count(when(inPre, col("v"))).as("pre_ndv"),
+            count(col("v")).as("post_ndv"),
+            min(when(inPre, col("v"))).as("pre_min"),
+            min(col("v")).as("post_min"),
+            max(when(inPre, col("v"))).as("pre_max"),
+            max(col("v")).as("post_max"))
           .withColumn("rows_added", col("post_rows") - col("pre_rows"))
           .withColumn("ndv_added", col("post_ndv") - col("pre_ndv"))
           .withColumn("ndv_added_permille",

@@ -2422,7 +2422,7 @@ object Relational2 {
     "q94_metadata_columns" -> Q(
       (s, d) => {
         val ri = col("_metadata.row_index")
-        s.read.parquet(s"$d/lineitem.parquet")
+        parquet(s, s"$d/lineitem.parquet")
           .select(col("_metadata.file_name").as("file_name"),
             ri.as("ri"), col("l_orderkey"))
           .groupBy(col("file_name"))

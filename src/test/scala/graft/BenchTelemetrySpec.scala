@@ -77,6 +77,23 @@ class BenchTelemetrySpec extends SparkFunSuite {
       Set.empty).isEmpty)
   }
 
+  test("calibrationStatus: the 1.5x gate at the reference core count, " +
+      "not_comparable on another") {
+    val ref = Some((0.055, 0.25, Some(32)))
+    assert(Bench.calibrationStatus(None, 4, 1.0, 1.0) == "no_reference")
+    // at the reference's core count: the unchanged 1.5x rule on each leg
+    assert(Bench.calibrationStatus(ref, 32, 0.08, 0.37) == "ok")
+    assert(Bench.calibrationStatus(ref, 32, 0.09, 0.2) == "sick")
+    assert(Bench.calibrationStatus(ref, 32, 0.05, 0.4) == "sick")
+    // another core count: legs run `cpus` partitions, so no verdict
+    assert(Bench.calibrationStatus(ref, 4, 0.3, 1.0) == "not_comparable")
+    assert(Bench.calibrationStatus(ref, 4, 0.01, 0.01) == "not_comparable")
+    // a reference without a core count is judged as before
+    val legacy = Some((0.055, 0.25, None))
+    assert(Bench.calibrationStatus(legacy, 4, 0.3, 1.0) == "sick")
+    assert(Bench.calibrationStatus(legacy, 4, 0.05, 0.2) == "ok")
+  }
+
   test("norm strips every run-varying token class") {
     // expression ids
     assert(PlanTelemetry.norm("sum(l_quantity#123)") ==

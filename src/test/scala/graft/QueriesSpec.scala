@@ -21,6 +21,50 @@ class QueriesSpec extends SparkFunSuite {
     assert(SparkEntry.benchQueries.toSet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("Catalog.parquet pins the schema Spark infers, for every table " +
+      "file under nanosAsLong on and off") {
+    val files = Seq(sf0001, "perfbench/data/sf0.001")
+      .flatMap(d => new java.io.File(d).listFiles().toSeq)
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
+    assert(files.size >= 16, files)
+    for (p <- files; nanos <- Seq("true", "false"))
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> nanos) {
+        assert(Catalog.parquet(spark, p).schema ==
+          spark.read.parquet(p).schema, s"$p nanosAsLong=$nanos")
+      }
+  }
+
+  test("Catalog.t starts no Spark job: the footer is read on the driver") {
+    val tables = new java.io.File(sf0001).listFiles().toSeq
+      .map(_.getName).filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted
+    assert(tables.contains("events") && tables.contains("lineitem"))
+    val jobs = jobsStartedBy {
+      tables.foreach(n => Catalog.t(spark, sf0001, n).schema)
+    }
+    assert(jobs.isEmpty, s"building ${tables.size} reads started " +
+      s"${jobs.size} jobs")
+  }
+
+  test("Catalog.parquet keeps Spark's inference for a directory " +
+      "(partition discovery) and Spark's error for a missing path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-parquet-dir")
+      .resolve("t").toString
+    spark.range(6).withColumn("k", col("id") % 2)
+      .write.partitionBy("k").parquet(dir)
+    assert(jobsStartedBy(Catalog.parquet(spark, dir)).nonEmpty,
+      "a directory read must go through inference")
+    val df = Catalog.parquet(spark, dir)
+    assert(df.schema == spark.read.parquet(dir).schema)
+    assert(df.columns.toSeq == Seq("id", "k"))
+    assert(df.filter(col("k") === 1).count() == 3)
+    val missing = dir + "-missing"
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Catalog.parquet(spark, missing))
+    assert(e.getCondition == intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(missing)).getCondition)
+  }
+
   test("q65 fallback: an empty dim side skips the bloom (null-bloom " +
       "guard) and the semi join still returns the correct empty result") {
     val out = graft.queries.Relational2

@@ -56,4 +56,38 @@ abstract class SparkFunSuite extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The Spark jobs `f` starts on this thread, by description. A job
+    * group tags them; a marker job after `f` flushes the listener queue
+    * (events arrive in order), so the list is complete on return.
+    */
+  def jobsStartedBy(f: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val group = s"jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => jobs.add(Option(p.getProperty("spark.job.description"))
+            .getOrElse("")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      f
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.contains("marker"), "marker job never reached the listener")
+      jobs.asScala.toSeq.filter(_ != "marker")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -98,47 +98,21 @@ class TrackerSpec extends SparkFunSuite {
 
   test("with a snapshot present, repeated point reads start at most one " +
       "Spark job per snapshot") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
     val dir = Files.createTempDirectory("graft-tracker-jobs").toString
     val writer = new ParquetTracker(spark, dir)
     writer.ensureTable()
     (1 to 5).foreach(i => writer.recordApplied(row(f"$i%03d")))
     writer.compact()
     writer.recordApplied(row("006"))
-    // count the jobs this thread starts, by job group; a marker job
-    // after the reads flushes the listener queue (events arrive in order)
-    val group = s"tracker-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .filter(_ == group)
-          .foreach(_ => jobs.add(Option(e.properties
-            .getProperty("spark.job.description")).getOrElse("")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "reads")
+    val reads = jobsStartedBy {
       val reader = new ParquetTracker(spark, dir)
       (1 to 10).foreach { _ =>
         assert(reader.isApplied("003") && !reader.isApplied("999"))
         assert(reader.getChecksum("006") == "abc")
         assert(reader.getApplied().length == 6)
       }
-      sc.setJobDescription("marker")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(jobs.contains("marker"), "marker job never reached the listener")
-      val reads = jobs.asScala.count(_ != "marker")
-      assert(reads <= 1, s"point reads started $reads jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    }.size
+    assert(reads <= 1, s"point reads started $reads jobs")
   }
 
   test("append+compact: a 500-migration apply run does O(n) tracker " +
