@@ -63,6 +63,19 @@ object Bench {
       if (cpu > 1.5 * cal || shuf > 1.5 * calShuf) "sick" else "ok"
   }
 
+  /** Whether the committed reference can judge this session: it ran at
+    * the reference's sf (sf-dir suffix) and core count (the reference's
+    * mins, fingerprints and shuffle bytes were recorded at
+    * `calibration_cpus` cores with as many shuffle partitions; at 4 a
+    * sweep differs from it in 28 of 31 plans with no plan change). A
+    * reference without a core count is judged on the sf alone, as
+    * [[calibrationStatus]] judges it. Gates the flagged re-runs,
+    * `plan_changed`, `shuffle_changed` and `control_drift`.
+    */
+  private[graft] def refComparable(sfDir: String, cpus: Int,
+      refSfSuffix: String, refCpus: Option[Int]): Boolean =
+    sfDir.endsWith(refSfSuffix) && refCpus.forall(_ == cpus)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -218,10 +231,8 @@ object Bench {
     } catch { case _: Throwable => None }
     def statusOf(cpu: Double, shuf: Double): String = calibrationStatus(
       ref.map(r => (r.cal, r.calShuf, r.calCpus)), cpus.toInt, cpu, shuf)
-    // the reference mins were timed on the reference's cores too: the
-    // flagged re-runs judge only a session at its sf and core count
-    val minsComparable = ref.exists(r =>
-      sfDir.endsWith(r.sfSuffix) && r.calCpus.forall(_ == cpus.toInt))
+    val comparable = ref.exists(r =>
+      refComparable(sfDir, cpus.toInt, r.sfSuffix, r.calCpus))
     // Sick-session auto-recovery: rounds 9 and 10 BOTH shipped
     // calibration_status=sick artifacts — the driver VM was uniformly
     // 1.4-1.6× slow at session start and every round-over-round query
@@ -365,7 +376,7 @@ object Bench {
       // time). Only meaningful when this run's sf and core count match
       // the ones the reference was recorded at.
       val flagged: Seq[String] =
-        if (!minsComparable) Seq.empty
+        if (!comparable) Seq.empty
         else firstPass.collect {
           case (name, ts)
               if ts.nonEmpty && ref.get.mins.get(name).exists(ts.min > 2 * _) =>
@@ -419,7 +430,7 @@ object Bench {
     // attempt — with a healthy repeat these are genuine regressions,
     // not session noise.
     val flaggedFinal: Seq[String] =
-      if (!minsComparable) Seq.empty
+      if (!comparable) Seq.empty
       else results.collect {
         case (name, ts) if ref.get.mins.get(name).exists(ts.min > 2 * _) =>
           name
@@ -430,34 +441,34 @@ object Bench {
     // it); shuffle_changed = same plan shape but the shuffle volume
     // moved >25% (and >4 MB absolute, so KB-scale shuffles don't flap)
     // — data or stats drift. A slow min in NEITHER list over an
-    // unchanged fingerprint is session noise by construction.
-    val sfComparableFinal = ref.exists(r => sfDir.endsWith(r.sfSuffix))
-    val planChanged: Seq[String] =
-      if (!sfComparableFinal) Seq.empty
-      else telemetry.keys.toSeq.sorted.filter { name =>
+    // unchanged fingerprint is session noise by construction. Both are
+    // None (printed null, not []) when the reference cannot judge.
+    val planChanged: Option[Seq[String]] =
+      if (!comparable) None
+      else Some(telemetry.keys.toSeq.sorted.filter { name =>
         ref.get.fps.get(name).exists(_ != telemetry(name).fingerprint)
-      }
+      })
     // compared on the LISTENER bytes (the complete count — plan-level
     // bytes miss checkpointed rounds and construction-time writes)
-    val shuffleChanged: Seq[String] =
-      if (!sfComparableFinal) Seq.empty
-      else jobTelemetry.keys.toSeq.sorted.filter { name =>
+    val shuffleChanged: Option[Seq[String]] =
+      if (!comparable) None
+      else Some(jobTelemetry.keys.toSeq.sorted.filter { name =>
         ref.get.shufBytes.get(name).exists { b =>
           val d = math.abs(jobTelemetry(name)._1 - b)
           d > math.max(b / 4, 4L << 20)
         }
-      }
+      })
     // round 17, "not yet optimized" item 4: the calibration gate's 1.5×
     // legs pass sessions whose per-query noise is ±30 %; stamp the
     // session's machine phase from the fingerprint-identical control
     // queries so per-query deltas classify mechanically (see
     // controlDrift's scaladoc). Additive artifact field.
-    val drift: Option[(Double, Int)] =
-      if (!sfComparableFinal) None
-      else controlDrift(
+    val drift: Option[(Double, Int)] = shuffleChanged.flatMap { sc =>
+      controlDrift(
         results.map { case (k, ts) => k -> ts.min }.toMap,
         telemetry.map { case (k, t) => k -> t.fingerprint }.toMap,
-        ref.get.mins, ref.get.fps, shuffleChanged.toSet)
+        ref.get.mins, ref.get.fps, sc.toSet)
+    }
     // Full per-query telemetry goes to a FILE (the stdout artifact
     // archives only a bounded tail; 31 queries of fingerprints would
     // push the canonical line out of it) — same dir the reference
@@ -485,8 +496,9 @@ object Bench {
         ",\"max\":" + f3(ts.last) + "}"
     }.mkString("{", ",", "}")
     val total = results.map(_._2.min).sum
-    val flaggedJson =
-      flaggedFinal.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def namesJson(ns: Seq[String]) =
+      ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val flaggedJson = namesJson(flaggedFinal)
     // retry stamp: absent on a clean pre-leg; when any pre-leg read
     // sick, records the cooldown and the ORIGINAL readings so a
     // still-sick session is double-flagged (retried AND status=sick)
@@ -505,12 +517,9 @@ object Bench {
     // headline queries (q01/q03/q04 invisible, parsed:null). The final
     // line is the complete spec-shape JSON without the spread, sized to
     // always fit the tail whole.
-    val planChangedJson =
-      planChanged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedJson =
-      failures.keys.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val shuffleChangedJson =
-      shuffleChanged.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val planChangedJson = planChanged.fold("null")(namesJson)
+    val failedJson = namesJson(failures.keys.toSeq.sorted)
+    val shuffleChangedJson = shuffleChanged.fold("null")(namesJson)
     // fp map rides in the middle (diagnostic) line — it may be cut by
     // the tail archive; the full record is in the telemetry file
     val fpJson = telemetry.keys.toSeq.sorted.map { name =>

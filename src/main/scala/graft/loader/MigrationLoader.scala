@@ -1,8 +1,7 @@
 package graft.loader
 
 import graft.model.{Migration, MigrationsDirNotFound}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Migration-file source.
   *
@@ -16,11 +15,10 @@ import org.apache.spark.sql.functions._
   *   - SQL content is whitespace-trimmed (loader.go:108);
   *   - checksum = SHA-256 hex of the up SQL.
   *
-  * Spark-first shape (SURVEY.md S1-S3): `wholetext` scan +
-  * `input_file_name()` + `regexp_extract`, then an up/down pivot via
-  * `groupBy(version, name).agg(max(when(...)))` — one shuffle on the
-  * (tiny) migration key, no self-join needed. Checksum via built-in
-  * `sha2(..., 256)` — codegen'd, no UDF.
+  * One reader, on the driver: migration sets are tens of rows, so the
+  * directory is listed and read in memory like the reference does.
+  * [[loadSorted]] hands the same rows to Spark as a local relation for
+  * the queries that analyze migrations as a Dataset.
   */
 object MigrationLoader {
 
@@ -29,53 +27,17 @@ object MigrationLoader {
     */
   val fileRegex = "^(?:V(\\d+)|(\\d{14}))_(.+)\\.(up|down)\\.sql$"
 
-  /** Distributed load: Dataset[Migration] from a directory of .sql files. */
-  def load(spark: SparkSession, dir: String): Dataset[Migration] = {
-    import spark.implicits._
-    val files = spark.read.option("wholetext", "true")
-      .text(s"$dir/*.sql")
-      .select(
-        element_at(split(input_file_name(), "/"), -1).as("fname"),
-        input_file_name().as("path"),
-        $"value".as("content"))
-    val parsed = files
-      .withColumn("vnum", regexp_extract($"fname", fileRegex, 1))
-      .withColumn("vts", regexp_extract($"fname", fileRegex, 2))
-      .withColumn("name", regexp_extract($"fname", fileRegex, 3))
-      .withColumn("direction", regexp_extract($"fname", fileRegex, 4))
-      .filter($"direction" =!= "") // non-matching filenames skipped
-      .withColumn("version",
-        when($"vnum" =!= "", $"vnum").otherwise($"vts"))
-    // NB: Spark's trim() strips only ' '; the reference's TrimSpace strips
-    // all whitespace — use a regexp to match its semantics exactly.
-    def wtrim(c: org.apache.spark.sql.Column) =
-      regexp_replace(c, "^\\s+|\\s+$", "")
-    val paired = parsed
-      .groupBy($"version", $"name")
-      .agg(
-        max(when($"direction" === "up", wtrim($"content"))).as("upSql"),
-        max(when($"direction" === "down", wtrim($"content"))).as("downSql"),
-        max(when($"direction" === "up", $"path")).as("filePath"))
-      .filter($"upSql".isNotNull) // orphan .down.sql skipped
-      .na.fill("", Seq("downSql"))
-      .withColumn("checksum", sha2($"upSql", 256))
-      .select($"version", $"name", $"upSql", $"downSql", $"checksum",
-        $"filePath")
-    paired.as[Migration]
-  }
-
-  /** Load + version-sort (reference `migration.Sort`, sorter.go:7-16 —
-    * lexicographic on the version string; preserved exactly, see
-    * SURVEY.md §7.4 item 4).
+  /** [[loadLocal]] as a Dataset (a `LocalRelation`: reading it starts no
+    * Spark job). Version order is the reference's `migration.Sort`
+    * (sorter.go:7-16 — lexicographic on the version string; preserved
+    * exactly, see SURVEY.md §7.4 item 4).
     */
   def loadSorted(spark: SparkSession, dir: String): Dataset[Migration] =
-    load(spark, dir).orderBy("version")
+    spark.createDataset(loadLocal(dir))(Encoders.product[Migration])
 
-  /** Driver-side load for the CLI (migration sets are tens of rows; no
-    * cluster needed). Same semantics as [[load]], except that a path
-    * that is missing or not a readable directory throws
-    * [[MigrationsDirNotFound]] instead of reading as no migrations; an
-    * empty directory is zero migrations (the reference's `os.ReadDir`).
+  /** Driver-side load, sorted by version. A path that is missing or not
+    * a readable directory throws [[MigrationsDirNotFound]]; an empty
+    * directory is zero migrations (the reference's `os.ReadDir`).
     */
   def loadLocal(dir: String): Seq[Migration] = {
     val d = new java.io.File(dir)

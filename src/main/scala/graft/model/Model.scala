@@ -27,8 +27,9 @@ final case class Migration(
 
 object Migration {
 
-  /** SHA-256 hex digest of the up SQL. Driver-side twin of Spark's
-    * `sha2(col, 256)`; both must agree (tested).
+  /** SHA-256 hex digest (lowercase) of the up SQL — the one checksum
+    * the loader computes; m01's oracle re-derives it with DuckDB's
+    * `sha256`.
     */
   def computeChecksum(sql: String): String = {
     val d = MessageDigest.getInstance("SHA-256")

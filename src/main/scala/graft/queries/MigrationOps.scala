@@ -30,9 +30,11 @@ object MigrationOps {
   val impactDir = "/root/repo/fixtures/impact"
 
   /** Shared oracle CTE: filename→(version, name, direction) parse +
-    * whitespace trim + up/down pivot, mirroring MigrationLoader exactly
-    * (same regex, same \s trim, orphan .down skipped). Parameterized by
-    * fixture dir (m01-m06 read `fixturesDir`, m11 reads `impactDir`).
+    * whitespace trim + up/down pivot, re-deriving the loader's rules in
+    * DuckDB (same filename regex, orphan .down skipped; the \s trim
+    * equals `String.trim` on the fixtures, which hold no unusual
+    * whitespace). Parameterized by fixture dir (m01-m06 and m14 read
+    * `fixturesDir`, m11 reads `impactDir`).
     */
   private def loaderCteFor(dir: String): String = {
     val re = "^(?:V(\\d+)|(\\d{14}))_(.+)\\.(up|down)\\.sql$"
@@ -307,7 +309,7 @@ object MigrationOps {
     // Loader output: version/name/checksum/pairing (S1-S3 + T1 + T2).
     "m01_load_migrations" -> Q(
       (s, _) =>
-        MigrationLoader.load(s, fixturesDir)
+        MigrationLoader.loadSorted(s, fixturesDir)
           .select(col("version"), col("name"), col("checksum"),
             (col("downSql") =!= "").as("has_down"),
             length(col("upSql")).as("up_len"))
@@ -323,7 +325,7 @@ object MigrationOps {
     "m02_findings" -> Q(
       (s, _) => {
         val a = new Analyzer(targetPgVersion = 14)
-        a.findingsDs(MigrationLoader.load(s, fixturesDir))
+        a.findingsDs(MigrationLoader.loadSorted(s, fixturesDir))
           .select(col("version"),
             col("finding.rule").as("rule"),
             col("finding.severity").as("severity"),
@@ -343,7 +345,7 @@ object MigrationOps {
     // results through pandas, where array cells are unhashable/unsortable.
     "m03_analysis_summary" -> Q(
       (s, _) =>
-        Analyzer.summaryDf(s, MigrationLoader.load(s, fixturesDir))
+        Analyzer.summaryDf(s, MigrationLoader.loadSorted(s, fixturesDir))
           .withColumn("rules", array_join(col("rules"), ",")),
       Some(s"""$findingsCte
         SELECT p.version, p.name,
@@ -364,7 +366,7 @@ object MigrationOps {
         val classify = udf((sql: String) =>
           graft.classify.SqlClassifier.parseOrThrow(sql)
             .map(_.getClass.getSimpleName.stripSuffix("$")))
-        MigrationLoader.load(s, fixturesDir)
+        MigrationLoader.loadSorted(s, fixturesDir)
           .select(col("version"), explode(classify(col("upSql")))
             .as("stmt_type"))
           .groupBy(col("stmt_type"))
@@ -406,7 +408,7 @@ object MigrationOps {
       (s, _) => {
         import s.implicits._
         val a = new graft.analyzer.Analyzer()
-        val findings = MigrationLoader.load(s, fixturesDir)
+        val findings = MigrationLoader.loadSorted(s, fixturesDir)
           .flatMap { m =>
             val r = a.analyze(m)
             if (r.findings.isEmpty) Seq((m.version, graft.model.Severity.Safe, ""))
@@ -441,7 +443,7 @@ object MigrationOps {
       (s, _) => {
         import s.implicits._
         val applied = Seq("001", "002", "003").toDF("version")
-        MigrationLoader.load(s, fixturesDir)
+        MigrationLoader.loadSorted(s, fixturesDir)
           .join(applied, Seq("version"), "left_anti")
           .select(col("version"), col("name"))
           .orderBy(col("version"))
@@ -903,7 +905,7 @@ object MigrationOps {
     "m11_plan_impact_estimate" -> Q(
       (s, d) => {
         val a = new Analyzer(targetPgVersion = 14)
-        val findings = a.findingsDs(MigrationLoader.load(s, impactDir))
+        val findings = a.findingsDs(MigrationLoader.loadSorted(s, impactDir))
           .select(col("version"),
             col("finding.rule").as("rule"),
             col("finding.table").as("table_name"),
@@ -1256,7 +1258,7 @@ object MigrationOps {
     "m14_lock_hazard_census" -> Q(
       (s, _) => {
         val a = new Analyzer(targetPgVersion = 14)
-        a.findingsDs(MigrationLoader.load(s, fixturesDir))
+        a.findingsDs(MigrationLoader.loadSorted(s, fixturesDir))
           .select(col("version"), col("finding.rule").as("rule"),
             col("finding.severity").as("severity"),
             col("finding.lockType").as("lock_type"))

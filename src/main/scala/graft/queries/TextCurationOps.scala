@@ -1258,12 +1258,6 @@ object TextCurationOps {
     // ------------------------------------------------------------------
     "x15_decontamination" -> Q(
       (s, d) => {
-        def grams8(toks: Column): Column =
-          when(size(toks) >= 8,
-            array_distinct(transform(sequence(lit(0), size(toks) - 8), i =>
-              concat_ws(" ", (0 until 8).map(o =>
-                element_at(toks, i + o + 1)): _*))))
-            .otherwise(array().cast("array<string>"))
         val benchNg = docs(s, d).filter(col("doc_id") % 97 === 0)
           .select(col("doc_id"), words(col("text")).as("toks"))
           .select(explode(grams8(col("toks"))).as("ng"))
@@ -2858,12 +2852,6 @@ object TextCurationOps {
 
         // stage 3: decontamination (p01 stage-3 thresholds) + bench-
         // member exclusion
-        def grams8(toks: Column): Column =
-          when(size(toks) >= 8,
-            array_distinct(transform(sequence(lit(0), size(toks) - 8),
-              i => concat_ws(" ", (0 until 8).map(o =>
-                element_at(toks, i + o + 1)): _*))))
-            .otherwise(array().cast("array<string>"))
         val benchNg = docs(s, d).filter(col("doc_id") % 97 === 0)
           .select(words(col("text")).as("toks"))
           .select(explode(grams8(col("toks"))).as("ng"))
@@ -3838,12 +3826,6 @@ object TextCurationOps {
 
         // stage 3: decontamination of stage-2 survivors vs the full
         // corpus's benchmark docs (x15's gram-8 overlap rule)
-        def grams8(toks: Column): Column =
-          when(size(toks) >= 8,
-            array_distinct(transform(sequence(lit(0), size(toks) - 8), i =>
-              concat_ws(" ", (0 until 8).map(o =>
-                element_at(toks, i + o + 1)): _*))))
-            .otherwise(array().cast("array<string>"))
         val benchNg = docs(s, d).filter(col("doc_id") % 97 === 0)
           .select(words(col("text")).as("toks"))
           .select(explode(grams8(col("toks"))).as("ng"))

@@ -49,15 +49,18 @@ object TextOps {
     pmod(graft.functions.PortableHash.h60col(
       concat(lit("x57_"), docId)), lit(100L)) >= 90
 
-  /** x57's contamination fingerprints: the DISTINCT 8-word-grams of a
-    * pre-tokenized word array (pass an ALIASED toks column — the
-    * expression references it repeatedly). Same sharing contract as
-    * [[evalHoldout]].
+  /** The contamination fingerprints of x15, x57, p01, p02 and
+    * [[graft.streaming.DecontamStream]]: the DISTINCT 8-word-grams of a
+    * pre-tokenized word array, empty when it holds fewer than 8 words
+    * (pass an ALIASED toks column — the expression references it
+    * repeatedly).
     */
   private[graft] def grams8(toks: Column): Column =
-    array_distinct(transform(
-      sequence(lit(1), size(toks) - 7),
-      i => concat_ws(" ", slice(toks, i, lit(8)))))
+    when(size(toks) >= 8,
+      array_distinct(transform(sequence(lit(0), size(toks) - 8), i =>
+        concat_ws(" ", (0 until 8).map(o =>
+          element_at(toks, i + o + 1)): _*))))
+      .otherwise(array().cast("array<string>"))
 
   /** documents with the shingle set materialized as a column.
     *

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Custom DataSourceV2 connector — the extension-surface rung the
-  * catalog's scan inventory (parquet/CSV/JSON/ORC/wholetext/JDBC, all
+  * catalog's scan inventory (parquet/CSV/JSON/ORC/JDBC, all
   * built-in) did not yet demonstrate: a from-scratch `TableProvider` +
   * `ScanBuilder` + partitioned `PartitionReader` with BOTH optimizer
   * contracts implemented:

@@ -94,6 +94,21 @@ class BenchTelemetrySpec extends SparkFunSuite {
     assert(Bench.calibrationStatus(legacy, 4, 0.05, 0.2) == "ok")
   }
 
+  test("refComparable: the reference judges a session only at its sf " +
+      "and core count") {
+    val sf = "/data/tpch/sf0.1"
+    assert(Bench.refComparable(sf, 32, "sf0.1", Some(32)))
+    // another core count: plans and shuffle bytes differ without a
+    // plan change, so no plan_changed / shuffle_changed / drift verdict
+    assert(!Bench.refComparable(sf, 4, "sf0.1", Some(32)))
+    // another sf
+    assert(!Bench.refComparable("/data/tpch/sf0.01", 32, "sf0.1",
+      Some(32)))
+    // a reference without a core count is judged on the sf alone
+    assert(Bench.refComparable(sf, 4, "sf0.1", None))
+    assert(!Bench.refComparable("/data/tpch/sf0.01", 4, "sf0.1", None))
+  }
+
   test("norm strips every run-varying token class") {
     // expression ids
     assert(PlanTelemetry.norm("sum(l_quantity#123)") ==

@@ -209,16 +209,8 @@ class PlanAuditSpec extends SparkFunSuite {
       + "re-read"))
 
   test("no query plans an unlisted CartesianProduct / nested-loop join") {
-    val offenders = Catalog.all.flatMap { case (name, q) =>
-      try {
-        val plan = q.fn(spark, sf0001).queryExecution.executedPlan.toString
-        val hasNl = plan.contains("CartesianProduct") ||
-          plan.contains("BroadcastNestedLoopJoin")
-        if (hasNl && !nlAllowlist.contains(name)) Some(name) else None
-      } catch {
-        case e: Throwable => Some(s"$name (plan failed: ${e.getMessage})")
-      }
-    }
+    val offenders = offendersOf(v =>
+      v.nestedLoop && !nlAllowlist.contains(v.name))
     assert(offenders.isEmpty,
       s"queries with unlisted nested-loop plans: ${offenders.mkString(", ")}")
   }
@@ -268,44 +260,71 @@ class PlanAuditSpec extends SparkFunSuite {
       + "allowlist); the streaming watermark path is the scale plan"))
 
   test("no query plans an unlisted un-partitioned Window (global sort)") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window, WindowGroupLimit}
-    val offenders = Catalog.all.flatMap { case (name, q) =>
-      try {
-        val bad = q.fn(spark, sf0001).queryExecution.optimizedPlan.collect {
-          case w: Window if w.partitionSpec.isEmpty => w
-          case w: WindowGroupLimit if w.partitionSpec.isEmpty => w
-        }
-        if (bad.nonEmpty && !globalWindowAllowlist.contains(name)) Some(name)
-        else None
-      } catch {
-        case e: Throwable => Some(s"$name (plan failed: ${e.getMessage})")
-      }
-    }
+    val offenders = offendersOf(v =>
+      v.globalWindow && !globalWindowAllowlist.contains(v.name))
     assert(offenders.isEmpty,
       s"queries with unlisted global windows: ${offenders.mkString(", ")}")
   }
 
+  /** Queries that legitimately project the full lineitem row: q51-q53
+    * roundtrips and q59's bucketed write materialize every column.
+    */
+  val fullScanAllowed = Set("q51_csv_roundtrip", "q52_json_roundtrip",
+    "q53_orc_roundtrip", "q57_partition_pruned", "q59_bucketed_join")
+
   test("every fact-table scan prunes its read schema (no SELECT *)") {
-    // lineitem has 11 columns; a query that reads it must not scan all
-    // of them unless it genuinely projects the full row (q51-q53
-    // roundtrips and q59's bucketed write legitimately materialize
-    // every column; e09's bucketizer touches a 3-column slice of
-    // events, listed for clarity).
-    val fullScanAllowed = Set("q51_csv_roundtrip", "q52_json_roundtrip",
-      "q53_orc_roundtrip", "q57_partition_pruned", "q59_bucketed_join")
-    val offenders = Catalog.all.flatMap { case (name, q) =>
-      if (fullScanAllowed.contains(name)) None
-      else try {
-        val plan = q.fn(spark, sf0001).queryExecution.executedPlan.toString
-        // a lineitem scan listing every one of its 11 columns means
-        // pruning failed
-        val all = Seq("l_orderkey", "l_partkey", "l_suppkey",
-          "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
-          "l_tax", "l_returnflag", "l_linestatus", "l_shipdate")
-        if (all.forall(plan.contains)) Some(name) else None
-      } catch { case _: Throwable => None }
-    }
+    val offenders = offendersOf(v =>
+      v.fullLineitemScan && !fullScanAllowed.contains(v.name))
     assert(offenders.isEmpty,
       s"queries scanning all lineitem columns: ${offenders.mkString(", ")}")
+  }
+
+  /** One query's lint verdicts; `failure` is set when it did not plan. */
+  private case class Verdicts(name: String, nestedLoop: Boolean,
+      globalWindow: Boolean, fullLineitemScan: Boolean,
+      failure: Option[String])
+
+  /** Offending names under `bad`, plus every query that failed to plan
+    * (a plan failure never passes a lint).
+    */
+  private def offendersOf(bad: Verdicts => Boolean): Seq[String] =
+    verdicts.flatMap {
+      case Verdicts(name, _, _, _, Some(e)) => Some(s"$name (plan failed: $e)")
+      case v if bad(v) => Some(v.name)
+      case _ => None
+    }
+
+  /** The one catalog traversal: each query is built once at sf0.001 and
+    * all three lints read its QueryExecution — global windows from the
+    * optimized plan, nested loops and the lineitem read schema from the
+    * executed plan. Only the verdicts are kept.
+    */
+  private lazy val verdicts: Seq[Verdicts] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window, WindowGroupLimit}
+    // lineitem has 11 columns; a scan listing every one of them means
+    // pruning failed
+    val lineitemCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
+      "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
+      "l_tax", "l_returnflag", "l_linestatus", "l_shipdate")
+    Catalog.all.map { case (name, q) =>
+      try {
+        val qe = q.fn(spark, sf0001).queryExecution
+        val globalWindow = qe.optimizedPlan.exists {
+          case w: Window => w.partitionSpec.isEmpty
+          case w: WindowGroupLimit => w.partitionSpec.isEmpty
+          case _ => false
+        }
+        val plan = qe.executedPlan.toString
+        Verdicts(name,
+          nestedLoop = plan.contains("CartesianProduct") ||
+            plan.contains("BroadcastNestedLoopJoin"),
+          globalWindow = globalWindow,
+          fullLineitemScan = lineitemCols.forall(plan.contains),
+          failure = None)
+      } catch {
+        case e: Throwable => Verdicts(name, false, false, false,
+          Some(String.valueOf(e.getMessage)))
+      }
+    }
   }
 }
