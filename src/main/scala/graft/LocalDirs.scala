@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 /** Per-run scratch management for the tmpfs `spark.local.dir` used by
-  * Verify/Bench/QProf (see Bench.scala for why tmpfs: ext4 `discard`
-  * TRIM storms stall shuffle-heavy sessions 3-6×).
+  * Verify/Bench/QProf (see SessionDefaults.local for why tmpfs: ext4
+  * `discard` TRIM storms stall shuffle-heavy sessions 3-6×).
   *
   * Two failure modes of a FIXED shared dir motivated this (round-5
   * judge finding on the g01 red row):

@@ -1,30 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query profiler: runMain graft.QProf <name> [sfDir] —
-  * times one catalog query and prints its formatted physical plan.
+  * times one catalog query in Bench's session ([[SessionDefaults.local]])
+  * and prints its formatted physical plan.
   */
 object QProf {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // match Bench: AQE + SHJ threshold from the shared SessionDefaults
-    val spark = SessionDefaults.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("QPROF_SPLIT", "2m"))
-      .config("spark.sql.files.openCostInBytes", "256k")
-      // match Bench: full scan-metadata strings so the fingerprint
-      // printed below is comparable with bench_telemetry.json
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      // match Bench: per-run tmpfs shuffle dir (see Bench/LocalDirs)
-      .config("spark.local.dir", LocalDirs.scratch())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local("graft-qprof",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (sys.env.contains("QPROF_EXPLAIN")) df.explain("formatted")
     val t0 = System.nanoTime()

@@ -30,4 +30,31 @@ object SessionDefaults {
     b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
+
+  /** The harness session Bench, QProf and Verify run in: [[tuned]] on
+    * `local[cpus]` with as many shuffle partitions, UTC, no UI, WARN.
+    *  - 2 MB splits: test tables are single parquet files, and the
+    *    default 128 MB split would scan each on ONE core.
+    *  - full scan-metadata strings: they are truncated at 100 chars by
+    *    default, and expression-id digit width shifts the cut run over
+    *    run; PlanTelemetry's fingerprint needs the whole string.
+    *  - shuffle/spill on a per-run tmpfs dir ([[LocalDirs]]): /tmp is
+    *    ext4 with `discard`, and shuffle-block churn triggers TRIM
+    *    storms that stall tail queries 3-6× (measured).
+    */
+  def local(app: String, cpus: Int): SparkSession = {
+    val spark = tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", cpus.toString))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.files.maxPartitionBytes", "2m")
+      .config("spark.sql.files.openCostInBytes", "256k")
+      .config("spark.sql.maxMetadataStringLength", "100000")
+      .config("spark.local.dir", LocalDirs.scratch())
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

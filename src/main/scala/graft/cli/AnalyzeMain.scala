@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.Json
 import graft.analyzer.Analyzer
 import graft.loader.MigrationLoader
 import graft.model.{EngineConfig, Severity}
@@ -11,28 +12,6 @@ import java.nio.file.Paths
   * in the config's format (text, json, github-actions or sarif).
   */
 object AnalyzeMain {
-  /** RFC 8259-complete JSON string escape, shared by the json and
-    * sarif emitters: quote, backslash, and EVERY control char below
-    * 0x20 (a \r or \t riding in from a migration's SQL text or a
-    * quoted identifier must not ship a malformed document — strict
-    * parsers reject raw control chars in strings).
-    */
-  private[graft] def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 2)
-    sb += '"'
-    s.foreach {
-      case '"' => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case '\n' => sb ++= "\\n"
-      case '\r' => sb ++= "\\r"
-      case '\t' => sb ++= "\\t"
-      case c if c < 0x20 => sb ++= f"\\u${c.toInt}%04x"
-      case c => sb += c
-    }
-    sb += '"'
-    sb.toString
-  }
-
   def run(c: GraftMain.Analyze, cfg: EngineConfig, verbose: Boolean): Unit = {
     val GraftMain.Analyze(dir, failOnHigh) = c
     val pgVersion = cfg.targetPgVersion
@@ -58,14 +37,16 @@ object AnalyzeMain {
       m.version -> Paths.get(m.filePath).toUri.toString).toMap
     format match {
       case "json" =>
-        def q(s: String) = jsonEscape(s)
-        val rows = results.map { r =>
-          val fs = r.findings.map { f =>
-            s"""{"rule":${q(f.rule)},"severity":${q(Severity.label(f.severity))},"table":${q(f.table)},"message":${q(f.message)},"suggestion":${q(f.suggestion)},"lock_type":${q(f.lockType)},"stmt_index":${f.stmtIndex}}"""
-          }.mkString("[", ",", "]")
-          s"""{"version":${q(r.version)},"name":${q(r.name)},"max_severity":${q(Severity.label(r.maxSeverity))},"findings":$fs}"""
-        }.mkString("[", ",", "]")
-        println(rows)
+        println(Json.arr(results.map { r =>
+          Json.obj("version" -> r.version, "name" -> r.name,
+            "max_severity" -> Severity.label(r.maxSeverity),
+            "findings" -> r.findings.map { f =>
+              Json.obj("rule" -> f.rule,
+                "severity" -> Severity.label(f.severity), "table" -> f.table,
+                "message" -> f.message, "suggestion" -> f.suggestion,
+                "lock_type" -> f.lockType, "stmt_index" -> f.stmtIndex)
+            })
+        }))
       case "github-actions" =>
         // GitHub Actions workflow-command annotations — the reference
         // registers this format value (internal/cli/analyze.go:24) but
@@ -99,12 +80,10 @@ object AnalyzeMain {
         // VS Code SARIF viewers, and policy engines ingest this
         // directly — the modern sibling of the reference's
         // github-actions format value.
-        def q(s: String) = jsonEscape(s)
         val ruleIds = graft.rules.Registry.defaultRules.map(_.id) ++
           graft.rules.Registry.defaultFileRules.map(_.id)
         val rules = ruleIds.map(id =>
-          s"""{"id":${q(id)},"shortDescription":{"text":${q(id)}}}""")
-          .mkString("[", ",", "]")
+          Json.obj("id" -> id, "shortDescription" -> Json.obj("text" -> id)))
         val sarifResults = results.flatMap { r =>
           r.findings.map { f =>
             val level =
@@ -112,19 +91,22 @@ object AnalyzeMain {
               else if (f.severity == Severity.Medium) "warning"
               else "note"
             val uri = pathOf.getOrElse(r.version, r.version)
-            s"""{"ruleId":${q(f.rule)},"level":${q(level)},""" +
-              s""""message":{"text":${
-                q(s"${f.message} -> ${f.suggestion}")}},""" +
-              s""""locations":[{"physicalLocation":{""" +
-              s""""artifactLocation":{"uri":${q(uri)}}}}],""" +
-              s""""properties":{"table":${q(f.table)},""" +
-              s""""lock_type":${q(f.lockType)},""" +
-              s""""stmt_index":${f.stmtIndex},""" +
-              s""""severity":${q(Severity.label(f.severity))}}}"""
+            Json.obj("ruleId" -> f.rule, "level" -> level,
+              "message" -> Json.obj("text" -> s"${f.message} -> ${f.suggestion}"),
+              "locations" -> Seq(Json.obj("physicalLocation" ->
+                Json.obj("artifactLocation" -> Json.obj("uri" -> uri)))),
+              "properties" -> Json.obj("table" -> f.table,
+                "lock_type" -> f.lockType, "stmt_index" -> f.stmtIndex,
+                "severity" -> Severity.label(f.severity)))
           }
-        }.mkString("[", ",", "]")
-        println(
-          s"""{"$$schema":"https://raw.githubusercontent.com/oasis-tcs/sarif-spec/master/Schemata/sarif-schema-2.1.0.json","version":"2.1.0","runs":[{"tool":{"driver":{"name":"graft","informationUri":"","rules":$rules}},"results":$sarifResults}]}""")
+        }
+        println(Json.obj(
+          "$schema" -> "https://raw.githubusercontent.com/oasis-tcs/sarif-spec/master/Schemata/sarif-schema-2.1.0.json",
+          "version" -> "2.1.0",
+          "runs" -> Seq(Json.obj(
+            "tool" -> Json.obj("driver" -> Json.obj("name" -> "graft",
+              "informationUri" -> "", "rules" -> rules)),
+            "results" -> sarifResults))))
       case "text" =>
         println(s"Analyzed ${results.length} migration(s) (target PostgreSQL $pgVersion)\n")
         results.foreach { r =>

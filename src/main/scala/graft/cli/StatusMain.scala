@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.Json
 import graft.loader.MigrationLoader
 import graft.tracker.ParquetTracker
 
@@ -30,14 +31,14 @@ object StatusMain {
       }
     val pending = migrations.filterNot(m => appliedVersions(m.version))
     if (format == "json") {
-      def q(s: String) = AnalyzeMain.jsonEscape(s)
-      val aRows = applied.map { a =>
-        s"""{"version":${q(a.version)},"filename":${q(a.filename)},"applied_at":${q(a.appliedAt.toString)},"duration_ms":${a.durationMs},"drift":${q(driftOf(a))}}"""
-      }.mkString("[", ",", "]")
-      val pRows = pending.map { m =>
-        s"""{"version":${q(m.version)},"name":${q(m.name)}}"""
-      }.mkString("[", ",", "]")
-      println(s"""{"migrations_dir":${q(dir)},"tracker":${q(trackerDir)},"applied":$aRows,"pending":$pRows}""")
+      println(Json.obj("migrations_dir" -> dir, "tracker" -> trackerDir,
+        "applied" -> applied.map { a =>
+          Json.obj("version" -> a.version, "filename" -> a.filename,
+            "applied_at" -> a.appliedAt.toString,
+            "duration_ms" -> a.durationMs, "drift" -> driftOf(a))
+        },
+        "pending" -> pending.map(m =>
+          Json.obj("version" -> m.version, "name" -> m.name))))
     } else {
       println(s"Migrations dir: $dir")
       println(s"Tracker:        $trackerDir")

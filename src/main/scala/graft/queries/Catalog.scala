@@ -161,6 +161,18 @@ object Catalog {
     } else df.localCheckpoint()
   }
 
+  /** Scratch path for a query's stored index: `SPARK_GRAFT_INDEX_DIR`
+    * (default `java.io.tmpdir/graft-index`), then
+    * `<tag>-<sf dir name>-<applicationId>`. Keyed by application id:
+    * the queries rebuild their day-0 index in-run (cross-run persistence
+    * is never relied on), and two concurrent sessions on one sf dir must
+    * not interleave overwrite and read-back.
+    */
+  def indexPath(s: SparkSession, d: String, tag: String): String =
+    sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
+      sys.props("java.io.tmpdir") + "/graft-index") +
+      s"/$tag-${new java.io.File(d).getName}-${s.sparkContext.applicationId}"
+
   /** The session's shuffle parallelism, for pinning a cached loop
     * input's partition count (REPARTITION_BY_NUM is exempt from AQE
     * coalescing — the r16 graph-loop lesson). One definition for the

@@ -2928,14 +2928,7 @@ object TextAnnOps {
     "s24_ivf_stored_index" -> Q(
       (s, d) => {
         val k = 8
-        // appId-keyed scratch (q95's discipline): the query rebuilds
-        // day-0 in-run, so cross-run persistence is never relied on —
-        // and two concurrent sessions on the same sf dir (Verify +
-        // QProf) must not interleave overwrite and read-back.
-        val idxPath = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-          sys.props("java.io.tmpdir") + "/graft-index") +
-          "/s24-ivf-" + new java.io.File(d).getName +
-          "-" + s.sparkContext.applicationId
+        val idxPath = indexPath(s, d, "s24-ivf")
         val quant = (c: Column) => transform(c, x =>
           floor(x.cast("double") * 1024).cast("long"))
         val all = emb(s, d).select(col("vec_id"),

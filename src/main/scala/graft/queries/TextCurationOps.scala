@@ -2781,12 +2781,7 @@ object TextCurationOps {
         val bands = 16; val rowsPerBand = 4
         val incomingSrcs = Seq("src16", "src17", "src18", "src19")
         val incoming = col("source").isin(incomingSrcs: _*)
-        // appId-keyed: day-0 is rebuilt in-run, and concurrent
-        // sessions on one sf dir must not interleave write/read-back
-        val idxPath = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-          sys.props("java.io.tmpdir") + "/graft-index") +
-          "/p02-band-index-" + new java.io.File(d).getName +
-          "-" + s.sparkContext.applicationId
+        val idxPath = indexPath(s, d, "p02-band-index")
         bandIndex(docs(s, d).filter(!incoming), bands, rowsPerBand)
           .write.mode("overwrite").partitionBy("band").parquet(idxPath)
 

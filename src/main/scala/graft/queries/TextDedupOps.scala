@@ -1427,12 +1427,7 @@ object TextDedupOps {
         val rowsPerBand = 4
         val incomingSrcs = Seq("src16", "src17", "src18", "src19")
         val incoming = col("source").isin(incomingSrcs: _*)
-        // appId-keyed: day-0 is rebuilt in-run, and concurrent
-        // sessions on one sf dir must not interleave write/read-back
-        val idxPath = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-          sys.props("java.io.tmpdir") + "/graft-index") +
-          "/d16-band-index-" + new java.io.File(d).getName +
-          "-" + s.sparkContext.applicationId
+        val idxPath = indexPath(s, d, "d16-band-index")
         // day-0: build + store the history index (band-partitioned:
         // the layout that lets a day-N probe prune to its bands)
         bandIndex(docs(s, d).filter(!incoming), bands, rowsPerBand)
@@ -1479,11 +1474,7 @@ object TextDedupOps {
         val incomingSrcs = Seq("src16", "src17", "src18", "src19")
         val purgeSrcs = Seq("src12", "src6")
         val incoming = col("source").isin(incomingSrcs: _*)
-        // appId-keyed: same write/read-back race note as d16
-        val base = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-          sys.props("java.io.tmpdir") + "/graft-index") +
-          "/d25-band-index-" + new java.io.File(d).getName +
-          "-" + s.sparkContext.applicationId
+        val base = indexPath(s, d, "d25-band-index")
         // day-0: the full history index stored (d16's layout)
         bandIndex(docs(s, d).filter(!incoming), bands, rowsPerBand)
           .write.mode("overwrite").partitionBy("band").parquet(base)

@@ -109,6 +109,52 @@ class BenchTelemetrySpec extends SparkFunSuite {
     assert(!Bench.refComparable("/data/tpch/sf0.01", 4, "sf0.1", None))
   }
 
+  // Fixed inputs for the canonical line; the expected strings are the
+  // output of the string-built formatting this line replaced.
+  private val goldenResults = Seq(
+    "q01_pricing_summary" -> Seq(1.2344, 1.5, 2.25),
+    "s20_hybrid_rrf" -> Seq(0.5, 0.7))
+  private def goldenLine(): String = Bench.totalLine(goldenResults, 3,
+    Bench.Session(goldenResults, 0.0551, 0.2504, 0.0612, 0.2499,
+      preSick = false, 0.0551, 0.2504),
+    "ok", Some((1.02345, 17)), sessionRepeated = false, Seq("s20_hybrid_rrf"),
+    Some(Seq.empty), Some(Seq("q01_pricing_summary")),
+    Seq("x57_eval_decontamination"), "/data/tpch/sf0.1")
+
+  test("totalLine: the canonical line keeps its keys, order and " +
+      "3-decimal values") {
+    assert(goldenLine() ==
+      """{"metric":"total","value":1.734,"unit":"sec","queries":{"q01_pricing_summary":1.234,"s20_hybrid_rrf":0.500},"runs":3,"calibration_sec":{"pre":0.055,"post":0.061},"calibration_shuffle_sec":{"pre":0.250,"post":0.250},"calibration_status":"ok","control_drift":{"median":1.023,"n":17},"session_repeated":false,"flagged_reruns":["s20_hybrid_rrf"],"plan_changed":[],"shuffle_changed":["q01_pricing_summary"],"failed":["x57_eval_decontamination"],"sf":"/data/tpch/sf0.1"}""")
+    val one = Seq("q01_pricing_summary" -> Seq(12.0))
+    assert(Bench.totalLine(one, 1,
+      Bench.Session(one, 0.3, 1.0, 0.2, 0.9, preSick = false, 0.3, 1.0),
+      "not_comparable", None, sessionRepeated = true, Seq.empty, None, None,
+      Seq.empty, "/data/tpch/sf0.01") ==
+      """{"metric":"total","value":12.000,"unit":"sec","queries":{"q01_pricing_summary":12.000},"runs":1,"calibration_sec":{"pre":0.300,"post":0.200},"calibration_shuffle_sec":{"pre":1.000,"post":0.900},"calibration_status":"not_comparable","control_drift":null,"session_repeated":true,"flagged_reruns":[],"plan_changed":null,"shuffle_changed":null,"failed":[],"sf":"/data/tpch/sf0.01"}""")
+  }
+
+  test("totalLine is valid JSON under a comma-decimal default locale") {
+    val before = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val line =
+      try goldenLine()
+      finally java.util.Locale.setDefault(before)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(node.get("value").asText() == "1.734")
+    assert(node.get("queries").get("s20_hybrid_rrf").asText() == "0.5")
+  }
+
+  test("readReference reads the committed bench_reference.json") {
+    val ref = Bench.readReference("bench_reference.json")
+      .getOrElse(fail("bench_reference.json did not read"))
+    assert(ref.mins.size == 31 && ref.fps.size == 31 &&
+      ref.shufBytes.size == 31)
+    assert(ref.calCpus.contains(32))
+    assert(ref.fps.keySet == ref.mins.keySet &&
+      ref.shufBytes.keySet == ref.mins.keySet)
+    assert(Bench.readReference("no-such-reference.json").isEmpty)
+  }
+
   test("norm strips every run-varying token class") {
     // expression ids
     assert(PlanTelemetry.norm("sum(l_quantity#123)") ==

@@ -274,11 +274,6 @@ class CliRootSpec extends AnyFunSuite {
       assert(text.contains("drop-table") && text.contains("lock-table"),
         s"findings lost in $fmt output: $text")
     }
-    // unit leg: the escaper's output for a full control-char gauntlet
-    // parses strictly and round-trips the exact string
-    val hostile = "a\"b\\c\nd\re\tf\u0000g\u001fh"
-    val esc = _root_.graft.cli.AnalyzeMain.jsonEscape(hostile)
-    assert(strictParse(s"""{"v":$esc}""").get("v").asText() == hostile)
   }
 
   test("graft plan: default lists applied rows, --pending-only restricts " +
