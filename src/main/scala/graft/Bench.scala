@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.execution.QueryExecution
 import graft.Json.{obj, objLines}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -80,9 +81,12 @@ object Bench {
     sfDir.endsWith(refSfSuffix) && refCpus.forall(_ == cpus)
 
   /** Every bench query runs once here first, to absorb JVM startup and
-    * whole-stage-codegen (Janino) compilation — generated classes are
-    * cached by source, so the timed runs measure execution at the
-    * target sf, not compiler cold-start. */
+    * whole-stage-codegen (Janino) compilation: generated classes are
+    * cached by source in an LRU sized to hold the whole bench set
+    * ([[SessionDefaults.CodegenCacheEntries]]), so the timed runs
+    * measure execution at the target sf, not compiler cold-start. Each
+    * query's `codegen_classes` in the telemetry file counts the classes
+    * its timed runs still compiled — what the warm-up missed. */
   private val WarmDir = "/root/testdata/sf0.001"
 
   /** Cooldown before re-measuring a sick pre-leg (twice this before a
@@ -162,6 +166,17 @@ object Bench {
       "plan_changed" -> planChanged, "shuffle_changed" -> shuffleChanged,
       "failed" -> failed, "sf" -> sfDir).json
 
+  /** One query's member of the telemetry file: the final plan's stats,
+    * the listener's `(bytes, records)` shuffle volume, the generated
+    * classes its timed runs compiled, and its min. */
+  private[graft] def queryTelemetry(t: PlanTelemetry.Stats,
+      job: (Long, Long), codegenClasses: Long, minSec: Double): Json.Raw =
+    obj("plan_fp" -> t.fingerprint, "shuffle_bytes" -> job._1,
+      "shuffle_records" -> job._2, "plan_shuffle_bytes" -> t.shuffleBytes,
+      "plan_shuffle_records" -> t.shuffleRecords,
+      "exchanges" -> t.exchanges, "codegen_classes" -> codegenClasses,
+      "min_sec" -> minSec)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -183,8 +198,26 @@ object Bench {
     // seen — warm-up or timed run — and its min is over the timed runs
     // that completed, if any.
     val failures = scala.collection.mutable.Map[String, String]()
+    // Drain every output row instead of count(): count() lets Catalyst
+    // prune computed columns (and collapse 1-row aggregates), so a
+    // projection-shaped query times as a bare row-count scan — d22
+    // measured 0.2 s under count() vs 8.2 s producing its actual output
+    // (round 10). Draining the executed plan's rows forces codegen to
+    // write every output column while keeping rows on the executors (no
+    // driver-transfer cost in the measurement). Reference mins recorded
+    // under count() are unchanged for agg/join-shaped queries (their
+    // work was already forced; the delta is the few-row final
+    // projection) — d22's reference is drain-based. The warm-up drains
+    // too: a count() plan generates other classes than the drained
+    // plan, which the timed runs would then compile.
+    def drain(name: String, dir: String): QueryExecution = {
+      val qe = qmap(name)(spark, dir).queryExecution
+      qe.executedPlan.execute()
+        .foreachPartition(it => while (it.hasNext) it.next())
+      qe
+    }
     names.foreach { name =>
-      try qmap(name)(spark, WarmDir).count()
+      try drain(name, WarmDir)
       catch {
         case NonFatal(e) => failures.getOrElseUpdate(name, e.getClass.getName)
       }
@@ -293,6 +326,9 @@ object Bench {
       }
     }
     val jobTelemetry = scala.collection.mutable.Map[String, (Long, Long)]()
+    // generated classes compiled during each query's timed runs, summed
+    val codegenClasses =
+      scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
     def timeQuery(name: String, n: Int): Seq[Double] =
       (1 to n).flatMap { _ =>
         // queries may persist intermediates (d08): every iteration
@@ -307,25 +343,12 @@ object Bench {
         settleListener()
         val preBytes = jobShuffleBytes.get
         val preRecords = jobShuffleRecords.get
+        val preClasses = PlanTelemetry.compiledClasses()
         val t0 = System.nanoTime()
-        // Drain every output row instead of count(): count() lets
-        // Catalyst prune computed columns (and collapse 1-row
-        // aggregates), so a projection-shaped query times as a bare
-        // row-count scan — d22 measured 0.2 s under count() vs 8.2 s
-        // producing its actual output (round 10). Draining the
-        // executed plan's rows forces codegen to write every output
-        // column while keeping rows on the executors (no
-        // driver-transfer cost in the measurement). Reference mins
-        // recorded under count() are unchanged for agg/join-shaped
-        // queries (their work was already forced; the delta is the
-        // few-row final projection) — d22's reference is drain-based.
-        val run = try {
-          val qe = qmap(name)(spark, sfDir).queryExecution
-          qe.executedPlan
-            .execute().foreachPartition(it => while (it.hasNext) it.next())
-          Right(qe)
-        } catch { case NonFatal(e) => Left(e) }
+        val run = try Right(drain(name, sfDir))
+          catch { case NonFatal(e) => Left(e) }
         val dt = (System.nanoTime() - t0) / 1e9
+        codegenClasses(name) += PlanTelemetry.compiledClasses() - preClasses
         // fingerprint/metrics read AFTER the clock stops (driver-side
         // string work must not ride in the measurement)
         run match {
@@ -442,12 +465,9 @@ object Bench {
     try Files.writeString(Paths.get(teleFile), obj(
       "sf" -> sfDir, "runs" -> runs,
       "queries" -> objLines(teleNames.map { name =>
-        val t = telemetry(name)
-        val (jb, jr) = jobTelemetry.getOrElse(name, (0L, 0L))
-        name -> obj("plan_fp" -> t.fingerprint, "shuffle_bytes" -> jb,
-          "shuffle_records" -> jr, "plan_shuffle_bytes" -> t.shuffleBytes,
-          "plan_shuffle_records" -> t.shuffleRecords,
-          "exchanges" -> t.exchanges, "min_sec" -> mins(name))
+        name -> queryTelemetry(telemetry(name),
+          jobTelemetry.getOrElse(name, (0L, 0L)), codegenClasses(name),
+          mins(name))
       }),
       "failed" -> obj(failures.toSeq.sorted: _*)).json)
     catch { case NonFatal(e) => warn(s"telemetry file $teleFile", e) }

@@ -120,6 +120,13 @@ object PlanTelemetry {
     out.toSeq
   }
 
+  /** Generated classes Janino has compiled in this JVM so far — each
+    * miss of Spark's codegen cache compiles one. The difference around a
+    * run is the codegen work that run did. */
+  def compiledClasses(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
+
   /** Telemetry for an EXECUTED query (metric accumulators are final
     * once the action returned — the DAGScheduler folds task updates in
     * synchronously at task completion).

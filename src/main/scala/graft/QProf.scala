@@ -12,12 +12,19 @@ object QProf {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (sys.env.contains("QPROF_EXPLAIN")) df.explain("formatted")
-    val t0 = System.nanoTime()
-    val n = df.count()
-    println(f"QPROF $name rows=$n time=${(System.nanoTime() - t0) / 1e9}%.3f s")
-    val t1 = System.nanoTime()
-    df.count()
-    println(f"QPROF $name second run=${(System.nanoTime() - t1) / 1e9}%.3f s")
+    // One timed leg, which returns its label: the seconds, then the
+    // generated classes it compiled (read outside the clock; Bench's
+    // telemetry `codegen_classes`).
+    def leg(run: => String): Unit = {
+      val c0 = PlanTelemetry.compiledClasses()
+      val t0 = System.nanoTime()
+      val label = run
+      val sec = (System.nanoTime() - t0) / 1e9
+      println(f"QPROF $name $label=$sec%.3f s codegen_classes=" +
+        (PlanTelemetry.compiledClasses() - c0))
+    }
+    leg(s"rows=${df.count()} time")
+    leg { df.count(); "second run" }
     // Full-materialization leg: count() lets Catalyst PRUNE computed
     // columns (a projection-shaped query times as a bare row-count
     // scan), so for row-local operators the two legs above measure the
@@ -25,10 +32,11 @@ object QProf {
     // forces codegen to write every output column. (foreachPartition
     // with an empty body would NOT: the per-partition iterator is lazy
     // and an unconsumed iterator computes nothing.)
-    val t2 = System.nanoTime()
-    df.queryExecution.executedPlan.execute()
-      .foreachPartition(it => while (it.hasNext) it.next())
-    println(f"QPROF $name materialize-all=${(System.nanoTime() - t2) / 1e9}%.3f s")
+    leg {
+      df.queryExecution.executedPlan.execute()
+        .foreachPartition(it => while (it.hasNext) it.next())
+      "materialize-all"
+    }
     if (sys.env.contains("QPROF_EXPLAIN")) {
       // Execute THIS dataframe's own QueryExecution (count() above spawns
       // a separate one), so the AdaptiveSparkPlan materializes and the

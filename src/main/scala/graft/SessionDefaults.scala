@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * so a library or Verify session silently ran without it).
   *
   * Each knob is runtime-gated or size-gated (never a local[32]-only
-  * tune) and env-overridable; library users building their own session
-  * should pass their builder through [[tuned]].
+  * tune); library users building their own session should pass their
+  * builder through [[tuned]].
   */
 object SessionDefaults {
 
@@ -25,16 +25,38 @@ object SessionDefaults {
     *    64 MB per partition is modest for executors sized to
     *    128 MB-1 GB shuffle partitions (guide §2.2). Override with
     *    SPARK_GRAFT_SHJ_THRESHOLD.
+    *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]].
     */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
+      .config(CodegenCacheConf, CodegenCacheEntries.toString)
+
+  /** Size of Spark's generated-class cache: whole-stage codegen compiles
+    * each generated source with Janino once and reuses the class only
+    * while the source stays in this JVM-wide LRU. Spark's default of 100
+    * is below this catalog's working set — the 9 etl_validate queries
+    * generate about 185 classes and Bench's 31 headline queries about
+    * 1,100 (counted at sf0.001) — so at 100 every class was evicted
+    * before its reuse, and every pass recompiled all of them (175-178
+    * classes per sf0.1 etl_validate pass, its CPU mostly compiler
+    * threads). 2048 holds Bench's whole set with headroom. It caches
+    * compiled code, not data: Bench's per-run `clearCache()` still
+    * starts every run cold on data. A static conf, so it must be set on
+    * the builder before the session (and the cache) exists.
+    */
+  val CodegenCacheEntries = 2048
+  val CodegenCacheConf = "spark.sql.codegen.cache.maxEntries"
 
   /** The harness session Bench, QProf and Verify run in: [[tuned]] on
     * `local[cpus]` with as many shuffle partitions, UTC, no UI, WARN.
     *  - 2 MB splits: test tables are single parquet files, and the
-    *    default 128 MB split would scan each on ONE core.
+    *    default 128 MB split gives each file one task. Splitting does
+    *    not spread the scan, though: every test file holds ONE row
+    *    group, and a split reads only the row groups whose midpoint it
+    *    holds, so on 4 cores sf0.1 lineitem is still one reading task
+    *    plus 5 empty ones (orders: 1 plus 3).
     *  - full scan-metadata strings: they are truncated at 100 chars by
     *    default, and expression-id digit width shifts the cut run over
     *    run; PlanTelemetry's fingerprint needs the whole string.

@@ -1,14 +1,17 @@
 package graft.queries
 
 import graft.functions.ExactSum
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** One declared query: the Spark implementation plus (when the operator
   * is SQL-expressible) the equivalent ANSI SQL the driver runs in DuckDB
@@ -161,17 +164,54 @@ object Catalog {
     } else df.localCheckpoint()
   }
 
-  /** Scratch path for a query's stored index: `SPARK_GRAFT_INDEX_DIR`
-    * (default `java.io.tmpdir/graft-index`), then
+  /** Scratch path for a query's stored index or written table:
+    * `SPARK_GRAFT_INDEX_DIR` (default `java.io.tmpdir/graft-index`), then
     * `<tag>-<sf dir name>-<applicationId>`. Keyed by application id:
     * the queries rebuild their day-0 index in-run (cross-run persistence
     * is never relied on), and two concurrent sessions on one sf dir must
-    * not interleave overwrite and read-back.
+    * not interleave overwrite and read-back. The session's own paths
+    * are deleted when its application ends ([[IndexCleanup]]).
     */
   def indexPath(s: SparkSession, d: String, tag: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-      sys.props("java.io.tmpdir") + "/graft-index") +
-      s"/$tag-${new java.io.File(d).getName}-${s.sparkContext.applicationId}"
+    indexPath(s, sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
+      sys.props("java.io.tmpdir") + "/graft-index"), d, tag)
+
+  private[graft] def indexPath(s: SparkSession, root: String, d: String,
+      tag: String): String = {
+    val sc = s.sparkContext
+    val appId = sc.applicationId
+    indexCleanups.computeIfAbsent((root, appId), { _ =>
+      val c = new IndexCleanup(root, appId, sc.hadoopConfiguration)
+      sc.addSparkListener(c)
+      c
+    })
+    s"$root/$tag-${new java.io.File(d).getName}-$appId"
+  }
+
+  /** The cleanup registered for each (root, application id). */
+  private[graft] val indexCleanups =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), IndexCleanup]
+
+  /** Deletes, when its application ends, every entry under `root` that
+    * [[indexPath]] named for application `appId` (a `-<appId>` suffix);
+    * other sessions' paths stay. A failed delete is reported on stderr:
+    * the application is ending, and there is no caller left to throw to.
+    */
+  private[graft] final class IndexCleanup(root: String, appId: String,
+      conf: Configuration) extends SparkListener {
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+      try {
+        val dir = new Path(root)
+        val fs = dir.getFileSystem(conf)
+        if (fs.exists(dir))
+          fs.listStatus(dir).map(_.getPath)
+            .filter(_.getName.endsWith(s"-$appId"))
+            .foreach(fs.delete(_, true))
+      } catch {
+        case NonFatal(ex) =>
+          System.err.println(s"[graft] index cleanup under $root: $ex")
+      }
+  }
 
   /** The session's shuffle parallelism, for pinning a cached loop
     * input's partition count (REPARTITION_BY_NUM is exempt from AQE

@@ -2216,9 +2216,7 @@ object EventOps {
           .select(col("event_id"), col("ux"), col("my"),
             interleave(col("ux"), 0).bitwiseOR(interleave(col("my"), 1))
               .as("z"))
-        val base =
-          s"${System.getProperty("java.io.tmpdir")}/graft_zorder_optimize_" +
-            new java.io.File(d).getName
+        val base = indexPath(s, d, "zorder-optimize")
         ev.withColumn("f", expr("event_id div 2048"))
           .write.mode("overwrite").partitionBy("f")
           .parquet(s"$base/arrival")
@@ -2313,9 +2311,7 @@ object EventOps {
     "e35_mv_rewrite" -> Q(
       (s, d) => {
         import graft.plans.MvRewrite
-        val mvPath =
-          s"${System.getProperty("java.io.tmpdir")}/graft_mv_daily_" +
-            new java.io.File(d).getName
+        val mvPath = indexPath(s, d, "mv-daily")
         def rollup = t(s, d, "events")
           .groupBy(col("event_type"), to_date(col("ts")).as("day"))
           .agg(count(lit(1)).as("n"))

@@ -4543,11 +4543,7 @@ object TextCurationOps {
         // FREEZE the tokenizer: merge table + vocab persisted, then
         // read BACK — the artifacts on disk are the deployment unit
         import s.implicits._
-        // per-dataset suffix (the d16/d25 discipline): concurrent
-        // Verify runs on different sf dirs must not share artifacts
-        val tokDir =
-          s"${System.getProperty("java.io.tmpdir")}/graft_x48_tokenizer_" +
-            new java.io.File(d).getName
+        val tokDir = indexPath(s, d, "x48-tokenizer")
         merges.toDF("rank", "lhs", "rhs").coalesce(1)
           .write.mode("overwrite").parquet(s"$tokDir/merges.parquet")
         seqs.select(explode(split(col("seq"), " ")).as("tok")).distinct()

@@ -1475,6 +1475,7 @@ object TextDedupOps {
         val purgeSrcs = Seq("src12", "src6")
         val incoming = col("source").isin(incomingSrcs: _*)
         val base = indexPath(s, d, "d25-band-index")
+        val compacted = indexPath(s, d, "d25-band-index-compacted")
         // day-0: the full history index stored (d16's layout)
         bandIndex(docs(s, d).filter(!incoming), bands, rowsPerBand)
           .write.mode("overwrite").partitionBy("band").parquet(base)
@@ -1485,9 +1486,9 @@ object TextDedupOps {
         s.read.parquet(base)
           .join(purgeIds, col("doc_id") === col("pid"), "left_anti")
           .write.mode("overwrite").partitionBy("band")
-          .parquet(s"$base-compacted")
+          .parquet(compacted)
         // day-N probe against the compacted index
-        val stored = s.read.parquet(s"$base-compacted")
+        val stored = s.read.parquet(compacted)
           .select(col("band"), col("band_hash"),
             col("doc_id").as("doc_idx"))
         val cand = bandIndex(docs(s, d).filter(incoming), bands,

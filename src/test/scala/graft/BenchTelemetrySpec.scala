@@ -133,6 +133,13 @@ class BenchTelemetrySpec extends SparkFunSuite {
       """{"metric":"total","value":12.000,"unit":"sec","queries":{"q01_pricing_summary":12.000},"runs":1,"calibration_sec":{"pre":0.300,"post":0.200},"calibration_shuffle_sec":{"pre":1.000,"post":0.900},"calibration_status":"not_comparable","control_drift":null,"session_repeated":true,"flagged_reruns":[],"plan_changed":null,"shuffle_changed":null,"failed":[],"sf":"/data/tpch/sf0.01"}""")
   }
 
+  test("queryTelemetry: a telemetry-file member keeps its keys and order") {
+    assert(Bench.queryTelemetry(
+      PlanTelemetry.Stats("9a33a63325", 11317L, 512L, 2), (11400L, 515L),
+      3L, 1.2061).json ==
+      """{"plan_fp":"9a33a63325","shuffle_bytes":11400,"shuffle_records":515,"plan_shuffle_bytes":11317,"plan_shuffle_records":512,"exchanges":2,"codegen_classes":3,"min_sec":1.206}""")
+  }
+
   test("totalLine is valid JSON under a comma-decimal default locale") {
     val before = java.util.Locale.getDefault
     java.util.Locale.setDefault(java.util.Locale.GERMANY)

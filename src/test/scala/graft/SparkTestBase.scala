@@ -12,6 +12,11 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the harness's codegen cache size, not the rest of `tuned`: its
+      // SHJ threshold would turn the sort-merge joins AqeSpec and CboSpec
+      // assert into shuffled-hash joins
+      .config(SessionDefaults.CodegenCacheConf,
+        SessionDefaults.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Quiesce before the context stops at JVM exit. Spark's context-stop

@@ -828,11 +828,9 @@ class StreamingSpec extends SparkFunSuite {
     val batchRows = SparkEntry
       .queries("x48_bpe_incremental_encode")(spark, sf0001)
       .collect().map(tup).sortBy(_._1).toSeq
-    // the batch x48 above froze the artifacts under the per-dataset
-    // suffix (the d16/d25 isolation discipline) — read the SAME store
-    val tokDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_x48_tokenizer_" +
-        new java.io.File(sf0001).getName
+    // the batch x48 above froze the artifacts in its session's index
+    // path — read the SAME store
+    val tokDir = Catalog.indexPath(spark, sf0001, "x48-tokenizer")
     val merges = spark.read.parquet(s"$tokDir/merges.parquet")
       .orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
