@@ -25,13 +25,25 @@ object SessionDefaults {
     *    64 MB per partition is modest for executors sized to
     *    128 MB-1 GB shuffle partitions (guide §2.2). Override with
     *    SPARK_GRAFT_SHJ_THRESHOLD.
-    *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]].
+    *  - the [[codegen]] confs.
     */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.adaptive.enabled", "true")
+    codegen(b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      .config(CodegenCacheConf, CodegenCacheEntries.toString)
+        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")))
+
+  /** The codegen confs, shared by [[tuned]] and the test session:
+    *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]].
+    *  - `spark.sql.codegen.useIdInClassName` = false. By default a
+    *    whole-stage class is named after its codegen stage id, and the
+    *    name is part of the source the cache is keyed on. AQE numbers
+    *    stages in the order they become ready, so when two stages run
+    *    side by side (m10's two orders shuffles) a rerun can swap their
+    *    ids and recompile both classes.
+    */
+  def codegen(b: SparkSession.Builder): SparkSession.Builder =
+    b.config(CodegenCacheConf, CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Size of Spark's generated-class cache: whole-stage codegen compiles
     * each generated source with Janino once and reuses the class only

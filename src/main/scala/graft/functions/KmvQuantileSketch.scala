@@ -25,8 +25,8 @@ final case class ValueCensusBuf(
   *
   * The weighted quantile of the sample is the plug-in estimate of the
   * data quantile; below k distinct values the sample IS the full
-  * census and the estimate is EXACT (bit-for-bit Spark `percentile`
-  * semantics — see [[KmvQuantile]]). Documented caveat (the q73
+  * census and the estimate is EXACT (q75 interpolates over it with
+  * Spark `percentile`'s semantics). Documented caveat (the q73
   * honesty rule): a heavy-hitter value that happens NOT to be sampled
   * takes its row mass with it — frequency skew widens the error
   * beyond the ~1/√k distinct-domain bound; x19's CMS heavy-hitters
@@ -36,9 +36,15 @@ final case class ValueCensusBuf(
   * long, with map-side partial aggregation — the shuffle carries ~24k
   * bytes per partition per group versus `percentile`'s unbounded
   * per-group value buffer (an OOM at 100 TB) or a full sort.
+  *
+  * The aggregator returns the raw census buffer — what a
+  * per-partition / per-day sketch column stores (the mergeable form;
+  * [[KmvMinSet]]'s analogue for quantiles). The catalog query (q75)
+  * consumes it and runs the estimator arithmetic in DataFrame
+  * expressions so the DuckDB oracle can re-derive it value for value.
   */
-sealed abstract class KmvValueCensus[OUT](k: Int)
-    extends Aggregator[(Long, Double), ValueCensusBuf, OUT] {
+final class KmvValueCensusRaw(k: Int)
+    extends Aggregator[(Long, Double), ValueCensusBuf, ValueCensusBuf] {
   require(k >= 2, "k must be >= 2")
 
   def zero: ValueCensusBuf = ValueCensusBuf(
@@ -101,55 +107,9 @@ sealed abstract class KmvValueCensus[OUT](k: Int)
 
   def bufferEncoder: Encoder[ValueCensusBuf] =
     ExpressionEncoder[ValueCensusBuf]()
-}
 
-/** Quantile estimate from the value census, as a single aggregator —
-  * the form [[graft.plans.ApproxPercentileRewrite]] substitutes for
-  * `percentile`/`percentile_approx`. The sampled (value, count) rows
-  * are the weighted census; the interpolated quantile over it uses
-  * EXACTLY Spark `Percentile`'s semantics (position pct·(total−1),
-  * linear interpolation between covering rows), so below k distinct
-  * values — where the census is complete and total == n — the result
-  * equals exact `percentile` bit for bit.
-  */
-final class KmvQuantile(k: Int, pct: Double)
-    extends KmvValueCensus[java.lang.Double](k) {
-  require(pct >= 0.0 && pct <= 1.0, "percentage must be in [0, 1]")
-
-  def finish(b: ValueCensusBuf): java.lang.Double = {
-    if (b.n == 0L) return null
-    val order = b.vs.indices.sortBy(b.vs(_)).toArray
-    val total = b.cs.sum
-    val posn = pct * (total - 1).toDouble
-    val lo = math.floor(posn).toLong
-    val hi = math.ceil(posn).toLong
-    def valueAt(rowIdx: Long): Double = {
-      var cum = 0L; var oi = 0
-      while (oi < order.length) {
-        cum += b.cs(order(oi))
-        if (cum >= rowIdx + 1) return b.vs(order(oi))
-        oi += 1
-      }
-      b.vs(order(order.length - 1))
-    }
-    val vLo = valueAt(lo)
-    if (hi == lo) vLo
-    else vLo + (valueAt(hi) - vLo) * (posn - lo.toDouble)
-  }
-
-  def outputEncoder: Encoder[java.lang.Double] =
-    org.apache.spark.sql.Encoders.DOUBLE
-}
-
-/** The raw census buffer — what a per-partition / per-day sketch
-  * column stores (the mergeable form; [[KmvMinSet]]'s analogue for
-  * quantiles). The catalog query (q75) consumes this and runs the
-  * estimator arithmetic in DataFrame expressions so the DuckDB oracle
-  * can re-derive it value for value.
-  */
-final class KmvValueCensusRaw(k: Int)
-    extends KmvValueCensus[ValueCensusBuf](k) {
   def finish(b: ValueCensusBuf): ValueCensusBuf = b
+
   def outputEncoder: Encoder[ValueCensusBuf] =
     ExpressionEncoder[ValueCensusBuf]()
 }

@@ -74,21 +74,6 @@ final class KmvKthMin(k: Int) extends KmvBuffer[Long](k) {
   def outputEncoder: Encoder[Long] = Encoders.scalaLong
 }
 
-/** Direct distinct-count ESTIMATE as a single aggregator — the form
-  * [[graft.plans.ApproxDistinctRewrite]] substitutes for
-  * `count(DISTINCT x)`: below k distinct values the min-set IS the
-  * distinct set (exact count), at or above k the Bar-Yossef estimator
-  * rounds to a long. Input is an h60 hash of the counted expression.
-  */
-final class KmvEstimate(k: Int) extends KmvBuffer[Long](k) {
-  def finish(buf: Array[Long]): Long =
-    if (buf.length < k) buf.length.toLong
-    else ((k - 1).toDouble * 1152921504606846976.0 /
-      buf(k - 1).toDouble).toLong
-
-  def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
 /** The full sorted min-set, not just its k-th element — the MERGEABLE
   * form of the sketch. Two min-sets support the whole distinct-set
   * algebra without revisiting the data: union = k smallest of the

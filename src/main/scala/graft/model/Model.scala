@@ -142,10 +142,6 @@ final case class DangerousMigrations(versions: Seq[String]) extends EngineError(
     "re-run with force=true to override")
 final case class SqlParseError(detail: String) extends EngineError(
   s"SQL parse error: $detail")
-final case class DangerousWrite(path: String, protectedRoot: String)
-    extends EngineError(
-  s"overwrite of $path blocked: under protected root $protectedRoot; " +
-    s"set spark.graft.force=true to override")
 
 /** Engine configuration (reference: `internal/config/config.go:21-28`). */
 final case class EngineConfig(

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DateType
   * base table is redirected to the PRECOMPUTED rollup parquet, turning
   * a full fact scan + shuffle into a metadata-scale MV read. The QUERY
   * is unchanged; a session flag plus a registration decide the plan
-  * (the ApproxDistinctRewrite / WindowTopKRewrite contract).
+  * (the [[WindowTopKRewrite]] contract).
   *
   * Registration (all three required):
   *   - `spark.graft.mvRewrite` = "true"

@@ -13,9 +13,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *     Window([rn = row_number() over (partition by K order by O)], …)))
   *
   * into the custom [[TopKPerKey.TopKPerKeyNode]] — the BlinkDB-style
-  * contract the other rewrite rules follow (ApproxDistinctRewrite,
-  * ApproxPercentileRewrite): the QUERY is unchanged, a session flag
-  * decides the plan. Physical effect: Spark's own InferWindowGroupLimit
+  * contract [[MvRewrite]] follows too: the QUERY is unchanged, a
+  * session flag decides the plan. Physical effect: Spark's own InferWindowGroupLimit
   * (3.5+) already bounds rows per group, but its partial
   * WindowGroupLimitExec still LOCALLY SORTS every map partition and the
   * final side re-sorts after the exchange; the TopKPerKeyExec pair

@@ -164,6 +164,14 @@ object Catalog {
     } else df.localCheckpoint()
   }
 
+  /** Re-alias every column to itself, minting fresh exprIds: the
+    * inputs of a union (or self-join) that descend from one frame
+    * share attribute ids, and Union's constraint rewrite chokes on ids
+    * shared across children.
+    */
+  private[queries] def fresh(df: DataFrame): DataFrame =
+    df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
+
   /** Scratch path for a query's stored index or written table:
     * `SPARK_GRAFT_INDEX_DIR` (default `java.io.tmpdir/graft-index`), then
     * `<tag>-<sf dir name>-<applicationId>`. Keyed by application id:

@@ -93,6 +93,18 @@ object EventOps {
           .otherwise(col("r.n_chars")).as("rejected_chars"))
   }
 
+  /** Morton (Z-order) index of two non-negative coordinates: bit i of
+    * `x` lands at bit 2i and bit i of `y` at bit 2i+1, over the low
+    * `bits` bits (e11/e14/e34/e37). Row-local integer bit math the
+    * oracle re-derives bit for bit.
+    */
+  private def interleave(x: Column, y: Column, bits: Int): Column = {
+    def spread(c: Column, offset: Int): Column = (0 until bits).map { i =>
+      shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), 2 * i + offset)
+    }.reduce(_ bitwiseOR _)
+    spread(x, 0).bitwiseOR(spread(y, 1))
+  }
+
   def queries: Seq[(String, Q)] = Seq(
 
     // ------------------------------------------------------------------
@@ -411,16 +423,11 @@ object EventOps {
     // ------------------------------------------------------------------
     "e11_zorder_layout" -> Q(
       (s, d) => {
-        def interleave(c: Column, offset: Int): Column =
-          (0 until 16).map { i =>
-            shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), 2 * i + offset)
-          }.reduce(_ bitwiseOR _)
         val ev = t(s, d, "events")
           .select(pmod(col("user_id"), lit(65536L)).as("ux"),
             pmod(expr("unix_seconds(ts) div 60"), lit(65536L)).as("my"))
         ev.select(col("ux"), col("my"),
-            interleave(col("ux"), 0).bitwiseOR(interleave(col("my"), 1))
-              .as("z"))
+            interleave(col("ux"), col("my"), 16).as("z"))
           .groupBy(shiftright(col("z"), 22).as("z_bucket"))
           .agg(count(lit(1)).as("n_events"),
             min(col("ux")).as("min_user"), max(col("ux")).as("max_user"),
@@ -759,10 +766,6 @@ object EventOps {
         // of hour. Zone = z >> 6: an 8×8 tile in (ux, my) space —
         // the contiguous z-range a Z-ordered OPTIMIZE would write as
         // one file. Arrival files are 2048-row ingestion blocks.
-        def interleave(c: Column, offset: Int): Column =
-          (0 until 6).map { i =>
-            shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), 2 * i + offset)
-          }.reduce(_ bitwiseOR _)
         val uxLo = 8L; val uxHi = 23L
         val myLo = 16L; val myHi = 47L
         val ev = t(s, d, "events")
@@ -770,8 +773,7 @@ object EventOps {
             pmod(col("user_id"), lit(64L)).as("ux"),
             pmod(expr("unix_seconds(ts) div 60"), lit(60L)).as("my"))
           .select(col("event_id"), col("ux"), col("my"),
-            interleave(col("ux"), 0).bitwiseOR(interleave(col("my"), 1))
-              .as("z"))
+            interleave(col("ux"), col("my"), 6).as("z"))
           // both layouts' zone maps consume this projection — compute
           // the interleave once (d08/x21 multi-consumer lesson)
           .localCheckpoint()
@@ -1241,8 +1243,8 @@ object EventOps {
     // TOTAL order — an unpartitioned window is a single-partition sort
     // of the whole users table, the exact shape the plan audit exists
     // to catch. Instead the three quartile BOUNDARIES are one 9-value
-    // aggregate row (exact percentile; ApproxPercentileRewrite is the
-    // installed-at-scale swap, q77's caveat) broadcast back, and each
+    // aggregate row (exact percentile; q75's bounded census is the
+    // scale path, q77's caveat) broadcast back, and each
     // user buckets ROW-LOCALLY by comparison — map-side, no global
     // sort, and the bucket rule (1 + strict-inequality indicators) is
     // deterministic in both engines on exact inputs. Corpus-scale
@@ -2203,10 +2205,6 @@ object EventOps {
     // ------------------------------------------------------------------
     "e34_zorder_optimize" -> Q(
       (s, d) => {
-        def interleave(c: Column, offset: Int): Column =
-          (0 until 6).map { i =>
-            shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), 2 * i + offset)
-          }.reduce(_ bitwiseOR _)
         val uxLo = 8L; val uxHi = 23L
         val myLo = 16L; val myHi = 47L
         val ev = t(s, d, "events")
@@ -2214,8 +2212,7 @@ object EventOps {
             pmod(col("user_id"), lit(64L)).as("ux"),
             pmod(expr("unix_seconds(ts) div 60"), lit(60L)).as("my"))
           .select(col("event_id"), col("ux"), col("my"),
-            interleave(col("ux"), 0).bitwiseOR(interleave(col("my"), 1))
-              .as("z"))
+            interleave(col("ux"), col("my"), 6).as("z"))
         val base = indexPath(s, d, "zorder-optimize")
         ev.withColumn("f", expr("event_id div 2048"))
           .write.mode("overwrite").partitionBy("f")
@@ -2450,11 +2447,6 @@ object EventOps {
         val ev = t(s, d, "events")
           .select(pmod(col("user_id"), lit(256L)).as("ux"),
             pmod(expr("unix_seconds(ts) div 60"), lit(256L)).as("my"))
-        // Morton: interleave 8 bits of each dim
-        def interleave(c: Column, offset: Int): Column =
-          (0 until bits).map { i =>
-            shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), 2 * i + offset)
-          }.reduce(_ bitwiseOR _)
         // Hilbert: top-down flip+swap fold (s = 128, 64, ..., 1);
         // rx/ry from the CURRENT level's coords, d += s²·((3rx)⊻ry),
         // then rotate the frame for the next level
@@ -2483,8 +2475,7 @@ object EventOps {
         // explode over the once-aliased input — both layouts flow
         // through ONE (layout, bucket) aggregation
         val both = h.select(col("ux"), col("my"), col("hd").as("hidx"),
-          interleave(col("ux"), 0).bitwiseOR(interleave(col("my"), 1))
-            .as("zidx"))
+          interleave(col("ux"), col("my"), bits).as("zidx"))
         both
           .select(col("ux"), col("my"), explode(array(
             struct(lit("hilbert").as("layout"), col("hidx").as("idx")),

@@ -15,20 +15,6 @@ import Catalog._
   */
 object GraphOps {
 
-  /** Materialize a multi-consumer graph frame (edge lists, per-round
-    * peel survivors). Default is `localCheckpoint` — eager, lineage-
-    * cutting, deterministic across consumers. Setting
-    * `spark.graft.graph.materialize=disk` (conf, or the
-    * SPARK_GRAFT_GRAPH_MAT env var for Bench/QProf sessions) swaps in
-    * `persist(DISK_ONLY)` + an eager count — the posture a 1000-executor
-    * run wants when the edge list outgrows executor memory: blocks
-    * stream from local disk instead of evicting the shuffle working
-    * set. Equivalence of the two modes is asserted in QueriesSpec
-    * (identical g02 values), so the dial is safe to turn per-deploy.
-    */
-  private def materialize(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = Catalog.mat(df)
-
   /** THE co-purchase edge builder, shared by all four graph queries
     * (one definition so an edge-semantics fix cannot drift across
     * g01-g04). Nodes are parts; two parts are adjacent iff some order
@@ -131,9 +117,9 @@ object GraphOps {
         .agg(max_by(col("lbl"),
           struct(col("c"), (-col("lbl")).as("nl"))).as("lbl"))
         .select(col("src").as("id"), col("lbl"))
-      if (i % cadence == 0 && i < rounds) labels = labels.pipe(materialize)
+      if (i % cadence == 0 && i < rounds) labels = labels.pipe(mat)
     }
-    val out = labels.pipe(materialize)
+    val out = labels.pipe(mat)
     edges.unpersist()
     out
   }
@@ -152,7 +138,7 @@ object GraphOps {
     * g11's peel re-runs it per round on the surviving edges.
     */
   private[graft] def orientedTrianglesOf(canon0: DataFrame): DataFrame = {
-    val canon = canon0.pipe(materialize)
+    val canon = canon0.pipe(mat)
     val deg = canon.select(col("a").as("id"))
       .union(canon.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -176,7 +162,7 @@ object GraphOps {
         when(lowerA, col("b")).otherwise(col("a")).as("dst"),
         when(lowerA, col("db")).otherwise(col("da")).as("ddst"))
       .repartition(nPart, col("src"))
-      .pipe(materialize)
+      .pipe(mat)
     val w1 = oriented.select(col("src"), col("dst").as("v"),
       col("ddst").as("dv"))
     val w2 = oriented.select(col("src"), col("dst").as("w"),
@@ -404,7 +390,7 @@ object GraphOps {
       (s, d) => {
         val k = 80
         val canon = coPurchaseEdges(s, d, canonical = true)
-          .pipe(materialize)
+          .pipe(mat)
         def degOf(e: org.apache.spark.sql.DataFrame) =
           e.select(col("a").as("id"))
             .union(e.select(col("b").as("id")))
@@ -414,10 +400,10 @@ object GraphOps {
           e.join(keep.select(col("id").as("a")), "a")
             .join(keep.select(col("id").as("b")), "b")
             .select(col("a"), col("b"))
-            .pipe(materialize)
+            .pipe(mat)
         }
         val core = peel(peel(peel(canon)))
-        val degF = materialize(degOf(core))
+        val degF = mat(degOf(core))
         val below = degF
           .agg(count(when(col("deg") < k, 1)).as("n_below_k"))
         degF.orderBy(col("deg").desc, col("id")).limit(20)
@@ -495,7 +481,7 @@ object GraphOps {
     "g04_label_prop" -> Q(
       (s, d) => {
         val edges = coPurchaseEdges(s, d)
-          .pipe(materialize)
+          .pipe(mat)
         labelProp(edges, 3).groupBy(col("lbl"))
           .agg(count(lit(1)).as("n_members"),
             min(col("id")).as("min_member"))
@@ -561,7 +547,7 @@ object GraphOps {
     "g05_link_predict" -> Q(
       (s, d) => {
         val edges = coPurchaseEdges(s, d, canonical = true)
-          .pipe(materialize)
+          .pipe(mat)
         val adj = edges.select(col("a").as("u"), col("b").as("v"))
           .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
         val centers = adj.groupBy(col("u"))
@@ -626,7 +612,7 @@ object GraphOps {
     // ------------------------------------------------------------------
     "g06_personalized_pr" -> Q(
       (s, d) => {
-        val edges = coPurchaseEdges(s, d).pipe(materialize)
+        val edges = coPurchaseEdges(s, d).pipe(mat)
         val seed = edges.agg(min(col("src"))).head().getLong(0)
         graft.operators.PageRank.runPersonalized(edges, seed,
             iterations = 3)
@@ -710,7 +696,7 @@ object GraphOps {
           .select(col("l_orderkey"), col("l_partkey"))
           .groupBy(col("l_orderkey"))
           .agg(collect_set(col("l_partkey")).as("ps"))
-          .pipe(materialize)
+          .pipe(mat)
         val itemCnt = orderParts.select(explode(col("ps")).as("p"))
           .groupBy(col("p")).agg(count(lit(1)).as("n_item"))
         val pairCnt = orderParts
@@ -812,7 +798,7 @@ object GraphOps {
     // ------------------------------------------------------------------
     "g09_modularity" -> Q(
       (s, d) => {
-        val edges = coPurchaseEdges(s, d).pipe(materialize)
+        val edges = coPurchaseEdges(s, d).pipe(mat)
         val labels = labelProp(edges, 3)
         val canon = edges.filter(col("src") < col("dst"))
         val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -981,7 +967,7 @@ object GraphOps {
       (s, d) => {
         val kk = 10
         var cur = coPurchaseEdges(s, d, canonical = true)
-          .pipe(materialize)
+          .pipe(mat)
         val traj = scala.collection.mutable.ArrayBuffer.empty[
           (Int, Long, Long)]
         for (r <- 1 to 3) {
@@ -1000,7 +986,7 @@ object GraphOps {
             support.filter(col("sup") >= kk - 2)
               .select(col("a"), col("b")),
             Seq("a", "b"), "left_semi")
-            .pipe(materialize)
+            .pipe(mat)
           traj += ((r, cur.count(), nxt.count()))
           cur = nxt
         }
@@ -1136,11 +1122,11 @@ object GraphOps {
     "g12_bfs_hops" -> Q(
       (s, d) => {
         val hops = 6
-        val edges = materialize(
+        val edges = mat(
           weightedEdges(s, d).select(col("src"), col("dst")))
         val nodes = edges.select(col("src").as("id")).distinct()
         val seeds = nodes.orderBy(col("id")).limit(10)
-        val dist0 = materialize(
+        val dist0 = mat(
           seeds.select(col("id"), lit(0).as("hop")))
         // Round 17 (guide §1.2 — cut per-round job latency): the six
         // per-hop EAGER materializations were six jobs of pure
@@ -1166,13 +1152,9 @@ object GraphOps {
             .join(dist, Seq("id"), "left_anti")
             .select(col("id"), lit(h).as("hop"))
           val next = if (closeWindow) next0 else next0.persist()
-          // fresh exprIds on the union's derived branch (the
-          // self-derived-frame Union lesson)
-          dist = dist.select(col("id"), col("hop"))
-            .unionAll(next.select(col("id").as("id"),
-              col("hop").as("hop")))
+          dist = dist.select(col("id"), col("hop")).unionAll(fresh(next))
           if (closeWindow) {
-            dist = materialize(dist)
+            dist = mat(dist)
             windowCache.foreach(_.unpersist())
             windowCache = None
             frontier = dist.filter(col("hop") === h).select(col("id"))
@@ -1242,19 +1224,17 @@ object GraphOps {
     "g13_sssp_census" -> Q(
       (s, d) => {
         val rounds = 4
-        val edges = materialize(weightedEdges(s, d)
+        val edges = mat(weightedEdges(s, d)
           .select(col("src"), col("dst"), expr("1000 div w").as("cost")))
         val nodes = edges.select(col("src").as("id")).distinct()
         val seeds = nodes.orderBy(col("id")).limit(10)
-        def realias(df: DataFrame) = df.select(
-          col("id").as("id"), col("d").as("d"))
-        var dist = materialize(
+        var dist = mat(
           seeds.select(col("id"), lit(0L).as("d")))
         for (_ <- 1 to rounds) {
           val relaxed = dist
             .join(edges, dist("id") === edges("src"))
             .select(col("dst").as("id"), (dist("d") + col("cost")).as("d"))
-          dist = materialize(realias(dist).unionAll(realias(relaxed))
+          dist = mat(fresh(dist).unionAll(fresh(relaxed))
             .groupBy(col("id")).agg(min(col("d")).as("d")))
         }
         val census = dist.groupBy(col("d"))
@@ -1263,9 +1243,7 @@ object GraphOps {
           .join(dist.select(col("id")), Seq("id"), "left_anti")
           .agg(lit(-1L).as("d"), count(lit(1)).as("n_nodes"),
             min(col("id")).as("min_id"))
-        def realias3(df: DataFrame) = df.select(col("d").as("d"),
-          col("n_nodes").as("n_nodes"), col("min_id").as("min_id"))
-        realias3(census).unionAll(realias3(unreached))
+        fresh(census).unionAll(fresh(unreached))
           .orderBy(col("d"))
       },
       Some("""WITH li AS MATERIALIZED (
@@ -1323,15 +1301,13 @@ object GraphOps {
     "g14_harmonic_centrality" -> Q(
       (s, d) => {
         val rounds = 4
-        val edges = materialize(
+        val edges = mat(
           weightedEdges(s, d).select(col("src"), col("dst")))
         val deg = edges.groupBy(col("src"))
           .agg(count(lit(1)).as("deg"))
         val hubs = deg.orderBy(col("deg").desc, col("src")).limit(5)
           .select(col("src").as("hub"))
-        def realias(df: DataFrame) = df.select(col("hub").as("hub"),
-          col("id").as("id"), col("d").as("d"))
-        var dist = materialize(hubs.select(col("hub"),
+        var dist = mat(hubs.select(col("hub"),
           col("hub").as("id"), lit(0).as("d")))
         var frontier = dist.select(col("hub"), col("id"))
         for (h <- 1 to rounds) {
@@ -1341,7 +1317,7 @@ object GraphOps {
             .join(dist.select(col("hub"), col("id")),
               Seq("hub", "id"), "left_anti")
             .select(col("hub"), col("id"), lit(h).as("d"))
-          dist = materialize(realias(dist).unionAll(realias(next)))
+          dist = mat(fresh(dist).unionAll(fresh(next)))
           frontier = dist.filter(col("d") === h)
             .select(col("hub"), col("id"))
         }
@@ -1421,7 +1397,7 @@ object GraphOps {
         // metadata-scale driver scalar: the window cut
         val cut = li.agg(expr("max(l_partkey) * 3 div 10"))
           .collect()(0).getLong(0)
-        val edges = materialize(
+        val edges = mat(
           li.filter(col("l_partkey") < cut)
             .groupBy(col("l_orderkey"))
             .agg(collect_set(col("l_partkey")).as("ps"))
@@ -1433,7 +1409,7 @@ object GraphOps {
             .filter(col("w") >= 2)
             .select(col("src"), col("dst"))
             .repartition(col("dst")))
-        var labels = materialize(
+        var labels = mat(
           edges.select(col("src").as("id")).distinct()
             .withColumn("label", col("id"))
             .repartition(col("id")))
@@ -1447,7 +1423,7 @@ object GraphOps {
           val nbr = edges.join(labels, edges("dst") === labels("id"))
             .groupBy(edges("src").as("nid"))
             .agg(min(col("label")).as("nl"))
-          val updated = materialize(
+          val updated = mat(
             labels.as("l")
               .join(nbr, col("l.id") === col("nid"), "left")
               .select(col("l.id").as("id"),
@@ -1543,7 +1519,7 @@ object GraphOps {
       (s, d) => {
         val kk = 10
         var cur = coPurchaseEdges(s, d, canonical = true)
-          .pipe(materialize)
+          .pipe(mat)
         var before = cur.count()
         val census = scala.collection.mutable.ArrayBuffer.empty[
           (Int, Long, Long)]
@@ -1567,7 +1543,7 @@ object GraphOps {
             support.filter(col("sup") >= kk - 2)
               .select(col("a"), col("b")),
             Seq("a", "b"), "left_semi")
-            .pipe(materialize)
+            .pipe(mat)
           val after = nxt.count()
           census += ((r, before, after))
           converged = after == before
@@ -1809,14 +1785,14 @@ object GraphOps {
         val k = 16
         val hops = 3
         val p = 2147483647L
-        val edges = materialize(
+        val edges = mat(
           weightedEdges(s, d).select(col("src"), col("dst")))
         val nodes = edges.select(col("src").as("id")).distinct()
         // hashes live in [1, P-1]: 1 + (h60 mod (P-1)) — a raw
         // h60 mod P could be 0, and a zero kth-min would make the
         // estimator's integer div NULL in Spark (non-ANSI) but ERROR
         // in DuckDB, a latent engine divergence
-        var sk = materialize(nodes.select(col("id"),
+        var sk = mat(nodes.select(col("id"),
           array(lit(1L) + pmod(graft.functions.PortableHash.h60col(
             concat(lit("nf_"), col("id"))), lit(p - 1))).as("sk")))
         def census(t: Int, skT: DataFrame): DataFrame = skT
@@ -1831,7 +1807,7 @@ object GraphOps {
         for (t <- 1 to hops) {
           val neighbor = edges.join(sk, edges("dst") === sk("id"))
             .select(edges("src").as("id"), col("sk"))
-          sk = materialize(neighbor.unionAll(sk)
+          sk = mat(neighbor.unionAll(sk)
             .select(col("id"), explode(col("sk")).as("h"))
             .groupBy(col("id"))
             .agg(slice(array_sort(collect_set(col("h"))), 1, k)
@@ -1904,7 +1880,7 @@ object GraphOps {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val M = 8
-        val edges = materialize(
+        val edges = mat(
           weightedEdges(s, d).select(col("src"), col("dst"), col("w")))
         val capped = edges
           .withColumn("rk", row_number().over(Window

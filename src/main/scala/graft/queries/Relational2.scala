@@ -1393,11 +1393,10 @@ object Relational2 {
         ORDER BY priority""")),
 
     // ------------------------------------------------------------------
-    // Distinct-value-census quantiles — the oracle-checked exact twin
-    // of [[graft.plans.ApproxPercentileRewrite]]'s sketch (q72's role,
-    // for the rewrite rule): per ship-year, quartile estimates from
-    // the bounded KmvValueCensusRaw aggregator (the k = 128 distinct
-    // values with smallest h60 hashes, each with its EXACT row count)
+    // Distinct-value-census quantiles: per ship-year, quartile
+    // estimates from the bounded KmvValueCensusRaw aggregator (the
+    // k = 128 distinct values with smallest h60 hashes, each with its
+    // EXACT row count)
     // against the exact interpolated percentile from the full value
     // census. The estimator — Spark-Percentile-style interpolation at
     // position pct·(ns−1) over the WEIGHTED sample — runs in DataFrame
@@ -1590,10 +1589,9 @@ object Relational2 {
     // ANALYZE a 400-column 100 TB table without 400 scans. The h60
     // NDV hash reads exact CENTS (decimal(18,2)·100 as bigint), never
     // a double rendered to string (engine-dependent formatting). The
-    // exact percentile legs are the unbounded-buffer part;
-    // ApproxPercentileRewrite (plans/) is this query's documented
-    // scale path — installing the flag-gated rule swaps in the
-    // bounded census sketch, below-k groups stay exact.
+    // exact percentile legs are the unbounded-buffer part; q75's
+    // bounded census sketch (KmvValueCensusRaw) is the scale path,
+    // exact below k distinct values per group.
     // ------------------------------------------------------------------
     "q77_table_stats" -> Q(
       (s, d) => {

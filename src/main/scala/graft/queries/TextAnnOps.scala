@@ -220,6 +220,24 @@ object TextAnnOps {
         exactDist.as("exact_dist"))
   }
 
+  /** s02's LSH bucket of a vector: bit p is set when `v` lies on the
+    * positive side of hyperplane p, over `planes` deterministic
+    * hyperplanes in `dim` dimensions. Component (p, i) is
+    * (h60("p_i") mod 1000)/500 - 1, a driver-side literal matrix the
+    * oracle re-derives with md5(). s18's b_lsh6 leg shares it.
+    */
+  private def lshBucket(v: Column, planes: Int, dim: Int): Column = {
+    val m: Seq[Seq[Double]] = (0 until planes).map(p =>
+      (0 until dim).map(i =>
+        (graft.functions.PortableHash.h60(s"${p}_${i}") % 1000L)
+          .toDouble / 500.0 - 1.0))
+    val matC = typedLit(m)
+    aggregate(sequence(lit(0), lit(planes - 1)), lit(0L), (acc, p) => {
+      val proj = graft.functions.VectorDot.dot(v, element_at(matC, p + 1))
+      acc.bitwiseOR(when(proj > 0, shl(lit(1L), p)).otherwise(0L))
+    })
+  }
+
   def queries: Seq[(String, Q)] = Seq(
 
     // ------------------------------------------------------------------
@@ -261,20 +279,9 @@ object TextAnnOps {
     // ------------------------------------------------------------------
     "s02_ann_lsh" -> Q(
       (s, d) => {
-        val planes = 6
         val dim = emb(s, d).select(size(col("embedding"))).head.getInt(0)
-        val mat: Seq[Seq[Double]] = (0 until planes).map(p =>
-          (0 until dim).map(i =>
-            (graft.functions.PortableHash.h60(s"${p}_${i}") % 1000L)
-              .toDouble / 500.0 - 1.0))
-        val matC = typedLit(mat)
-        def bucket(v: Column): Column =
-          aggregate(sequence(lit(0), lit(planes - 1)), lit(0L), (acc, p) => {
-            val proj = graft.functions.VectorDot.dot(v,
-              element_at(matC, p + 1))
-            acc.bitwiseOR(when(proj > 0, shl(lit(1L), p)).otherwise(0L))
-          })
-        val base = emb(s, d).withColumn("bkt", bucket(col("embedding")))
+        val base = emb(s, d)
+          .withColumn("bkt", lshBucket(col("embedding"), 6, dim))
         val query = base.filter(col("vec_id") === 0)
           .select(col("bkt").as("qbkt"), col("embedding").as("qe"))
         base.join(broadcast(query), col("bkt") === col("qbkt"))
@@ -1956,23 +1963,9 @@ object TextAnnOps {
         // a_exact
         val nAll = base.filter(col("vec_id") =!= 0)
           .agg(count(lit(1)).as("n_candidates"))
-        // b_lsh6 — s02's bucket expression verbatim
-        val planes = 6
+        // b_lsh6 — s02's bucket expression
         val dim = base.select(size(col("embedding"))).head.getInt(0)
-        val mat: Seq[Seq[Double]] = (0 until planes).map(p =>
-          (0 until dim).map(i =>
-            (graft.functions.PortableHash.h60(s"${p}_${i}") % 1000L)
-              .toDouble / 500.0 - 1.0))
-        val matC = typedLit(mat)
-        def bucket(v: Column): Column =
-          aggregate(sequence(lit(0), lit(planes - 1)), lit(0L),
-            (acc, p) => {
-              val proj = graft.functions.VectorDot.dot(v,
-                element_at(matC, p + 1))
-              acc.bitwiseOR(when(proj > 0, shl(lit(1L), p))
-                .otherwise(0L))
-            })
-        val bkts = base.withColumn("bkt", bucket(col("embedding")))
+        val bkts = base.withColumn("bkt", lshBucket(col("embedding"), 6, dim))
         val qbkt = bkts.filter(col("vec_id") === 0)
           .select(col("bkt").as("qbkt"))
         val lshCand = bkts.join(broadcast(qbkt),
@@ -2570,9 +2563,7 @@ object TextAnnOps {
           .select(col("qid"), col("qdoc"), col("term"),
             lit(0.5).as("w"))
         // fresh exprIds on both union inputs (both derive from the
-        // same tokenized base — the Union exprId workaround)
-        def fresh(df: DataFrame): DataFrame =
-          df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
+        // same tokenized base)
         val q2 = fresh(p.qterms.withColumn("w", lit(1.0))
             .select(col("qid"), col("qdoc"), col("term"), col("w")))
           .union(fresh(expTerms))
@@ -2709,8 +2700,6 @@ object TextAnnOps {
     // ------------------------------------------------------------------
     "s22_adc_refine" -> Q(
       (s, d) => {
-        def fresh(df: DataFrame): DataFrame =
-          df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
         val sc = mat(pqAdcScored(s, d))
         val truth10 = fresh(sc.orderBy(col("exact_dist"), col("vec_id"))
           .limit(10).select(col("vec_id")))

@@ -5742,13 +5742,10 @@ object TextCurationOps {
           (pmod(h(concat(lit("locw_"), col("doc_id").cast("string"),
             lit("_"), col("p").cast("string"))), lit(5L)) + 1L)
             .cast("int")).as("word"))
-    // fresh aliases on both union inputs (shared-exprId workaround)
-    def fr(df: DataFrame) =
-      df.select(df.columns.map(c => col(c).as(c)): _*)
     val loc =
       if (injectMarkers)
-        fr(base.select(col("doc_id"), col("lang"), col("word")))
-          .unionAll(fr(mk))
+        fresh(base.select(col("doc_id"), col("lang"), col("word")))
+          .unionAll(fresh(mk))
       else base.select(col("doc_id"), col("lang"), col("word"))
     // char trigrams of the '_'-padded word; the array expression
     // feeds explode directly (never explode an aliased expensive

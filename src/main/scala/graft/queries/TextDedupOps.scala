@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.VectorDot
 import org.apache.spark.sql.functions._
 import Catalog._
 import TextOps._
@@ -1033,15 +1034,14 @@ object TextDedupOps {
     // ------------------------------------------------------------------
     "d10_semantic_neardup" -> Q(
       (s, d) => {
-        def dot(x: Column, y: Column): Column =
-          graft.functions.VectorDot.dot(x, y)
         // norm hoisted to once-per-VECTOR (the oracle's own shape:
         // dot/nrm_a/nrm_b) — computing cosine(ea, eb) per pair would
         // re-derive both norms per PAIR, tripling the dominant
         // per-pair dot cost (measured 7.0 s → 3.6 s at sf0.1 in the
         // interpreted-HOF era; VectorDot keeps the same shape fused)
         val assigned = assignToCodebook(s, d)
-          .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+          .withColumn("nrm",
+            sqrt(VectorDot.dot(col("embedding"), col("embedding"))))
         val a = assigned.select(col("cent_id"), col("vec_id").as("vec_a"),
           col("embedding").as("ea"), col("nrm").as("nrm_a"))
         val b = assigned.select(col("cent_id"), col("vec_id").as("vec_b"),
@@ -1049,7 +1049,7 @@ object TextDedupOps {
         a.join(b, Seq("cent_id"))
           .filter(col("vec_a") < col("vec_b"))
           .withColumn("cos",
-            dot(col("ea"), col("eb")) / col("nrm_a") / col("nrm_b"))
+            VectorDot.dot(col("ea"), col("eb")) / col("nrm_a") / col("nrm_b"))
           .filter(col("cos") >= 0.4)
           .select(col("cent_id"), col("vec_a"), col("vec_b"), col("cos"))
           .orderBy(col("vec_a"), col("vec_b"))
@@ -1176,8 +1176,6 @@ object TextDedupOps {
     // ------------------------------------------------------------------
     "d12_semantic_scaled" -> Q(
       (s, d) => {
-        def dot(x: Column, y: Column): Column =
-          graft.functions.VectorDot.dot(x, y)
         val bandTables = 4
         val planes = 4
         val nVecs = emb(s, d).count() // metadata-scale scalar, like g01's N
@@ -1186,7 +1184,8 @@ object TextDedupOps {
         val dim = emb(s, d).select(size(col("embedding"))).head.getInt(0)
 
         val base = emb(s, d)
-          .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+          .withColumn("nrm",
+            sqrt(VectorDot.dot(col("embedding"), col("embedding"))))
         val fine = base.filter(col("vec_id") < k)
           .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
             col("nrm").as("cnrm"))
@@ -1201,7 +1200,7 @@ object TextDedupOps {
           .orderBy(col("fc_cos").desc, col("coarse_id"))
         val f2c = fine.crossJoin(coarse)
           .withColumn("fc_cos",
-            dot(col("ce"), col("cce")) / col("cnrm") / col("ccnrm"))
+            VectorDot.dot(col("ce"), col("cce")) / col("cnrm") / col("ccnrm"))
           .withColumn("rn", row_number().over(wf))
           .filter(col("rn") === 1)
           .select(col("coarse_id"), col("cent_id"), col("ce"), col("cnrm"))
@@ -1227,7 +1226,7 @@ object TextDedupOps {
             aggregate(col("coarse_arr"),
               struct(lit(-2.0).as("sim"), lit(-1L).as("id")),
               (acc, c) => {
-                val sim = dot(col("embedding"), c.getField("cce")) /
+                val sim = VectorDot.dot(col("embedding"), c.getField("cce")) /
                   col("nrm") / c.getField("ccnrm")
                 when(sim > acc.getField("sim"),
                   struct(sim.as("sim"), c.getField("coarse_id").as("id")))
@@ -1237,7 +1236,7 @@ object TextDedupOps {
             aggregate(element_at(col("cells"), col("coarse_pick")),
               struct(lit(-2.0).as("sim"), lit(-1L).as("id")),
               (acc, c) => {
-                val sim = dot(col("embedding"), c.getField("ce")) /
+                val sim = VectorDot.dot(col("embedding"), c.getField("ce")) /
                   col("nrm") / c.getField("cnrm")
                 when(sim > acc.getField("sim"),
                   struct(sim.as("sim"), c.getField("cent_id").as("id")))
@@ -1261,7 +1260,7 @@ object TextDedupOps {
                 val tmat = element_at(matC, bt + 1)
                 aggregate(sequence(lit(0), lit(planes - 1)), lit(0L),
                   (acc, p) => {
-                    val proj = graft.functions.VectorDot.dot(
+                    val proj = VectorDot.dot(
                       col("embedding"), element_at(tmat, p + 1))
                     acc.bitwiseOR(
                       when(proj > 0, shl(lit(1L), p)).otherwise(0L))
@@ -1284,7 +1283,7 @@ object TextDedupOps {
           .join(vecs.select(col("vec_id").as("vec_b"),
             col("embedding").as("eb"), col("nrm").as("nrm_b")), Seq("vec_b"))
           .withColumn("cos",
-            dot(col("ea"), col("eb")) / col("nrm_a") / col("nrm_b"))
+            VectorDot.dot(col("ea"), col("eb")) / col("nrm_a") / col("nrm_b"))
           .filter(col("cos") >= 0.4)
           .select(col("vec_a"), col("vec_b"), col("cos"))
           .orderBy(col("vec_a"), col("vec_b"))
@@ -1929,8 +1928,6 @@ object TextDedupOps {
     "d26_dedup_threshold_curve" -> Q(
       (s, d) => {
         import s.implicits._
-        def fresh(df: org.apache.spark.sql.DataFrame) =
-          df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
         val pairs = mat(postingJaccardPairs(s, d, minJaccard = 0.02))
         val tk = docs(s, d).select(col("doc_id"),
           size(words(col("text"))).cast("long").as("ntok"))
@@ -2034,8 +2031,6 @@ object TextDedupOps {
     // ------------------------------------------------------------------
     "d27_cluster_size_census" -> Q(
       (s, d) => {
-        def fresh(df: org.apache.spark.sql.DataFrame) =
-          df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
         val pairs = postingJaccardPairs(s, d)
           .select(col("doc_a"), col("doc_b"))
         val cc = mat(graft.operators.ConnectedComponents.components(pairs))

@@ -419,11 +419,7 @@ object TextOps {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("a"), col("b"), col("cos"))
-    // re-alias union inputs to mint fresh exprIds: both sides descend
-    // from the same checkpointed asg, and Union's constraint rewrite
-    // chokes on attribute ids shared across children
-    def fresh(df: DataFrame): DataFrame = df.select(
-      df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
+    // both union inputs descend from the same checkpointed asg
     val knn0 = topK(fresh(cellPairs).union(fresh(rndScored)))
       .persist()
     // Dong et al.'s LOCAL JOIN: the candidate pool keeps the random
@@ -516,8 +512,6 @@ object TextOps {
   private[graft] def graphBeamSearch(base: DataFrame, beamW: Int = 4,
       rounds: Int = 3): (Seq[(Int, DataFrame)], DataFrame) = {
     val g = nnDescentGraph(base, nCents = 8)
-    def fresh(df: DataFrame): DataFrame = df.select(
-      df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
     // undirected adjacency of the stored graph (both directions of
     // every knn1 edge), checkpointed once — rounds probe it by
     // broadcast-joining a ≤beamW-row frontier, never rescanning corpus

@@ -143,34 +143,6 @@ class FunctionsSpec extends SparkFunSuite {
     assert(fast.toSeq == slow.toSeq)
   }
 
-  test("custom expressions are SQL-callable after registration") {
-    graft.functions.GraftExtensions.register(spark)
-    import spark.implicits._
-    Seq((1L, "alpha beta gamma delta")).toDF("id", "text")
-      .createOrReplaceTempView("fn_docs")
-    val viaSql = spark.sql(
-      """SELECT shingle_minhash(split(text, ' '), 64, 3) AS sig,
-        |       simhash60(split(text, ' ')) AS sh,
-        |       winnow_fingerprint(text, 8, 16) AS fps,
-        |       vector_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS vd,
-        |       vector_cosine(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS vc
-        |FROM fn_docs""".stripMargin).head()
-    val viaApi = spark.table("fn_docs").select(
-      ShingleMinHash.shingleMinhash(split(col("text"), " ")).as("sig"),
-      graft.functions.SimHash60.simhash60(split(col("text"), " ")).as("sh"),
-      graft.functions.Winnow.winnowFingerprint(col("text"), 8, 16).as("fps"),
-      graft.functions.VectorDot.dot(
-        typedLit(Seq(1.0, 2.0)), typedLit(Seq(3.0, 4.0))).as("vd"),
-      graft.functions.VectorCosine.cosine(
-        typedLit(Seq(1.0, 2.0)), typedLit(Seq(3.0, 4.0))).as("vc"))
-      .head()
-    assert(viaSql.getSeq[Long](0) == viaApi.getSeq[Long](0))
-    assert(viaSql.getLong(1) == viaApi.getLong(1))
-    assert(viaSql.getSeq[Long](2) == viaApi.getSeq[Long](2))
-    assert(viaSql.getDouble(3) == viaApi.getDouble(3))
-    assert(viaSql.getDouble(4) == viaApi.getDouble(4))
-  }
-
   test("winnowing: shared long substrings guarantee shared fingerprints") {
     import spark.implicits._
     val common = "the quick brown fox jumps over the lazy dog again and again"

@@ -1,35 +1,13 @@
 package graft
 
-import graft.model.DangerousWrite
-import graft.plans.DangerousWriteGate
-import graft.queries.Catalog
-import java.nio.file.Files
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-/** The plan-level danger gate: Overwrite writes under a protected root
-  * are rejected at optimization time (no task ever launches), append
-  * writes and unprotected paths pass, and spark.graft.force bypasses —
-  * the Spark-plan analogue of the reference's apply danger gate.
+/** The plan-level extensions: the DSv2 sources (MemCatalog row-level
+  * operations, OPTIMIZE, aggregate and runtime-filter pushdown, the
+  * V2 function catalog, the GraftGen connector), the TopKPerKey
+  * physical operator, and the WindowTopK and MV rewrite rules.
   */
 class PlanGateSpec extends SparkFunSuite {
-
-  def withGate(body: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-protected").toString
-    DangerousWriteGate.install(spark)
-    spark.conf.set(DangerousWriteGate.ProtectedPathsKey, dir)
-    try body(dir)
-    finally {
-      DangerousWriteGate.uninstall(spark)
-      spark.conf.unset(DangerousWriteGate.ProtectedPathsKey)
-      spark.conf.unset(DangerousWriteGate.ForceKey)
-    }
-  }
-
-  def sampleDf = {
-    import spark.implicits._
-    Seq((1L, "a"), (2L, "b")).toDF("id", "name")
-  }
 
   test("row-level ops: MemDeltaCatalog plans delta-based WriteDelta, " +
       "MemCatalog plans group-based ReplaceData, and the two MERGE " +
@@ -266,172 +244,6 @@ class PlanGateSpec extends SparkFunSuite {
     // self-cosine ≈ 1 up to the sqrt·sqrt double rounding (x/√x/√x is
     // NOT exactly 1 in IEEE arithmetic)
     assert(df.collect().forall(r => math.abs(r.getDouble(1) - 1.0) < 1e-12))
-  }
-
-  test("overwrite under a protected root is blocked at plan time") {
-    withGate { dir =>
-      val e = intercept[DangerousWrite] {
-        sampleDf.write.mode(SaveMode.Overwrite).parquet(s"$dir/tracker")
-      }
-      assert(e.protectedRoot == dir)
-      // nothing was written
-      assert(!Files.exists(java.nio.file.Paths.get(s"$dir/tracker")))
-    }
-  }
-
-  test("append mode and unprotected paths pass the gate") {
-    withGate { dir =>
-      sampleDf.write.mode(SaveMode.Append).parquet(s"$dir/tracker")
-      assert(spark.read.parquet(s"$dir/tracker").count() == 2)
-      val other = Files.createTempDirectory("graft-unprotected").toString
-      sampleDf.write.mode(SaveMode.Overwrite).parquet(s"$other/out")
-      assert(spark.read.parquet(s"$other/out").count() == 2)
-    }
-  }
-
-  test("spark.graft.force=true bypasses the gate (the --force flag)") {
-    withGate { dir =>
-      spark.conf.set(DangerousWriteGate.ForceKey, "true")
-      sampleDf.write.mode(SaveMode.Overwrite).parquet(s"$dir/tracker")
-      assert(spark.read.parquet(s"$dir/tracker").count() == 2)
-    }
-  }
-
-  test("gate uninstall restores normal overwrite behavior") {
-    val dir = Files.createTempDirectory("graft-protected2").toString
-    DangerousWriteGate.install(spark)
-    spark.conf.set(DangerousWriteGate.ProtectedPathsKey, dir)
-    DangerousWriteGate.uninstall(spark)
-    try {
-      sampleDf.write.mode(SaveMode.Overwrite).parquet(s"$dir/t")
-      assert(spark.read.parquet(s"$dir/t").count() == 2)
-    } finally spark.conf.unset(DangerousWriteGate.ProtectedPathsKey)
-  }
-
-  def withApprox(k: Int)(body: => Unit): Unit = {
-    graft.plans.ApproxDistinctRewrite.install(spark)
-    spark.conf.set(graft.plans.ApproxDistinctRewrite.EnabledKey, "true")
-    spark.conf.set(graft.plans.ApproxDistinctRewrite.KKey, k.toString)
-    try body
-    finally {
-      graft.plans.ApproxDistinctRewrite.uninstall(spark)
-      spark.conf.unset(graft.plans.ApproxDistinctRewrite.EnabledKey)
-      spark.conf.unset(graft.plans.ApproxDistinctRewrite.KKey)
-    }
-  }
-
-  test("approx-distinct rewrite: same query, flag decides exactness, " +
-      "estimate is the deterministic KMV value") {
-    import org.apache.spark.sql.functions._
-    val li = Catalog.t(spark, sf0001, "lineitem")
-    val exact = li.agg(countDistinct(col("l_orderkey"))).head().getLong(0)
-    val k = 64
-    withApprox(k) {
-      val q = li.agg(countDistinct(col("l_orderkey")).as("n"))
-      // the physical plan must carry the sketch aggregate, not a
-      // distinct expand
-      assert(q.queryExecution.executedPlan.toString
-        .toLowerCase.contains("kmv_estimate"))
-      val est = q.head().getLong(0)
-      // deterministic oracle: fold the same h60 stream through the
-      // same aggregator
-      val agg = new graft.functions.KmvEstimate(k)
-      val expected = agg.finish(
-        li.select(graft.functions.PortableHash.h60col(
-            col("l_orderkey").cast("string")).as("h"))
-          .collect().map(_.getLong(0))
-          .foldLeft(agg.zero)(agg.reduce))
-      assert(est == expected, s"estimate $est != deterministic $expected")
-      assert(math.abs(est - exact).toDouble / exact < 3.0 / math.sqrt(k),
-        s"estimate $est too far from exact $exact")
-      // grouped distinct rewrites too, exact below k per group
-      val grouped = li.groupBy(col("l_linestatus"))
-        .agg(countDistinct(col("l_returnflag")).as("nf"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val groupedExact = li.groupBy(col("l_linestatus"))
-        .agg(collect_set(col("l_returnflag")).as("s"))
-        .collect().map(r => r.getString(0) -> r.getSeq[String](1).size).toMap
-      groupedExact.foreach { case (g, n) =>
-        assert(grouped(g) == n.toLong,
-          s"below-k distinct for group $g must be exact")
-      }
-    }
-    // flag off (uninstalled): identical query is exact again
-    val after = li.agg(countDistinct(col("l_orderkey"))).head().getLong(0)
-    assert(after == exact)
-  }
-
-  def withApproxPct(k: Int)(body: => Unit): Unit = {
-    graft.plans.ApproxPercentileRewrite.install(spark)
-    spark.conf.set(graft.plans.ApproxPercentileRewrite.EnabledKey, "true")
-    spark.conf.set(graft.plans.ApproxPercentileRewrite.KKey, k.toString)
-    try body
-    finally {
-      graft.plans.ApproxPercentileRewrite.uninstall(spark)
-      spark.conf.unset(graft.plans.ApproxPercentileRewrite.EnabledKey)
-      spark.conf.unset(graft.plans.ApproxPercentileRewrite.KKey)
-    }
-  }
-
-  test("approx-percentile rewrite: same query, flag decides, sketch in " +
-      "plan, below-k exact, deterministic estimate, uninstall restores") {
-    import org.apache.spark.sql.functions._
-    val li = Catalog.t(spark, sf0001, "lineitem")
-    val exact = li.agg(expr("percentile(l_extendedprice, 0.5d)").as("m"))
-      .head().getDouble(0)
-    val k = 64
-    withApproxPct(k) {
-      val q = li.agg(expr("percentile(l_extendedprice, 0.5d)").as("m"))
-      // the physical plan must carry the census sketch, not the
-      // unbounded exact percentile buffer
-      assert(q.queryExecution.executedPlan.toString
-        .toLowerCase.contains("kmv_quantile"))
-      val est = q.head().getDouble(0)
-      // deterministic oracle: fold the same (h60, value) stream
-      // through the same aggregator on the driver
-      val agg = new graft.functions.KmvQuantile(k, 0.5)
-      val expected = agg.finish(
-        li.select(graft.functions.PortableHash.h60col(
-              col("l_extendedprice").cast("string")).as("h"),
-            col("l_extendedprice").cast("double").as("v"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1)))
-          .foldLeft(agg.zero)(agg.reduce))
-      assert(est == expected.toDouble,
-        s"estimate $est != deterministic $expected")
-      // sane: within 15% of the exact median on this data
-      assert(math.abs(est - exact) / exact < 0.15,
-        s"estimate $est too far from exact $exact")
-      // below k distinct values per group the census is complete and
-      // the rewritten percentile is EXACT (l_linenumber has <= 7)
-      val g = li.groupBy(col("l_linestatus"))
-        .agg(expr("percentile(l_linenumber, 0.5d)").as("m"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val gOff = li.groupBy(col("l_linestatus"))
-        .agg(collect_list(col("l_linenumber")).as("xs"))
-        .collect().map { r =>
-          val xs = r.getSeq[Int](1).map(_.toDouble).sorted
-          val pos = 0.5 * (xs.size - 1)
-          val lo = math.floor(pos).toInt; val hi = math.ceil(pos).toInt
-          r.getString(0) -> (xs(lo) + (xs(hi) - xs(lo)) * (pos - lo))
-        }.toMap
-      gOff.foreach { case (grp, m) =>
-        assert(g(grp) == m, s"below-k percentile for group $grp must be exact")
-      }
-      // percentile_approx over a double column rewrites too...
-      val pa = li.agg(expr(
-        "percentile_approx(cast(l_extendedprice as double), 0.5d, 1000)"))
-      assert(pa.queryExecution.executedPlan.toString
-        .toLowerCase.contains("kmv_quantile"))
-      // ...but a non-double child keeps exact semantics (return type
-      // follows the child there, so the rewrite must not touch it)
-      val paInt = li.agg(expr("percentile_approx(l_linenumber, 0.5d, 1000)"))
-      assert(!paInt.queryExecution.executedPlan.toString
-        .toLowerCase.contains("kmv_quantile"))
-    }
-    // flag off (uninstalled): identical query is exact again
-    val after = li.agg(expr("percentile(l_extendedprice, 0.5d)").as("m"))
-      .head().getDouble(0)
-    assert(after == exact)
   }
 
   test("TopKPerKey custom physical operator: partial-below-exchange " +

@@ -6,17 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for suites (one per JVM; sbt forks once). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    // the harness's codegen confs, not the rest of `tuned`: its SHJ
+    // threshold would turn the sort-merge joins AqeSpec and CboSpec
+    // assert into shuffled-hash joins
+    val s = SessionDefaults.codegen(SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the harness's codegen cache size, not the rest of `tuned`: its
-      // SHJ threshold would turn the sort-merge joins AqeSpec and CboSpec
-      // assert into shuffled-hash joins
-      .config(SessionDefaults.CodegenCacheConf,
-        SessionDefaults.CodegenCacheEntries.toString)
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Quiesce before the context stops at JVM exit. Spark's context-stop

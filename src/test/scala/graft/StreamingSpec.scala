@@ -296,237 +296,6 @@ class StreamingSpec extends SparkFunSuite {
     assert(agg.count() == 5) // five event types
   }
 
-  test("exactly-once sink under a mid-stream crash: the batch whose " +
-      "side effect committed but whose offset didn't is re-delivered " +
-      "on restart and skipped by the batchId-keyed snapshot MERGE — " +
-      "final sink state ≡ batch, zero duplicates") {
-    val src = Files.createTempDirectory("graft-eo-src").toString
-    Catalog.t(spark, sf0001, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-      .repartition(4).write.mode("overwrite").parquet(src)
-    val sink = Files.createTempDirectory("graft-eo-sink").toString
-    val ckpt = Files.createTempDirectory("graft-eo-ckpt").toString
-    val delivered = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    @volatile var crashArmed = true
-    def start() = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            id: Long) =>
-          delivered.add(id)
-          graft.streaming.SnapshotMergeSink
-            .merge(sink, Seq("event_id"))(b.toDF(), id)
-          // crash AFTER the sink commit, BEFORE Spark commits the
-          // offset: the at-least-once window this sink must close
-          if (crashArmed && id == 1)
-            throw new RuntimeException("injected crash after sink commit")
-      }
-      .start()
-    val q1 = start()
-    val ex = intercept[
-        org.apache.spark.sql.streaming.StreamingQueryException] {
-      q1.awaitTermination()
-    }
-    assert(ex.getMessage.contains("injected crash") ||
-      Option(ex.getCause).exists(_.getMessage != null) &&
-        ex.getCause.getMessage.contains("injected crash"))
-    // the crashed batch's side effect IS committed (1 applied)
-    assert(graft.streaming.SnapshotMergeSink.appliedBatches(sink)
-      .contains(1L))
-    // restart from the same checkpoint, crash disarmed
-    crashArmed = false
-    val q2 = start()
-    q2.awaitTermination()
-    // batch 1 was genuinely re-delivered (at-least-once), and every
-    // planned batch applied exactly once
-    assert(delivered.toArray.count(_ == 1L) >= 2,
-      s"batch 1 not re-delivered: $delivered")
-    assert(graft.streaming.SnapshotMergeSink.appliedBatches(sink)
-      == Set(0L, 1L, 2L, 3L))
-    // final state ≡ the batch computation, no duplicates
-    val got = graft.streaming.SnapshotMergeSink.read(spark, sink)
-    assert(got.count() == got.select("event_id").distinct().count(),
-      "duplicate keys in the sink")
-    val want = spark.read.parquet(src)
-      .dropDuplicates("event_id").count()
-    assert(got.count() == want)
-    val missing = spark.read.parquet(src)
-      .select("event_id").distinct()
-      .join(got.select("event_id"), Seq("event_id"), "left_anti")
-      .count()
-    assert(missing == 0, s"$missing source keys missing from the sink")
-  }
-
-  test("exactly-once sink pointer stays O(1) over 120 batches: " +
-      "high-watermark compaction, out-of-order tail, single live " +
-      "snapshot dir after GC") {
-    import spark.implicits._
-    val sink = Files.createTempDirectory("graft-eo-bounded").toString
-    def oneRow(id: Long) =
-      Seq((id, s"v$id")).toDF("event_id", "payload")
-    // out-of-order prefix: 1 before 0 exercises the sparse tail...
-    graft.streaming.SnapshotMergeSink
-      .merge(sink, Seq("event_id"))(oneRow(1), 1L)
-    assert(graft.streaming.SnapshotMergeSink.appliedBatches(sink)
-      == Set(1L))
-    assert(!graft.streaming.SnapshotMergeSink.isApplied(sink, 0L))
-    // ...which collapses into the watermark once 0 lands
-    graft.streaming.SnapshotMergeSink
-      .merge(sink, Seq("event_id"))(oneRow(0), 0L)
-    for (id <- 2L until 120L)
-      graft.streaming.SnapshotMergeSink
-        .merge(sink, Seq("event_id"))(oneRow(id), id)
-    // re-delivery is still a no-op after compaction
-    graft.streaming.SnapshotMergeSink
-      .merge(sink, Seq("event_id"))(oneRow(7), 7L)
-    assert(graft.streaming.SnapshotMergeSink.appliedBatches(sink)
-      == (0L until 120L).toSet)
-    // bounded pointer: snapshot name + one watermark integer, never
-    // a 120-entry id list (the r12 form would exceed 400 bytes here)
-    val bytes = graft.streaming.SnapshotMergeSink.pointerBytes(sink)
-    assert(bytes < 100, s"pointer grew to $bytes bytes")
-    // GC: exactly one live snapshot directory remains
-    val snaps = new java.io.File(sink).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("snap_"))
-    assert(snaps.length == 1, s"superseded snapshots not GC'd: " +
-      snaps.map(_.getName).mkString(","))
-    val got = graft.streaming.SnapshotMergeSink.read(spark, sink)
-    assert(got.count() == 120)
-    assert(got.select("event_id").distinct().count() == 120)
-  }
-
-  test("bucketed exactly-once sink: a batch rewrites ONLY the key-hash " +
-      "buckets it touches — untouched buckets' manifest entries (and " +
-      "files) survive verbatim, re-delivery is a no-op, read ≡ union") {
-    import spark.implicits._
-    val sink = Files.createTempDirectory("graft-eo-bucketed").toString
-    val nb = 8
-    def m(df: org.apache.spark.sql.DataFrame, id: Long) =
-      graft.streaming.SnapshotMergeSink
-        .mergeBucketed(sink, Seq("event_id"), nb)(df, id)
-    // batch 0: 64 keys spanning every bucket
-    m((0L until 64L).map(i => (i, s"v$i")).toDF("event_id", "payload"), 0L)
-    val man0 = graft.streaming.SnapshotMergeSink.manifest(sink)
-    assert(man0.keySet == (0 until nb).toSet,
-      s"expected all $nb buckets populated: $man0")
-    def files(rel: String) = new java.io.File(s"$sink/$rel")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.lastModified())).toSet
-    val files0 = man0.map { case (k, rel) => k -> files(rel) }
-    // batch 1: ONE key → exactly one bucket rewritten
-    m(Seq((1000L, "new")).toDF("event_id", "payload"), 1L)
-    val man1 = graft.streaming.SnapshotMergeSink.manifest(sink)
-    val touched = man1.count { case (k, rel) => man0(k) != rel }
-    assert(touched == 1, s"expected 1 rewritten bucket:\n$man0\n$man1")
-    man1.filter { case (k, rel) => man0(k) == rel }.foreach {
-      case (k, rel) => assert(files(rel) == files0(k),
-        s"untouched bucket $k files changed")
-    }
-    // update on an EXISTING key: insert-if-absent keeps the first row
-    m(Seq((5L, "dup")).toDF("event_id", "payload"), 2L)
-    // re-delivery of batch 1 is a no-op (manifest byte-identical)
-    val manBefore = graft.streaming.SnapshotMergeSink.manifest(sink)
-    m(Seq((1000L, "again")).toDF("event_id", "payload"), 1L)
-    assert(graft.streaming.SnapshotMergeSink.manifest(sink) == manBefore)
-    assert(graft.streaming.SnapshotMergeSink.appliedBatches(sink)
-      == Set(0L, 1L, 2L))
-    val got = graft.streaming.SnapshotMergeSink.read(spark, sink)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got.size == 65)
-    assert(got(1000L) == "new" && got(5L) == "v5",
-      "first-delivery-wins violated")
-    // whole-snapshot merge on a bucketed base must refuse loudly
-    intercept[IllegalArgumentException] {
-      graft.streaming.SnapshotMergeSink.merge(sink, Seq("event_id"))(
-        Seq((1L, "x")).toDF("event_id", "payload"), 9L)
-    }
-  }
-
-  test("bucketed sink in upsert mode applies a CDC stream exactly " +
-      "once: last committed batch wins per key, re-delivery of an old " +
-      "batch cannot resurrect stale values") {
-    import spark.implicits._
-    val sink = Files.createTempDirectory("graft-eo-cdc").toString
-    def upd(b: Long) = (0L until 40L).filter(k => (k + b) % 3 == 0)
-      .map(k => (k, s"v${b}_$k")).toDF("event_id", "payload")
-    def m(df: org.apache.spark.sql.DataFrame, id: Long) =
-      graft.streaming.SnapshotMergeSink.mergeBucketed(
-        sink, Seq("event_id"), 4, upsert = true)(df, id)
-    for (b <- 0L until 5L) m(upd(b), b)
-    // at-least-once re-delivery of batch 1 — stale values must NOT win
-    m(upd(1L), 1L)
-    val got = graft.streaming.SnapshotMergeSink.read(spark, sink)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val want = (0L until 40L).map { k =>
-      val lastB = (0L until 5L).filter(b => (k + b) % 3 == 0).max
-      k -> s"v${lastB}_$k"
-    }.toMap
-    assert(got == want,
-      s"diff: ${(got.toSet diff want.toSet) ++ (want.toSet diff got.toSet)}")
-  }
-
-  test("per-file grouping inside buckets (filesPerBucket > 1): a batch " +
-      "rewrites only the file GROUPS its keys hash into — every other " +
-      "group, including the touched bucket's own siblings, keeps its " +
-      "files byte-identical (listing + sha256); re-delivery stays a " +
-      "no-op and the upsert contract holds at group granularity") {
-    import spark.implicits._
-    val sink = Files.createTempDirectory("graft-eo-grouped").toString
-    val nb = 4
-    val fpb = 8 // 32 manifest slots; slot mod nb = bucket
-    def m(df: org.apache.spark.sql.DataFrame, id: Long) =
-      graft.streaming.SnapshotMergeSink.mergeBucketed(
-        sink, Seq("event_id"), nb, upsert = true,
-        filesPerBucket = fpb)(df, id)
-    m((0L until 256L).map(i => (i, s"v$i")).toDF("event_id", "payload"), 0L)
-    val man0 = graft.streaming.SnapshotMergeSink.manifest(sink)
-    assert(man0.keySet == (0 until nb * fpb).toSet,
-      s"expected all ${nb * fpb} slots populated: ${man0.keySet}")
-    def sha(f: java.io.File): String = {
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-      java.util.Base64.getEncoder.encodeToString(
-        d.digest(Files.readAllBytes(f.toPath)))
-    }
-    def filesOf(rel: String) = new java.io.File(s"$sink/$rel")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, sha(f))).toSet
-    val c0 = man0.map { case (k, rel) => k -> filesOf(rel) }
-    // batch 1: ONE key → exactly one SLOT (file group) rewritten
-    m(Seq((77L, "new77")).toDF("event_id", "payload"), 1L)
-    val man1 = graft.streaming.SnapshotMergeSink.manifest(sink)
-    val rewritten = man1.filter { case (k, rel) => man0(k) != rel }.keySet
-    assert(rewritten.size == 1,
-      s"expected 1 rewritten file group:\n$man0\n$man1")
-    // every untouched slot's files are byte-identical — including the
-    // rewritten slot's sibling groups INSIDE the same bucket (the
-    // whole point of per-file grouping: pre-grouping, the entire
-    // bucket generation would have been rewritten)
-    val bucketOfRewritten = rewritten.head % nb
-    val siblings = man1.keySet.filter(k =>
-      k % nb == bucketOfRewritten && !rewritten.contains(k))
-    assert(siblings.nonEmpty)
-    man1.filter { case (k, _) => !rewritten.contains(k) }.foreach {
-      case (k, rel) => assert(filesOf(rel) == c0(k),
-        s"untouched file group $k changed (sibling-of-touched=" +
-          s"${siblings.contains(k)})")
-    }
-    // upsert semantics at group granularity + re-delivery no-op
-    val got = graft.streaming.SnapshotMergeSink.read(spark, sink)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got.size == 256 && got(77L) == "new77" && got(5L) == "v5")
-    val manBefore = graft.streaming.SnapshotMergeSink.manifest(sink)
-    m(Seq((77L, "stale")).toDF("event_id", "payload"), 1L)
-    assert(graft.streaming.SnapshotMergeSink.manifest(sink) == manBefore)
-    assert(graft.streaming.SnapshotMergeSink.read(spark, sink)
-      .filter(col("event_id") === 77L).collect()
-      .head.getString(1) == "new77")
-  }
-
   test("streaming CEP (e36's kappa twin): the four hand-compiled " +
       "automata equal java.util.regex on randomized sequences, and the " +
       "cross-batch GroupState counts equal the batch regexp_count " +
@@ -1023,60 +792,6 @@ class StreamingSpec extends SparkFunSuite {
     assert(est >= exact, "CMS estimate must never undercount")
     // multi-batch execution really happened
     assert(snaps.groupBy(_._1).values.exists(_.length > 1))
-  }
-
-  test("approximate dashboard end-to-end: the stream's KMV state and " +
-      "the ApproxDistinctRewrite'd batch query are the SAME sketch") {
-    // The composition the two pieces were built for: a dashboard serves
-    // live per-type distinct users from mapGroupsWithState KMV state
-    // and backfills/audits the same metric with a count(DISTINCT ...)
-    // that the optimizer rewrite turns into the KMV aggregate. Keying
-    // BOTH sides by the same 'kmvu_'-prefixed string makes the two
-    // paths fold the IDENTICAL h60 stream, so the numbers agree
-    // bit-for-bit — no seam between streaming and batch.
-    import spark.implicits._
-    val k = 16
-    val splitDir = Files.createTempDirectory("graft-events-dash").toString
-    spark.read.parquet(stagedDir).repartition(4)
-      .write.mode("overwrite").parquet(splitDir)
-    val streamEvents = spark.readStream
-      .schema(EventStreams.eventSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(splitDir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value")).as[UserEvent]
-    runToMemory(EventStreams.distinctUserSketch(streamEvents, k).toDF(),
-      "kmvdash", mode = "update")
-    val live = spark.table("kmvdash").collect()
-      .map(r => (r.getString(0), r.getSeq[Long](1).toArray))
-      .groupBy(_._1).map { case (tpe, snaps) =>
-        tpe -> snaps.map(_._2).minBy(a => (-a.length, a.sum))
-      }
-    graft.plans.ApproxDistinctRewrite.install(spark)
-    spark.conf.set(graft.plans.ApproxDistinctRewrite.EnabledKey, "true")
-    spark.conf.set(graft.plans.ApproxDistinctRewrite.KKey, k.toString)
-    try {
-      val q = spark.read.parquet(stagedDir)
-        .groupBy(col("event_type"))
-        .agg(countDistinct(
-          concat(lit("kmvu_"), col("user_id"))).as("distinct_users"))
-      assert(q.queryExecution.executedPlan.toString
-        .toLowerCase.contains("kmv_estimate"),
-        "batch side must run the rewritten sketch aggregate")
-      val backfill = q.collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val est = new graft.functions.KmvEstimate(k)
-      assert(live.keySet == backfill.keySet)
-      live.foreach { case (tpe, state) =>
-        assert(backfill(tpe) == est.finish(state),
-          s"dashboard seam for $tpe: stream state estimates " +
-            s"${est.finish(state)}, rewritten batch says ${backfill(tpe)}")
-      }
-    } finally {
-      graft.plans.ApproxDistinctRewrite.uninstall(spark)
-      spark.conf.unset(graft.plans.ApproxDistinctRewrite.EnabledKey)
-      spark.conf.unset(graft.plans.ApproxDistinctRewrite.KKey)
-    }
   }
 
   test("streaming rolling anomalies (e17's kappa twin): closed-hour " +
