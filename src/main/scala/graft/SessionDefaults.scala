@@ -23,14 +23,13 @@ object SessionDefaults {
     *    estimate-gated, so a partition that would not fit keeps the
     *    sort-merge plan; valid at any scale. Default 0 (off) upstream;
     *    64 MB per partition is modest for executors sized to
-    *    128 MB-1 GB shuffle partitions (guide §2.2). Override with
-    *    SPARK_GRAFT_SHJ_THRESHOLD.
+    *    128 MB-1 GB shuffle partitions (guide §2.2).
     *  - the [[codegen]] confs.
     */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     codegen(b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")))
+        "64m"))
 
   /** The codegen confs, shared by [[tuned]] and the test session:
     *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]].

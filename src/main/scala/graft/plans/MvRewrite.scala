@@ -8,24 +8,23 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.DateType
 
-/** Opt-in materialized-view rewrite — the lakehouse accelerator: a
-  * query that recomputes the canonical daily-count rollup over the
-  * base table is redirected to the PRECOMPUTED rollup parquet, turning
-  * a full fact scan + shuffle into a metadata-scale MV read. The QUERY
-  * is unchanged; a session flag plus a registration decide the plan
-  * (the [[WindowTopKRewrite]] contract).
+/** Materialized-view rewrite — the lakehouse accelerator: a query
+  * that recomputes the canonical daily-count rollup over the base
+  * table is redirected to the PRECOMPUTED rollup parquet, turning a
+  * full fact scan + shuffle into a metadata-scale MV read. The QUERY
+  * is unchanged; installing a registered rule decides the plan (the
+  * [[WindowTopKRewrite]] contract). Install it for one query with
+  * [[SessionRules.withRule]].
   *
-  * Registration (all three required):
-  *   - `spark.graft.mvRewrite` = "true"
-  *   - `spark.graft.mvRewrite.path` — the MV parquet, columns
-  *     (event_type, day, n)
-  *   - `spark.graft.mvRewrite.base` — a substring identifying the base
-  *     relation's path (the table the MV was built FROM)
-  *   - `spark.graft.mvRewrite.daySql` — the canonical day-bucket
-  *     expression's SQL, as optimized from the registrar's own MV
-  *     build (freshness-of-SEMANTICS guard: a query grouping by any
-  *     OTHER date expression over ts — shifted days, different
-  *     truncation — must NOT be served by this MV)
+  * Registration (all three required, each non-empty):
+  *   - `mvPath` — the MV parquet, columns (event_type, day, n)
+  *   - `baseTable` — a substring identifying the base relation's path
+  *     (the table the MV was built FROM)
+  *   - `daySql` — the canonical day-bucket expression's SQL, as
+  *     optimized from the registrar's own MV build (freshness-of-
+  *     SEMANTICS guard: a query grouping by any OTHER date expression
+  *     over ts — shifted days, different truncation — must NOT be
+  *     served by this MV)
   *
   * Scope guard — rewrites only when provably answer-preserving:
   * Aggregate grouped on exactly {the base's event_type column, a
@@ -35,15 +34,13 @@ import org.apache.spark.sql.types.DateType
   * the child is a Project directly over the registered base relation.
   * Output attributes keep the original exprIds, so parents (sorts,
   * projects) resolve untouched. Freshness is the registrar's
-  * assertion — the flag + path ARE the "MV is current" declaration,
-  * exactly as in engines with manual MV refresh.
+  * assertion — installing the rule IS the "MV is current"
+  * declaration, exactly as in engines with manual MV refresh.
   */
-object MvRewrite extends Rule[LogicalPlan] {
-
-  final val EnabledKey = "spark.graft.mvRewrite"
-  final val PathKey = "spark.graft.mvRewrite.path"
-  final val BaseKey = "spark.graft.mvRewrite.base"
-  final val DaySqlKey = "spark.graft.mvRewrite.daySql"
+final case class MvRewrite(mvPath: String, baseTable: String,
+    daySql: String) extends Rule[LogicalPlan] {
+  require(mvPath.nonEmpty && baseTable.nonEmpty && daySql.nonEmpty,
+    s"MvRewrite needs an MV path, a base table and a day expression: $this")
 
   private def isCountOne(e: Expression): Boolean = e match {
     case ae: AggregateExpression if !ae.isDistinct && ae.filter.isEmpty =>
@@ -54,16 +51,11 @@ object MvRewrite extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(EnabledKey, "false").toBoolean) return plan
-    val mvPath = conf.getConfString(PathKey, "")
-    val baseMarker = conf.getConfString(BaseKey, "")
-    val daySql = conf.getConfString(DaySqlKey, "")
-    if (mvPath.isEmpty || baseMarker.isEmpty || daySql.isEmpty) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case agg @ Aggregate(groupings, aggExprs,
           Project(projList, lr: LogicalRelation), _)
-          if groupings.size == 2 && relPath(lr).contains(baseMarker) =>
+          if groupings.size == 2 && relPath(lr).contains(baseTable) =>
         // inline grouping attributes through the child Project (the
         // optimizer pulls complex groupings into _groupingexpression
         // aliases there)
@@ -146,7 +138,6 @@ object MvRewrite extends Rule[LogicalPlan] {
             }
         }
     }
-  }
 
   private def relPath(lr: LogicalRelation): String = lr.relation match {
     case h: HadoopFsRelation => h.location.rootPaths.mkString(",")
@@ -157,14 +148,4 @@ object MvRewrite extends Rule[LogicalPlan] {
     try Some(SparkSession.active.read.parquet(path)
       .queryExecution.analyzed)
     catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Attach to a live session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-
-  def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == this)
 }

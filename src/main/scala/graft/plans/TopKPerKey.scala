@@ -153,23 +153,19 @@ object TopKPerKey {
   }
 
   /** Install the planner strategy (idempotent AND thread-safe).
-    * `experimental.extraStrategies` is session-global mutable state,
-    * and callers install from inside query lambdas that may run
-    * concurrently against one shared session — an unsynchronized
-    * check-then-append would race (double-install or drop a
-    * concurrent writer's strategy). All mutation goes through one
-    * session-independent lock; the strategy itself is stateless, so a
-    * lost-uninstall under contention is benign but a lost INSTALL is
-    * not, hence the lock covers both.
+    * Callers install from inside query lambdas that may run
+    * concurrently against one shared session, so both install and
+    * uninstall take [[SessionRules.lock]]; the strategy itself is
+    * stateless, so a lost-uninstall under contention is benign but a
+    * lost INSTALL is not.
     */
-  private val installLock = new Object
-  def install(spark: SparkSession): Unit = installLock.synchronized {
+  def install(spark: SparkSession): Unit = SessionRules.lock.synchronized {
     val cur = spark.experimental.extraStrategies
     if (!cur.contains(Strategy))
       spark.experimental.extraStrategies = cur :+ Strategy
   }
 
-  def uninstall(spark: SparkSession): Unit = installLock.synchronized {
+  def uninstall(spark: SparkSession): Unit = SessionRules.lock.synchronized {
     spark.experimental.extraStrategies =
       spark.experimental.extraStrategies.filterNot(_ == Strategy)
   }

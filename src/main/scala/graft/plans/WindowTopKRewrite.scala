@@ -1,20 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, RowNumber, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-/** Opt-in optimizer rule that rewrites the canonical top-k-per-group
+/** Optimizer rule that rewrites the canonical top-k-per-group
   * WINDOW formulation
   *
   *   Project(cols, Filter(rn <= k,
   *     Window([rn = row_number() over (partition by K order by O)], …)))
   *
   * into the custom [[TopKPerKey.TopKPerKeyNode]] — the BlinkDB-style
-  * contract [[MvRewrite]] follows too: the QUERY is unchanged, a
-  * session flag decides the plan. Physical effect: Spark's own InferWindowGroupLimit
+  * contract [[MvRewrite]] follows too: the QUERY is unchanged, and
+  * installing the rule decides the plan. Physical effect: Spark's own InferWindowGroupLimit
   * (3.5+) already bounds rows per group, but its partial
   * WindowGroupLimitExec still LOCALLY SORTS every map partition and the
   * final side re-sorts after the exchange; the TopKPerKeyExec pair
@@ -41,13 +40,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * treatment the built-in grouping operators receive (TopKPerKey.apply
   * precedent).
   *
-  * Configuration: `spark.graft.windowTopK` = "true" enables. The
-  * TopKPerKey STRATEGY must also be installed or the rewritten node is
-  * unplannable (install() wires both).
+  * Install it for one query with [[SessionRules.withRule]]. The
+  * [[TopKPerKey]] STRATEGY must also be installed
+  * ([[TopKPerKey.install]]) or the rewritten node is unplannable.
   */
 object WindowTopKRewrite extends Rule[LogicalPlan] {
-
-  final val EnabledKey = "spark.graft.windowTopK"
 
   /** Positive in-range literal only: a Long like -4294967294L must NOT
     * truncate to 2 via toInt, and a non-positive bound (always-false
@@ -79,8 +76,7 @@ object WindowTopKRewrite extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(EnabledKey, "false").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case proj @ Project(projectList, Filter(cond,
           Window(Seq(al @ Alias(WindowExpression(_: RowNumber, _), _)),
@@ -102,22 +98,4 @@ object WindowTopKRewrite extends Rule[LogicalPlan] {
           case _ => proj
         }
     }
-  }
-
-  /** Attach rule + the TopKPerKey strategy to a live session
-    * (idempotent).
-    */
-  def install(spark: SparkSession): Unit = {
-    TopKPerKey.install(spark)
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
-  /** Detach the rule (leaves the strategy installed — it is inert
-    * without TopKPerKeyNode instances).
-    */
-  def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == this)
 }

@@ -141,28 +141,13 @@ object Catalog {
   def sqlDavg(e: String): String =
     "cast(" + sqlDsum(e) + " / count(" + e + ") as double)"
 
-  /** Materialize a multi-consumer corpus-scale frame: localCheckpoint
-    * by default (eager, lineage-cutting, MEMORY_AND_DISK), or
-    * persist(DISK_ONLY) + eager count under
-    * `spark.graft.graph.materialize=disk` / SPARK_GRAFT_GRAPH_MAT=disk
-    * — the posture a 1000-executor run wants when the frame outgrows
-    * executor memory. One definition shared by the graph loops
-    * (GraphOps) and d14's corpus-scale banded frame (the r7 residual
-    * nit: the graph family had the dial, the dedup family's one
-    * corpus-scale checkpoint did not). Mode equivalence is a
-    * QueriesSpec assertion.
+  /** Materialize a multi-consumer corpus-scale frame: an eager,
+    * lineage-cutting localCheckpoint (blocks MEMORY_AND_DISK, so they
+    * spill under pressure). One definition shared by the graph loops
+    * (GraphOps), d14's corpus-scale banded frame and the queries whose
+    * optimizer rule must see the plan while it executes (q84, e35).
     */
-  private[queries] def mat(df: DataFrame): DataFrame = {
-    val mode = df.sparkSession.conf
-      .getOption("spark.graft.graph.materialize")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_MAT"))
-      .getOrElse("checkpoint")
-    if (mode == "disk") {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      p.count()
-      p
-    } else df.localCheckpoint()
-  }
+  private[queries] def mat(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** Re-alias every column to itself, minting fresh exprIds: the
     * inputs of a union (or self-join) that descend from one frame

@@ -2307,7 +2307,7 @@ object EventOps {
     // ------------------------------------------------------------------
     "e35_mv_rewrite" -> Q(
       (s, d) => {
-        import graft.plans.MvRewrite
+        import graft.plans.{MvRewrite, SessionRules}
         val mvPath = indexPath(s, d, "mv-daily")
         def rollup = t(s, d, "events")
           .groupBy(col("event_type"), to_date(col("ts")).as("day"))
@@ -2320,26 +2320,16 @@ object EventOps {
                   if a.child.dataType ==
                     org.apache.spark.sql.types.DateType => a.child.sql
             }
-        }.flatten.getOrElse("")
-        MvRewrite.install(s)
-        s.conf.set(MvRewrite.EnabledKey, "true")
-        s.conf.set(MvRewrite.PathKey, mvPath)
-        s.conf.set(MvRewrite.BaseKey, "events.parquet")
-        s.conf.set(MvRewrite.DaySqlKey, daySql)
-        try {
-          // the PLAIN query — optimization happens at EXECUTION, so
-          // materialize while the registration is live (q84's pattern)
+        }.flatten.getOrElse(throw new IllegalStateException(
+          "e35: no day-bucket expression in the rollup's optimized plan"))
+        // the PLAIN query — optimization happens at EXECUTION, so
+        // materialize while the rule is installed (q84's pattern)
+        SessionRules.withRule(s,
+            MvRewrite(mvPath, "events.parquet", daySql)) {
           mat(t(s, d, "events")
             .groupBy(col("event_type"), to_date(col("ts")).as("day"))
             .agg(count(lit(1)).as("n")))
-            .orderBy(col("event_type"), col("day"))
-        } finally {
-          s.conf.unset(MvRewrite.EnabledKey)
-          s.conf.unset(MvRewrite.PathKey)
-          s.conf.unset(MvRewrite.BaseKey)
-          s.conf.unset(MvRewrite.DaySqlKey)
-          MvRewrite.uninstall(s)
-        }
+        }.orderBy(col("event_type"), col("day"))
       },
       Some("""SELECT event_type,
           cast(cast(ts as timestamp) as date) AS day,

@@ -1996,33 +1996,32 @@ object Relational2 {
     // ------------------------------------------------------------------
     // The WindowTopKRewrite optimizer rule, end to end: the query is
     // the PLAIN window formulation (row_number ≤ 3, rank dropped) —
-    // exactly what a user writes — and the session flag reroutes it
+    // exactly what a user writes — and the installed rule reroutes it
     // through the custom TopKPerKeyExec heap pair (no WindowExec, no
     // sorts, ≤3 rows per key per input partition on the exchange; see
-    // plans/WindowTopKRewrite.scala for the scope guard). The eager
-    // materialization runs while the flag is set (a query's plan is
-    // optimized at EXECUTION, not construction), then the flag is
-    // restored so the rewrite never leaks into neighboring queries.
+    // plans/WindowTopKRewrite.scala for the scope guard). A plan is
+    // optimized at EXECUTION, not construction, so the rule is
+    // installed only around the eager materialization and never
+    // reaches neighboring queries.
     // The oracle is the untouched row_number SQL — the rewrite must be
     // output-invisible, which is the whole contract.
     // ------------------------------------------------------------------
     "q84_window_topk_rewrite" -> Q(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.plans.WindowTopKRewrite.install(s)
-        s.conf.set(graft.plans.WindowTopKRewrite.EnabledKey, "true")
-        try {
-          val w = Window.partitionBy(col("o_orderpriority"))
-            .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-          val out = mat(t(s, d, "orders")
+        import graft.plans.{SessionRules, TopKPerKey, WindowTopKRewrite}
+        TopKPerKey.install(s)
+        val w = Window.partitionBy(col("o_orderpriority"))
+          .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+        SessionRules.withRule(s, WindowTopKRewrite) {
+          mat(t(s, d, "orders")
             .select(col("o_orderpriority"), col("o_orderkey"),
               col("o_totalprice"))
             .withColumn("rn", row_number().over(w))
             .filter(col("rn") <= 3)
             .drop("rn"))
-          out.orderBy(col("o_orderpriority"), col("o_totalprice").desc,
-            col("o_orderkey"))
-        } finally s.conf.unset(graft.plans.WindowTopKRewrite.EnabledKey)
+        }.orderBy(col("o_orderpriority"), col("o_totalprice").desc,
+          col("o_orderkey"))
       },
       Some("""SELECT o_orderpriority, o_orderkey, o_totalprice FROM (
           SELECT o_orderpriority, o_orderkey, o_totalprice,

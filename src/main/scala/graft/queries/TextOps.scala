@@ -259,18 +259,18 @@ object TextOps {
   private[queries] def assignToCodebook(s: SparkSession, d: String,
       k: Int = 8): DataFrame = assignToCodebookOf(emb(s, d), k)
 
-  /** Session flag: centroid count above which [[assignToCodebookOf]]
-    * ships the codebook as a one-row BROADCAST relation instead of
-    * plan literals. Below it the literal fold wins (no broadcast
-    * exchange, constant-folded centroids); above it the plan would
-    * carry k·dim literal nodes — at s15's corpus-sized
+  /** Default centroid count above which [[assignToCodebookOf]] ships
+    * the codebook as a one-row BROADCAST relation instead of plan
+    * literals (its `broadcastAbove`). Below it the literal fold wins
+    * (no broadcast exchange, constant-folded centroids); above it the
+    * plan would carry k·dim literal nodes — at s15's corpus-sized
     * kCells = ⌈n/64⌉ that is ~78 k literals at 100× sf0.1 and the
     * PLAN itself (analysis, codegen source) becomes the driver
-    * bottleneck. Default 2048 ≈ 65 k literal leaves at dim 32, the
-    * last comfortable size; the ×100 century corpus (kCells ≈ 3125)
+    * bottleneck. 2048 ≈ 65 k literal leaves at dim 32, the last
+    * comfortable size; the ×100 century corpus (kCells ≈ 3125)
     * crosses it and takes the broadcast path in anger.
     */
-  final val CodebookBroadcastK = "spark.graft.codebookBroadcastK"
+  final val CodebookBroadcastK = 2048
 
   /** Frame-agnostic form of the row-local codebook cell assignment
     * (centroids = the first k vec_ids, s03's convention) — s15's spec
@@ -280,7 +280,7 @@ object TextOps {
     * QueriesSpec): the fold iterates cent_id ascending with strict
     * `>`, ties pick the smallest cent_id, and the per-row work is a
     * zero-shuffle argmax either way. Small k bakes the codebook into
-    * the plan as a literal array; k > [[CodebookBroadcastK]] ships it
+    * the plan as a literal array; k > `broadcastAbove` ships it
     * as DATA — one array_sort'd collect_list row, crossJoin(broadcast)
     * — so plan size stays O(1) in k. (d12 goes one step further with
     * a two-level coarse→fine broadcast codebook, O(√k) dots per row;
@@ -288,11 +288,8 @@ object TextOps {
     * s15's oracle replays the exact argmax — the broadcast form keeps
     * the flat fold.)
     */
-  private[graft] def assignToCodebookOf(base: DataFrame,
-      k: Int): DataFrame = {
-    val spark = base.sparkSession
-    val bcastK = spark.conf.getOption(CodebookBroadcastK)
-      .map(_.toInt).getOrElse(2048)
+  private[graft] def assignToCodebookOf(base: DataFrame, k: Int,
+      broadcastAbove: Int = CodebookBroadcastK): DataFrame = {
     val cents = base.filter(col("vec_id") < k)
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
     def fold(cb: Column): Column =
@@ -305,7 +302,7 @@ object TextOps {
               c.getField("cent_id").as("cent_id")))
             .otherwise(acc)
         }).getField("cent_id").as("cent_id")
-    if (k <= bcastK) {
+    if (k <= broadcastAbove) {
       val centArr = array(
         cents.collect()
           .map(r => (r.getLong(0), r.getSeq[Any](1)))
@@ -354,7 +351,8 @@ object TextOps {
       nonScored: DataFrame, knn1: DataFrame, kCells: Int, k: Int)
 
   private[graft] def nnDescentGraph(base: DataFrame, nCents: Int,
-      nRand: Int = 3, k: Int = 5): NnGraph = {
+      nRand: Int = 3, k: Int = 5,
+      broadcastAbove: Int = CodebookBroadcastK): NnGraph = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.PortableHash.h60col
     // metadata-scale driver scalar (g01's iterative-action convention)
@@ -368,7 +366,7 @@ object TextOps {
     // init work at the n^1.5 balance point beyond (assignment n·2√n,
     // pairs n·√n/2 — the "production sizes cells ~√n" posture run for
     // real). Identical formula in the oracle; at every oracle-checked
-    // sf it still evaluates to the old value. Past CodebookBroadcastK
+    // sf it still evaluates to the old value. Past `broadcastAbove`
     // centroids assignToCodebookOf additionally switches to the
     // broadcast-relation codebook so the PLAN stays O(1) in k.
     val kCells = math.max(nCents, math.min((n + 63) / 64,
@@ -384,7 +382,8 @@ object TextOps {
     // cache pays array encode/decode per reference (measured: an
     // all-persist variant regressed 3.1 → 4.5 s). The downstream
     // frames are scalar-only — columnar caching of those is cheap.
-    val asg = assignToCodebookOf(base, kCells).localCheckpoint()
+    val asg = assignToCodebookOf(base, kCells, broadcastAbove)
+      .localCheckpoint()
     val ea = asg.select(col("cent_id"), col("vec_id").as("a"),
       col("embedding").as("va"))
     val eb = asg.select(col("cent_id"), col("vec_id").as("b"),
@@ -458,9 +457,10 @@ object TextOps {
   }
 
   private[graft] def nnDescentReport(base: DataFrame, nCents: Int,
-      nRand: Int = 3, k: Int = 5, nProbes: Int = 20): DataFrame = {
+      nRand: Int = 3, k: Int = 5, nProbes: Int = 20,
+      broadcastAbove: Int = CodebookBroadcastK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val g = nnDescentGraph(base, nCents, nRand, k)
+    val g = nnDescentGraph(base, nCents, nRand, k, broadcastAbove)
     val emb2 = g.asg.select(col("vec_id"), col("embedding"))
     val w = Window.partitionBy(col("a"))
       .orderBy(col("cos").desc, col("b"))

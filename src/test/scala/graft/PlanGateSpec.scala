@@ -282,11 +282,11 @@ class PlanGateSpec extends SparkFunSuite {
     }
   }
 
-  test("WindowTopKRewrite: flag on rewrites the row_number filter " +
-      "pattern to TopKPerKeyExec (no WindowExec), row-identical to " +
-      "the unrewritten window plan; rank/kept-rank/global shapes are " +
-      "left alone") {
-    import graft.plans.WindowTopKRewrite
+  test("WindowTopKRewrite: installed, it rewrites the row_number " +
+      "filter pattern to TopKPerKeyExec (no WindowExec), row-identical " +
+      "to the unrewritten window plan; rank/kept-rank/global shapes " +
+      "are left alone") {
+    import graft.plans.{SessionRules, TopKPerKey, WindowTopKRewrite}
     import org.apache.spark.sql.expressions.Window
     val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
@@ -297,9 +297,8 @@ class PlanGateSpec extends SparkFunSuite {
     def topk = li.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 2).drop("rn")
     val plain = topk.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    WindowTopKRewrite.install(spark)
-    spark.conf.set(WindowTopKRewrite.EnabledKey, "true")
-    try {
+    TopKPerKey.install(spark)
+    try SessionRules.withRule(spark, WindowTopKRewrite) {
       val q = topk
       val plan = q.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerKey"), plan)
@@ -330,18 +329,14 @@ class PlanGateSpec extends SparkFunSuite {
           absurd.queryExecution.executedPlan.toString)
         assert(absurd.count() == 0L)
       }
-    } finally {
-      spark.conf.unset(WindowTopKRewrite.EnabledKey)
-      WindowTopKRewrite.uninstall(spark)
-      graft.plans.TopKPerKey.uninstall(spark)
-    }
+    } finally TopKPerKey.uninstall(spark)
   }
 
   test("MvRewrite: the registered daily-count MV serves the plain " +
       "aggregate (optimized plan reads the MV parquet, not the fact " +
       "table) with identical rows; DISTINCT / shifted-day / extra-" +
       "grouping shapes are left on the base table") {
-    import graft.plans.MvRewrite
+    import graft.plans.{MvRewrite, SessionRules}
     val events = graft.queries.Catalog.t(spark, sf0001, "events")
     def rollup = events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
@@ -359,12 +354,8 @@ class PlanGateSpec extends SparkFunSuite {
                 org.apache.spark.sql.types.DateType => a.child.sql
         }
     }.flatten.getOrElse(fail("no day expression found"))
-    MvRewrite.install(spark)
-    spark.conf.set(MvRewrite.EnabledKey, "true")
-    spark.conf.set(MvRewrite.PathKey, mvPath)
-    spark.conf.set(MvRewrite.BaseKey, "events.parquet")
-    spark.conf.set(MvRewrite.DaySqlKey, daySql)
-    try {
+    SessionRules.withRule(spark,
+        MvRewrite(mvPath, "events.parquet", daySql)) {
       val q = rollup
       // logical Relation nodes don't print paths — the FileScan in the
       // executed plan does
@@ -402,15 +393,17 @@ class PlanGateSpec extends SparkFunSuite {
       val extraPhys = extra.queryExecution.executedPlan.toString
       assert(!extraPhys.contains("graft-mv") &&
         extraPhys.contains("events.parquet"), extraPhys)
-      // schema-drift guard: an MV whose n column drifted to INT (or
-      // day to TIMESTAMP) must NOT be served — same name check passes,
-      // the dataType check sends the query back to the base table with
-      // correct results instead of silently changing output types
-      val driftPath = java.nio.file.Files
-        .createTempDirectory("graft-mvdrift").toString + "/mv"
-      rollup.select(col("event_type"), col("day"),
-        col("n").cast("int").as("n")).write.parquet(driftPath)
-      spark.conf.set(MvRewrite.PathKey, driftPath)
+    }
+    // schema-drift guard: an MV whose n column drifted to INT (or day
+    // to TIMESTAMP) must NOT be served — same name check passes, the
+    // dataType check sends the query back to the base table with
+    // correct results instead of silently changing output types
+    val driftPath = java.nio.file.Files
+      .createTempDirectory("graft-mvdrift").toString + "/mv"
+    rollup.select(col("event_type"), col("day"),
+      col("n").cast("int").as("n")).write.parquet(driftPath)
+    SessionRules.withRule(spark,
+        MvRewrite(driftPath, "events.parquet", daySql)) {
       val driftQ = rollup
       val driftPhys = driftQ.queryExecution.executedPlan.toString
       assert(!driftPhys.contains("graft-mvdrift") &&
@@ -418,13 +411,19 @@ class PlanGateSpec extends SparkFunSuite {
         s"drifted MV served despite type mismatch:\n$driftPhys")
       assert(driftQ.collect().map(_.toSeq.toVector)
         .sortBy(_.mkString("|")).toSeq == plain)
-      spark.conf.set(MvRewrite.PathKey, mvPath)
-    } finally {
-      spark.conf.unset(MvRewrite.EnabledKey)
-      spark.conf.unset(MvRewrite.PathKey)
-      spark.conf.unset(MvRewrite.BaseKey)
-      spark.conf.unset(MvRewrite.DaySqlKey)
-      MvRewrite.uninstall(spark)
+    }
+  }
+
+  test("q84 and e35 leave no session state behind: the optimizer " +
+      "rules they install are gone afterwards, and no spark.graft " +
+      "conf key is set") {
+    val before = spark.experimental.extraOptimizations
+    for (name <- Seq("q84_window_topk_rewrite", "e35_mv_rewrite")) {
+      SparkEntry.queries(name)(spark, sf0001).collect()
+      val after = spark.experimental.extraOptimizations
+      assert(after == before, s"$name left optimizer rules: $after")
+      val keys = spark.conf.getAll.keys.filter(_.startsWith("spark.graft."))
+      assert(keys.isEmpty, s"$name left conf keys: $keys")
     }
   }
 

@@ -135,23 +135,6 @@ class QueriesSpec extends SparkFunSuite {
     }
   }
 
-  test("g02/g03 DISK_ONLY materialization mode: identical values to " +
-      "the localCheckpoint default (the cluster-scale persist posture)") {
-    def run(name: String): Seq[Seq[Any]] = {
-      spark.catalog.clearCache()
-      SparkEntry.queries(name)(spark, sf0001).collect()
-        .map(_.toSeq.toVector).sortBy(_.mkString("|")).toSeq
-    }
-    for (name <- Seq("g02_triangle_count", "g03_kcore_peel",
-        "d14_incremental_dedup")) {
-      val default = run(name)
-      spark.conf.set("spark.graft.graph.materialize", "disk")
-      try assert(run(name) == default,
-        s"$name diverges under DISK_ONLY materialization")
-      finally spark.conf.unset("spark.graft.graph.materialize")
-    }
-  }
-
   test("s06 trained PQ recall: on a clustered fixture the trained " +
       "codebooks recover the query's true neighbors (the r6 2/10 " +
       "seed-codebook baseline was on structure-free uniform vectors)") {
@@ -257,8 +240,8 @@ class QueriesSpec extends SparkFunSuite {
   }
 
   test("assignToCodebookOf: the broadcast-relation codebook (k above " +
-      "spark.graft.codebookBroadcastK) is BIT-IDENTICAL to the literal " +
-      "fold, and the full s15 report is unchanged under it") {
+      "broadcastAbove) is BIT-IDENTICAL to the literal fold, and the " +
+      "full s15 report is unchanged under it") {
     // same clustered fixture as the s15 test; k = 24 centroids so the
     // two postures genuinely disagree on plan shape
     val dim = 64
@@ -283,26 +266,22 @@ class QueriesSpec extends SparkFunSuite {
       .contains("BroadcastNestedLoopJoin"),
       "k = 24 below the default threshold must stay plan-literal")
     val litAsg = collectAsg(literal)
-    spark.conf.set(TextOps.CodebookBroadcastK, "1")
-    try {
-      val bcast = TextOps.assignToCodebookOf(df, 24)
-      assert(bcast.queryExecution.executedPlan.toString
-        .contains("BroadcastNestedLoopJoin"),
-        "forced-broadcast path must ship the codebook as data")
-      assert(collectAsg(bcast) == litAsg,
-        "broadcast codebook assignment diverges from the literal fold")
-      // the entire s15 pipeline under the broadcast codebook: same
-      // stage rows (scored bills and recall hits) as the literal run
-      val repB = TextOps.nnDescentReport(df, nCents = 8).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1).toSeq
-      spark.conf.unset(TextOps.CodebookBroadcastK)
-      val repL = TextOps.nnDescentReport(df, nCents = 8).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1).toSeq
-      assert(repB == repL,
-        s"s15 report diverges under broadcast codebook: $repB vs $repL")
-    } finally spark.conf.unset(TextOps.CodebookBroadcastK)
+    val bcast = TextOps.assignToCodebookOf(df, 24, broadcastAbove = 1)
+    assert(bcast.queryExecution.executedPlan.toString
+      .contains("BroadcastNestedLoopJoin"),
+      "forced-broadcast path must ship the codebook as data")
+    assert(collectAsg(bcast) == litAsg,
+      "broadcast codebook assignment diverges from the literal fold")
+    // the entire s15 pipeline under the broadcast codebook: same
+    // stage rows (scored bills and recall hits) as the literal run
+    def report(broadcastAbove: Int) = TextOps.nnDescentReport(df,
+        nCents = 8, broadcastAbove = broadcastAbove).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1).toSeq
+    val repB = report(1)
+    val repL = report(TextOps.CodebookBroadcastK)
+    assert(repB == repL,
+      s"s15 report diverges under broadcast codebook: $repB vs $repL")
   }
 
   test("x48 frozen-tokenizer OOV path: out-of-alphabet text in the " +
