@@ -8,9 +8,15 @@ oracle SQL in DuckDB against the sf parquet tables, and compares against
 the Spark parquet output in <verifyOutDir>/<name>/ — columns sorted by
 name, rows sorted, values compared exactly (with a float diff report so
 near-misses are visible).
+
+Also writes <verifyOutDir>/_oracle.json: the DuckDB version, the Spark
+version (the `org.apache.spark.version` key of an output file's parquet
+footer, null when no output file has one), the pass and fail counts,
+and per query its status and, on a failure, the message printed for it.
 """
-import sys, json, math
+import glob, sys, json, math
 import duckdb
+import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -23,19 +29,25 @@ def main(sf_dir, out_dir):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    results = {}
+
+    def fail(name, msg):
+        print(f"FAIL {name}: {msg}")
+        results[name] = {"status": "fail", "message": msg}
+
     for name in sorted(oracle):
         sql = oracle[name]
         try:
             spark_df = con.sql(
                 f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df()
         except Exception as e:
-            print(f"FAIL {name}: cannot read spark output: {e}")
+            fail(name, f"cannot read spark output: {e}")
             n_fail += 1
             continue
         try:
             duck_df = con.sql(sql).df()
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {str(e)[:200]}")
+            fail(name, f"oracle SQL error: {str(e)[:200]}")
             n_fail += 1
             continue
         # STRICT native-type gate first: the driver's hash is
@@ -47,13 +59,31 @@ def main(sf_dir, out_dir):
             ok, msg = compare(spark_df, duck_df)
         if ok:
             print(f"PASS {name} ({len(spark_df)} rows)")
+            results[name] = {"status": "pass", "message": None}
             n_pass += 1
         else:
-            print(f"FAIL {name}: {msg}")
+            fail(name, msg)
             n_fail += 1
     print(f"\n{n_pass} passed, {n_fail} failed, "
           f"{len(oracle)} oracle queries total")
+    with open(f"{out_dir}/_oracle.json", "w") as fh:
+        json.dump({"duckdb_version": duckdb.__version__,
+                   "spark_version": spark_version(out_dir, sorted(oracle)),
+                   "passed": n_pass, "failed": n_fail,
+                   "queries": results}, fh, indent=1)
+        fh.write("\n")
     return 1 if n_fail else 0
+
+
+def spark_version(out_dir, names):
+    """The Spark version in the first output file footer that has one."""
+    for name in names:
+        for f in sorted(glob.glob(f"{out_dir}/{name}/*.parquet")):
+            meta = pq.read_metadata(f).metadata or {}
+            v = meta.get(b"org.apache.spark.version")
+            if v:
+                return v.decode()
+    return None
 
 
 def typecheck(con, out_dir, name, sql):

@@ -24,12 +24,23 @@ object SessionDefaults {
     *    sort-merge plan; valid at any scale. Default 0 (off) upstream;
     *    64 MB per partition is modest for executors sized to
     *    128 MB-1 GB shuffle partitions (guide §2.2).
-    *  - the [[codegen]] confs.
+    *  - the [[codegen]] and [[catalogReads]] confs.
     */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    codegen(b.config("spark.sql.adaptive.enabled", "true")
+    catalogReads(codegen(b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "64m"))
+        "64m")))
+
+  /** The conf the query catalog's reads need, shared by [[tuned]] and
+    * the test session: `spark.sql.legacy.parquet.nanosAsLong` = true,
+    * so an events file stored as TIMESTAMP(NANOS) (which Spark 4
+    * rejects by default) reads as longs for
+    * [[graft.queries.Catalog.t]] to convert. Set on the builder: a
+    * query leaves no session conf behind.
+    */
+  def catalogReads(b: SparkSession.Builder): SparkSession.Builder =
+    b.config(NanosAsLongConf, "true")
+  val NanosAsLongConf = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** The codegen confs, shared by [[tuned]] and the test session:
     *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]].

@@ -29,7 +29,7 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     Catalog.all.collect { case (name, q) if q.oracle.isDefined =>
-      name -> q.oracle.get.stripMargin.trim
+      name -> q.oracle.get.trim
     }.toMap
 
   /** Headline queries timed by Bench. */

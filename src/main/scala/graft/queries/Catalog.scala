@@ -37,11 +37,13 @@ object Catalog {
     * longs and floor-convert; NTZ casts to LTZ (an identity on the
     * stored values under the UTC session timezone). The DuckDB oracles
     * do the same with `cast(ts as timestamp)` (ns → µs truncation /
-    * µs no-op), keeping both engines bit-identical.
+    * µs no-op), keeping both engines bit-identical. Reading nanos needs
+    * the session built with [[graft.SessionDefaults.catalogReads]]
+    * (which [[graft.SessionDefaults.tuned]] applies): a read sets no
+    * session conf.
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = parquet(spark, s"$dir/$name.parquet")
       raw.schema.find(_.name == "ts") match {
         case Some(f) if f.dataType == org.apache.spark.sql.types.LongType =>

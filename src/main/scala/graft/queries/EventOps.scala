@@ -58,6 +58,80 @@ object EventOps {
         wU.rowsBetween(Window.unboundedPreceding, 0)))
   }
 
+  /** DuckDB twin of [[sessionized]] over `events`: CTEs `ev` (user_id,
+    * event_id, event_type, tts = the µs timestamp, then `extraCols`),
+    * `o` (adds new_s) and `n` (adds sid).
+    */
+  private[queries] def sqlSessionized(extraCols: String = ""): String =
+    s"""ev AS (
+          SELECT user_id, event_id, event_type,
+            cast(ts as timestamp) AS tts$extraCols
+          FROM events),
+        o AS (
+          SELECT *, CASE WHEN lag(tts) OVER w IS NULL
+              OR epoch_us(tts) - epoch_us(lag(tts) OVER w) > 1800000000
+            THEN 1 ELSE 0 END AS new_s
+          FROM ev
+          WINDOW w AS (PARTITION BY user_id ORDER BY tts, event_id)),
+        n AS (
+          SELECT *, sum(new_s) OVER (PARTITION BY user_id
+            ORDER BY tts, event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+          FROM o)"""
+
+  /** DuckDB twin of [[preferencePairs]]: [[sqlSessionized]] with the
+    * integer reward `rw`, then `conv` (per session: reward, n_chars)
+    * and `pairs(user_id, pair_sid, later_won, gap, chosen_chars,
+    * rejected_chars)`.
+    */
+  private[queries] val sqlPreferencePairs: String =
+    sqlSessionized(""",
+            cast(floor(value * 64) as bigint) AS rw""") + """,
+        conv AS (
+          SELECT user_id, sid,
+            cast(sum(rw) as bigint) AS reward,
+            cast(length(string_agg(
+              concat('<|', event_type, '|>e', event_id), ''
+              ORDER BY tts, event_id)) as bigint) AS n_chars
+          FROM n GROUP BY 1, 2),
+        pairs AS (
+          SELECT l.user_id, l.sid AS pair_sid,
+            r.reward > l.reward AS later_won,
+            abs(l.reward - r.reward) AS gap,
+            CASE WHEN r.reward > l.reward THEN r.n_chars
+              ELSE l.n_chars END AS chosen_chars,
+            CASE WHEN r.reward > l.reward THEN l.n_chars
+              ELSE r.n_chars END AS rejected_chars
+          FROM conv l JOIN conv r
+            ON l.user_id = r.user_id AND r.sid = l.sid + 1)"""
+
+  /** Per-type daily event counts as one day-ordered series:
+    * (event_type, ys = the counts as doubles). The one data-scale
+    * aggregation of e28-e33; their forecasters fold the
+    * metadata-scale lists.
+    */
+  private[queries] def dailySeries(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    t(s, d, "events")
+      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+      .groupBy(col("event_type"))
+      .agg(transform(array_sort(collect_list(struct(col("day"),
+        col("cnt")))), x => x.getField("cnt").cast("double")).as("ys"))
+
+  /** DuckDB twin of [[dailySeries]]: CTEs `daily` and
+    * `ser(event_type, ys)`.
+    */
+  private[queries] val sqlDailySeries: String = """daily AS (
+          SELECT event_type, cast(cast(ts as timestamp) as date) AS day,
+            cast(count(*) as bigint) AS cnt
+          FROM events GROUP BY 1, 2),
+        ser AS (
+          SELECT event_type,
+            list_transform(list(cnt ORDER BY day), c -> cast(c as double))
+              AS ys
+          FROM daily GROUP BY event_type)"""
+
   /** Shared e39/p07 frame: (chosen, rejected) trajectory pairs from
     * consecutive sessions of one user, with integer rewards
     * (floor(value·64) summed — bit-portable, no double-sum drift) and
@@ -993,21 +1067,7 @@ object EventOps {
           .agg(count(lit(1)).as("n"))
           .orderBy(col("from_type"), col("to_type"))
       },
-      Some("""WITH ev AS (
-          SELECT user_id, event_id, event_type,
-            cast(ts as timestamp) AS tts
-          FROM events),
-        o AS (
-          SELECT *, CASE WHEN lag(tts) OVER w IS NULL
-              OR epoch_us(tts) - epoch_us(lag(tts) OVER w) > 1800000000
-            THEN 1 ELSE 0 END AS new_s
-          FROM ev
-          WINDOW w AS (PARTITION BY user_id ORDER BY tts, event_id)),
-        n AS (
-          SELECT *, sum(new_s) OVER (PARTITION BY user_id
-            ORDER BY tts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          FROM o),
+      Some("""WITH """ + sqlSessionized() + """,
         tr AS (
           SELECT
             coalesce(lag(event_type) OVER ws, 'START') AS from_type,
@@ -1462,21 +1522,7 @@ object EventOps {
           .orderBy(col("jacc_permille").desc, col("ua"), col("ub"))
           .limit(20)
       },
-      Some("""WITH ev AS (
-          SELECT user_id, event_id, event_type,
-            cast(ts as timestamp) AS tts
-          FROM events),
-        o AS (
-          SELECT *, CASE WHEN lag(tts) OVER w IS NULL
-              OR epoch_us(tts) - epoch_us(lag(tts) OVER w) > 1800000000
-            THEN 1 ELSE 0 END AS new_s
-          FROM ev
-          WINDOW w AS (PARTITION BY user_id ORDER BY tts, event_id)),
-        n AS (
-          SELECT *, sum(new_s) OVER (PARTITION BY user_id
-            ORDER BY tts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          FROM o),
+      Some("""WITH """ + sqlSessionized() + """,
         paths AS (
           SELECT user_id, sid,
             string_agg(event_type, '>' ORDER BY tts, event_id) AS path
@@ -1638,12 +1684,7 @@ object EventOps {
     // ------------------------------------------------------------------
     "e28_holt_forecast" -> Q(
       (s, d) => {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-        val series = daily.groupBy(col("event_type"))
-          .agg(transform(array_sort(collect_list(struct(col("day"),
-            col("cnt")))), x => x.getField("cnt").cast("double")).as("ys"))
+        val series = dailySeries(s, d)
         def a1(acc: Column) = element_at(acc, 1)
         def a2(acc: Column) = element_at(acc, 2)
         def a3(acc: Column) = element_at(acc, 3)
@@ -1670,15 +1711,7 @@ object EventOps {
               .as("fc_7"))
           .orderBy(col("event_type"))
       },
-      Some("""WITH daily AS (
-          SELECT event_type, cast(cast(ts as timestamp) as date) AS day,
-            cast(count(*) as bigint) AS cnt
-          FROM events GROUP BY 1, 2),
-        ser AS (
-          SELECT event_type,
-            list_transform(list(cnt ORDER BY day), c -> cast(c as double))
-              AS ys
-          FROM daily GROUP BY event_type),
+      Some("""WITH """ + sqlDailySeries + """,
         f AS (
           SELECT event_type, len(ys) AS n_days,
             list_reduce(list_prepend([ys[1], 0.0, 0.0],
@@ -1713,12 +1746,7 @@ object EventOps {
     // ------------------------------------------------------------------
     "e29_acf_daily" -> Q(
       (s, d) => {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-        val ser = daily.groupBy(col("event_type"))
-          .agg(transform(array_sort(collect_list(struct(col("day"),
-            col("cnt")))), x => x.getField("cnt").cast("double")).as("ys"))
+        val ser = dailySeries(s, d)
         ser
           .withColumn("n", size(col("ys")))
           .withColumn("mu", aggregate(col("ys"), lit(0.0),
@@ -1734,15 +1762,7 @@ object EventOps {
               col("den")).as("acf"))
           .orderBy(col("event_type"), col("lag"))
       },
-      Some("""WITH daily AS (
-          SELECT event_type, cast(cast(ts as timestamp) as date) AS day,
-            cast(count(*) as bigint) AS cnt
-          FROM events GROUP BY 1, 2),
-        ser AS (
-          SELECT event_type,
-            list_transform(list(cnt ORDER BY day), c -> cast(c as double))
-              AS ys
-          FROM daily GROUP BY event_type),
+      Some("""WITH """ + sqlDailySeries + """,
         m AS (
           SELECT event_type, ys, len(ys) AS n,
             list_reduce(list_prepend(0.0, ys), (a, b) -> a + b) /
@@ -1788,12 +1808,7 @@ object EventOps {
     // ------------------------------------------------------------------
     "e30_holt_winters" -> Q(
       (s, d) => {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-        val ser = daily.groupBy(col("event_type"))
-          .agg(transform(array_sort(collect_list(struct(col("day"),
-            col("cnt")))), x => x.getField("cnt").cast("double")).as("ys"))
+        val ser = dailySeries(s, d)
           .filter(size(col("ys")) >= 8)
         def e(acc: Column, i: Int) = element_at(acc, i)
         val folded = ser
@@ -1831,15 +1846,7 @@ object EventOps {
               element_at(col("st"), col("h") + 2)).as("fc"))
           .orderBy(col("event_type"), col("horizon"))
       },
-      Some("""WITH daily AS (
-          SELECT event_type, cast(cast(ts as timestamp) as date) AS day,
-            cast(count(*) as bigint) AS cnt
-          FROM events GROUP BY 1, 2),
-        ser AS (
-          SELECT event_type,
-            list_transform(list(cnt ORDER BY day), c -> cast(c as double))
-              AS ys
-          FROM daily GROUP BY event_type),
+      Some("""WITH """ + sqlDailySeries + """,
         ini AS (
           SELECT event_type, ys, len(ys) AS n,
             list_reduce(list_prepend(0.0, ys[1:7]), (a, b) -> a + b) / 7.0
@@ -1967,12 +1974,7 @@ object EventOps {
     // ------------------------------------------------------------------
     "e32_forecast_mase" -> Q(
       (s, d) => {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-        val ser = daily.groupBy(col("event_type"))
-          .agg(transform(array_sort(collect_list(struct(col("day"),
-            col("cnt")))), x => x.getField("cnt").cast("double")).as("ys"))
+        val ser = dailySeries(s, d)
           .filter(size(col("ys")) >= 15)
           .withColumn("n", size(col("ys")))
           .withColumn("ntr", size(col("ys")) - 7)
@@ -2009,15 +2011,7 @@ object EventOps {
           (col("mae_holt") < col("mae_snaive")).as("holt_beats"))
           .orderBy(col("event_type"))
       },
-      Some("""WITH daily AS (
-          SELECT event_type, cast(cast(ts as timestamp) as date) AS day,
-            cast(count(*) as bigint) AS cnt
-          FROM events GROUP BY 1, 2),
-        ser AS (
-          SELECT event_type,
-            list_transform(list(cnt ORDER BY day), c -> cast(c as double))
-              AS ys
-          FROM daily GROUP BY event_type),
+      Some("""WITH """ + sqlDailySeries + """,
         sz AS (
           SELECT event_type, ys, len(ys) AS n, len(ys) - 7 AS ntr
           FROM ser WHERE len(ys) >= 15),
@@ -2074,12 +2068,7 @@ object EventOps {
     // ------------------------------------------------------------------
     "e33_hw_band_calibration" -> Q(
       (s, d) => {
-        val daily = t(s, d, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-        val ser = daily.groupBy(col("event_type"))
-          .agg(transform(array_sort(collect_list(struct(col("day"),
-            col("cnt")))), x => x.getField("cnt").cast("double")).as("ys"))
+        val ser = dailySeries(s, d)
           .filter(size(col("ys")) >= 22)
           .withColumn("n", size(col("ys")))
           .withColumn("ntr", size(col("ys")) - 7)
@@ -2121,15 +2110,7 @@ object EventOps {
           (y >= fc - half && y <= fc + half).as("in_band"))
           .orderBy(col("event_type"), col("horizon"))
       },
-      Some("""WITH daily AS (
-          SELECT event_type, cast(cast(ts as timestamp) as date) AS day,
-            cast(count(*) as bigint) AS cnt
-          FROM events GROUP BY 1, 2),
-        ser AS (
-          SELECT event_type,
-            list_transform(list(cnt ORDER BY day), c -> cast(c as double))
-              AS ys
-          FROM daily GROUP BY event_type),
+      Some("""WITH """ + sqlDailySeries + """,
         sz AS (
           SELECT event_type, ys, len(ys) AS n, len(ys) - 7 AS ntr
           FROM ser WHERE len(ys) >= 22),
@@ -2566,21 +2547,7 @@ object EventOps {
             sum(expr("n_chars div 4")).as("tokens_est"))
           .orderBy(col("n_turns"))
       },
-      Some("""WITH ev AS (
-          SELECT user_id, event_id, event_type,
-            cast(ts as timestamp) AS tts
-          FROM events),
-        o AS (
-          SELECT *, CASE WHEN lag(tts) OVER w IS NULL
-              OR epoch_us(tts) - epoch_us(lag(tts) OVER w) > 1800000000
-            THEN 1 ELSE 0 END AS new_s
-          FROM ev
-          WINDOW w AS (PARTITION BY user_id ORDER BY tts, event_id)),
-        n AS (
-          SELECT *, sum(new_s) OVER (PARTITION BY user_id
-            ORDER BY tts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          FROM o),
+      Some("""WITH """ + sqlSessionized() + """,
         conv AS (
           SELECT user_id, sid,
             cast(count(*) as bigint) AS n_turns,
@@ -2623,39 +2590,7 @@ object EventOps {
             sum(col("rejected_chars")).as("rejected_chars"))
           .orderBy(col("gap_bucket"))
       },
-      Some("""WITH ev AS (
-          SELECT user_id, event_id, event_type,
-            cast(ts as timestamp) AS tts,
-            cast(floor(value * 64) as bigint) AS rw
-          FROM events),
-        o AS (
-          SELECT *, CASE WHEN lag(tts) OVER w IS NULL
-              OR epoch_us(tts) - epoch_us(lag(tts) OVER w) > 1800000000
-            THEN 1 ELSE 0 END AS new_s
-          FROM ev
-          WINDOW w AS (PARTITION BY user_id ORDER BY tts, event_id)),
-        n AS (
-          SELECT *, sum(new_s) OVER (PARTITION BY user_id
-            ORDER BY tts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          FROM o),
-        conv AS (
-          SELECT user_id, sid,
-            cast(sum(rw) as bigint) AS reward,
-            cast(length(string_agg(
-              concat('<|', event_type, '|>e', event_id), ''
-              ORDER BY tts, event_id)) as bigint) AS n_chars
-          FROM n GROUP BY 1, 2),
-        pairs AS (
-          SELECT l.user_id,
-            r.reward > l.reward AS later_won,
-            abs(l.reward - r.reward) AS gap,
-            CASE WHEN r.reward > l.reward THEN r.n_chars
-              ELSE l.n_chars END AS chosen_chars,
-            CASE WHEN r.reward > l.reward THEN l.n_chars
-              ELSE r.n_chars END AS rejected_chars
-          FROM conv l JOIN conv r
-            ON l.user_id = r.user_id AND r.sid = l.sid + 1)
+      Some("""WITH """ + sqlPreferencePairs + """
         SELECT cast(gap // 4096 as bigint) AS gap_bucket,
           cast(count(*) as bigint) AS n_pairs,
           cast(count(*) FILTER (WHERE later_won) as bigint)
@@ -2721,39 +2656,13 @@ object EventOps {
           .unionByName(packed)
           .orderBy(col("stage"))
       },
-      Some(s"""WITH ev AS (
-          SELECT user_id, event_id, event_type,
-            cast(ts as timestamp) AS tts,
-            cast(floor(value * 64) as bigint) AS rw
-          FROM events),
-        o AS (
-          SELECT *, CASE WHEN lag(tts) OVER w IS NULL
-              OR epoch_us(tts) - epoch_us(lag(tts) OVER w) > 1800000000
-            THEN 1 ELSE 0 END AS new_s
-          FROM ev
-          WINDOW w AS (PARTITION BY user_id ORDER BY tts, event_id)),
-        n AS (
-          SELECT *, sum(new_s) OVER (PARTITION BY user_id
-            ORDER BY tts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          FROM o),
-        conv AS (
-          SELECT user_id, sid,
-            cast(sum(rw) as bigint) AS reward,
-            cast(length(string_agg(
-              concat('<|', event_type, '|>e', event_id), ''
-              ORDER BY tts, event_id)) as bigint) AS n_chars
-          FROM n GROUP BY 1, 2),
-        pairs AS (
-          SELECT l.user_id * 100000 + l.sid AS doc_id, l.user_id,
-            (CASE WHEN r.reward > l.reward THEN r.n_chars
-               ELSE l.n_chars END +
-             CASE WHEN r.reward > l.reward THEN l.n_chars
-               ELSE r.n_chars END) // 4 AS tk
-          FROM conv l JOIN conv r
-            ON l.user_id = r.user_id AND r.sid = l.sid + 1),
+      Some(s"""WITH ${sqlPreferencePairs},
+        pp AS (
+          SELECT user_id * 100000 + pair_sid AS doc_id, user_id,
+            (chosen_chars + rejected_chars) // 4 AS tk
+          FROM pairs),
         train AS (
-          SELECT * FROM pairs
+          SELECT * FROM pp
           WHERE ${graft.functions.PortableHash.h60Sql("'p07_' || user_id")}
             % 100 < 90),
         sized AS (SELECT * FROM train WHERE tk <= 10 AND tk > 0),
@@ -2777,7 +2686,7 @@ object EventOps {
             cast(coalesce(sum(tk), 0) as bigint) AS token_mass,
             cast(0 as bigint) AS n_windows,
             cast(0 as bigint) AS items_spanning
-          FROM pairs
+          FROM pp
           UNION ALL
           SELECT 'b_train', cast(count(*) as bigint),
             cast(coalesce(sum(tk), 0) as bigint),

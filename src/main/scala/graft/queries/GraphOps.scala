@@ -42,6 +42,38 @@ object GraphOps {
      else pairs.filter(col(x) =!= col(y))).distinct()
   }
 
+  /** DuckDB twin of [[coPurchaseEdges]]: CTEs `li` (distinct
+    * order-part rows) and `edges(src, dst)`, or `canon(a, b)` with
+    * a < b when `canonical`.
+    */
+  private[queries] def sqlCoPurchaseEdges(canonical: Boolean = false): String =
+    """li AS MATERIALIZED (
+          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        """ + (if (canonical) """canon AS MATERIALIZED (
+          SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
+          FROM li x JOIN li y
+            ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey)"""
+    else """edges AS MATERIALIZED (
+          SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+          FROM li a JOIN li b
+            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey)""")
+
+  /** DuckDB twin of one `graft.operators.PageRank` round: `it$k` from
+    * `it${k-1}` over `nodes`, `edges` and `deg(src, outdeg)`, with the
+    * caller's teleport term `tele` (an expression over `n0.id`).
+    */
+  private[queries] def sqlPageRankRound(k: Int, tele: String): String =
+    s"""it$k AS MATERIALIZED (
+          SELECT n0.id,
+            cast($tele
+              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
+          FROM nodes n0
+          LEFT JOIN (
+            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
+            FROM edges e JOIN it${k - 1} r ON r.id = e.src
+            JOIN deg d ON d.src = e.src
+            GROUP BY e.dst) s ON s.id = n0.id)"""
+
   /** THE thresholded weighted co-purchase edge builder shared by
     * g12/g13/g14 (the coPurchaseEdges precedent — one definition so
     * the threshold semantics cannot drift): directed (src, dst, w)
@@ -63,6 +95,18 @@ object GraphOps {
       .agg(count(lit(1)).as("w"))
       .filter(col("w") >= 2)
   }
+
+  /** DuckDB twin of [[weightedEdges]]: CTEs `li` and
+    * `edges(src, dst, w)` with w ≥ 2.
+    */
+  private[queries] val sqlWeightedEdges: String = """li AS MATERIALIZED (
+          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        edges AS MATERIALIZED (
+          SELECT a.l_partkey AS src, b.l_partkey AS dst,
+            cast(count(*) as bigint) AS w
+          FROM li a JOIN li b
+            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+          GROUP BY 1, 2 HAVING count(*) >= 2)"""
 
   /** Synchronous label propagation over a directed edge frame, one
     * definition for g04/g09 (the coPurchaseEdges precedent — a
@@ -123,6 +167,21 @@ object GraphOps {
     edges.unpersist()
     out
   }
+
+  /** DuckDB twin of [[labelProp]]'s three rounds (g04, g09) over
+    * `edges(src, dst)`: `l0` (every source labels itself), then per
+    * round r the label counts `c$r` and `l$r(id, lbl)` (the most
+    * frequent in-neighbor label, ties to the smallest).
+    */
+  private[queries] val sqlLabelProp: String =
+    "l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM edges)" +
+      (1 to 3).map(r => s""",
+        c$r AS (SELECT e.src, l.lbl, count(*) AS c
+          FROM edges e JOIN l${r - 1} l ON l.id = e.dst GROUP BY 1, 2),
+        l$r AS MATERIALIZED (SELECT src AS id, lbl FROM (
+          SELECT src, lbl, row_number()
+            OVER (PARTITION BY src ORDER BY c DESC, lbl) AS rn
+          FROM c$r) x WHERE rn = 1)""").mkString
 
   /** Degree-ordered triangle enumeration (g02's core, factored so the
     * per-node census and g10's per-edge support cannot drift): orient
@@ -199,6 +258,52 @@ object GraphOps {
     } else wedges.join(closing, Seq("v", "w"))
   }
 
+  /** DuckDB twin of [[orientedTrianglesOf]] over a canonical (a < b)
+    * edge relation `canon`: CTEs `deg$k(id, deg)`, `o$k(src, dst,
+    * ddst)` (each edge oriented low-degree → high-degree) and
+    * `tri$k(u, v, w)` (one row per triangle). `k` keeps apart the
+    * edge sets of one query (the peel rounds of g11 and g16).
+    */
+  private[queries] def sqlOrientedTriangles(canon: String,
+      k: String = ""): String = s"""deg$k AS MATERIALIZED (
+          SELECT id, cast(count(*) as bigint) AS deg
+          FROM (SELECT a AS id FROM $canon
+                UNION ALL SELECT b FROM $canon) u GROUP BY 1),
+        o$k AS MATERIALIZED (
+          SELECT CASE WHEN da.deg < db.deg
+                   OR (da.deg = db.deg AND c.a < c.b)
+                 THEN c.a ELSE c.b END AS src,
+               CASE WHEN da.deg < db.deg
+                   OR (da.deg = db.deg AND c.a < c.b)
+                 THEN c.b ELSE c.a END AS dst,
+               CASE WHEN da.deg < db.deg
+                   OR (da.deg = db.deg AND c.a < c.b)
+                 THEN db.deg ELSE da.deg END AS ddst
+          FROM $canon c JOIN deg$k da ON da.id = c.a
+          JOIN deg$k db ON db.id = c.b),
+        tri$k AS MATERIALIZED (
+          SELECT p.src AS u, p.dst AS v, q.dst AS w FROM o$k p
+          JOIN o$k q ON p.src = q.src AND (p.ddst < q.ddst
+            OR (p.ddst = q.ddst AND p.dst < q.dst))
+          JOIN o$k r ON r.src = p.dst AND r.dst = q.dst)"""
+
+  /** One k-truss peel round of g11 and g16 (k = 10): the triangles of
+    * `cur${r-1}`, each edge's support `s$r`, and the surviving edges
+    * `cur$r` (support ≥ 8).
+    */
+  private[queries] def sqlTrussRound(r: Int): String = {
+    val prev = s"cur${r - 1}"
+    sqlOrientedTriangles(prev, r.toString) + s""",
+        s$r AS (SELECT a, b, count(*) AS sup FROM (
+          SELECT least(u, v) AS a, greatest(u, v) AS b FROM tri$r
+          UNION ALL SELECT least(u, w), greatest(u, w) FROM tri$r
+          UNION ALL SELECT least(v, w), greatest(v, w) FROM tri$r) e
+          GROUP BY 1, 2),
+        cur$r AS MATERIALIZED (
+          SELECT c.a, c.b FROM $prev c
+          JOIN s$r ON s$r.a = c.a AND s$r.b = c.b AND s$r.sup >= 8)"""
+  }
+
   def queries: Seq[(String, Q)] = Seq(
 
     // ------------------------------------------------------------------
@@ -224,12 +329,7 @@ object GraphOps {
       },
       // MATERIALIZED pins DuckDB to evaluate the shared CTEs once (the
       // default inlines them per reference: 29 s -> 0.7 s at sf0.01)
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+      Some("""WITH """ + sqlCoPurchaseEdges() + """,
         nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges),
         deg AS MATERIALIZED (
           SELECT src, cast(count(*) as bigint) AS outdeg
@@ -240,56 +340,8 @@ object GraphOps {
             (1000000000000 // cast(count(*) as bigint)) AS r_init
           FROM nodes),
         it0 AS (SELECT id, (SELECT r_init FROM tele) AS r FROM nodes),
-        it1 AS MATERIALIZED (
-          SELECT n0.id,
-            cast((SELECT t FROM tele)
-              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
-          FROM nodes n0
-          LEFT JOIN (
-            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
-            FROM edges e JOIN it0 r ON r.id = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst) s ON s.id = n0.id),
-        it2 AS MATERIALIZED (
-          SELECT n0.id,
-            cast((SELECT t FROM tele)
-              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
-          FROM nodes n0
-          LEFT JOIN (
-            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
-            FROM edges e JOIN it1 r ON r.id = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst) s ON s.id = n0.id),
-        it3 AS MATERIALIZED (
-          SELECT n0.id,
-            cast((SELECT t FROM tele)
-              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
-          FROM nodes n0
-          LEFT JOIN (
-            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
-            FROM edges e JOIN it2 r ON r.id = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst) s ON s.id = n0.id),
-        it4 AS MATERIALIZED (
-          SELECT n0.id,
-            cast((SELECT t FROM tele)
-              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
-          FROM nodes n0
-          LEFT JOIN (
-            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
-            FROM edges e JOIN it3 r ON r.id = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst) s ON s.id = n0.id),
-        it5 AS MATERIALIZED (
-          SELECT n0.id,
-            cast((SELECT t FROM tele)
-              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
-          FROM nodes n0
-          LEFT JOIN (
-            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
-            FROM edges e JOIN it4 r ON r.id = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst) s ON s.id = n0.id)
+        """ + (1 to 5).map(sqlPageRankRound(_, "(SELECT t FROM tele)"))
+          .mkString(",\n        ") + """
         SELECT id AS part_id, r AS rank_scaled FROM it5
         ORDER BY r DESC, id LIMIT 20"""),
       bench = true),
@@ -329,37 +381,8 @@ object GraphOps {
           .limit(20)
           .select(col("id").as("part_id"), col("triangles"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        canon AS MATERIALIZED (
-          SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-          FROM li x JOIN li y
-            ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        deg AS MATERIALIZED (
-          SELECT id, cast(count(*) as bigint) AS deg FROM (
-            SELECT a AS id FROM canon
-            UNION ALL SELECT b AS id FROM canon) u GROUP BY id),
-        o AS MATERIALIZED (
-          SELECT
-            CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-              THEN c.a ELSE c.b END AS src,
-            CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-              THEN c.b ELSE c.a END AS dst,
-            CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-              THEN db.deg ELSE da.deg END AS ddst
-          FROM canon c
-          JOIN deg da ON da.id = c.a
-          JOIN deg db ON db.id = c.b),
-        tri AS MATERIALIZED (
-          SELECT w1.src AS u, w1.dst AS v, w2.dst AS w
-          FROM o w1
-          JOIN o w2 ON w1.src = w2.src
-            AND (w1.ddst < w2.ddst
-                 OR (w1.ddst = w2.ddst AND w1.dst < w2.dst))
-          JOIN o e ON e.src = w1.dst AND e.dst = w2.dst)
+      Some("""WITH """ + sqlCoPurchaseEdges(canonical = true) + ",\n        " +
+          sqlOrientedTriangles("canon") + """
         SELECT id AS part_id, cast(count(*) as bigint) AS triangles
         FROM (
           SELECT u AS id FROM tri
@@ -412,12 +435,7 @@ object GraphOps {
             col("n_below_k"))
           .orderBy(col("core_deg").desc, col("part_id"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        canon AS MATERIALIZED (
-          SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-          FROM li x JOIN li y
-            ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+      Some("""WITH """ + sqlCoPurchaseEdges(canonical = true) + """,
         d0 AS (SELECT id, count(*) AS d FROM (
             SELECT a AS id FROM canon UNION ALL SELECT b AS id FROM canon
           ) u GROUP BY id),
@@ -490,31 +508,8 @@ object GraphOps {
           .select(col("lbl").as("community"), col("n_members"),
             col("min_member"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-        l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM edges),
-        c1 AS (SELECT e.src, l.lbl, count(*) AS c
-          FROM edges e JOIN l0 l ON l.id = e.dst GROUP BY 1, 2),
-        l1 AS MATERIALIZED (SELECT src AS id, lbl FROM (
-          SELECT src, lbl, row_number()
-            OVER (PARTITION BY src ORDER BY c DESC, lbl) AS rn
-          FROM c1) x WHERE rn = 1),
-        c2 AS (SELECT e.src, l.lbl, count(*) AS c
-          FROM edges e JOIN l1 l ON l.id = e.dst GROUP BY 1, 2),
-        l2 AS MATERIALIZED (SELECT src AS id, lbl FROM (
-          SELECT src, lbl, row_number()
-            OVER (PARTITION BY src ORDER BY c DESC, lbl) AS rn
-          FROM c2) x WHERE rn = 1),
-        c3 AS (SELECT e.src, l.lbl, count(*) AS c
-          FROM edges e JOIN l2 l ON l.id = e.dst GROUP BY 1, 2),
-        l3 AS MATERIALIZED (SELECT src AS id, lbl FROM (
-          SELECT src, lbl, row_number()
-            OVER (PARTITION BY src ORDER BY c DESC, lbl) AS rn
-          FROM c3) x WHERE rn = 1)
+      Some("""WITH """ + sqlCoPurchaseEdges() + ",\n        " +
+          sqlLabelProp + """
         SELECT lbl AS community, cast(count(*) as bigint) AS n_members,
           min(id) AS min_member
         FROM l3 GROUP BY lbl
@@ -570,16 +565,10 @@ object GraphOps {
           .select(col("x").as("part_a"), col("y").as("part_b"),
             col("ra_scaled"), col("n_common"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey
-              AND a.l_partkey < b.l_partkey),
+      Some("""WITH """ + sqlCoPurchaseEdges(canonical = true) + """,
         adj AS (
-          SELECT a AS u, b AS v FROM edges
-          UNION ALL SELECT b, a FROM edges),
+          SELECT a AS u, b AS v FROM canon
+          UNION ALL SELECT b, a FROM canon),
         centers AS (
           SELECT u, 1000000000000 // cast(count(*) as bigint) AS w8
           FROM adj GROUP BY u
@@ -594,7 +583,7 @@ object GraphOps {
           FROM cadj l JOIN cadj r ON l.u = r.u AND l.v < r.v
           GROUP BY 1, 2)
         SELECT s.x AS part_a, s.y AS part_b, s.ra_scaled, s.n_common
-        FROM scored s ANTI JOIN edges e ON s.x = e.a AND s.y = e.b
+        FROM scored s ANTI JOIN canon e ON s.x = e.a AND s.y = e.b
         ORDER BY s.ra_scaled DESC, s.x, s.y LIMIT 20""")),
 
     // ------------------------------------------------------------------
@@ -621,12 +610,7 @@ object GraphOps {
           .limit(20)
           .select(col("id").as("part_id"), col("r").as("ppr_scaled"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+      Some("""WITH """ + sqlCoPurchaseEdges() + """,
         nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges),
         deg AS MATERIALIZED (
           SELECT src, cast(count(*) as bigint) AS outdeg
@@ -636,39 +620,7 @@ object GraphOps {
           SELECT id, cast(CASE WHEN id = (SELECT sid FROM seed)
             THEN 1000000000000 ELSE 0 END as bigint) AS r
           FROM nodes),
-        it1 AS MATERIALIZED (
-          SELECT n0.id,
-            cast(CASE WHEN n0.id = (SELECT sid FROM seed)
-              THEN 150000000000 ELSE 0 END
-              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
-          FROM nodes n0
-          LEFT JOIN (
-            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
-            FROM edges e JOIN it0 r ON r.id = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst) s ON s.id = n0.id),
-        it2 AS MATERIALIZED (
-          SELECT n0.id,
-            cast(CASE WHEN n0.id = (SELECT sid FROM seed)
-              THEN 150000000000 ELSE 0 END
-              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
-          FROM nodes n0
-          LEFT JOIN (
-            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
-            FROM edges e JOIN it1 r ON r.id = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst) s ON s.id = n0.id),
-        it3 AS MATERIALIZED (
-          SELECT n0.id,
-            cast(CASE WHEN n0.id = (SELECT sid FROM seed)
-              THEN 150000000000 ELSE 0 END
-              + (85 * coalesce(s.contrib, 0)) // 100 as bigint) AS r
-          FROM nodes n0
-          LEFT JOIN (
-            SELECT e.dst AS id, sum(r.r // d.outdeg) AS contrib
-            FROM edges e JOIN it2 r ON r.id = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst) s ON s.id = n0.id)
+        """ + (1 to 3).map(sqlPageRankRound(_, "CASE WHEN n0.id = (SELECT sid FROM seed)\n              THEN 150000000000 ELSE 0 END")).mkString(",\n        ") + """
         SELECT id AS part_id, r AS ppr_scaled
         FROM it3 WHERE r > 0
         ORDER BY r DESC, id LIMIT 20""")),
@@ -766,15 +718,10 @@ object GraphOps {
             sum(col("deg")).as("edge_endpoints"))
           .orderBy(col("bin"))
       },
-      Some("""WITH li AS (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        e AS (
-          SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-            AND a.l_partkey <> b.l_partkey),
+      Some("""WITH """ + sqlCoPurchaseEdges() + """,
         deg AS (
           SELECT src, cast(count(*) as bigint) AS deg
-          FROM e GROUP BY 1)
+          FROM edges GROUP BY 1)
         SELECT cast(length(bin(deg)) as integer) AS bin,
           cast(count(*) as bigint) AS n_nodes,
           min(deg) AS min_deg, max(deg) AS max_deg,
@@ -829,31 +776,8 @@ object GraphOps {
           .orderBy(col("n_members").desc, col("community"))
           .limit(10)
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-        l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM edges),
-        c1 AS (SELECT e.src, l.lbl, count(*) AS c
-          FROM edges e JOIN l0 l ON l.id = e.dst GROUP BY 1, 2),
-        l1 AS MATERIALIZED (SELECT src AS id, lbl FROM (
-          SELECT src, lbl, row_number()
-            OVER (PARTITION BY src ORDER BY c DESC, lbl) AS rn
-          FROM c1) x WHERE rn = 1),
-        c2 AS (SELECT e.src, l.lbl, count(*) AS c
-          FROM edges e JOIN l1 l ON l.id = e.dst GROUP BY 1, 2),
-        l2 AS MATERIALIZED (SELECT src AS id, lbl FROM (
-          SELECT src, lbl, row_number()
-            OVER (PARTITION BY src ORDER BY c DESC, lbl) AS rn
-          FROM c2) x WHERE rn = 1),
-        c3 AS (SELECT e.src, l.lbl, count(*) AS c
-          FROM edges e JOIN l2 l ON l.id = e.dst GROUP BY 1, 2),
-        l3 AS MATERIALIZED (SELECT src AS id, lbl FROM (
-          SELECT src, lbl, row_number()
-            OVER (PARTITION BY src ORDER BY c DESC, lbl) AS rn
-          FROM c3) x WHERE rn = 1),
+      Some("""WITH """ + sqlCoPurchaseEdges() + ",\n        " +
+          sqlLabelProp + """,
         canon AS (SELECT src, dst FROM edges WHERE src < dst),
         m AS (SELECT cast(count(*) as bigint) AS m FROM canon),
         deg AS (SELECT src, cast(count(*) as bigint) AS deg
@@ -910,40 +834,12 @@ object GraphOps {
           .orderBy(col("support").desc, col("a"), col("b"))
           .limit(20)
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        canon AS MATERIALIZED (
-          SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-          FROM li x JOIN li y
-            ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        deg AS MATERIALIZED (
-          SELECT id, cast(count(*) as bigint) AS deg FROM (
-            SELECT a AS id FROM canon
-            UNION ALL SELECT b FROM canon) u GROUP BY 1),
-        oriented AS MATERIALIZED (
-          SELECT CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.a ELSE c.b END AS src,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.b ELSE c.a END AS dst,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN db.deg ELSE da.deg END AS ddst
-          FROM canon c
-          JOIN deg da ON da.id = c.a
-          JOIN deg db ON db.id = c.b),
-        tris AS MATERIALIZED (
-          SELECT p.src AS u, p.dst AS v, q.dst AS w
-          FROM oriented p
-          JOIN oriented q ON p.src = q.src
-            AND (p.ddst < q.ddst
-                 OR (p.ddst = q.ddst AND p.dst < q.dst))
-          JOIN oriented r ON r.src = p.dst AND r.dst = q.dst),
+      Some("""WITH """ + sqlCoPurchaseEdges(canonical = true) + ",\n        " +
+          sqlOrientedTriangles("canon") + """,
         edges3 AS (
-          SELECT least(u, v) AS a, greatest(u, v) AS b FROM tris
-          UNION ALL SELECT least(u, w), greatest(u, w) FROM tris
-          UNION ALL SELECT least(v, w), greatest(v, w) FROM tris)
+          SELECT least(u, v) AS a, greatest(u, v) AS b FROM tri
+          UNION ALL SELECT least(u, w), greatest(u, w) FROM tri
+          UNION ALL SELECT least(v, w), greatest(v, w) FROM tri)
         SELECT a, b, cast(count(*) as bigint) AS support
         FROM edges3 GROUP BY 1, 2
         ORDER BY support DESC, a, b LIMIT 20""")),
@@ -994,96 +890,9 @@ object GraphOps {
         traj.toSeq.toDF("round", "edges_before", "edges_after")
           .orderBy(col("round"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        cur0 AS MATERIALIZED (
-          SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-          FROM li x JOIN li y
-            ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        deg1 AS MATERIALIZED (SELECT id, cast(count(*) as bigint) AS deg
-          FROM (SELECT a AS id FROM cur0
-                UNION ALL SELECT b FROM cur0) u GROUP BY 1),
-        o1 AS MATERIALIZED (
-          SELECT CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.a ELSE c.b END AS src,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.b ELSE c.a END AS dst,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN db.deg ELSE da.deg END AS ddst
-          FROM cur0 c JOIN deg1 da ON da.id = c.a
-          JOIN deg1 db ON db.id = c.b),
-        t1 AS MATERIALIZED (
-          SELECT p.src AS u, p.dst AS v, q.dst AS w FROM o1 p
-          JOIN o1 q ON p.src = q.src AND (p.ddst < q.ddst
-            OR (p.ddst = q.ddst AND p.dst < q.dst))
-          JOIN o1 r ON r.src = p.dst AND r.dst = q.dst),
-        s1 AS (SELECT a, b, count(*) AS sup FROM (
-          SELECT least(u, v) AS a, greatest(u, v) AS b FROM t1
-          UNION ALL SELECT least(u, w), greatest(u, w) FROM t1
-          UNION ALL SELECT least(v, w), greatest(v, w) FROM t1) e
-          GROUP BY 1, 2),
-        cur1 AS MATERIALIZED (
-          SELECT c.a, c.b FROM cur0 c
-          JOIN s1 ON s1.a = c.a AND s1.b = c.b AND s1.sup >= 8),
-        deg2 AS MATERIALIZED (SELECT id, cast(count(*) as bigint) AS deg
-          FROM (SELECT a AS id FROM cur1
-                UNION ALL SELECT b FROM cur1) u GROUP BY 1),
-        o2 AS MATERIALIZED (
-          SELECT CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.a ELSE c.b END AS src,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.b ELSE c.a END AS dst,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN db.deg ELSE da.deg END AS ddst
-          FROM cur1 c JOIN deg2 da ON da.id = c.a
-          JOIN deg2 db ON db.id = c.b),
-        t2 AS MATERIALIZED (
-          SELECT p.src AS u, p.dst AS v, q.dst AS w FROM o2 p
-          JOIN o2 q ON p.src = q.src AND (p.ddst < q.ddst
-            OR (p.ddst = q.ddst AND p.dst < q.dst))
-          JOIN o2 r ON r.src = p.dst AND r.dst = q.dst),
-        s2 AS (SELECT a, b, count(*) AS sup FROM (
-          SELECT least(u, v) AS a, greatest(u, v) AS b FROM t2
-          UNION ALL SELECT least(u, w), greatest(u, w) FROM t2
-          UNION ALL SELECT least(v, w), greatest(v, w) FROM t2) e
-          GROUP BY 1, 2),
-        cur2 AS MATERIALIZED (
-          SELECT c.a, c.b FROM cur1 c
-          JOIN s2 ON s2.a = c.a AND s2.b = c.b AND s2.sup >= 8),
-        deg3 AS MATERIALIZED (SELECT id, cast(count(*) as bigint) AS deg
-          FROM (SELECT a AS id FROM cur2
-                UNION ALL SELECT b FROM cur2) u GROUP BY 1),
-        o3 AS MATERIALIZED (
-          SELECT CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.a ELSE c.b END AS src,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.b ELSE c.a END AS dst,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN db.deg ELSE da.deg END AS ddst
-          FROM cur2 c JOIN deg3 da ON da.id = c.a
-          JOIN deg3 db ON db.id = c.b),
-        t3 AS MATERIALIZED (
-          SELECT p.src AS u, p.dst AS v, q.dst AS w FROM o3 p
-          JOIN o3 q ON p.src = q.src AND (p.ddst < q.ddst
-            OR (p.ddst = q.ddst AND p.dst < q.dst))
-          JOIN o3 r ON r.src = p.dst AND r.dst = q.dst),
-        s3 AS (SELECT a, b, count(*) AS sup FROM (
-          SELECT least(u, v) AS a, greatest(u, v) AS b FROM t3
-          UNION ALL SELECT least(u, w), greatest(u, w) FROM t3
-          UNION ALL SELECT least(v, w), greatest(v, w) FROM t3) e
-          GROUP BY 1, 2),
-        cur3 AS MATERIALIZED (
-          SELECT c.a, c.b FROM cur2 c
-          JOIN s3 ON s3.a = c.a AND s3.b = c.b AND s3.sup >= 8)
+      Some("""WITH """ + sqlCoPurchaseEdges(canonical = true) + """,
+        cur0 AS MATERIALIZED (SELECT a, b FROM canon),
+        """ + (1 to 3).map(sqlTrussRound).mkString(",\n        ") + """
         SELECT * FROM (
           SELECT 1 AS round,
             (SELECT cast(count(*) as bigint) FROM cur0) AS edges_before,
@@ -1175,13 +984,7 @@ object GraphOps {
         realias(census).unionAll(realias(unreached))
           .orderBy(col("hop"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-          GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some("""WITH """ + sqlWeightedEdges + """,
         nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges),
         seeds AS (SELECT id FROM nodes ORDER BY id LIMIT 10),
         reach AS MATERIALIZED (
@@ -1246,32 +1049,25 @@ object GraphOps {
         fresh(census).unionAll(fresh(unreached))
           .orderBy(col("d"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT a.l_partkey AS src, b.l_partkey AS dst,
-            1000 // count(*) AS cost
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-          GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some("""WITH """ + sqlWeightedEdges + """,
         nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges),
         seeds AS (SELECT id FROM nodes ORDER BY id LIMIT 10),
         it0 AS (SELECT id, cast(0 as bigint) AS d FROM seeds),
         it1 AS MATERIALIZED (SELECT id, min(d) AS d FROM (
           SELECT * FROM it0 UNION ALL
-          SELECT e.dst, it0.d + e.cost FROM it0
+          SELECT e.dst, it0.d + 1000 // e.w FROM it0
           JOIN edges e ON e.src = it0.id) GROUP BY id),
         it2 AS MATERIALIZED (SELECT id, min(d) AS d FROM (
           SELECT * FROM it1 UNION ALL
-          SELECT e.dst, it1.d + e.cost FROM it1
+          SELECT e.dst, it1.d + 1000 // e.w FROM it1
           JOIN edges e ON e.src = it1.id) GROUP BY id),
         it3 AS MATERIALIZED (SELECT id, min(d) AS d FROM (
           SELECT * FROM it2 UNION ALL
-          SELECT e.dst, it2.d + e.cost FROM it2
+          SELECT e.dst, it2.d + 1000 // e.w FROM it2
           JOIN edges e ON e.src = it2.id) GROUP BY id),
         it4 AS MATERIALIZED (SELECT id, min(d) AS d FROM (
           SELECT * FROM it3 UNION ALL
-          SELECT e.dst, it3.d + e.cost FROM it3
+          SELECT e.dst, it3.d + 1000 // e.w FROM it3
           JOIN edges e ON e.src = it3.id) GROUP BY id)
         SELECT d, cast(count(*) as bigint) AS n_nodes,
           min(id) AS min_id
@@ -1327,13 +1123,7 @@ object GraphOps {
               lit(0L)).as("harmonic_pm"))
           .orderBy(col("hub"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-          GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some("""WITH """ + sqlWeightedEdges + """,
         deg AS (SELECT src, cast(count(*) as bigint) AS deg
           FROM edges GROUP BY src),
         hubs AS (SELECT src AS hub FROM deg
@@ -1559,47 +1349,13 @@ object GraphOps {
       },
       Some {
         val maxUnroll = 12
-        val levels = (1 to maxUnroll).map { k =>
-          val prev = s"cur${k - 1}"
-          s"""deg$k AS MATERIALIZED (
-          SELECT id, cast(count(*) as bigint) AS deg
-          FROM (SELECT a AS id FROM $prev
-                UNION ALL SELECT b FROM $prev) u GROUP BY 1),
-        o$k AS MATERIALIZED (
-          SELECT CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.a ELSE c.b END AS src,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN c.b ELSE c.a END AS dst,
-               CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-                 THEN db.deg ELSE da.deg END AS ddst
-          FROM $prev c JOIN deg$k da ON da.id = c.a
-          JOIN deg$k db ON db.id = c.b),
-        t$k AS MATERIALIZED (
-          SELECT p.src AS u, p.dst AS v, q.dst AS w FROM o$k p
-          JOIN o$k q ON p.src = q.src AND (p.ddst < q.ddst
-            OR (p.ddst = q.ddst AND p.dst < q.dst))
-          JOIN o$k r ON r.src = p.dst AND r.dst = q.dst),
-        s$k AS (SELECT a, b, count(*) AS sup FROM (
-          SELECT least(u, v) AS a, greatest(u, v) AS b FROM t$k
-          UNION ALL SELECT least(u, w), greatest(u, w) FROM t$k
-          UNION ALL SELECT least(v, w), greatest(v, w) FROM t$k) e
-          GROUP BY 1, 2),
-        cur$k AS MATERIALIZED (
-          SELECT c.a, c.b FROM $prev c
-          JOIN s$k ON s$k.a = c.a AND s$k.b = c.b AND s$k.sup >= 8)"""
-        }.mkString(",\n        ")
+        val levels = (1 to maxUnroll).map(sqlTrussRound)
+          .mkString(",\n        ")
         val cnts = (0 to maxUnroll).map(k =>
           s"SELECT $k AS r, cast(count(*) as bigint) AS n FROM cur$k")
           .mkString("\n          UNION ALL ")
-        s"""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        cur0 AS MATERIALIZED (
-          SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-          FROM li x JOIN li y
-            ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+        s"""WITH ${sqlCoPurchaseEdges(canonical = true)},
+        cur0 AS MATERIALIZED (SELECT a, b FROM canon),
         $levels,
         cnts AS (
           $cnts),
@@ -1653,18 +1409,13 @@ object GraphOps {
               .as("assortativity"))
           .orderBy(col("n_pairs"))
       },
-      Some("""WITH li AS (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        e AS (
-          SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-            AND a.l_partkey <> b.l_partkey),
+      Some("""WITH """ + sqlCoPurchaseEdges() + """,
         deg AS (
           SELECT src, cast(count(*) as bigint) AS deg
-          FROM e GROUP BY 1),
+          FROM edges GROUP BY 1),
         p AS (
           SELECT da.deg AS da, db.deg AS db
-          FROM e JOIN deg da ON da.src = e.src
+          FROM edges e JOIN deg da ON da.src = e.src
           JOIN deg db ON db.src = e.dst),
         sums AS (
           SELECT cast(count(*) as bigint) AS n_pairs,
@@ -1715,42 +1466,13 @@ object GraphOps {
           .select(col("id").as("part_id"), col("deg"), col("tri"),
             col("clustering"))
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        canon AS MATERIALIZED (
-          SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-          FROM li x JOIN li y
-            ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        deg AS MATERIALIZED (
-          SELECT id, cast(count(*) as bigint) AS deg FROM (
-            SELECT a AS id FROM canon
-            UNION ALL SELECT b AS id FROM canon) u GROUP BY id),
-        o AS MATERIALIZED (
-          SELECT
-            CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-              THEN c.a ELSE c.b END AS src,
-            CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-              THEN c.b ELSE c.a END AS dst,
-            CASE WHEN da.deg < db.deg
-                   OR (da.deg = db.deg AND c.a < c.b)
-              THEN db.deg ELSE da.deg END AS ddst
-          FROM canon c
-          JOIN deg da ON da.id = c.a
-          JOIN deg db ON db.id = c.b),
-        tri3 AS MATERIALIZED (
-          SELECT w1.src AS u, w1.dst AS v, w2.dst AS w
-          FROM o w1
-          JOIN o w2 ON w1.src = w2.src
-            AND (w1.ddst < w2.ddst
-                 OR (w1.ddst = w2.ddst AND w1.dst < w2.dst))
-          JOIN o e ON e.src = w1.dst AND e.dst = w2.dst),
+      Some("""WITH """ + sqlCoPurchaseEdges(canonical = true) + ",\n        " +
+          sqlOrientedTriangles("canon") + """,
         tric AS (
           SELECT id, cast(count(*) as bigint) AS tri FROM (
-            SELECT u AS id FROM tri3
-            UNION ALL SELECT v AS id FROM tri3
-            UNION ALL SELECT w AS id FROM tri3) z
+            SELECT u AS id FROM tri
+            UNION ALL SELECT v AS id FROM tri
+            UNION ALL SELECT w AS id FROM tri) z
           GROUP BY id)
         SELECT d.id AS part_id, d.deg,
           cast(coalesce(t.tri, 0) as bigint) AS tri,
@@ -1816,13 +1538,7 @@ object GraphOps {
         }
         out.orderBy(col("t"))
       },
-      Some(s"""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT a.l_partkey AS src, b.l_partkey AS dst
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-          GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH $sqlWeightedEdges,
         nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges),
         r AS MATERIALIZED (
           WITH RECURSIVE r(v, id, dd) AS (
@@ -1900,14 +1616,7 @@ object GraphOps {
           .orderBy(col("cn").desc, col("a"), col("b"))
           .limit(20)
       },
-      Some("""WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        edges AS MATERIALIZED (
-          SELECT a.l_partkey AS src, b.l_partkey AS dst,
-            cast(count(*) as bigint) AS w
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-          GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some("""WITH """ + sqlWeightedEdges + """,
         capped AS (
           SELECT src, dst FROM (
             SELECT src, dst,

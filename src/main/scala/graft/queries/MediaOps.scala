@@ -15,6 +15,59 @@ import org.apache.spark.sql.functions._
   */
 object MediaOps {
 
+  /** DuckDB twin of `Multimodal.synthesizeBmp`'s gray plane and
+    * `Multimodal.imageOtsu`'s candidate splits: CTEs `p` (per-image
+    * size and payload), `ix` (one row per pixel index i), `gr(doc_id,
+    * w, h, i, gray)`, `hist`, `cum` (cumulative class sums per gray
+    * level) and `cand` (each non-degenerate split's HUGEINT numerator
+    * `a` and denominator `d` of the between-class separation).
+    */
+  private val sqlOtsuCandidates: String = """p AS (
+          SELECT doc_id, cast(8 + doc_id % 24 as int) AS w,
+            cast(8 + (doc_id * 7) % 24 as int) AS h,
+            length(text) AS n, text
+          FROM documents),
+        ix AS (
+          SELECT doc_id, w, h, n, text, unnest(range(0, w * h)) AS i
+          FROM p),
+        gr AS MATERIALIZED (
+          SELECT doc_id, w, h, i,
+            ((CASE WHEN n = 0 THEN 0 ELSE
+                unicode(substr(text, cast(i % n as int) + 1, 1)) % 256 END)
+             + cast((i * 31 + doc_id) % 256 as bigint)
+             + cast((i + (CASE WHEN n = 0 THEN 0 ELSE
+                 unicode(substr(text, cast(i % n as int) + 1, 1)) % 256
+                 END)) % 256 as bigint)) // 3 AS gray
+          FROM ix),
+        hist AS (
+          SELECT doc_id, w, h, gray, cast(count(*) as bigint) AS c
+          FROM gr GROUP BY 1, 2, 3, 4),
+        cum AS (
+          SELECT doc_id, w, h, gray,
+            sum(c) OVER (PARTITION BY doc_id ORDER BY gray) AS w0,
+            sum(gray * c) OVER (PARTITION BY doc_id ORDER BY gray) AS s0,
+            sum(c) OVER (PARTITION BY doc_id) AS n_px,
+            sum(gray * c) OVER (PARTITION BY doc_id) AS s_all
+          FROM hist),
+        cand AS (
+          SELECT doc_id, w, h, n_px, s_all, gray,
+            cast(s0 * (n_px - w0) - (s_all - s0) * w0 as hugeint) AS a,
+            cast(w0 * (n_px - w0) as hugeint) AS d,
+            cast(w0 as hugeint) AS w0h, cast(s0 as hugeint) AS s0h
+          FROM cum WHERE w0 < n_px)"""
+
+  /** [[sqlOtsuCandidates]] plus `th(doc_id, t)`: each image's Otsu
+    * threshold (largest a^2/d, compared as the HUGEINT floor of
+    * a^2 * 10^12 / d; ties to the smallest gray).
+    */
+  private val sqlOtsuThreshold: String = sqlOtsuCandidates + """,
+        th AS MATERIALIZED (
+          SELECT doc_id, gray AS t FROM (
+            SELECT doc_id, gray, row_number() OVER (PARTITION BY doc_id
+              ORDER BY (a * a * cast(1000000000000 as hugeint)) // d DESC,
+                gray ASC) AS rn
+            FROM cand) WHERE rn = 1)"""
+
   def queries: Seq[(String, Q)] = Seq(
 
     "mm01_media_meta" -> Q(
@@ -601,40 +654,7 @@ object MediaOps {
       (s, d) =>
         Multimodal.imageOtsu(Multimodal.synthesizeBmp(s, d)).toDF()
           .orderBy(col("media_id")),
-      Some("""WITH p AS (
-          SELECT doc_id, cast(8 + doc_id % 24 as int) AS w,
-            cast(8 + (doc_id * 7) % 24 as int) AS h,
-            length(text) AS n, text
-          FROM documents),
-        ix AS (
-          SELECT doc_id, w, h, n, text,
-            unnest(range(0, w * h)) AS i
-          FROM p),
-        gr AS (
-          SELECT doc_id, w, h,
-            ((CASE WHEN n = 0 THEN 0 ELSE
-                unicode(substr(text, cast(i % n as int) + 1, 1)) % 256 END)
-             + cast((i * 31 + doc_id) % 256 as bigint)
-             + cast((i + (CASE WHEN n = 0 THEN 0 ELSE
-                 unicode(substr(text, cast(i % n as int) + 1, 1)) % 256
-                 END)) % 256 as bigint)) // 3 AS gray
-          FROM ix),
-        hist AS (
-          SELECT doc_id, w, h, gray, cast(count(*) as bigint) AS c
-          FROM gr GROUP BY 1, 2, 3, 4),
-        cum AS (
-          SELECT doc_id, w, h, gray,
-            sum(c) OVER (PARTITION BY doc_id ORDER BY gray) AS w0,
-            sum(gray * c) OVER (PARTITION BY doc_id ORDER BY gray) AS s0,
-            sum(c) OVER (PARTITION BY doc_id) AS n_px,
-            sum(gray * c) OVER (PARTITION BY doc_id) AS s_all
-          FROM hist),
-        cand AS (
-          SELECT doc_id, w, h, n_px, s_all, gray,
-            cast(s0 * (n_px - w0) - (s_all - s0) * w0 as hugeint) AS a,
-            cast(w0 * (n_px - w0) as hugeint) AS d,
-            cast(w0 as hugeint) AS w0h, cast(s0 as hugeint) AS s0h
-          FROM cum WHERE w0 < n_px),
+      Some("""WITH """ + sqlOtsuCandidates + """,
         rk AS (
           -- exact argmax without a fold (list_reduce miscomputes list
           -- states beyond 2-3 slots, the mm09 bug class): scale each
@@ -677,44 +697,7 @@ object MediaOps {
       (s, d) =>
         Multimodal.imageEuler(Multimodal.synthesizeBmp(s, d)).toDF()
           .orderBy(col("media_id")),
-      Some("""WITH p AS (
-          SELECT doc_id, cast(8 + doc_id % 24 as int) AS w,
-            cast(8 + (doc_id * 7) % 24 as int) AS h,
-            length(text) AS n, text
-          FROM documents),
-        ix AS (
-          SELECT doc_id, w, h, n, text, unnest(range(0, w * h)) AS i
-          FROM p),
-        gr AS MATERIALIZED (
-          SELECT doc_id, w, h, i,
-            ((CASE WHEN n = 0 THEN 0 ELSE
-                unicode(substr(text, cast(i % n as int) + 1, 1)) % 256 END)
-             + cast((i * 31 + doc_id) % 256 as bigint)
-             + cast((i + (CASE WHEN n = 0 THEN 0 ELSE
-                 unicode(substr(text, cast(i % n as int) + 1, 1)) % 256
-                 END)) % 256 as bigint)) // 3 AS gray
-          FROM ix),
-        hist AS (
-          SELECT doc_id, w, h, gray, cast(count(*) as bigint) AS c
-          FROM gr GROUP BY 1, 2, 3, 4),
-        cum AS (
-          SELECT doc_id, gray,
-            sum(c) OVER (PARTITION BY doc_id ORDER BY gray) AS w0,
-            sum(gray * c) OVER (PARTITION BY doc_id ORDER BY gray) AS s0,
-            sum(c) OVER (PARTITION BY doc_id) AS n_px,
-            sum(gray * c) OVER (PARTITION BY doc_id) AS s_all
-          FROM hist),
-        cand AS (
-          SELECT doc_id, gray,
-            cast(s0 * (n_px - w0) - (s_all - s0) * w0 as hugeint) AS a,
-            cast(w0 * (n_px - w0) as hugeint) AS d
-          FROM cum WHERE w0 < n_px),
-        th AS MATERIALIZED (
-          SELECT doc_id, gray AS t FROM (
-            SELECT doc_id, gray, row_number() OVER (PARTITION BY doc_id
-              ORDER BY (a * a * cast(1000000000000 as hugeint)) // d DESC,
-                gray ASC) AS rn
-            FROM cand) WHERE rn = 1),
+      Some("""WITH """ + sqlOtsuThreshold + """,
         fg AS MATERIALIZED (
           SELECT g.doc_id, g.w, g.h, g.i
           FROM gr g JOIN th ON th.doc_id = g.doc_id
@@ -769,44 +752,7 @@ object MediaOps {
       (s, d) =>
         Multimodal.imageMoments(Multimodal.synthesizeBmp(s, d)).toDF()
           .orderBy(col("media_id")),
-      Some("""WITH p AS (
-          SELECT doc_id, cast(8 + doc_id % 24 as int) AS w,
-            cast(8 + (doc_id * 7) % 24 as int) AS h,
-            length(text) AS n, text
-          FROM documents),
-        ix AS (
-          SELECT doc_id, w, h, n, text, unnest(range(0, w * h)) AS i
-          FROM p),
-        gr AS MATERIALIZED (
-          SELECT doc_id, w, h, i,
-            ((CASE WHEN n = 0 THEN 0 ELSE
-                unicode(substr(text, cast(i % n as int) + 1, 1)) % 256 END)
-             + cast((i * 31 + doc_id) % 256 as bigint)
-             + cast((i + (CASE WHEN n = 0 THEN 0 ELSE
-                 unicode(substr(text, cast(i % n as int) + 1, 1)) % 256
-                 END)) % 256 as bigint)) // 3 AS gray
-          FROM ix),
-        hist AS (
-          SELECT doc_id, w, h, gray, cast(count(*) as bigint) AS c
-          FROM gr GROUP BY 1, 2, 3, 4),
-        cum AS (
-          SELECT doc_id, gray,
-            sum(c) OVER (PARTITION BY doc_id ORDER BY gray) AS w0,
-            sum(gray * c) OVER (PARTITION BY doc_id ORDER BY gray) AS s0,
-            sum(c) OVER (PARTITION BY doc_id) AS n_px,
-            sum(gray * c) OVER (PARTITION BY doc_id) AS s_all
-          FROM hist),
-        cand AS (
-          SELECT doc_id, gray,
-            cast(s0 * (n_px - w0) - (s_all - s0) * w0 as hugeint) AS a,
-            cast(w0 * (n_px - w0) as hugeint) AS d
-          FROM cum WHERE w0 < n_px),
-        th AS MATERIALIZED (
-          SELECT doc_id, gray AS t FROM (
-            SELECT doc_id, gray, row_number() OVER (PARTITION BY doc_id
-              ORDER BY (a * a * cast(1000000000000 as hugeint)) // d DESC,
-                gray ASC) AS rn
-            FROM cand) WHERE rn = 1),
+      Some("""WITH """ + sqlOtsuThreshold + """,
         fg AS (
           SELECT g.doc_id, g.w, g.h, th.t,
             cast(g.i % g.w as bigint) AS x,

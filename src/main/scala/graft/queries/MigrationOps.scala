@@ -59,6 +59,23 @@ object MigrationOps {
 
   private val loaderCte: String = loaderCteFor(fixturesDir)
 
+  /** One of [[findingsCte]]'s column-type advisories (severity 1, lock
+    * NONE): a CREATE TABLE, or an ALTER TABLE … ADD COLUMN, whose text
+    * matches the regex `typePattern`; the target is the created or
+    * altered table.
+    */
+  private def sqlColumnTypeRule(rule: String, typePattern: String): String =
+    s"""SELECT version, name, stmt_index, '$rule', 1,
+          coalesce(nullif(regexp_extract(s,
+            '(?i)^\\s*CREATE\\s+(?:TEMP\\s+|TEMPORARY\\s+|UNLOGGED\\s+)?TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)', 1), ''),
+            regexp_extract(s, '(?i)^\\s*ALTER\\s+TABLE\\s+(?:ONLY\\s+)?(?:IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)', 1)),
+          'NONE'
+        FROM stmts
+        WHERE (regexp_matches(s, '(?i)^\\s*CREATE\\s+(TEMP\\s+|TEMPORARY\\s+|UNLOGGED\\s+)?TABLE\\b')
+               OR (regexp_matches(s, '(?i)^\\s*ALTER\\s+TABLE\\b')
+                   AND regexp_matches(s, '(?i)\\bADD\\s+COLUMN\\b')))
+          AND regexp_matches(s, '$typePattern')"""
+
   /** Oracle mini-rule-engine: DuckDB re-derives the analyzer findings
     * independently — regexp classification of each fixture statement plus
     * the statement-triggered danger rules (all 21 with a fixture
@@ -241,38 +258,14 @@ object MigrationOps {
           AND regexp_matches(s, '(?i)\\bADD\\s+(CONSTRAINT\\s+\\S+\\s+)?UNIQUE\\b')
           AND NOT regexp_matches(s, '(?i)\\bUSING\\s+INDEX\\b')
         UNION ALL
-        SELECT version, name, stmt_index, 'prefer-bigint-key', 1,
-          coalesce(nullif(regexp_extract(s,
-            '(?i)^\\s*CREATE\\s+(?:TEMP\\s+|TEMPORARY\\s+|UNLOGGED\\s+)?TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)', 1), ''),
-            regexp_extract(s, '(?i)^\\s*ALTER\\s+TABLE\\s+(?:ONLY\\s+)?(?:IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)', 1)),
-          'NONE'
-        FROM stmts
-        WHERE (regexp_matches(s, '(?i)^\\s*CREATE\\s+(TEMP\\s+|TEMPORARY\\s+|UNLOGGED\\s+)?TABLE\\b')
-               OR (regexp_matches(s, '(?i)^\\s*ALTER\\s+TABLE\\b')
-                   AND regexp_matches(s, '(?i)\\bADD\\s+COLUMN\\b')))
-          AND regexp_matches(s, '(?i)[(,\\s]\\s*(id|[a-z_]+_id)\\s+(int|integer|int4|serial)\\b')
+        ${sqlColumnTypeRule("prefer-bigint-key",
+          "(?i)[(,\\s]\\s*(id|[a-z_]+_id)\\s+(int|integer|int4|serial)\\b")}
         UNION ALL
-        SELECT version, name, stmt_index, 'prefer-timestamptz', 1,
-          coalesce(nullif(regexp_extract(s,
-            '(?i)^\\s*CREATE\\s+(?:TEMP\\s+|TEMPORARY\\s+|UNLOGGED\\s+)?TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)', 1), ''),
-            regexp_extract(s, '(?i)^\\s*ALTER\\s+TABLE\\s+(?:ONLY\\s+)?(?:IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)', 1)),
-          'NONE'
-        FROM stmts
-        WHERE (regexp_matches(s, '(?i)^\\s*CREATE\\s+(TEMP\\s+|TEMPORARY\\s+|UNLOGGED\\s+)?TABLE\\b')
-               OR (regexp_matches(s, '(?i)^\\s*ALTER\\s+TABLE\\b')
-                   AND regexp_matches(s, '(?i)\\bADD\\s+COLUMN\\b')))
-          AND regexp_matches(s, '(?i)\\stimestamp\\s*(\\(\\s*\\d+\\s*\\))?(\\s+without\\s+time\\s+zone)?(\\s*[,)]|\\s+(not|null|default|primary|unique|references|check|constraint|generated|collate)\\b|\\s*$$)')
+        ${sqlColumnTypeRule("prefer-timestamptz",
+          "(?i)\\stimestamp\\s*(\\(\\s*\\d+\\s*\\))?(\\s+without\\s+time\\s+zone)?(\\s*[,)]|\\s+(not|null|default|primary|unique|references|check|constraint|generated|collate)\\b|\\s*$)")}
         UNION ALL
-        SELECT version, name, stmt_index, 'ban-char-field', 1,
-          coalesce(nullif(regexp_extract(s,
-            '(?i)^\\s*CREATE\\s+(?:TEMP\\s+|TEMPORARY\\s+|UNLOGGED\\s+)?TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)', 1), ''),
-            regexp_extract(s, '(?i)^\\s*ALTER\\s+TABLE\\s+(?:ONLY\\s+)?(?:IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_.]*)', 1)),
-          'NONE'
-        FROM stmts
-        WHERE (regexp_matches(s, '(?i)^\\s*CREATE\\s+(TEMP\\s+|TEMPORARY\\s+|UNLOGGED\\s+)?TABLE\\b')
-               OR (regexp_matches(s, '(?i)^\\s*ALTER\\s+TABLE\\b')
-                   AND regexp_matches(s, '(?i)\\bADD\\s+COLUMN\\b')))
-          AND regexp_matches(s, '(?i)\\schar(acter)?\\s*\\(\\s*\\d+\\s*\\)')
+        ${sqlColumnTypeRule("ban-char-field",
+          "(?i)\\schar(acter)?\\s*\\(\\s*\\d+\\s*\\)")}
         UNION ALL
         SELECT version, name, stmt_index, 'unclassified-alter', 1,
           '', 'UNKNOWN'

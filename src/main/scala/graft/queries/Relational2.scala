@@ -21,6 +21,30 @@ import Catalog._
   */
 object Relational2 {
 
+  /** DuckDB twin of the orders table q88's MERGE leaves (q88, q105,
+    * q106, q108): CTEs `seed` (version 1, o_orderkey % 3 = 0), `src`
+    * (the merge source, o_orderkey % 2 = 0 at 1.25× the price) and
+    * `merged(o_orderkey, status, total)` (version 2: matches updated,
+    * o_orderkey % 30 = 0 deleted, the rest of the source inserted).
+    */
+  private val sqlMergedOrders: String = """seed AS (
+          SELECT o_orderkey, 'seed' AS status, o_totalprice AS total
+          FROM orders WHERE o_orderkey % 3 = 0),
+        src AS (
+          SELECT o_orderkey, 'merged' AS status,
+            o_totalprice * 1.25 AS total
+          FROM orders WHERE o_orderkey % 2 = 0),
+        merged AS (
+          SELECT t.o_orderkey, src.status, src.total
+          FROM seed t JOIN src ON src.o_orderkey = t.o_orderkey
+          WHERE t.o_orderkey % 30 <> 0
+          UNION ALL
+          SELECT t.o_orderkey, t.status, t.total FROM seed t
+          WHERE t.o_orderkey NOT IN (SELECT o_orderkey FROM src)
+          UNION ALL
+          SELECT src.o_orderkey, src.status, src.total FROM src
+          WHERE src.o_orderkey NOT IN (SELECT o_orderkey FROM seed))"""
+
   def queries: Seq[(String, Q)] = Seq(
 
     // ------------------------------------------------------------------
@@ -2148,23 +2172,7 @@ object Relational2 {
             VALUES (s.o_orderkey, s.status, s.total)""")
         s.table(tbl).orderBy(col("o_orderkey"))
       },
-      Some("""WITH seed AS (
-          SELECT o_orderkey, 'seed' AS status, o_totalprice AS total
-          FROM orders WHERE o_orderkey % 3 = 0),
-        src AS (
-          SELECT o_orderkey, 'merged' AS status,
-            o_totalprice * 1.25 AS total
-          FROM orders WHERE o_orderkey % 2 = 0),
-        merged AS (
-          SELECT t.o_orderkey, src.status, src.total
-          FROM seed t JOIN src ON src.o_orderkey = t.o_orderkey
-          WHERE t.o_orderkey % 30 <> 0
-          UNION ALL
-          SELECT t.o_orderkey, t.status, t.total FROM seed t
-          WHERE t.o_orderkey NOT IN (SELECT o_orderkey FROM src)
-          UNION ALL
-          SELECT src.o_orderkey, src.status, src.total FROM src
-          WHERE src.o_orderkey NOT IN (SELECT o_orderkey FROM seed))
+      Some("""WITH """ + sqlMergedOrders + """
         SELECT o_orderkey, status, total FROM merged
         ORDER BY o_orderkey""")),
 
@@ -2895,25 +2903,12 @@ object Relational2 {
               lit("update_postimage").as("change_type")))
           .orderBy(col("o_orderkey"), col("change_type"))
       },
-      Some("""WITH v1 AS (
-          SELECT o_orderkey, 'seed' AS status, o_totalprice AS total
-          FROM orders WHERE o_orderkey % 3 = 0),
-        v2 AS (
-          SELECT o_orderkey,
-            CASE WHEN o_orderkey % 6 = 0 THEN 'merged'
-              WHEN o_orderkey % 3 = 0 THEN 'seed'
-              ELSE 'merged' END AS status,
-            CASE WHEN o_orderkey % 6 = 0 THEN o_totalprice * 1.25
-              WHEN o_orderkey % 3 = 0 THEN o_totalprice
-              ELSE o_totalprice * 1.25 END AS total
-          FROM orders
-          WHERE (o_orderkey % 3 = 0 OR o_orderkey % 2 = 0)
-            AND o_orderkey % 30 <> 0),
+      Some("""WITH """ + sqlMergedOrders + """,
         j AS (
           SELECT coalesce(v1.o_orderkey, v2.o_orderkey) AS o_orderkey,
             v1.status AS pre_status, v1.total AS pre_total,
             v2.status AS post_status, v2.total AS post_total
-          FROM v1 FULL OUTER JOIN v2 ON v1.o_orderkey = v2.o_orderkey)
+          FROM seed v1 FULL OUTER JOIN merged v2 ON v1.o_orderkey = v2.o_orderkey)
         SELECT * FROM (
           SELECT o_orderkey, pre_status AS status, pre_total AS total,
             'delete' AS change_type
@@ -2975,23 +2970,7 @@ object Relational2 {
             VALUES (s.o_orderkey, s.status, s.total)""")
         s.table(tbl).orderBy(col("o_orderkey"))
       },
-      Some("""WITH seed AS (
-          SELECT o_orderkey, 'seed' AS status, o_totalprice AS total
-          FROM orders WHERE o_orderkey % 3 = 0),
-        src AS (
-          SELECT o_orderkey, 'merged' AS status,
-            o_totalprice * 1.25 AS total
-          FROM orders WHERE o_orderkey % 2 = 0),
-        merged AS (
-          SELECT t.o_orderkey, src.status, src.total
-          FROM seed t JOIN src ON src.o_orderkey = t.o_orderkey
-          WHERE t.o_orderkey % 30 <> 0
-          UNION ALL
-          SELECT t.o_orderkey, t.status, t.total FROM seed t
-          WHERE t.o_orderkey NOT IN (SELECT o_orderkey FROM src)
-          UNION ALL
-          SELECT src.o_orderkey, src.status, src.total FROM src
-          WHERE src.o_orderkey NOT IN (SELECT o_orderkey FROM seed))
+      Some("""WITH """ + sqlMergedOrders + """
         SELECT o_orderkey, status, total FROM merged
         ORDER BY o_orderkey""")),
 
@@ -3153,24 +3132,11 @@ object Relational2 {
           .unionByName(mism)
           .orderBy(col("leg"), col("status"))
       },
-      Some("""WITH v1 AS (
-          SELECT o_orderkey, 'seed' AS status, o_totalprice AS total
-          FROM orders WHERE o_orderkey % 3 = 0),
-        v2 AS (
-          SELECT o_orderkey,
-            CASE WHEN o_orderkey % 6 = 0 THEN 'merged'
-              WHEN o_orderkey % 3 = 0 THEN 'seed'
-              ELSE 'merged' END AS status,
-            CASE WHEN o_orderkey % 6 = 0 THEN o_totalprice * 1.25
-              WHEN o_orderkey % 3 = 0 THEN o_totalprice
-              ELSE o_totalprice * 1.25 END AS total
-          FROM orders
-          WHERE (o_orderkey % 3 = 0 OR o_orderkey % 2 = 0)
-            AND o_orderkey % 30 <> 0),
+      Some("""WITH """ + sqlMergedOrders + """,
         j AS (
           SELECT v1.status AS pre_status, v1.total AS pre_total,
             v2.status AS post_status, v2.total AS post_total
-          FROM v1 FULL OUTER JOIN v2 ON v1.o_orderkey = v2.o_orderkey),
+          FROM seed v1 FULL OUTER JOIN merged v2 ON v1.o_orderkey = v2.o_orderkey),
         changes AS (
           SELECT pre_status AS status, pre_total AS total, -1 AS w
           FROM j WHERE post_status IS NULL
@@ -3188,7 +3154,7 @@ object Relational2 {
         v1agg AS (
           SELECT status, cast(count(*) as bigint) AS n1,
             sum(cast(total as decimal(24,6))) AS t1
-          FROM v1 GROUP BY status),
+          FROM seed GROUP BY status),
         dagg AS (
           SELECT status, cast(sum(w) as bigint) AS dn,
             sum(cast(total as decimal(24,6)) * w) AS dt
@@ -3204,7 +3170,7 @@ object Relational2 {
           SELECT status, cast(count(*) as bigint) AS n_rows,
             cast(sum(cast(total as decimal(24,6))) as double)
               AS total_sum
-          FROM v2 GROUP BY status),
+          FROM merged GROUP BY status),
         mism AS (
           SELECT cast(count(*) as bigint) AS n FROM direct a
           FULL OUTER JOIN maintained b ON b.status = a.status

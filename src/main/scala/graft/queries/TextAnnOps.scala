@@ -133,6 +133,61 @@ object TextAnnOps {
     bm25ScoreTerms(p, p.qterms.withColumn("w", lit(1.0)))
   }
 
+  /** DuckDB twin of [[bm25Parts]]: CTEs `t(doc_id, toks)`, `bg` (adds
+    * the bigram list `bgs`), `tok`, `tf(doc_id, term, tf)`,
+    * `dl(doc_id, dl)`, `dfc(term, df)`, `tot(n_docs, sum_dl)` and
+    * `qterms(qid, qdoc, term, w)` (the x15 picks, w = 1.0).
+    */
+  private val sqlBm25Parts: String = """t AS (
+          SELECT doc_id,
+            string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS toks
+          FROM documents),
+        bg AS (
+          SELECT doc_id, toks,
+            CASE WHEN len(toks) >= 2 THEN
+              list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
+            ELSE [] END AS bgs
+          FROM t),
+        tok AS (SELECT doc_id, unnest(bgs) AS term FROM bg),
+        tf AS (
+          SELECT doc_id, term, cast(count(*) as bigint) AS tf
+          FROM tok GROUP BY doc_id, term),
+        dl AS (SELECT doc_id, cast(len(bgs) as bigint) AS dl FROM bg),
+        dfc AS (
+          SELECT term, cast(count(*) as bigint) AS df FROM tf GROUP BY term),
+        tot AS (
+          SELECT cast(count(*) as bigint) AS n_docs,
+            cast(sum(dl) as bigint) AS sum_dl FROM dl),
+        qterms AS (
+          SELECT (doc_id // 97) AS qid, doc_id AS qdoc,
+            unnest(list_distinct(bgs[1:5])) AS term,
+            cast(1.0 as double) AS w
+          FROM bg WHERE doc_id % 97 = 0 AND doc_id // 97 <= 4)"""
+
+  /** DuckDB twin of [[bm25ScoreTerms]]: a SELECT of (qid, doc_id,
+    * score, n_terms) over [[sqlBm25Parts]]'s CTEs for a weighted term
+    * relation `terms(qid, qdoc, term, w)`.
+    */
+  private def sqlBm25Scores(terms: String): String = s"""SELECT qid, doc_id,
+            list_reduce(list_prepend(0.0, list(sc ORDER BY term)),
+              (a, b) -> a + b) AS score,
+            cast(count(*) as bigint) AS n_terms
+          FROM (
+            SELECT q.qid, q.term, tf.doc_id,
+              (ln(1.0 + (cast(t.n_docs - dfc.df as double) + 0.5) /
+                  (cast(dfc.df as double) + 0.5))
+                * ((cast(tf.tf as double) * 2.2) /
+                   (cast(tf.tf as double) + 1.2 * (0.25 + 0.75 *
+                     (cast(dl.dl as double) /
+                      (cast(t.sum_dl as double) / cast(t.n_docs as double)))))))
+                * q.w AS sc
+            FROM $terms q
+            JOIN tf ON tf.term = q.term
+            JOIN dl ON dl.doc_id = tf.doc_id
+            JOIN dfc ON dfc.term = q.term, tot t
+            WHERE tf.doc_id <> q.qdoc)
+          GROUP BY qid, doc_id"""
+
   /** Per-document 16-dim feature-hashed integer vector + its squared
     * norm — x43's hashing-trick embedding at DOCUMENT granularity
     * (each token md5-hashed once, the 16 per-dim modular sums unrolled
@@ -157,6 +212,56 @@ object TextAnnOps {
       aggregate(zip_with(col("v"), col("v"), (x, y) => x * y), lit(0L),
         (acc, x) => acc + x))
   }
+
+  /** DuckDB twin of [[pqAdcScored]]: CTEs from `e` (the quantized
+    * embeddings) through `codes`, `lut`, `ad` and `ex`, ending in
+    * `scored(vec_id, approx_dist, exact_dist)` over every vector but
+    * the query (vec_id 0).
+    */
+  private val sqlPqAdcScored: String = """e AS MATERIALIZED (
+          SELECT vec_id,
+            list_transform(embedding, x ->
+              cast(floor(cast(x as double) * 1000) as bigint)) AS qv
+          FROM embeddings),
+        q AS (SELECT qv AS quv FROM e WHERE vec_id = 0),
+        subs AS (SELECT unnest(range(0, 8)) AS sub),
+        cb0 AS MATERIALIZED (
+          SELECT s.sub, c.vec_id AS cid,
+            list_transform(range(1, 9), j ->
+              c.qv[cast(s.sub * 8 + j as int)]) AS cv
+          FROM e c, subs s WHERE c.vec_id < 16),
+        """ + sqlTrainPqCodebooks("e", "qv") + """,
+        codes AS MATERIALIZED (
+          SELECT vec_id, sub, cid AS code FROM (
+            SELECT e.vec_id, c.sub, c.cid,
+              row_number() OVER (PARTITION BY e.vec_id, c.sub ORDER BY
+                list_sum(list_transform(range(1, 9), j ->
+                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
+                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]))),
+                c.cid) AS rn
+            FROM e, cb c) x WHERE rn = 1),
+        lut AS MATERIALIZED (
+          SELECT c.sub, c.cid,
+            list_sum(list_transform(range(1, 9), j ->
+              (q.quv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
+              (q.quv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)])))
+              AS d
+          FROM cb c, q),
+        ad AS (
+          SELECT codes.vec_id, cast(sum(l.d) as bigint) AS approx_dist
+          FROM codes JOIN lut l
+            ON l.sub = codes.sub AND l.cid = codes.code
+          GROUP BY codes.vec_id),
+        ex AS (
+          SELECT e.vec_id,
+            cast(list_sum(list_transform(range(1, 65), p ->
+              (e.qv[p] - q.quv[p]) * (e.qv[p] - q.quv[p]))) as bigint)
+              AS exact_dist
+          FROM e, q),
+        scored AS (
+          SELECT a.vec_id, a.approx_dist, x.exact_dist
+          FROM ad a JOIN ex x ON x.vec_id = a.vec_id
+          WHERE a.vec_id <> 0)"""
 
   /** s06's PQ-ADC scored frame, factored for reuse (s06 = its ADC
     * top-10; s22 = the two-stage refine): (vec_id, approx_dist,
@@ -352,16 +457,8 @@ object TextAnnOps {
           .orderBy(col("cos").desc, col("vec_id"))
           .limit(10)
       },
-      Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings),
-        n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
-        asgn AS (
-          SELECT vec_id, v, nrm, cent_id,
-            row_number() OVER (PARTITION BY vec_id
-              ORDER BY list_dot_product(v, cv) / nrm / cnrm DESC, cent_id)
-              AS rn
-          FROM n, c),
-        assigned AS (SELECT vec_id, v, nrm, cent_id FROM asgn WHERE rn = 1),
+      Some("""WITH """ + sqlEmbNorms + ",\n        " +
+          sqlAssignToCodebook() + """,
         q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0),
         probe AS (
           SELECT cent_id FROM c, q
@@ -424,17 +521,8 @@ object TextAnnOps {
               col("k_returned"), col("recall10"))
         }.reduce(_ unionAll _).orderBy(col("nprobe"))
       },
-      Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings),
-        n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
-        asgn AS (
-          SELECT vec_id, v, nrm, cent_id,
-            row_number() OVER (PARTITION BY vec_id
-              ORDER BY list_dot_product(v, cv) / nrm / cnrm DESC, cent_id)
-              AS rn
-          FROM n, c),
-        assigned AS (SELECT vec_id, v, nrm, cent_id FROM asgn
-          WHERE rn = 1),
+      Some("""WITH """ + sqlEmbNorms + ",\n        " +
+          sqlAssignToCodebook() + """,
         q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0),
         ranked AS (
           SELECT cent_id, row_number() OVER (
@@ -508,82 +596,7 @@ object TextAnnOps {
     "s15_nn_descent" -> Q(
       (s, d) => nnDescentReport(emb(s, d), nCents = 8),
       bench = true,
-      oracle = Some("""WITH e AS (SELECT vec_id,
-            list_transform(embedding, x -> cast(x as double)) AS v
-          FROM embeddings),
-        n AS (SELECT vec_id, v,
-            sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-          FROM e),
-        nv AS (SELECT count(*) AS cnt FROM n),
-        -- cells sized ~64 vectors each while cheap, capped at the
-        -- n^1.5 balance point ceil(sqrt(4n)) beyond (the Spark side's
-        -- kCells formula, mirrored); at this corpus this evaluates
-        -- to 8
-        c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm
-          FROM n, nv WHERE vec_id < greatest(8, least(
-            (nv.cnt + 63) // 64,
-            cast(ceil(sqrt(4 * nv.cnt)) as bigint)))),
-        asgn AS (
-          SELECT vec_id, v, nrm, cent_id,
-            row_number() OVER (PARTITION BY vec_id
-              ORDER BY list_dot_product(v, cv) / nrm / cnrm DESC,
-                cent_id) AS rn
-          FROM n, c),
-        assigned AS (SELECT vec_id, v, nrm, cent_id
-          FROM asgn WHERE rn = 1),
-        cellpairs AS (
-          SELECT x.vec_id AS a, y.vec_id AS b,
-            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
-          FROM assigned x JOIN assigned y ON x.cent_id = y.cent_id
-            AND x.vec_id <> y.vec_id),
-        rnd0 AS (
-          SELECT x.vec_id AS a,
-            (x.vec_id + 1 +
-             (('0x' || substr(md5('nn_init_' || x.vec_id || '_' || j),
-               1, 15))::BIGINT % (nv.cnt - 1))) % nv.cnt AS b
-          FROM n x, nv, (SELECT unnest([0, 1, 2]) AS j)),
-        rndsc AS (
-          SELECT r.a, r.b,
-            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
-          FROM (SELECT DISTINCT a, b FROM rnd0 WHERE a <> b) r
-          JOIN n x ON x.vec_id = r.a
-          JOIN n y ON y.vec_id = r.b),
-        cellknn AS (
-          SELECT a, b, cos FROM (
-            SELECT a, b, cos, row_number() OVER (PARTITION BY a
-              ORDER BY cos DESC, b) AS rn
-            FROM cellpairs) t WHERE rn <= 5),
-        pool AS (SELECT a, b FROM cellknn
-          UNION SELECT a, b FROM rndsc),
-        und AS (SELECT a AS m, b AS x FROM pool
-          UNION SELECT b, a FROM pool),
-        knn0 AS (
-          SELECT a, b, cos FROM (
-            SELECT a, b, cos, row_number() OVER (PARTITION BY a
-              ORDER BY cos DESC, b) AS rn
-            FROM (SELECT * FROM cellpairs UNION ALL
-                  SELECT * FROM rndsc) u0) t WHERE rn <= 5),
-        props AS (
-          SELECT DISTINCT p.x AS a, q.x AS b
-          FROM und p JOIN und q ON p.m = q.m AND p.x <> q.x
-          JOIN assigned ax ON ax.vec_id = p.x
-          JOIN assigned ay ON ay.vec_id = q.x
-          WHERE ax.cent_id <> ay.cent_id
-            AND NOT EXISTS (SELECT 1 FROM rndsc k
-              WHERE k.a = p.x AND k.b = q.x)),
-        nonscored AS (
-          SELECT p.a, p.b,
-            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
-          FROM props p
-          JOIN n x ON x.vec_id = p.a
-          JOIN n y ON y.vec_id = p.b),
-        knn1 AS (
-          SELECT a, b, cos FROM (
-            SELECT a, b, cos, row_number() OVER (PARTITION BY a
-              ORDER BY cos DESC, b) AS rn
-            FROM (SELECT * FROM knn0 UNION ALL
-                  SELECT * FROM nonscored) u) t
-          WHERE rn <= 5),
+      oracle = Some("""WITH """ + sqlNnDescentGraph + """,
         exact5 AS (
           SELECT a, b FROM (
             -- division order mirrors Spark's cosine(probe, corpus):
@@ -984,71 +997,9 @@ object TextAnnOps {
       (s, d) => pqAdcScored(s, d)
         .orderBy(col("approx_dist"), col("vec_id"))
         .limit(10),
-      Some("""WITH e AS MATERIALIZED (
-          SELECT vec_id,
-            list_transform(embedding, x ->
-              cast(floor(cast(x as double) * 1000) as bigint)) AS qv
-          FROM embeddings),
-        q AS (SELECT qv AS quv FROM e WHERE vec_id = 0),
-        subs AS (SELECT unnest(range(0, 8)) AS sub),
-        cb0 AS MATERIALIZED (
-          SELECT s.sub, c.vec_id AS cid,
-            list_transform(range(1, 9), j ->
-              c.qv[cast(s.sub * 8 + j as int)]) AS cv
-          FROM e c, subs s WHERE c.vec_id < 16),
-        a1 AS MATERIALIZED (
-          SELECT vec_id, sub, cid FROM (
-            SELECT e.vec_id, c.sub, c.cid,
-              row_number() OVER (PARTITION BY e.vec_id, c.sub ORDER BY
-                list_sum(list_transform(range(1, 9), j ->
-                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
-                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]))),
-                c.cid) AS rn
-            FROM e, cb0 c) x WHERE rn = 1),
-        s1 AS (
-          SELECT a.sub, a.cid, p.pos,
-            cast(sum(e.qv[cast(a.sub * 8 + p.pos as int)]) as bigint)
-              // cast(count(*) as bigint) AS c
-          FROM a1 a JOIN e ON e.vec_id = a.vec_id,
-            (SELECT unnest(range(1, 9)) AS pos) p
-          GROUP BY a.sub, a.cid, p.pos),
-        c1l AS (SELECT sub, cid, list(c ORDER BY pos) AS cv
-          FROM s1 GROUP BY sub, cid),
-        cb AS MATERIALIZED (
-          SELECT cb0.sub, cb0.cid, coalesce(l.cv, cb0.cv) AS cv
-          FROM cb0 LEFT JOIN c1l l
-            ON l.sub = cb0.sub AND l.cid = cb0.cid),
-        codes AS MATERIALIZED (
-          SELECT vec_id, sub, cid AS code FROM (
-            SELECT e.vec_id, c.sub, c.cid,
-              row_number() OVER (PARTITION BY e.vec_id, c.sub ORDER BY
-                list_sum(list_transform(range(1, 9), j ->
-                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
-                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]))),
-                c.cid) AS rn
-            FROM e, cb c) x WHERE rn = 1),
-        lut AS MATERIALIZED (
-          SELECT c.sub, c.cid,
-            list_sum(list_transform(range(1, 9), j ->
-              (q.quv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
-              (q.quv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)])))
-              AS d
-          FROM cb c, q),
-        ad AS (
-          SELECT codes.vec_id, cast(sum(l.d) as bigint) AS approx_dist
-          FROM codes JOIN lut l
-            ON l.sub = codes.sub AND l.cid = codes.code
-          GROUP BY codes.vec_id),
-        ex AS (
-          SELECT e.vec_id,
-            cast(list_sum(list_transform(range(1, 65), p ->
-              (e.qv[p] - q.quv[p]) * (e.qv[p] - q.quv[p]))) as bigint)
-              AS exact_dist
-          FROM e, q)
-        SELECT a.vec_id, a.approx_dist, x.exact_dist
-        FROM ad a JOIN ex x ON x.vec_id = a.vec_id
-        WHERE a.vec_id <> 0
-        ORDER BY a.approx_dist, a.vec_id LIMIT 10""")),
+      Some("""WITH """ + sqlPqAdcScored + """
+        SELECT vec_id, approx_dist, exact_dist FROM scored
+        ORDER BY approx_dist, vec_id LIMIT 10""")),
 
 
     // ------------------------------------------------------------------
@@ -1522,28 +1473,7 @@ object TextAnnOps {
               (sa.qv[cast(s.sub * 8 + j as int)] -
                c.ccv[cast(s.sub * 8 + j as int)])) AS cv
           FROM sa JOIN cells c ON c.ccid = sa.cell, subs s),
-        a1 AS MATERIALIZED (
-          SELECT vec_id, sub, cid FROM (
-            SELECT r.vec_id, c.sub, c.cid,
-              row_number() OVER (PARTITION BY r.vec_id, c.sub ORDER BY
-                list_sum(list_transform(range(1, 9), j ->
-                  (r.rv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
-                  (r.rv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]))),
-                c.cid) AS rn
-            FROM resid r, cb0 c) x WHERE rn = 1),
-        s1 AS (
-          SELECT a.sub, a.cid, p.pos,
-            cast(sum(r.rv[cast(a.sub * 8 + p.pos as int)]) as bigint)
-              // cast(count(*) as bigint) AS c
-          FROM a1 a JOIN resid r ON r.vec_id = a.vec_id,
-            (SELECT unnest(range(1, 9)) AS pos) p
-          GROUP BY a.sub, a.cid, p.pos),
-        c1l AS (SELECT sub, cid, list(c ORDER BY pos) AS cv
-          FROM s1 GROUP BY sub, cid),
-        cb AS MATERIALIZED (
-          SELECT cb0.sub, cb0.cid, coalesce(l.cv, cb0.cv) AS cv
-          FROM cb0 LEFT JOIN c1l l
-            ON l.sub = cb0.sub AND l.cid = cb0.cid),
+        """ + sqlTrainPqCodebooks("resid", "rv") + """,
         codes AS MATERIALIZED (
           SELECT vec_id, cell, sub, cid AS code FROM (
             SELECT r.vec_id, r.cell, c.sub, c.cid,
@@ -2070,16 +2000,7 @@ object TextAnnOps {
           SELECT c.vec_id FROM lsh_cand c, q
           ORDER BY list_dot_product(c.v, q.qv) / c.nrm / q.qnrm DESC,
             c.vec_id LIMIT 10),
-        c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm
-          FROM n WHERE vec_id < 8),
-        asgn AS (
-          SELECT vec_id, v, nrm, cent_id,
-            row_number() OVER (PARTITION BY vec_id
-              ORDER BY list_dot_product(v, cv) / nrm / cnrm DESC,
-                cent_id) AS rn
-          FROM n, c),
-        assigned AS (
-          SELECT vec_id, v, nrm, cent_id FROM asgn WHERE rn = 1),
+        """ + sqlAssignToCodebook() + """,
         probe AS (
           SELECT cent_id FROM c, q
           ORDER BY list_dot_product(cv, qv) / cnrm / qnrm DESC, cent_id
@@ -2297,50 +2218,8 @@ object TextAnnOps {
           Seq(("score", true), ("doc_id", false)), 10)
           .orderBy(col("qid"), col("score").desc, col("doc_id"))
       },
-      Some("""WITH t AS (
-          SELECT doc_id,
-            string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS toks
-          FROM documents),
-        bg AS (
-          SELECT doc_id, toks,
-            CASE WHEN len(toks) >= 2 THEN
-              list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-            ELSE [] END AS bgs
-          FROM t),
-        tok AS (SELECT doc_id, unnest(bgs) AS term FROM bg),
-        tf AS (
-          SELECT doc_id, term, cast(count(*) as bigint) AS tf
-          FROM tok GROUP BY doc_id, term),
-        dl AS (SELECT doc_id, cast(len(bgs) as bigint) AS dl FROM bg),
-        dfc AS (
-          SELECT term, cast(count(*) as bigint) AS df FROM tf GROUP BY term),
-        tot AS (
-          SELECT cast(count(*) as bigint) AS n_docs,
-            cast(sum(dl) as bigint) AS sum_dl FROM dl),
-        qterms AS (
-          SELECT (doc_id // 97) AS qid, doc_id AS qdoc,
-            unnest(list_distinct(bgs[1:5])) AS term
-          FROM bg WHERE doc_id % 97 = 0 AND doc_id // 97 <= 4),
-        scored AS (
-          SELECT q.qid, q.qdoc, tf.doc_id, q.term,
-            ln(1.0 + (cast(t.n_docs - dfc.df as double) + 0.5) /
-                (cast(dfc.df as double) + 0.5))
-              * ((cast(tf.tf as double) * 2.2) /
-                 (cast(tf.tf as double) + 1.2 * (0.25 + 0.75 *
-                   (cast(dl.dl as double) /
-                    (cast(t.sum_dl as double) / cast(t.n_docs as double))))))
-              AS sc
-          FROM qterms q
-          JOIN tf ON tf.term = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          JOIN dfc ON dfc.term = q.term, tot t
-          WHERE tf.doc_id <> q.qdoc),
-        agg AS (
-          SELECT qid, doc_id,
-            list_reduce(list_prepend(0.0, list(sc ORDER BY term)),
-              (a, b) -> a + b) AS score,
-            cast(count(*) as bigint) AS n_terms
-          FROM scored GROUP BY qid, doc_id),
+      Some("""WITH """ + sqlBm25Parts + """,
+        agg AS (""" + sqlBm25Scores("qterms") + """),
         top AS (
           SELECT *, row_number() OVER (PARTITION BY qid
             ORDER BY score DESC, doc_id) AS rn
@@ -2414,51 +2293,11 @@ object TextAnnOps {
             col("rank_vec"), col("rrf"))
           .orderBy(col("qid"), col("rrf").desc, col("doc_id"))
       },
-      Some("""WITH t AS (
-          SELECT doc_id,
-            string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS toks
-          FROM documents),
-        bg AS (
-          SELECT doc_id, toks,
-            CASE WHEN len(toks) >= 2 THEN
-              list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-            ELSE [] END AS bgs
-          FROM t),
-        tok AS (SELECT doc_id, unnest(bgs) AS term FROM bg),
-        tf AS (
-          SELECT doc_id, term, cast(count(*) as bigint) AS tf
-          FROM tok GROUP BY doc_id, term),
-        dl AS (SELECT doc_id, cast(len(bgs) as bigint) AS dl FROM bg),
-        dfc AS (
-          SELECT term, cast(count(*) as bigint) AS df FROM tf GROUP BY term),
-        tot AS (
-          SELECT cast(count(*) as bigint) AS n_docs,
-            cast(sum(dl) as bigint) AS sum_dl FROM dl),
+      Some("""WITH """ + sqlBm25Parts + """,
         qsel AS (
           SELECT (doc_id // 97) AS qid, doc_id AS qdoc, bgs FROM bg
           WHERE doc_id % 97 = 0 AND doc_id // 97 <= 4),
-        qterms AS (
-          SELECT qid, qdoc, unnest(list_distinct(bgs[1:5])) AS term
-          FROM qsel),
-        scored AS (
-          SELECT q.qid, q.qdoc, tf.doc_id, q.term,
-            ln(1.0 + (cast(t.n_docs - dfc.df as double) + 0.5) /
-                (cast(dfc.df as double) + 0.5))
-              * ((cast(tf.tf as double) * 2.2) /
-                 (cast(tf.tf as double) + 1.2 * (0.25 + 0.75 *
-                   (cast(dl.dl as double) /
-                    (cast(t.sum_dl as double) / cast(t.n_docs as double))))))
-              AS sc
-          FROM qterms q
-          JOIN tf ON tf.term = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          JOIN dfc ON dfc.term = q.term, tot t
-          WHERE tf.doc_id <> q.qdoc),
-        bagg AS (
-          SELECT qid, doc_id,
-            list_reduce(list_prepend(0.0, list(sc ORDER BY term)),
-              (a, b) -> a + b) AS score
-          FROM scored GROUP BY qid, doc_id),
+        bagg AS (""" + sqlBm25Scores("qterms") + """),
         brank AS (
           SELECT qid, doc_id,
             cast(row_number() OVER (PARTITION BY qid
@@ -2578,51 +2417,8 @@ object TextAnnOps {
             coalesce(col("r1r"), lit(0L)).as("r1_rank"))
           .orderBy(col("qid"), col("score").desc, col("doc_id"))
       },
-      Some("""WITH t AS (
-          SELECT doc_id,
-            string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS toks
-          FROM documents),
-        bg AS (
-          SELECT doc_id, toks,
-            CASE WHEN len(toks) >= 2 THEN
-              list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-            ELSE [] END AS bgs
-          FROM t),
-        tok AS (SELECT doc_id, unnest(bgs) AS term FROM bg),
-        tf AS (
-          SELECT doc_id, term, cast(count(*) as bigint) AS tf
-          FROM tok GROUP BY doc_id, term),
-        dl AS (SELECT doc_id, cast(len(bgs) as bigint) AS dl FROM bg),
-        dfc AS (
-          SELECT term, cast(count(*) as bigint) AS df FROM tf GROUP BY term),
-        tot AS (
-          SELECT cast(count(*) as bigint) AS n_docs,
-            cast(sum(dl) as bigint) AS sum_dl FROM dl),
-        qsel AS (
-          SELECT (doc_id // 97) AS qid, doc_id AS qdoc, bgs FROM bg
-          WHERE doc_id % 97 = 0 AND doc_id // 97 <= 4),
-        qterms AS (
-          SELECT qid, qdoc, unnest(list_distinct(bgs[1:5])) AS term
-          FROM qsel),
-        r1s AS (
-          SELECT q.qid, q.qdoc, tf.doc_id, q.term,
-            ln(1.0 + (cast(t.n_docs - dfc.df as double) + 0.5) /
-                (cast(dfc.df as double) + 0.5))
-              * ((cast(tf.tf as double) * 2.2) /
-                 (cast(tf.tf as double) + 1.2 * (0.25 + 0.75 *
-                   (cast(dl.dl as double) /
-                    (cast(t.sum_dl as double) / cast(t.n_docs as double))))))
-              AS sc
-          FROM qterms q
-          JOIN tf ON tf.term = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          JOIN dfc ON dfc.term = q.term, tot t
-          WHERE tf.doc_id <> q.qdoc),
-        r1agg AS (
-          SELECT qid, doc_id,
-            list_reduce(list_prepend(0.0, list(sc ORDER BY term)),
-              (a, b) -> a + b) AS score
-          FROM r1s GROUP BY qid, doc_id),
+      Some("""WITH """ + sqlBm25Parts + """,
+        r1agg AS (""" + sqlBm25Scores("qterms") + """),
         r1rk AS (
           SELECT qid, doc_id,
             cast(row_number() OVER (PARTITION BY qid
@@ -2645,30 +2441,11 @@ object TextAnnOps {
             FROM fbx) WHERE xr <= 3),
         qdocs AS (SELECT DISTINCT qid, qdoc FROM qterms),
         q2 AS (
-          SELECT qid, qdoc, term, cast(1.0 as double) AS w FROM qterms
+          SELECT qid, qdoc, term, w FROM qterms
           UNION ALL
           SELECT e.qid, qd.qdoc, e.term, cast(0.5 as double) AS w
           FROM expt e JOIN qdocs qd USING (qid)),
-        r2s AS (
-          SELECT q.qid, q.qdoc, tf.doc_id, q.term,
-            (ln(1.0 + (cast(t.n_docs - dfc.df as double) + 0.5) /
-                (cast(dfc.df as double) + 0.5))
-              * ((cast(tf.tf as double) * 2.2) /
-                 (cast(tf.tf as double) + 1.2 * (0.25 + 0.75 *
-                   (cast(dl.dl as double) /
-                    (cast(t.sum_dl as double) / cast(t.n_docs as double)))))))
-              * q.w AS sc
-          FROM q2 q
-          JOIN tf ON tf.term = q.term
-          JOIN dl ON dl.doc_id = tf.doc_id
-          JOIN dfc ON dfc.term = q.term, tot t
-          WHERE tf.doc_id <> q.qdoc),
-        r2agg AS (
-          SELECT qid, doc_id,
-            list_reduce(list_prepend(0.0, list(sc ORDER BY term)),
-              (a, b) -> a + b) AS score,
-            cast(count(*) as bigint) AS n_terms
-          FROM r2s GROUP BY qid, doc_id),
+        r2agg AS (""" + sqlBm25Scores("q2") + """),
         r2rk AS (
           SELECT qid, doc_id, score, n_terms,
             row_number() OVER (PARTITION BY qid
@@ -2721,71 +2498,7 @@ object TextAnnOps {
             lit(50L).as("n_candidates"), col("recall_10")))
         rowA.union(rowB).union(rowC).orderBy(col("method"))
       },
-      Some("""WITH e AS MATERIALIZED (
-          SELECT vec_id,
-            list_transform(embedding, x ->
-              cast(floor(cast(x as double) * 1000) as bigint)) AS qv
-          FROM embeddings),
-        q AS (SELECT qv AS quv FROM e WHERE vec_id = 0),
-        subs AS (SELECT unnest(range(0, 8)) AS sub),
-        cb0 AS MATERIALIZED (
-          SELECT s.sub, c.vec_id AS cid,
-            list_transform(range(1, 9), j ->
-              c.qv[cast(s.sub * 8 + j as int)]) AS cv
-          FROM e c, subs s WHERE c.vec_id < 16),
-        a1 AS MATERIALIZED (
-          SELECT vec_id, sub, cid FROM (
-            SELECT e.vec_id, c.sub, c.cid,
-              row_number() OVER (PARTITION BY e.vec_id, c.sub ORDER BY
-                list_sum(list_transform(range(1, 9), j ->
-                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
-                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]))),
-                c.cid) AS rn
-            FROM e, cb0 c) x WHERE rn = 1),
-        s1 AS (
-          SELECT a.sub, a.cid, p.pos,
-            cast(sum(e.qv[cast(a.sub * 8 + p.pos as int)]) as bigint)
-              // cast(count(*) as bigint) AS c
-          FROM a1 a JOIN e ON e.vec_id = a.vec_id,
-            (SELECT unnest(range(1, 9)) AS pos) p
-          GROUP BY a.sub, a.cid, p.pos),
-        c1l AS (SELECT sub, cid, list(c ORDER BY pos) AS cv
-          FROM s1 GROUP BY sub, cid),
-        cb AS MATERIALIZED (
-          SELECT cb0.sub, cb0.cid, coalesce(l.cv, cb0.cv) AS cv
-          FROM cb0 LEFT JOIN c1l l
-            ON l.sub = cb0.sub AND l.cid = cb0.cid),
-        codes AS MATERIALIZED (
-          SELECT vec_id, sub, cid AS code FROM (
-            SELECT e.vec_id, c.sub, c.cid,
-              row_number() OVER (PARTITION BY e.vec_id, c.sub ORDER BY
-                list_sum(list_transform(range(1, 9), j ->
-                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
-                  (e.qv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]))),
-                c.cid) AS rn
-            FROM e, cb c) x WHERE rn = 1),
-        lut AS MATERIALIZED (
-          SELECT c.sub, c.cid,
-            list_sum(list_transform(range(1, 9), j ->
-              (q.quv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
-              (q.quv[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)])))
-              AS d
-          FROM cb c, q),
-        ad AS (
-          SELECT codes.vec_id, cast(sum(l.d) as bigint) AS approx_dist
-          FROM codes JOIN lut l
-            ON l.sub = codes.sub AND l.cid = codes.code
-          GROUP BY codes.vec_id),
-        ex AS (
-          SELECT e.vec_id,
-            cast(list_sum(list_transform(range(1, 65), p ->
-              (e.qv[p] - q.quv[p]) * (e.qv[p] - q.quv[p]))) as bigint)
-              AS exact_dist
-          FROM e, q),
-        scored AS (
-          SELECT a.vec_id, a.approx_dist, x.exact_dist
-          FROM ad a JOIN ex x ON x.vec_id = a.vec_id
-          WHERE a.vec_id <> 0),
+      Some("""WITH """ + sqlPqAdcScored + """,
         truth10 AS (
           SELECT vec_id FROM scored ORDER BY exact_dist, vec_id LIMIT 10),
         adc10 AS (
@@ -3114,78 +2827,7 @@ object TextAnnOps {
           .reduce(_ unionByName _)
           .orderBy(col("step"))
       },
-      Some(s"""WITH e AS (SELECT vec_id,
-            list_transform(embedding, x -> cast(x as double)) AS v
-          FROM embeddings),
-        n AS (SELECT vec_id, v,
-            sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-          FROM e),
-        nv AS (SELECT count(*) AS cnt FROM n),
-        c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm
-          FROM n, nv WHERE vec_id < greatest(8, least(
-            (nv.cnt + 63) // 64,
-            cast(ceil(sqrt(4 * nv.cnt)) as bigint)))),
-        asgn AS (
-          SELECT vec_id, v, nrm, cent_id,
-            row_number() OVER (PARTITION BY vec_id
-              ORDER BY list_dot_product(v, cv) / nrm / cnrm DESC,
-                cent_id) AS rn
-          FROM n, c),
-        assigned AS (SELECT vec_id, v, nrm, cent_id
-          FROM asgn WHERE rn = 1),
-        cellpairs AS (
-          SELECT x.vec_id AS a, y.vec_id AS b,
-            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
-          FROM assigned x JOIN assigned y ON x.cent_id = y.cent_id
-            AND x.vec_id <> y.vec_id),
-        rnd0 AS (
-          SELECT x.vec_id AS a,
-            (x.vec_id + 1 +
-             (('0x' || substr(md5('nn_init_' || x.vec_id || '_' || j),
-               1, 15))::BIGINT % (nv.cnt - 1))) % nv.cnt AS b
-          FROM n x, nv, (SELECT unnest([0, 1, 2]) AS j)),
-        rndsc AS (
-          SELECT r.a, r.b,
-            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
-          FROM (SELECT DISTINCT a, b FROM rnd0 WHERE a <> b) r
-          JOIN n x ON x.vec_id = r.a
-          JOIN n y ON y.vec_id = r.b),
-        cellknn AS (
-          SELECT a, b, cos FROM (
-            SELECT a, b, cos, row_number() OVER (PARTITION BY a
-              ORDER BY cos DESC, b) AS rn
-            FROM cellpairs) t WHERE rn <= 5),
-        pool AS (SELECT a, b FROM cellknn
-          UNION SELECT a, b FROM rndsc),
-        und AS (SELECT a AS m, b AS x FROM pool
-          UNION SELECT b, a FROM pool),
-        knn0 AS (
-          SELECT a, b, cos FROM (
-            SELECT a, b, cos, row_number() OVER (PARTITION BY a
-              ORDER BY cos DESC, b) AS rn
-            FROM (SELECT * FROM cellpairs UNION ALL
-                  SELECT * FROM rndsc) u0) t WHERE rn <= 5),
-        props AS (
-          SELECT DISTINCT p.x AS a, q.x AS b
-          FROM und p JOIN und q ON p.m = q.m AND p.x <> q.x
-          JOIN assigned ax ON ax.vec_id = p.x
-          JOIN assigned ay ON ay.vec_id = q.x
-          WHERE ax.cent_id <> ay.cent_id
-            AND NOT EXISTS (SELECT 1 FROM rndsc k
-              WHERE k.a = p.x AND k.b = q.x)),
-        nonscored AS (
-          SELECT p.a, p.b,
-            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
-          FROM props p
-          JOIN n x ON x.vec_id = p.a
-          JOIN n y ON y.vec_id = p.b),
-        knn1 AS (
-          SELECT a, b, cos FROM (
-            SELECT a, b, cos, row_number() OVER (PARTITION BY a
-              ORDER BY cos DESC, b) AS rn
-            FROM (SELECT * FROM knn0 UNION ALL
-                  SELECT * FROM nonscored) u) t
-          WHERE rn <= 5),
+      Some(s"""WITH $sqlNnDescentGraph,
         -- the stored graph, traversed undirected
         und2 AS (SELECT a AS m, b AS x FROM knn1
           UNION SELECT b, a FROM knn1),

@@ -1027,42 +1027,8 @@ object TextCurationOps {
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'),
               '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sw
-          FROM t0 WHERE len(w) >= 3),
-        dposts AS (SELECT doc_id, unnest(sw) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM dposts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM dposts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        dsizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        prs AS (
-          SELECT s.doc_a, s.doc_b
-          FROM shared s
-          JOIN dsizes x ON x.doc_id = s.doc_a
-          JOIN dsizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM prs
-          UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        ccx AS (
-          SELECT src AS doc_id, least(src, min(dst)) AS cluster
-          FROM reach GROUP BY src),
+        """ + sqlPostingJaccardPairs() + ",\n        " +
+          sqlDupClusters + """,
         flagged AS (
           SELECT t0.source, t0.doc_id,
             cast(len(t0.w) as bigint) AS n_toks,
@@ -2562,13 +2528,7 @@ object TextCurationOps {
             sum(when(!col("dropped"), col("n_tokens"))).as("kept_tokens"))
           .orderBy(col("source"))
       },
-      Some("""WITH perms AS (
-          SELECT
-            list_transform(range(0, 64), i ->
-              ('0x' || substr(md5('perm_a_' || i), 1, 15))::BIGINT % 2147483646 + 1) AS pa,
-            list_transform(range(0, 64), i ->
-              ('0x' || substr(md5('perm_b_' || i), 1, 15))::BIGINT % 2147483647) AS pb),
-        t0 AS (
+      Some("""WITH t0 AS (
           SELECT doc_id, source, string_split_regex(
             regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
           FROM documents),
@@ -2585,22 +2545,7 @@ object TextCurationOps {
             list_distinct(list_transform(range(1, len(ct) - 1),
               i -> ct[i] || ' ' || ct[i+1] || ' ' || ct[i+2])) AS w
           FROM ck3),
-        hs AS (
-          SELECT doc_id, cid,
-            list_transform(w, s ->
-              ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647) AS h
-          FROM sh),
-        sig AS (
-          SELECT doc_id, cid,
-            list_transform(range(0, 64), i ->
-              list_min(list_transform(h, x ->
-                (pa[i+1] * x + pb[i+1]) % 2147483647))) AS sig
-          FROM hs, perms),
-        banded AS (
-          SELECT doc_id, cid, b AS band,
-            list_reduce(list_prepend(0::BIGINT, sig[b*4+1 : b*4+4]),
-              (acc, v) -> (acc * 1000003 + v) % 2147483647) AS band_hash
-          FROM sig, range(0, 16) t(b)),
+        """ + sqlMinhashBands("doc_id, cid") + """,
         cand AS (
           SELECT DISTINCT l.cid AS chunk_a, r.cid AS chunk_b
           FROM banded l JOIN banded r
@@ -2694,40 +2639,8 @@ object TextCurationOps {
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'),
               '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sw
-          FROM t0 WHERE len(w) >= 3),
-        dposts AS (SELECT doc_id, unnest(sw) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM dposts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM dposts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        dsizes AS (SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        prs AS (
-          SELECT s.doc_a, s.doc_b FROM shared s
-          JOIN dsizes x ON x.doc_id = s.doc_a
-          JOIN dsizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM prs
-          UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        ccx AS (
-          SELECT src AS doc_id, least(src, min(dst)) AS cluster
-          FROM reach GROUP BY src),
+        """ + sqlPostingJaccardPairs() + ",\n        " +
+          sqlDupClusters + """,
         g4 AS (
           SELECT doc_id, unnest(list_distinct(
             CASE WHEN len(w) >= 4 THEN
@@ -3891,42 +3804,8 @@ object TextCurationOps {
                     AND (cast(length(regexp_replace(text, '\s+', '', 'g')) as double) / cast(len(w) as double)) <= 8
                    THEN 0.3 ELSE 0.0 END AS quality
             FROM w0) WHERE quality >= 0.62),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sw
-          FROM q1 WHERE len(w) >= 3),
-        dposts AS (SELECT doc_id, unnest(sw) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM dposts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM dposts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        dsizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        prs AS (
-          SELECT s.doc_a, s.doc_b
-          FROM shared s
-          JOIN dsizes x ON x.doc_id = s.doc_a
-          JOIN dsizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM prs
-          UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        ccx AS (
-          SELECT src AS doc_id, least(src, min(dst)) AS cluster
-          FROM reach GROUP BY src),
+        """ + sqlPostingJaccardPairs(from = "q1") + ",\n        " +
+          sqlDupClusters + """,
         q2 AS (
           SELECT q1.doc_id, q1.lang, q1.w FROM q1
           LEFT JOIN ccx ON ccx.doc_id = q1.doc_id
@@ -3949,13 +3828,13 @@ object TextCurationOps {
             ELSE [] END) AS ng
           FROM (SELECT string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
                 FROM documents WHERE doc_id % 97 = 0)),
-        posts AS (SELECT doc_id, unnest(ngs) AS ng FROM ng),
+        ngposts AS (SELECT doc_id, unnest(ngs) AS ng FROM ng),
         per_doc AS (
           SELECT doc_id, cast(count(*) as bigint) AS n_ngrams
-          FROM posts GROUP BY doc_id),
+          FROM ngposts GROUP BY doc_id),
         contam AS (
           SELECT p.doc_id, cast(count(*) as bigint) AS n_contaminated
-          FROM posts p JOIN benchng b ON p.ng = b.ng GROUP BY p.doc_id),
+          FROM ngposts p JOIN benchng b ON p.ng = b.ng GROUP BY p.doc_id),
         q3 AS (
           SELECT q2.doc_id, q2.lang FROM q2
           LEFT JOIN per_doc pd ON pd.doc_id = q2.doc_id
@@ -5327,42 +5206,8 @@ object TextCurationOps {
           SELECT doc_id,
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
-          FROM t0 WHERE len(w) >= 3),
-        posts AS (SELECT doc_id, unnest(w) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM posts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM posts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        sizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        prs AS (
-          SELECT s.doc_a, s.doc_b
-          FROM shared s
-          JOIN sizes x ON x.doc_id = s.doc_a
-          JOIN sizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM prs
-          UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        comp AS (
-          SELECT src AS doc_id, least(src, min(dst)) AS cluster
-          FROM reach GROUP BY src),
+        """ + sqlPostingJaccardPairs() + ",\n        " +
+          sqlDupClusters + """,
         assigned AS (
           SELECT d.doc_id, d.n_chars,
             coalesce(c.cluster, d.doc_id) AS rep,
@@ -5378,7 +5223,7 @@ object TextCurationOps {
               WHEN ('0x' || substr(md5('x56_' || d.doc_id), 1, 15))
                 ::BIGINT % 100 < 95 THEN 'val'
               ELSE 'test' END AS naive_split
-          FROM documents d LEFT JOIN comp c USING (doc_id)),
+          FROM documents d LEFT JOIN ccx c USING (doc_id)),
         audited AS (
           SELECT a.split AS sa, b.split AS sb,
             a.naive_split AS na, b.naive_split AS nb

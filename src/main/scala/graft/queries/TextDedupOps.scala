@@ -188,21 +188,8 @@ object TextDedupOps {
           .select(col("doc_a"), col("doc_b"), col("jaccard"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some("""WITH t0 AS (
-          SELECT doc_id,
-            string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
-          FROM documents WHERE doc_id < 1000),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
-          FROM t0)
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-          cast(len(list_intersect(a.w, b.w)) as double) /
-                cast(len(list_distinct(list_concat(a.w, b.w))) as double) AS jaccard
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE cast(len(list_intersect(a.w, b.w)) as double) /
-              cast(len(list_distinct(list_concat(a.w, b.w))) as double) >= 0.4
+      Some("""WITH """ + sqlAllPairsJaccard + """
+        SELECT doc_a, doc_b, jaccard FROM prs
         ORDER BY doc_a, doc_b""")),
 
 
@@ -229,29 +216,9 @@ object TextDedupOps {
           .select(col("id").as("doc_id"), col("cluster"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH RECURSIVE t0 AS (
-          SELECT doc_id,
-            string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
-          FROM documents WHERE doc_id < 1000),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
-          FROM t0),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-          WHERE cast(len(list_intersect(a.w, b.w)) as double) /
-                cast(len(list_distinct(list_concat(a.w, b.w))) as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM pairs
-          UNION SELECT doc_b, doc_a FROM pairs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-        SELECT src AS doc_id, least(src, min(dst)) AS cluster
-        FROM reach GROUP BY src
+      Some("""WITH RECURSIVE """ + sqlAllPairsJaccard + ",\n        " +
+          sqlDupClusters + """
+        SELECT doc_id, cluster FROM ccx
         ORDER BY doc_id""")),
 
 
@@ -329,13 +296,7 @@ object TextDedupOps {
           .select(col("doc_a"), col("doc_b"), col("jaccard"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some("""WITH perms AS (
-          SELECT
-            list_transform(range(0, 64), i ->
-              ('0x' || substr(md5('perm_a_' || i), 1, 15))::BIGINT % 2147483646 + 1) AS pa,
-            list_transform(range(0, 64), i ->
-              ('0x' || substr(md5('perm_b_' || i), 1, 15))::BIGINT % 2147483647) AS pb),
-        t0 AS (
+      Some("""WITH t0 AS (
           SELECT doc_id,
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
           FROM documents),
@@ -344,22 +305,7 @@ object TextDedupOps {
             list_distinct(list_transform(range(1, len(w) - 1),
               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
           FROM t0 WHERE len(w) >= 3),
-        hs AS (
-          SELECT doc_id,
-            list_transform(w, s ->
-              ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647) AS h
-          FROM sh),
-        sig AS (
-          SELECT doc_id,
-            list_transform(range(0, 64), i ->
-              list_min(list_transform(h, x ->
-                (pa[i+1] * x + pb[i+1]) % 2147483647))) AS sig
-          FROM hs, perms),
-        banded AS (
-          SELECT doc_id, b AS band,
-            list_reduce(list_prepend(0::BIGINT, sig[b*4+1 : b*4+4]),
-              (acc, v) -> (acc * 1000003 + v) % 2147483647) AS band_hash
-          FROM sig, range(0, 16) t(b)),
+        """ + sqlMinhashBands("doc_id") + """,
         cand AS (
           SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
           FROM banded l JOIN banded r
@@ -531,33 +477,8 @@ object TextDedupOps {
           SELECT doc_id,
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
-          FROM t0 WHERE len(w) >= 3),
-        posts AS (SELECT doc_id, unnest(w) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM posts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM posts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        sizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id)
-        SELECT s.doc_a, s.doc_b,
-          cast(s.shared_fps as double) /
-            cast(x.sz + y.sz - s.shared_fps as double) AS jaccard
-        FROM shared s
-        JOIN sizes x ON x.doc_id = s.doc_a
-        JOIN sizes y ON y.doc_id = s.doc_b
-        WHERE cast(s.shared_fps as double) /
-              cast(x.sz + y.sz - s.shared_fps as double) >= 0.4
+        """ + sqlPostingJaccardPairs() + """
+        SELECT doc_a, doc_b, jaccard FROM prs
         ORDER BY doc_a, doc_b"""),
       bench = true),
 
@@ -590,35 +511,13 @@ object TextDedupOps {
           .withColumn("keep", col("doc_id") === col("cluster"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH RECURSIVE t0 AS (
-          SELECT doc_id,
-            string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
-          FROM documents WHERE doc_id < 1000),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
-          FROM t0),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-          WHERE cast(len(list_intersect(a.w, b.w)) as double) /
-                cast(len(list_distinct(list_concat(a.w, b.w))) as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM pairs
-          UNION SELECT doc_b, doc_a FROM pairs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        cc AS (
-          SELECT src AS doc_id, least(src, min(dst)) AS cluster
-          FROM reach GROUP BY src)
+      Some("""WITH RECURSIVE """ + sqlAllPairsJaccard + ",\n        " +
+          sqlDupClusters + """
         SELECT d.doc_id,
-          coalesce(cc.cluster, d.doc_id) AS cluster,
-          d.doc_id = coalesce(cc.cluster, d.doc_id) AS keep
+          coalesce(ccx.cluster, d.doc_id) AS cluster,
+          d.doc_id = coalesce(ccx.cluster, d.doc_id) AS keep
         FROM (SELECT doc_id FROM documents WHERE doc_id < 1000) d
-        LEFT JOIN cc ON cc.doc_id = d.doc_id
+        LEFT JOIN ccx ON ccx.doc_id = d.doc_id
         ORDER BY d.doc_id""")),
 
 
@@ -665,42 +564,8 @@ object TextDedupOps {
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'),
               '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sw
-          FROM t0 WHERE len(w) >= 3),
-        dposts AS (SELECT doc_id, unnest(sw) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM dposts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM dposts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        dsizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        prs AS (
-          SELECT s.doc_a, s.doc_b
-          FROM shared s
-          JOIN dsizes x ON x.doc_id = s.doc_a
-          JOIN dsizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM prs
-          UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        ccx AS (
-          SELECT src AS doc_id, least(src, min(dst)) AS cluster
-          FROM reach GROUP BY src),
+        """ + sqlPostingJaccardPairs() + ",\n        " +
+          sqlDupClusters + """,
         wc AS (
           SELECT t0.doc_id, cast(len(t0.w) as bigint) AS n_toks,
             coalesce(ccx.cluster, t0.doc_id) AS cluster
@@ -800,42 +665,8 @@ object TextDedupOps {
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'),
               '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sw
-          FROM t0 WHERE len(w) >= 3),
-        dposts AS (SELECT doc_id, unnest(sw) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM dposts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM dposts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        dsizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        prs AS (
-          SELECT s.doc_a, s.doc_b
-          FROM shared s
-          JOIN dsizes x ON x.doc_id = s.doc_a
-          JOIN dsizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM prs
-          UNION SELECT doc_b, doc_a FROM prs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        ccx AS (
-          SELECT src AS doc_id, least(src, min(dst)) AS cluster
-          FROM reach GROUP BY src),
+        """ + sqlPostingJaccardPairs() + ",\n        " +
+          sqlDupClusters + """,
         assigned AS (
           SELECT t0.doc_id, t0.is_new,
             coalesce(ccx.cluster, t0.doc_id) AS cluster
@@ -888,31 +719,13 @@ object TextDedupOps {
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'),
               '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sw
-          FROM t0 WHERE len(w) >= 3),
-        dposts AS (SELECT doc_id, unnest(sw) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM dposts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM dposts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        dsizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id)
+        """ + sqlPostingJaccardPairs() + """
         SELECT s.doc_a, s.doc_b,
           cast(s.shared_fps as double) /
             cast(least(x.sz, y.sz) as double) AS containment
         FROM shared s
-        JOIN dsizes x ON x.doc_id = s.doc_a
-        JOIN dsizes y ON y.doc_id = s.doc_b
+        JOIN sizes x ON x.doc_id = s.doc_a
+        JOIN sizes y ON y.doc_id = s.doc_b
         WHERE cast(s.shared_fps as double) /
               cast(least(x.sz, y.sz) as double) >= 0.5
         ORDER BY doc_a, doc_b""")),
@@ -1054,16 +867,8 @@ object TextDedupOps {
           .select(col("cent_id"), col("vec_a"), col("vec_b"), col("cos"))
           .orderBy(col("vec_a"), col("vec_b"))
       },
-      Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings),
-        n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
-        asgn AS (
-          SELECT vec_id, v, nrm, cent_id,
-            row_number() OVER (PARTITION BY vec_id
-              ORDER BY list_dot_product(v, cv) / nrm / cnrm DESC, cent_id)
-              AS rn
-          FROM n, c),
-        assigned AS (SELECT vec_id, v, nrm, cent_id FROM asgn WHERE rn = 1),
+      Some("""WITH """ + sqlEmbNorms + ",\n        " +
+          sqlAssignToCodebook() + """,
         pairs AS (
           SELECT a.cent_id, a.vec_id AS vec_a, b.vec_id AS vec_b,
             list_dot_product(a.v, b.v) / a.nrm / b.nrm AS cos
@@ -1102,34 +907,7 @@ object TextDedupOps {
           SELECT doc_id,
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
-          FROM t0 WHERE len(w) >= 3),
-        posts AS (SELECT doc_id, unnest(w) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM posts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM posts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        sizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        pairs AS (
-          SELECT s.doc_a, s.doc_b,
-            cast(s.shared_fps as double) /
-              cast(x.sz + y.sz - s.shared_fps as double) AS jaccard
-          FROM shared s
-          JOIN sizes x ON x.doc_id = s.doc_a
-          JOIN sizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.4),
+        """ + sqlPostingJaccardPairs() + """,
         tagged AS (
           SELECT doc_a, doc_b, jaccard,
             CASE WHEN ('0x' || substr(md5('split_' || doc_a), 1, 15))::BIGINT % 100 < 90 THEN 'train'
@@ -1138,7 +916,7 @@ object TextDedupOps {
             CASE WHEN ('0x' || substr(md5('split_' || doc_b), 1, 15))::BIGINT % 100 < 90 THEN 'train'
                  WHEN ('0x' || substr(md5('split_' || doc_b), 1, 15))::BIGINT % 100 < 95 THEN 'val'
                  ELSE 'test' END AS split_b
-          FROM pairs)
+          FROM prs)
         SELECT doc_a, doc_b, jaccard, split_a, split_b
         FROM tagged
         WHERE split_a <> split_b
@@ -1850,13 +1628,7 @@ object TextDedupOps {
         .select(col("chunk_a"), col("chunk_b"), col("doc_a"),
           col("doc_b"), col("jaccard"))
         .orderBy(col("chunk_a"), col("chunk_b")),
-      Some("""WITH perms AS (
-          SELECT
-            list_transform(range(0, 64), i ->
-              ('0x' || substr(md5('perm_a_' || i), 1, 15))::BIGINT % 2147483646 + 1) AS pa,
-            list_transform(range(0, 64), i ->
-              ('0x' || substr(md5('perm_b_' || i), 1, 15))::BIGINT % 2147483647) AS pb),
-        t0 AS (
+      Some("""WITH t0 AS (
           SELECT doc_id, string_split_regex(
             regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
           FROM documents),
@@ -1873,22 +1645,7 @@ object TextDedupOps {
             list_distinct(list_transform(range(1, len(ct) - 1),
               i -> ct[i] || ' ' || ct[i+1] || ' ' || ct[i+2])) AS w
           FROM ck),
-        hs AS (
-          SELECT doc_id, cid,
-            list_transform(w, s ->
-              ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647) AS h
-          FROM sh),
-        sig AS (
-          SELECT doc_id, cid,
-            list_transform(range(0, 64), i ->
-              list_min(list_transform(h, x ->
-                (pa[i+1] * x + pb[i+1]) % 2147483647))) AS sig
-          FROM hs, perms),
-        banded AS (
-          SELECT doc_id, cid, b AS band,
-            list_reduce(list_prepend(0::BIGINT, sig[b*4+1 : b*4+4]),
-              (acc, v) -> (acc * 1000003 + v) % 2147483647) AS band_hash
-          FROM sig, range(0, 16) t(b)),
+        """ + sqlMinhashBands("doc_id, cid") + """,
         cand AS (
           SELECT DISTINCT l.cid AS chunk_a, r.cid AS chunk_b,
             l.doc_id AS doc_a, r.doc_id AS doc_b
@@ -1959,39 +1716,12 @@ object TextDedupOps {
           SELECT doc_id,
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
-          FROM t0 WHERE len(w) >= 3),
-        posts AS (SELECT doc_id, unnest(w) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM posts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM posts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        sizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        pairs AS (
-          SELECT s.doc_a, s.doc_b,
-            cast(s.shared_fps as double) /
-              cast(x.sz + y.sz - s.shared_fps as double) AS j
-          FROM shared s
-          JOIN sizes x ON x.doc_id = s.doc_a
-          JOIN sizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.02),
+        """ + sqlPostingJaccardPairs(minJaccard = 0.02) + """,
         ths AS (SELECT cast(k as double) / 100.0 AS th
                 FROM (SELECT unnest([2, 5, 10, 30, 50, 80, 95, 98]) AS k)),
         hits AS (
           SELECT t.th, p.doc_a, p.doc_b
-          FROM pairs p JOIN ths t ON p.j >= t.th),
+          FROM prs p JOIN ths t ON p.jaccard >= t.th),
         pc AS (
           SELECT th, cast(count(*) as bigint) AS n_pairs
           FROM hits GROUP BY th),
@@ -2052,51 +1782,17 @@ object TextDedupOps {
           SELECT doc_id,
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
           FROM documents),
-        sh AS (
-          SELECT doc_id,
-            list_distinct(list_transform(range(1, len(w) - 1),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
-          FROM t0 WHERE len(w) >= 3),
-        posts AS (SELECT doc_id, unnest(w) AS fp FROM sh),
-        dfc AS (SELECT fp, count(*) AS df FROM posts GROUP BY fp),
-        okposts AS (
-          SELECT p.doc_id, p.fp FROM posts p
-          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
-        sizes AS (
-          SELECT doc_id, cast(count(*) as bigint) AS sz
-          FROM okposts GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            cast(count(*) as bigint) AS shared_fps
-          FROM okposts a
-          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        pairs AS (
-          SELECT s.doc_a, s.doc_b
-          FROM shared s
-          JOIN sizes x ON x.doc_id = s.doc_a
-          JOIN sizes y ON y.doc_id = s.doc_b
-          WHERE cast(s.shared_fps as double) /
-                cast(x.sz + y.sz - s.shared_fps as double) >= 0.4),
-        edges AS (
-          SELECT doc_a AS src, doc_b AS dst FROM pairs
-          UNION SELECT doc_b, doc_a FROM pairs),
-        reach AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        cl AS (
-          SELECT src AS doc_id, least(src, min(dst)) AS cluster
-          FROM reach GROUP BY src),
+        """ + sqlPostingJaccardPairs() + ",\n        " +
+          sqlDupClusters + """,
         szs AS (
           SELECT cluster, cast(count(*) as bigint) AS sz
-          FROM cl GROUP BY cluster),
+          FROM ccx GROUP BY cluster),
         cen AS (
           SELECT sz AS size, cast(count(*) as bigint) AS n_clusters,
             cast(sz * count(*) as bigint) AS n_docs
           FROM szs GROUP BY sz),
         tot AS (SELECT cast(count(*) as bigint) AS n_total FROM documents),
-        cls AS (SELECT cast(count(*) as bigint) AS n_clustered FROM cl)
+        cls AS (SELECT cast(count(*) as bigint) AS n_clustered FROM ccx)
         SELECT * FROM (
           SELECT size, n_clusters, n_docs FROM cen
           UNION ALL

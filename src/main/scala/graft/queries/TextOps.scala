@@ -82,6 +82,28 @@ object TextOps {
   private[queries] def docShingles(s: SparkSession, d: String): DataFrame =
     shinglesOf(docs(s, d))
 
+  /** DuckDB twin of the bounded all-pairs Jaccard over [[docShingles]]
+    * (d02, d07, d09: the first 1000 docs): CTEs `t0(doc_id, w)`,
+    * `sh(doc_id, w)` and `prs(doc_a, doc_b, jaccard)` with
+    * jaccard ≥ 0.4.
+    */
+  private[queries] val sqlAllPairsJaccard: String = """t0 AS (
+          SELECT doc_id,
+            string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
+          FROM documents WHERE doc_id < 1000),
+        sh AS (
+          SELECT doc_id,
+            list_distinct(list_transform(range(1, len(w) - 1),
+              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
+          FROM t0),
+        prs AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+            cast(len(list_intersect(a.w, b.w)) as double) /
+              cast(len(list_distinct(list_concat(a.w, b.w))) as double) AS jaccard
+          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+          WHERE cast(len(list_intersect(a.w, b.w)) as double) /
+                cast(len(list_distinct(list_concat(a.w, b.w))) as double) >= 0.4)"""
+
   private[queries] def emb(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings")
 
@@ -176,13 +198,7 @@ object TextOps {
     * each.
     */
   private[queries] val incrementalDedupOracle: String =
-    """WITH perms AS (
-          SELECT
-            list_transform(range(0, 64), i ->
-              ('0x' || substr(md5('perm_a_' || i), 1, 15))::BIGINT % 2147483646 + 1) AS pa,
-            list_transform(range(0, 64), i ->
-              ('0x' || substr(md5('perm_b_' || i), 1, 15))::BIGINT % 2147483647) AS pb),
-        t0 AS (
+    """WITH t0 AS (
           SELECT doc_id,
             source IN ('src16','src17','src18','src19') AS inc,
             string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS w
@@ -192,22 +208,7 @@ object TextOps {
             list_distinct(list_transform(range(1, len(w) - 1),
               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
           FROM t0 WHERE len(w) >= 3),
-        hs AS (
-          SELECT doc_id, inc,
-            list_transform(w, s ->
-              ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647) AS h
-          FROM sh),
-        sig AS (
-          SELECT doc_id, inc,
-            list_transform(range(0, 64), i ->
-              list_min(list_transform(h, x ->
-                (pa[i+1] * x + pb[i+1]) % 2147483647))) AS sig
-          FROM hs, perms),
-        banded AS (
-          SELECT doc_id, inc, b AS band,
-            list_reduce(list_prepend(0::BIGINT, sig[b*4+1 : b*4+4]),
-              (acc, v) -> (acc * 1000003 + v) % 2147483647) AS band_hash
-          FROM sig, range(0, 16) t(b)),
+        """ + sqlMinhashBands("doc_id, inc") + """,
         cand AS (
           SELECT DISTINCT l.doc_id AS doc_new, r.doc_id AS doc_idx
           FROM banded l JOIN banded r
@@ -258,6 +259,94 @@ object TextOps {
     */
   private[queries] def assignToCodebook(s: SparkSession, d: String,
       k: Int = 8): DataFrame = assignToCodebookOf(emb(s, d), k)
+
+  /** DuckDB twin of [[emb]] with norms: CTEs `e(vec_id, v)` (the
+    * embedding as doubles) and `n(vec_id, v, nrm)`.
+    */
+  private[queries] val sqlEmbNorms: String = """e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings),
+        n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)"""
+
+  /** DuckDB twin of [[assignToCodebook]] over [[sqlEmbNorms]]: CTEs
+    * `c(cent_id, cv, cnrm)` (the vectors with vec_id < `k`, a SQL
+    * expression), `asgn` and `assigned(vec_id, v, nrm, cent_id)`: each
+    * vector's nearest centroid by cosine, ties to the smaller cent_id.
+    */
+  private[queries] def sqlAssignToCodebook(k: String = "8"): String =
+    s"""c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm FROM n WHERE vec_id < $k),
+        asgn AS (
+          SELECT vec_id, v, nrm, cent_id,
+            row_number() OVER (PARTITION BY vec_id
+              ORDER BY list_dot_product(v, cv) / nrm / cnrm DESC, cent_id)
+              AS rn
+          FROM n, c),
+        assigned AS (SELECT vec_id, v, nrm, cent_id FROM asgn WHERE rn = 1)"""
+
+  /** DuckDB twin of [[nnDescentGraph]]: [[sqlEmbNorms]], `nv(cnt)` and
+    * [[sqlAssignToCodebook]] over [[nnDescentReport]]'s cell count
+    * (cells of ~64 vectors while cheap, capped at the n^1.5 balance
+    * point ceil(sqrt(4n)), never fewer than 8); the init graph
+    * `knn0(a, b, cos)` (each node's best 5 of its cell pairs and 3
+    * h60-random picks, through `cellpairs`, `rnd0`, `rndsc`, `cellknn`,
+    * `pool`, `und`); one descent round to `knn1(a, b, cos)` (through
+    * `props` and `nonscored`).
+    */
+  private[queries] val sqlNnDescentGraph: String = sqlEmbNorms + """,
+        nv AS (SELECT count(*) AS cnt FROM n),
+        """ + sqlAssignToCodebook(
+          "(SELECT greatest(8, least((cnt + 63) // 64, cast(ceil(sqrt(4 * cnt)) as bigint))) FROM nv)") + """,
+        cellpairs AS (
+          SELECT x.vec_id AS a, y.vec_id AS b,
+            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
+          FROM assigned x JOIN assigned y ON x.cent_id = y.cent_id
+            AND x.vec_id <> y.vec_id),
+        rnd0 AS (
+          SELECT x.vec_id AS a,
+            (x.vec_id + 1 +
+             (('0x' || substr(md5('nn_init_' || x.vec_id || '_' || j),
+               1, 15))::BIGINT % (nv.cnt - 1))) % nv.cnt AS b
+          FROM n x, nv, (SELECT unnest([0, 1, 2]) AS j)),
+        rndsc AS (
+          SELECT r.a, r.b,
+            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
+          FROM (SELECT DISTINCT a, b FROM rnd0 WHERE a <> b) r
+          JOIN n x ON x.vec_id = r.a
+          JOIN n y ON y.vec_id = r.b),
+        cellknn AS (
+          SELECT a, b, cos FROM (
+            SELECT a, b, cos, row_number() OVER (PARTITION BY a
+              ORDER BY cos DESC, b) AS rn
+            FROM cellpairs) t WHERE rn <= 5),
+        pool AS (SELECT a, b FROM cellknn
+          UNION SELECT a, b FROM rndsc),
+        und AS (SELECT a AS m, b AS x FROM pool
+          UNION SELECT b, a FROM pool),
+        knn0 AS (
+          SELECT a, b, cos FROM (
+            SELECT a, b, cos, row_number() OVER (PARTITION BY a
+              ORDER BY cos DESC, b) AS rn
+            FROM (SELECT * FROM cellpairs UNION ALL
+                  SELECT * FROM rndsc) u0) t WHERE rn <= 5),
+        props AS (
+          SELECT DISTINCT p.x AS a, q.x AS b
+          FROM und p JOIN und q ON p.m = q.m AND p.x <> q.x
+          JOIN assigned ax ON ax.vec_id = p.x
+          JOIN assigned ay ON ay.vec_id = q.x
+          WHERE ax.cent_id <> ay.cent_id
+            AND NOT EXISTS (SELECT 1 FROM rndsc k
+              WHERE k.a = p.x AND k.b = q.x)),
+        nonscored AS (
+          SELECT p.a, p.b,
+            list_dot_product(x.v, y.v) / x.nrm / y.nrm AS cos
+          FROM props p
+          JOIN n x ON x.vec_id = p.a
+          JOIN n y ON y.vec_id = p.b),
+        knn1 AS (
+          SELECT a, b, cos FROM (
+            SELECT a, b, cos, row_number() OVER (PARTITION BY a
+              ORDER BY cos DESC, b) AS rn
+            FROM (SELECT * FROM knn0 UNION ALL
+                  SELECT * FROM nonscored) u) t
+          WHERE rn <= 5)"""
 
   /** Default centroid count above which [[assignToCodebookOf]] ships
     * the codebook as a one-row BROADCAST relation instead of plan
@@ -661,6 +750,60 @@ object TextOps {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
+  /** DuckDB twin of [[postingJaccardPairsFrom]], as CTEs over the
+    * caller's `from(doc_id, w)` (w = the token array): `sh` (shingle
+    * sets), `posts`, `dfc`, `okposts` (df ≤ 50), `sizes`,
+    * `shared(doc_a, doc_b, shared_fps)` and `prs(doc_a, doc_b, jaccard)`
+    * with jaccard ≥ minJaccard.
+    */
+  private[queries] def sqlPostingJaccardPairs(from: String = "t0",
+      minJaccard: Double = 0.4): String = s"""sh AS (
+          SELECT doc_id,
+            list_distinct(list_transform(range(1, len(w) - 1),
+              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS w
+          FROM $from WHERE len(w) >= 3),
+        posts AS (SELECT doc_id, unnest(w) AS fp FROM sh),
+        dfc AS (SELECT fp, count(*) AS df FROM posts GROUP BY fp),
+        okposts AS (
+          SELECT p.doc_id, p.fp FROM posts p
+          JOIN dfc ON dfc.fp = p.fp AND dfc.df <= 50),
+        sizes AS (
+          SELECT doc_id, cast(count(*) as bigint) AS sz
+          FROM okposts GROUP BY doc_id),
+        shared AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+            cast(count(*) as bigint) AS shared_fps
+          FROM okposts a
+          JOIN okposts b ON b.fp = a.fp AND a.doc_id < b.doc_id
+          GROUP BY a.doc_id, b.doc_id),
+        prs AS (
+          SELECT s.doc_a, s.doc_b,
+            cast(s.shared_fps as double) /
+              cast(x.sz + y.sz - s.shared_fps as double) AS jaccard
+          FROM shared s
+          JOIN sizes x ON x.doc_id = s.doc_a
+          JOIN sizes y ON y.doc_id = s.doc_b
+          WHERE cast(s.shared_fps as double) /
+                cast(x.sz + y.sz - s.shared_fps as double) >= $minJaccard)"""
+
+  /** DuckDB twin of `ConnectedComponents.components` over the pair
+    * relation `prs(doc_a, doc_b)` of [[sqlPostingJaccardPairs]] or
+    * [[sqlAllPairsJaccard]]: CTEs `edges`, the recursive transitive
+    * closure `reach`, and `ccx(doc_id, cluster)` (cluster = the
+    * component's min id; only docs with an edge). Needs
+    * `WITH RECURSIVE`.
+    */
+  private[queries] val sqlDupClusters: String = """edges AS (
+          SELECT doc_a AS src, doc_b AS dst FROM prs
+          UNION SELECT doc_b, doc_a FROM prs),
+        reach AS (
+          SELECT src, dst FROM edges
+          UNION
+          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+        ccx AS (
+          SELECT src AS doc_id, least(src, min(dst)) AS cluster
+          FROM reach GROUP BY src)"""
+
   /** Global exclusive prefix offsets over a (doc_id, n) frame — the
     * TWO-LEVEL BLOCK PREFIX SUM that replaces an unpartitioned
     * `Window.orderBy(doc_id)` (a corpus-wide single task) for
@@ -753,6 +896,37 @@ object TextOps {
     }
   }
 
+  /** DuckDB twin of [[trainPqCodebooks]] (8 subspaces of 8 dims): one
+    * integer Lloyd update of the seed codebooks `cb0(sub, cid, cv)`
+    * over the relation `vecs` (vec_id and the 64-dim integer list
+    * column `v`): `a1` (each vector's nearest seed per subspace),
+    * `s1`, `c1l`, and the trained `cb(sub, cid, cv)`, where a seed
+    * with no members keeps its slice.
+    */
+  private[queries] def sqlTrainPqCodebooks(vecs: String, v: String): String =
+    s"""a1 AS MATERIALIZED (
+          SELECT vec_id, sub, cid FROM (
+            SELECT x.vec_id, c.sub, c.cid,
+              row_number() OVER (PARTITION BY x.vec_id, c.sub ORDER BY
+                list_sum(list_transform(range(1, 9), j ->
+                  (x.$v[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]) *
+                  (x.$v[cast(c.sub * 8 + j as int)] - c.cv[cast(j as int)]))),
+                c.cid) AS rn
+            FROM $vecs x, cb0 c) x WHERE rn = 1),
+        s1 AS (
+          SELECT a.sub, a.cid, p.pos,
+            cast(sum(x.$v[cast(a.sub * 8 + p.pos as int)]) as bigint)
+              // cast(count(*) as bigint) AS c
+          FROM a1 a JOIN $vecs x ON x.vec_id = a.vec_id,
+            (SELECT unnest(range(1, 9)) AS pos) p
+          GROUP BY a.sub, a.cid, p.pos),
+        c1l AS (SELECT sub, cid, list(c ORDER BY pos) AS cv
+          FROM s1 GROUP BY sub, cid),
+        cb AS MATERIALIZED (
+          SELECT cb0.sub, cb0.cid, coalesce(l.cv, cb0.cv) AS cv
+          FROM cb0 LEFT JOIN c1l l
+            ON l.sub = cb0.sub AND l.cid = cb0.cid)"""
+
   /** PII pattern classes, deliberately restricted to syntax shared by
     * Java regex and RE2 (the oracle engine): character classes, bounded
     * repetition, `\b`/`\d` — no lookarounds, no backrefs. Redaction
@@ -801,6 +975,34 @@ object TextOps {
         pmod(element_at(as, i + 1) * pmod(h60col(w), lit(P)) +
           element_at(bs, i + 1), lit(P)))))
   }
+
+  /** DuckDB twin of [[minhashSig]] plus 16×4 [[bandHashes]], as CTEs
+    * over the caller's `sh(<keys>, w)` (w = the shingle set): `perms`,
+    * `hs`, `sig(<keys>, sig)` and `banded(<keys>, band, band_hash)`.
+    * `keys` is the comma list of columns carried through.
+    */
+  private[queries] def sqlMinhashBands(keys: String): String = s"""perms AS (
+          SELECT
+            list_transform(range(0, 64), i ->
+              ('0x' || substr(md5('perm_a_' || i), 1, 15))::BIGINT % 2147483646 + 1) AS pa,
+            list_transform(range(0, 64), i ->
+              ('0x' || substr(md5('perm_b_' || i), 1, 15))::BIGINT % 2147483647) AS pb),
+        hs AS (
+          SELECT $keys,
+            list_transform(w, s ->
+              ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647) AS h
+          FROM sh),
+        sig AS (
+          SELECT $keys,
+            list_transform(range(0, 64), i ->
+              list_min(list_transform(h, x ->
+                (pa[i+1] * x + pb[i+1]) % 2147483647))) AS sig
+          FROM hs, perms),
+        banded AS (
+          SELECT $keys, b AS band,
+            list_reduce(list_prepend(0::BIGINT, sig[b*4+1 : b*4+4]),
+              (acc, v) -> (acc * 1000003 + v) % 2147483647) AS band_hash
+          FROM sig, range(0, 16) t(b))"""
 
   /** Column-bits variants of shiftleft/shiftright (the Scala API only
     * accepts literal Int bit counts; the SQL functions accept columns).

@@ -46,6 +46,18 @@ class QueriesSpec extends SparkFunSuite {
       s"${jobs.size} jobs")
   }
 
+  test("Catalog.t sets no session conf: reading events with " +
+      "nanosAsLong unset leaves spark.conf unchanged") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      val before = spark.conf.getAll
+      Catalog.t(spark, sf0001, "events").schema
+      assert(spark.conf.getAll == before)
+    } finally old.foreach(spark.conf.set(key, _))
+  }
+
   test("Catalog.parquet keeps Spark's inference for a directory " +
       "(partition discovery) and Spark's error for a missing path") {
     val dir = java.nio.file.Files.createTempDirectory("graft-parquet-dir")

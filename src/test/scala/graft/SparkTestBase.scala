@@ -6,15 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for suites (one per JVM; sbt forks once). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    // the harness's codegen confs, not the rest of `tuned`: its SHJ
-    // threshold would turn the sort-merge joins AqeSpec and CboSpec
-    // assert into shuffled-hash joins
-    val s = SessionDefaults.codegen(SparkSession.builder()
+    // the harness's codegen and catalog-read confs, not the rest of
+    // `tuned`: its SHJ threshold would turn the sort-merge joins AqeSpec
+    // and CboSpec assert into shuffled-hash joins
+    val s = SessionDefaults.catalogReads(SessionDefaults.codegen(
+      SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Quiesce before the context stops at JVM exit. Spark's context-stop
